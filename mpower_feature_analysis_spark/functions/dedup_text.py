@@ -766,8 +766,9 @@ def _bucket_members_kernel(
 
 def _sorted_list_pairs_kernel(id_type: str):
     """mapInArrow kernel: rows of ``ms: array<id>`` (pre-sorted ascending,
-    pre-filtered to ``2 <= size``) → upper-triangle ``(id_a, id_b)`` pairs,
-    ``id_a < id_b`` by construction.
+    pre-filtered to ``2 <= size``) → upper-triangle ``(id_a, id_b)`` pairs
+    with strict ``id_a < id_b`` (equal ids, i.e. a doc id repeated in the
+    input, emit no pair).
 
     The capped ngram path's JVM higher-order-function expansion
     (``flatten(transform(ms, (x, ix) -> transform(slice(ms, ix+2, ...),
@@ -823,6 +824,12 @@ def _sorted_list_pairs_kernel(id_type: str):
                                 ids_s[(st + np.tile(cols, hi - lo))[mask.ravel()]])
             a = np.concatenate(out_a) if out_a else np.array([], ids_s.dtype)
             b = np.concatenate(out_b) if out_b else np.array([], ids_s.dtype)
+            # strict id re-check (as in similarity._bucket_pairs_seq): a
+            # doc id repeated across rows sits twice in one sorted list,
+            # and its positional pair would be an id_a == id_b self-pair
+            keep = a < b
+            if not keep.all():
+                a, b = a[keep], b[keep]
             yield pa.RecordBatch.from_arrays(
                 [pa.array(a, type=pa_id), pa.array(b, type=pa_id)],
                 names=["id_a", "id_b"],

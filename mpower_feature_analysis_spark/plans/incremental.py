@@ -25,7 +25,9 @@ advances by CDC:
    conversations only, and :func:`merge_into` swaps exactly those
    conversations' feature rows in one atomic copy-on-write commit.
 
-Cost model at 100 TB: changelog scan is O(changed files); recompute is
+Cost model at 100 TB: changelog scan is O(changed files) — a plain scan
+with no shuffle when the range only appends (the common churn), one
+``exceptAll`` over the changed files when it also rewrites; recompute is
 O(affected conversations' turns); the merge rewrites O(feature files
 containing an affected conversation). The semi-join scan that locates
 affected conversations' turns goes through

@@ -40,6 +40,25 @@ ENGINE_CONFS = {
 }
 
 
+#: free space ``/dev/shm`` must have for the tmpfs shuffle default; below
+#: it shuffle and spill stay on Spark's default local dir, because a full
+#: tmpfs fails the task (no space left) where a disk only slows down
+SHM_MIN_FREE_BYTES = 1 << 30
+
+
+def _shm_local_dir() -> str | None:
+    """``/dev/shm/spark-local`` when ``/dev/shm`` is a writable directory
+    with at least :data:`SHM_MIN_FREE_BYTES` free, else None (Spark's
+    default local dir)."""
+    shm = "/dev/shm"
+    if not (os.path.isdir(shm) and os.access(shm, os.W_OK)):
+        return None
+    st = os.statvfs(shm)
+    if st.f_bavail * st.f_frsize < SHM_MIN_FREE_BYTES:
+        return None
+    return os.path.join(shm, "spark-local")
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "mpower_feature_analysis_spark",
@@ -74,15 +93,11 @@ def get_spark(
     # 10-18 s stalls on otherwise 1-2 s queries (shuffle writeback);
     # tmpfs removed them (suite 98 s -> 53 s, BENCH.md round-7). A real
     # cluster sets spark.local.dir per node — honored here via the env
-    # override or an explicit extra_confs entry.
+    # override or an explicit extra_confs entry. A /dev/shm short of
+    # SHM_MIN_FREE_BYTES free keeps Spark's default local dir.
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if (
-        local_dir is None
-        and "spark.local.dir" not in (extra_confs or {})
-        and os.path.isdir("/dev/shm")
-        and os.access("/dev/shm", os.W_OK)
-    ):
-        local_dir = "/dev/shm/spark-local"
+    if local_dir is None and "spark.local.dir" not in (extra_confs or {}):
+        local_dir = _shm_local_dir()
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     builder = builder.config("spark.ui.enabled", "false")

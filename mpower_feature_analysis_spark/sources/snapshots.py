@@ -60,7 +60,10 @@ scan (asserted in tests/test_snapshots.py); ``row_changelog`` diffs ONLY
 the files that changed between two snapshots — retained files contribute
 identical row multisets to both sides and are excluded from the
 ``exceptAll`` before any data is read, so CDC cost is proportional to the
-changed data, never the table size.
+changed data, never the table size.  A one-sided range (appends only, or
+their reverse) reads only the changed files with no shuffle at all; only
+a two-sided range (upserts, copy-on-write deletes) pays one ``exceptAll``
+over the changed files.
 """
 
 from __future__ import annotations
@@ -1009,10 +1012,10 @@ def compact_snapshot(
     than two small files) returns the current id without committing.
 
     The invariant tests pin: ``row_changelog(pre, post)`` is EMPTY — the
-    rewritten rows cancel under ``exceptAll`` — and time travel to the
-    pre-compaction snapshot still reads the original small files. At
-    100 TB this is the maintenance job that keeps scan task counts sane
-    after many small streaming/CDC commits.
+    rewritten files cancel in its maintenance-commit walk, before any
+    read — and time travel to the pre-compaction snapshot still reads the
+    original small files. At 100 TB this is the maintenance job that keeps
+    scan task counts sane after many small streaming/CDC commits.
     """
     parent = _current_id(table_dir)
     if parent is None:
@@ -1201,12 +1204,17 @@ def row_changelog(
 ) -> DataFrame:
     """Row-level CDC between two snapshots: the table's columns plus a
     ``change`` column ('add' rows appear in ``to`` only, 'remove' rows in
-    ``from`` only — multiset semantics via ``exceptAll``).
+    ``from`` only — multiset semantics, as ``exceptAll``).
 
     Files present in BOTH manifests contribute identical row multisets to
     both sides and cancel, so they are excluded before any data is read —
     the diff scans only the changed files, which is what makes CDC viable
-    on a 100 TB table with a 0.1% daily churn.
+    on a 100 TB table with a 0.1% daily churn.  When the changed files sit
+    on ONE side only (an append-only range, its reverse, or a range whose
+    maintenance churn cancels below), that side's rows are the diff
+    exactly, duplicates included: they come back tagged, a plain scan
+    with no shuffle.  Only a two-sided range (upserts, copy-on-write
+    deletes) runs the ``exceptAll`` in each direction.
 
     Maintenance commits (compact/cluster) rewrite every file path without
     changing a row; a naive path diff across one would read BOTH full
@@ -1254,8 +1262,13 @@ def row_changelog(
             return spark.createDataFrame([], schema)
         return spark.read.schema(schema).parquet(*paths)
 
-    old, new = side(removed), side(added)
     cols = schema.fieldNames()
+    # X −ₘ ∅ = X and ∅ −ₘ X = ∅: a one-sided diff is its tagged scan
+    if not removed:
+        return side(added).select(F.lit("add").alias("change"), *cols)
+    if not added:
+        return side(removed).select(F.lit("remove").alias("change"), *cols)
+    old, new = side(removed), side(added)
     return (
         old.exceptAll(new)
         .select(F.lit("remove").alias("change"), *cols)

@@ -89,6 +89,42 @@ def test_incremental_equals_full(spark, transcripts_pdf, states_df, tmp_path):
     assert again["features_snapshot"] == 2
 
 
+def test_incremental_one_sided_range_with_compaction(
+    spark, transcripts_pdf, states_df, tmp_path
+):
+    """A refresh whose range holds a compaction and two appends: the
+    compaction's churn cancels, the changelog is add-only (the one-sided
+    path, no exceptAll) and the features still equal a full rebuild."""
+    import pandas as pd
+
+    from mpower_feature_analysis_spark.sources.snapshots import (
+        compact_snapshot,
+        row_changelog,
+    )
+
+    early, late, clones = _split_late(transcripts_pdf)
+    t_dir, f_dir = str(tmp_path / "turns"), str(tmp_path / "feats")
+    cfg = PipelineConfig()
+    commit_snapshot(spark_transcripts(spark, early).coalesce(3), t_dir)
+    full_refresh(spark, t_dir, f_dir, states_df, cfg)
+    assert compact_snapshot(spark, t_dir) == 2
+    commit_snapshot(spark_transcripts(spark, late).coalesce(2), t_dir, "append")
+    commit_snapshot(spark_transcripts(spark, clones), t_dir, "append")
+
+    cdc = row_changelog(spark, t_dir, 1, 4)
+    assert {r.change for r in cdc.select("change").distinct().collect()} \
+        == {"add"}
+    assert cdc.count() == len(late) + len(clones)
+
+    out = incremental_refresh(spark, t_dir, f_dir, states_df, cfg)
+    assert (out["from_snapshot"], out["to_snapshot"]) == (1, 4)
+    got = _sorted_pdf(read_snapshot(spark, f_dir))
+    want = _sorted_pdf(
+        extract_turn_features(read_snapshot(spark, t_dir), states_df, cfg)
+    )
+    pd.testing.assert_frame_equal(got, want)
+
+
 def test_incremental_only_touches_affected_conversations(
     spark, transcripts_pdf, states_df, tmp_path
 ):

@@ -254,3 +254,31 @@ def test_register_bucketed_union_table_recovers_bucket_spec(
         assert pre.count() == n > 0
     finally:
         spark.sql("DROP TABLE IF EXISTS union_rereg_test")
+
+
+def test_one_sided_changelog_plans_no_exchange(spark, tmp_path):
+    """An append-only changelog range is a tagged scan of the added files
+    (no shuffle); a two-sided range (copy-on-write rewrite) still plans
+    one exceptAll per direction."""
+    from mpower_feature_analysis_spark.sources.snapshots import (
+        commit_snapshot,
+        overwrite_where,
+        row_changelog,
+    )
+
+    schema = "id bigint, grp string, val double"
+    t = str(tmp_path / "tbl")
+    commit_snapshot(spark.createDataFrame(
+        [(i, "a", float(i)) for i in range(10)], schema).coalesce(1), t)
+    commit_snapshot(spark.createDataFrame(
+        [(i, "b", float(i)) for i in range(10, 14)], schema), t, "append")
+    overwrite_where(spark, t, "id IN (3, 4)", spark.createDataFrame(
+        [(i, "new", -1.0) for i in (3, 4)], schema))
+
+    for a, b in ((1, 2), (2, 1)):
+        plan = _plan(row_changelog(spark, t, a, b))
+        assert _exchanges(plan) == 0, plan
+        assert "replicaterows" not in plan.lower()
+    two_sided = _plan(row_changelog(spark, t, 2, 3))
+    assert _exchanges(two_sided) == 2, two_sided
+    assert two_sided.lower().count("replicaterows") >= 2

@@ -7,6 +7,7 @@ from __future__ import annotations
 import io
 import os
 import re
+from collections import Counter
 from contextlib import redirect_stdout
 
 import pytest
@@ -14,6 +15,7 @@ from pyspark.sql import functions as F
 
 from mpower_feature_analysis_spark.sources.snapshots import (
     commit_snapshot,
+    compact_snapshot,
     expire_snapshots,
     file_changelog,
     overwrite_where,
@@ -149,6 +151,59 @@ def test_changelogs(spark, tmp_path):
     assert {(c, i) for c, i, *_ in got} == {
         ("remove", 3), ("remove", 4), ("add", 3), ("add", 4)
     }
+
+
+def _cdc_multiset(spark, t, a, b) -> tuple[Counter, Counter]:
+    """(row_changelog, full-snapshot exceptAll reference) as row multisets."""
+    got = Counter(
+        (r.change, r.id, r.grp, r.val)
+        for r in row_changelog(spark, t, a, b).collect()
+    )
+    sa, sb = read_snapshot(spark, t, a), read_snapshot(spark, t, b)
+    want = Counter(
+        ("remove", r.id, r.grp, r.val) for r in sa.exceptAll(sb).collect()
+    ) + Counter(("add", r.id, r.grp, r.val) for r in sb.exceptAll(sa).collect())
+    return got, want
+
+
+def test_one_sided_changelogs_equal_exceptall(spark, tmp_path):
+    """Ranges whose changed files sit on one side only (appends, their
+    reverse, an append after a compaction) skip the exceptAll; the rows
+    must still equal the full-snapshot exceptAll diff as multisets."""
+    t = str(tmp_path / "tbl")
+    commit_snapshot(_df(spark, 0, 10, files=2), t)                 # v1
+    # v2: a row repeated inside the new file, and a copy of a v1 row
+    rep = spark.createDataFrame(
+        [(20, "a", 5.0), (20, "a", 5.0), (3, None, 0.75)], schema=SCHEMA
+    ).coalesce(1)
+    commit_snapshot(rep, t, "append")
+    commit_snapshot(_df(spark, 30, 33), t, "append")               # v3
+    assert compact_snapshot(spark, t) == 4                         # v4
+    commit_snapshot(_df(spark, 40, 42), t, "append")               # v5
+
+    got, want = _cdc_multiset(spark, t, 1, 2)
+    assert got == want
+    assert got[("add", 20, "a", 5.0)] == 2  # in-file duplicate survives
+    assert got[("add", 3, None, 0.75)] == 1
+    for a, b in ((1, 3), (3, 1), (3, 5)):
+        got, want = _cdc_multiset(spark, t, a, b)
+        assert got == want, (a, b)
+        assert got
+    assert {c for c, *_ in _cdc_multiset(spark, t, 3, 1)[0]} == {"remove"}
+    # v3 -> v5: the compaction's churn cancels, only v5's append remains
+    assert set(_cdc_multiset(spark, t, 3, 5)[0]) == {
+        ("add", 40, "a", 10.0), ("add", 41, None, 10.25)
+    }
+
+
+def test_empty_range_changelog(spark, tmp_path):
+    t = str(tmp_path / "tbl")
+    commit_snapshot(_df(spark, 0, 10), t)
+    commit_snapshot(_df(spark, 10, 12), t, "append")
+    cdc = row_changelog(spark, t, 2, 2)
+    assert cdc.count() == 0
+    assert cdc.columns == ["change", "id", "grp", "val"]
+    assert cdc.columns == row_changelog(spark, t, 1, 2).columns
 
 
 def test_expire_snapshots(spark, tmp_path):

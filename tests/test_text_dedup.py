@@ -204,6 +204,58 @@ def test_ngram_jaccard_exact_hot_shingle_cap(spark):
     assert uncapped.count() == 30 * 29 / 2
 
 
+def test_sorted_list_pairs_kernel_strict_ids():
+    """The capped path's pair kernel emits exactly the strict ``a < b``
+    pairs of each sorted member list: unique lists give the full upper
+    triangle, a repeated id gives no self-pair."""
+    from itertools import combinations
+
+    import pyarrow as pa
+
+    from mpower_feature_analysis_spark.functions.dedup_text import (
+        _sorted_list_pairs_kernel,
+    )
+    run, _ = _sorted_list_pairs_kernel("bigint")
+
+    def pairs(lists):
+        rb = pa.RecordBatch.from_arrays(
+            [pa.array(lists, type=pa.list_(pa.int64()))], names=["ms"])
+        out = pa.Table.from_batches(list(run(iter([rb])))).to_pydict()
+        return list(zip(out["id_a"], out["id_b"]))
+
+    unique = [[1, 4, 9], [2, 3], [5, 6, 7, 8]]
+    assert sorted(pairs(unique)) == sorted(
+        p for ms in unique for p in combinations(ms, 2))
+    dup = [[1, 4, 4, 9], [3, 3]]
+    assert sorted(pairs(dup)) == sorted(
+        (a, b) for ms in dup for a, b in combinations(ms, 2) if a < b)
+
+
+def test_ngram_jaccard_capped_duplicate_doc_id(spark):
+    """A doc id repeated across input rows yields no ``id_a == id_b``
+    self-pair on the capped path, and the pair set equals the one of the
+    same corpus with unique ids."""
+    from mpower_feature_analysis_spark.functions.dedup_text import (
+        ngram_jaccard_exact_pairs,
+    )
+    base = " ".join(f"w{j}" for j in range(12))
+    rows = [(i, base + " " + " ".join(f"t{i}_{j}" for j in range(i % 3)), "en")
+            for i in range(6)]
+    schema = "doc_id long, text string, lang string"
+    uniq = spark.createDataFrame(rows, schema)
+    dup = spark.createDataFrame(rows + [rows[2]], schema)
+
+    def pair_set(df):
+        return {(r.id_a, r.id_b, r.jaccard) for r in ngram_jaccard_exact_pairs(
+            df, min_jaccard=0.0, max_shingle_freq=8).collect()}
+
+    want = pair_set(uniq)
+    assert want and all(a < b for a, b, _ in want)
+    got = pair_set(dup)
+    assert all(a != b for a, b, _ in got)
+    assert got == want
+
+
 def test_exploded_shingles_arrow_equals_expression(spark, docs):
     """The Arrow shingle kernel reproduces the JVM expression path exactly
     (same distinct (doc, shingle) set, incl. short/empty texts)."""
