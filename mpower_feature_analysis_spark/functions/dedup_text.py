@@ -1116,8 +1116,9 @@ def ngram_jaccard_exact_pairs(
 
     ``cache_shingles`` materializes the multi-consumer frame of each
     mode — the CAPPED path's candidate-pair frame (id harvest + verify
-    join base) and the ``exact=True`` shingle frame (sizes aggregate +
-    join sides) — see :func:`..utils.materialize`. The uncapped hashed
+    join base) and the uncapped ``exact=True`` shingle frame (sizes
+    aggregate + join sides; capped, it has one consumer and is not
+    materialized) — see :func:`..utils.materialize`. The uncapped hashed
     path (round-7, late) is single-consumer (one groupBy feeding the
     in-JVM pair expansion), so it takes no barrier at all; the old
     self-join form shuffled the exploded frame twice and persisted it
@@ -1125,9 +1126,11 @@ def ngram_jaccard_exact_pairs(
     """
     if exact:
         ex = exploded_word_shingles(docs, id_col, text_col, shingle_k)
-        exh = materialize(
-            ex.select(id_col, F.col("g").alias("gh")), cache_shingles
-        )
+        exh = ex.select(id_col, F.col("g").alias("gh"))
+        if max_shingle_freq is None:
+            # uncapped exact: sizes aggregate + both self-join sides; the
+            # capped path reads it once (its groupBy), so no barrier there
+            exh = materialize(exh, cache_shingles)
     else:
         # shingle keys are built hash-native (JVM word xxhash64 + numpy
         # Horner fold) — no shingle strings, no per-row Python (round-7)

@@ -63,18 +63,52 @@ identical row multisets to both sides and are excluded from the
 changed data, never the table size.  A one-sided range (appends only, or
 their reverse) reads only the changed files with no shuffle at all; only
 a two-sided range (upserts, copy-on-write deletes) pays one ``exceptAll``
-over the changed files.
+over the changed files.  The keyed primitives (:func:`merge_into`,
+:func:`read_snapshot_for_keys`) route on the size of their distinct key
+set, of which one job collects at most ``KEY_LITERAL_MAX + 1`` tuples
+to the driver (so driver memory is bounded by that constant, never by
+the key set).  A churn-sized set (at most ``KEY_LITERAL_MAX`` keys) derives the
+manifest key envelope in Python and filters with a literal ``IN`` list:
+no join, no shuffle.  Catalyst turns a list above 10 values into
+``InSet``; parquet pushdown keeps the exact ``In`` up to 10 values and
+falls back to a min/max range filter above that, so row-group skipping
+still applies and the Spark filter stays exact.  A larger set stays in
+Spark: a 1-row min/max aggregation gives the envelope and rows match by a
+left-semi / left-anti join on the key columns, whose driver cost does
+not grow with the key count (building and planning a literal list costs
+driver time per key, which is why the literal route is capped).
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    BooleanType,
+    DateType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
+
+#: decision log: one DEBUG record per keyed read or merge, built only from
+#: values the driver already holds (no Spark job is added to log it)
+_LOG = logging.getLogger("mpower_feature_analysis_spark.snapshots")
+
+#: largest distinct key set the keyed primitives match with a literal
+#: ``IN`` list; a larger one is matched by a join against its key frame.
+#: Each literal costs driver time to build and plan, so past a few hundred
+#: keys the join is cheaper (see :class:`_KeySet`)
+KEY_LITERAL_MAX = 256
 
 __all__ = [
     "commit_snapshot",
@@ -833,14 +867,15 @@ def overwrite_where(
 def _entry_in_key_envelope(entry: dict, key_cols: list[str], env: dict) -> bool:
     """Can this manifest file contain a row whose ``key_cols`` tuple could
     equi-match some source key?  ``env`` holds the source keys' min/max per
-    column (``__lo_k``/``__hi_k``).  Per-column interval intersection is a
-    NECESSARY condition for a tuple match, so a False here is a safe skip;
-    missing stats or incomparable domains keep the file."""
+    column (``__lo_k``/``__hi_k``, see :func:`_key_envelope`).  Per-column
+    interval intersection is a NECESSARY condition for a tuple match, so a
+    False here is a safe skip; missing stats or incomparable domains keep
+    the file."""
     stats = entry.get("stats") or {}
     for k in key_cols:
         lo, hi = env.get(f"__lo_{k}"), env.get(f"__hi_{k}")
         if lo is None:
-            # every source row is NULL in k → no tuple can equi-match
+            # empty key set (every key tuple had a NULL) → nothing matches
             return False
         st = stats.get(k)
         if st is None:
@@ -856,6 +891,137 @@ def _entry_in_key_envelope(entry: dict, key_cols: list[str], env: dict) -> bool:
         if shi[1] < st["min"] or slo[1] > st["max"]:
             return False
     return True
+
+
+class _KeySet:
+    """The distinct key tuples of ``frames`` (no NULL component: such a
+    tuple never equi-matches, so dropping it is exact), with the manifest
+    key envelope and the row filters the keyed primitives apply.
+
+    ONE job collects at most ``KEY_LITERAL_MAX + 1`` tuples, so driver
+    memory is bounded by that constant.  A set that fits is the literal
+    route: the envelope comes from the tuples in Python and rows match a
+    typed literal ``IN`` list (a ``struct`` of the columns for several),
+    which reaches the parquet scan's pushed filters — no join, no shuffle.
+    A larger set is the join route: a 1-row min/max aggregation gives the
+    envelope and rows match by a left-semi / left-anti join against the key
+    frame, which Catalyst/AQE plans (a small frame broadcasts).  The
+    envelope test is a NECESSARY condition for a match on either route."""
+
+    def __init__(
+        self, frames: list[DataFrame], key_cols: list[str],
+        persist: bool = False,
+    ):
+        kf = frames[0].select(*key_cols)
+        for f in frames[1:]:
+            kf = kf.unionByName(f.select(*key_cols))
+        kf = kf.dropna().distinct()
+        self.cols = key_cols
+        dtypes = [f.dataType for f in kf.schema.fields]
+        # a TimestampType key crosses to the driver as epoch microseconds:
+        # a Python datetime is local wall-clock time, which cannot tell
+        # the two instants of a DST fall-back hour apart
+        rows = kf.select(*[
+            F.unix_micros(k).alias(k) if isinstance(d, TimestampType) else k
+            for k, d in zip(key_cols, dtypes)
+        ]).limit(KEY_LITERAL_MAX + 1).collect()
+        self.literal = len(rows) <= KEY_LITERAL_MAX
+        if self.literal:
+            tuples = [tuple(r) for r in rows]
+            self.size = len(tuples)
+            self.frame = None
+            self.env = _key_envelope(tuples, key_cols)
+            self.match = _key_match(tuples, key_cols, dtypes)
+        else:
+            self.size = None  # more than KEY_LITERAL_MAX; not counted
+            # ``persist``: the caller consumes the frame more than once
+            # and calls unpersist() when done
+            self.frame = kf.persist() if persist else kf
+            aggs = []
+            for k in key_cols:
+                aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
+            self.env = self.frame.agg(*aggs).collect()[0].asDict()
+            self.match = None
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """Rows of ``df`` whose key tuple is in the set."""
+        if self.literal:
+            return df.filter(self.match)
+        return df.join(self.frame, self.cols, "left_semi")
+
+    def drop(self, df: DataFrame) -> DataFrame:
+        """Rows of ``df`` whose key tuple is not in the set; a row with a
+        NULL key component is always kept."""
+        if self.literal:
+            return df.filter(~F.coalesce(self.match, F.lit(False)))
+        return df.join(self.frame, self.cols, "left_anti")
+
+    def unpersist(self) -> None:
+        if self.frame is not None:
+            self.frame.unpersist()
+
+
+def _key_envelope(tuples: list[tuple], key_cols: list[str]) -> dict:
+    """Per-column min/max of the key tuples, in the ``__lo_k``/``__hi_k``
+    form :func:`_entry_in_key_envelope` reads; ``None`` bounds when the
+    set is empty (no file can match).  NaN has no place in a min/max
+    order, so a column holding one gets NaN bounds, which every range
+    comparison treats as may-match (the file is kept).  A TimestampType
+    column's bounds are epoch microseconds, which never share a stats type
+    with a footer timestamp, so that column never prunes (its footer
+    stats are zone-adjusted and absent from the manifest anyway)."""
+    env = {}
+    for i, k in enumerate(key_cols):
+        vals = [t[i] for t in tuples]
+        if any(v != v for v in vals):
+            lo = hi = float("nan")
+        else:
+            lo, hi = (min(vals), max(vals)) if vals else (None, None)
+        env[f"__lo_{k}"], env[f"__hi_{k}"] = lo, hi
+    return env
+
+
+#: key types whose plain Python-value literal already has the column's
+#: type, or a narrower one the ``IN`` widens (an ``int`` literal against a
+#: ``bigint`` key): the scanned column is never cast, so pushdown holds
+_PLAIN_LITERAL_TYPES = (
+    BooleanType, IntegerType, LongType, DoubleType, StringType, DateType,
+)
+
+
+def _key_literal(dtype):
+    """Literal builder for one key column's values, chosen once per column
+    (a per-value ``cast`` re-parses the type on every call).  Timestamps
+    rebuild exactly: ``timestamp_ntz`` from its wall-clock text,
+    ``timestamp`` from epoch microseconds (see :class:`_KeySet`); both
+    constant-fold, so pushdown still sees literals."""
+    if isinstance(dtype, TimestampNTZType):
+        return lambda v: F.to_timestamp_ntz(F.lit(v.isoformat(sep=" ")))
+    if isinstance(dtype, TimestampType):
+        return lambda v: F.timestamp_micros(F.lit(v))
+    if isinstance(dtype, _PLAIN_LITERAL_TYPES):
+        return F.lit
+    name = dtype.simpleString()
+    return lambda v: F.lit(v).cast(name)
+
+
+def _key_match(tuples: list[tuple], key_cols: list[str], dtypes) -> Column:
+    """``key_cols`` tuple IN the key set: a plain ``isin`` for one column,
+    a ``struct`` of the columns for several.  A row with a NULL key
+    evaluates NULL (one column) or FALSE (struct) — never TRUE."""
+    lits = [_key_literal(d) for d in dtypes]
+    if len(key_cols) == 1:
+        return F.col(key_cols[0]).isin([lits[0](t[0]) for t in tuples])
+    return F.struct(*key_cols).isin([
+        F.struct(*[lit(v).alias(k) for v, lit, k in zip(t, lits, key_cols)])
+        for t in tuples
+    ])
+
+
+def _log_keyed(op: str, table_dir: str, **fields) -> None:
+    if _LOG.isEnabledFor(logging.DEBUG):
+        rec = {"op": op, "table": table_dir, **fields}
+        _LOG.debug("%s", json.dumps(rec, sort_keys=True), extra={"decision": rec})
 
 
 def merge_into(
@@ -876,12 +1042,17 @@ def merge_into(
     whole conversation's feature rows in one commit — what
     ``plans/incremental.py`` does after a CDC-scoped recompute).
 
-    Copy-on-write file scope, like :func:`overwrite_where`: ONE left-semi
-    aggregation over ``input_file_name()`` finds the files that contain a
-    matching key; only those are rewritten (minus their matched rows),
-    every other file carries into the new snapshot by reference. NULL keys
-    never equi-match: a NULL-key target row is always kept, a NULL-key
-    source row is always inserted.
+    ``source`` is evaluated exactly once: its rows are written first, and
+    the key set is read back from the files just written (plus
+    ``delete_keys``).  One job collects up to :data:`KEY_LITERAL_MAX`
+    distinct key tuples to the driver.  Copy-on-write file scope, like
+    :func:`overwrite_where`: the manifest key envelope prunes the
+    candidate files, ONE ``input_file_name()`` aggregation over the
+    candidates finds the files that contain a matching key, and only
+    those are rewritten (minus their matched rows); every other file
+    carries into the new snapshot by reference. NULL keys never
+    equi-match: a NULL-key target row is always kept, a NULL-key source
+    row is always inserted.
 
     ``delete_keys`` widens the DELETE scope beyond the source's own keys:
     rows matching those key tuples are removed even when the source
@@ -890,10 +1061,18 @@ def merge_into(
     was deleted from the turns table). Must have exactly the ``key_cols``
     columns.
 
-    Scale: the semi-join shuffles on ``key_cols`` and Catalyst/AQE picks
-    the build side (a small churn key set broadcasts); rewrite volume is
-    O(files containing matched keys), never O(table). Returns the new
-    snapshot id.
+    Scale: a key set of at most :data:`KEY_LITERAL_MAX` tuples (churn)
+    takes the literal route — the envelope is derived in Python and the
+    hit scan and kept-rows rewrite filter with a literal ``IN`` list
+    (``~coalesce(match, false)`` for the kept rows), pushed into the
+    parquet scan: no join and no shuffle touches the table.  A larger
+    set takes the join route: the key frame is persisted for the merge,
+    a 1-row min/max aggregation gives the envelope and the hit scan /
+    kept rows are a left-semi / left-anti join on ``key_cols`` (Catalyst
+    and AQE pick the build side).  On either route ``delete_keys`` is
+    evaluated by the key-set collect and, on the join route, once more
+    to fill the persisted frame.  Rewrite volume is O(files containing
+    matched keys), never O(table). Returns the new snapshot id.
     """
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
@@ -920,78 +1099,64 @@ def merge_into(
     if missing:
         raise ValueError(f"key columns not in table schema: {missing}")
     sid = parent + 1
+    added = _write_commit(
+        source.select(*schema.fieldNames()), table_dir, sid, sub="-add"
+    )
 
     entries: list[dict] = []
     root = os.path.abspath(table_dir)
-    keys = None
+    frames = [spark.read.schema(schema).parquet(*added)] if added else []
+    if delete_keys is not None:
+        frames.append(delete_keys)
+    ks = (
+        _KeySet(frames, key_cols, persist=True)
+        if m["files"] and frames else None
+    )
     try:
-        if m["files"]:
-            keys = source.select(*key_cols).distinct()
-            if delete_keys is not None:
-                keys = keys.unionByName(
-                    delete_keys.select(*key_cols).distinct()
-                ).distinct()
-            # the key set is consumed by three actions (envelope agg, hit-scan
-            # semi-join, kept-rows anti-join); without a persist each one
-            # re-runs the SOURCE's whole lineage — for an incremental refresh
-            # that is the entire feature pipeline, several times over. The
-            # churn-sized key set persists cheaply and unpersists on exit.
-            keys = keys.persist()
-            # manifest-stats pre-prune (Iceberg's manifest evaluation): one
-            # tiny agg collects the source-key envelope; any file whose
-            # footer-stats range is disjoint from it on SOME key column cannot
-            # contain a matched key and skips the candidate scan entirely —
-            # the data-reading semi-join below touches only the files that
-            # COULD rewrite.  With churn keyed on recent conv_ids against a
-            # conv_id-clustered 100 TB table, that is the difference between
-            # scanning the churn's neighborhood and scanning the table.
-            aggs = []
-            for k in key_cols:
-                aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
-            env = keys.agg(*aggs).collect()[0].asDict()
-            cand = [
-                e for e in m["files"] if _entry_in_key_envelope(e, key_cols, env)
-            ]
-            cand_paths = {e["path"] for e in cand}
-            entries += [e for e in m["files"] if e["path"] not in cand_paths]
-            files = [os.path.join(root, e["path"]) for e in cand]
-            hit = set()
-            if files:
-                # tag the file BEFORE the join: input_file_name() is per-scan
-                # and cannot resolve once a second file source joins the plan
-                scan = spark.read.schema(schema).parquet(*files).withColumn(
-                    "__file", F.input_file_name()
-                )
-                hit = {
-                    _norm_path(r[0])
-                    for r in scan.join(keys, key_cols, "left_semi")
-                    .select("__file")
-                    .distinct()
-                    .collect()
-                }
-            entries += [
-                e for e in cand
-                if _norm_path(os.path.join(root, e["path"])) not in hit
-            ]
-            rewrite_abs = [f for f in files if _norm_path(f) in hit]
-            if rewrite_abs:
-                kept_rows = (
-                    spark.read.schema(schema)
-                    .parquet(*rewrite_abs)
-                    .join(keys, key_cols, "left_anti")
-                )
-                entries += _file_entries(
-                    _write_commit(kept_rows, table_dir, sid, sub="-rw"), table_dir
-                )
-        entries += _file_entries(
-            _write_commit(
-                source.select(*schema.fieldNames()), table_dir, sid, sub="-add"
-            ),
-            table_dir,
-        )
+        # manifest-stats pre-prune (Iceberg's manifest evaluation): any
+        # file whose footer-stats range is disjoint from the key envelope
+        # on SOME key column cannot contain a matched key and skips the
+        # candidate scan entirely.  With churn keyed on recent conv_ids
+        # against a conv_id-clustered 100 TB table, that is the difference
+        # between scanning the churn's neighborhood and scanning the table.
+        cand = [
+            e for e in m["files"]
+            if ks is not None and _entry_in_key_envelope(e, key_cols, ks.env)
+        ]
+        cand_paths = {e["path"] for e in cand}
+        entries += [e for e in m["files"] if e["path"] not in cand_paths]
+        files = [os.path.join(root, e["path"]) for e in cand]
+        hit = set()
+        if files:
+            # tag the file BEFORE any join: input_file_name() is per-scan
+            # and cannot resolve once a second file source joins the plan
+            scan = spark.read.schema(schema).parquet(*files).withColumn(
+                "__file", F.input_file_name()
+            )
+            hit = {
+                _norm_path(r[0])
+                for r in ks.keep(scan).select("__file").distinct().collect()
+            }
+        entries += [
+            e for e in cand
+            if _norm_path(os.path.join(root, e["path"])) not in hit
+        ]
+        rewrite_abs = [f for f in files if _norm_path(f) in hit]
+        if rewrite_abs:
+            kept_rows = ks.drop(spark.read.schema(schema).parquet(*rewrite_abs))
+            entries += _file_entries(
+                _write_commit(kept_rows, table_dir, sid, sub="-rw"), table_dir
+            )
     finally:
-        if keys is not None:
-            keys.unpersist()
+        if ks is not None:
+            ks.unpersist()
+    entries += _file_entries(added, table_dir)
+    _log_keyed(
+        "merge_into", table_dir, keys=ks.size if ks is not None else 0,
+        literal=ks is None or ks.literal, candidate_files=len(cand),
+        files_pruned=len(m["files"]) - len(cand),
+        files_rewritten=len(rewrite_abs),
+    )
     return _commit(table_dir, "merge", m["schema"], entries, parent, properties)
 
 
@@ -1056,17 +1221,26 @@ def read_snapshot_for_keys(
 ) -> DataFrame:
     """Scan one snapshot restricted to rows whose ``key_cols`` tuple
     appears in ``keys`` — with the file list pre-pruned from manifest
-    stats (the same source-key-envelope evaluation :func:`merge_into`
-    uses) before the exact left-semi join runs on the survivors.
+    stats (the same key-envelope evaluation :func:`merge_into` uses)
+    before the exact key filter runs on the survivors.
 
-    The envelope check is a NECESSARY condition for a tuple match, so
-    pruning never drops a matching row; the semi-join supplies exactness.
-    On a table written clustered on the key (:func:`cluster_snapshot` /
-    a ``repartitionByRange`` writer), a churn-sized key set prunes the
-    scan to the churn's neighborhood — this is what keeps
+    One job collects up to :data:`KEY_LITERAL_MAX` distinct non-NULL key
+    tuples of ``keys`` to the driver.  A set that fits (churn) derives
+    the envelope in Python and the scan filters with a literal ``IN``
+    list (a ``struct`` of the columns for a multi-column key): the plan
+    has no join and no exchange, and the ``IN`` (``InSet`` above 10
+    values) reaches the parquet scan's pushed filters (as a min/max range
+    above 10 values).  A larger set adds a 1-row min/max aggregation for
+    the envelope and the scan is a left-semi join against ``keys``'
+    distinct key frame, which is evaluated again when the result is
+    read.  The envelope check is a NECESSARY condition for a tuple match,
+    so pruning never drops a matching row; the key filter supplies
+    exactness.  On a table
+    written clustered on the key (:func:`cluster_snapshot` / a
+    ``repartitionByRange`` writer), a churn-sized key set prunes the scan
+    to the churn's neighborhood — this is what keeps
     ``plans/incremental.py``'s recompute O(affected data) instead of
-    O(table) at 100 TB.  The one driver-side action is a 1-row min/max
-    agg over ``keys`` (churn-sized, metadata-scale)."""
+    O(table) at 100 TB."""
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
     m = _load_manifest(table_dir, as_of)
@@ -1074,21 +1248,19 @@ def read_snapshot_for_keys(
     missing = [k for k in key_cols if k not in schema.fieldNames()]
     if missing:
         raise ValueError(f"key columns not in table schema: {missing}")
-    kd = keys.select(*key_cols).distinct()
-    aggs = []
-    for k in key_cols:
-        aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
-    env = kd.agg(*aggs).collect()[0].asDict()
-    root = os.path.abspath(table_dir)
-    files = [
-        os.path.join(root, e["path"])
-        for e in m["files"]
-        if _entry_in_key_envelope(e, key_cols, env)
-    ]
-    if not files:
+    ks = _KeySet([keys], key_cols)
+    cand = [e for e in m["files"] if _entry_in_key_envelope(e, key_cols, ks.env)]
+    _log_keyed(
+        "read_snapshot_for_keys", table_dir, keys=ks.size, literal=ks.literal,
+        candidate_files=len(cand), files_pruned=len(m["files"]) - len(cand),
+        files_rewritten=0,
+    )
+    if not cand:
         return spark.createDataFrame([], schema)
-    return (
-        spark.read.schema(schema).parquet(*files).join(kd, key_cols, "left_semi")
+    root = os.path.abspath(table_dir)
+    return ks.keep(
+        spark.read.schema(schema)
+        .parquet(*[os.path.join(root, e["path"]) for e in cand])
     )
 
 

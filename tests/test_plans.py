@@ -282,3 +282,23 @@ def test_one_sided_changelog_plans_no_exchange(spark, tmp_path):
     two_sided = _plan(row_changelog(spark, t, 2, 3))
     assert _exchanges(two_sided) == 2, two_sided
     assert two_sided.lower().count("replicaterows") >= 2
+
+
+def test_keyed_read_plans_no_join_and_pushes_key_filter(spark, tmp_path):
+    """read_snapshot_for_keys filters with a literal IN list: no Join, no
+    Exchange, and the key predicate reaches the parquet scan."""
+    from mpower_feature_analysis_spark.sources.snapshots import (
+        commit_snapshot,
+        read_snapshot_for_keys,
+    )
+
+    t = str(tmp_path / "tbl")
+    commit_snapshot(spark.createDataFrame(
+        [(i, "a", float(i)) for i in range(20)],
+        "id bigint, grp string, val double").coalesce(1), t)
+    keys = spark.createDataFrame([(3,), (7,), (7,), (None,)], "id bigint")
+    plan = _plan(read_snapshot_for_keys(spark, t, keys, ["id"]))
+    assert "Join" not in plan, plan
+    assert _exchanges(plan) == 0, plan
+    pushed = re.search(r"PushedFilters: \[([^\n]*)\]", plan).group(1)
+    assert "In(id, [3,7])" in pushed, pushed

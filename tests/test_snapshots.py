@@ -1042,3 +1042,245 @@ def test_timestamp_time_travel_and_history(spark, tmp_path):
         assert _ids(read_snapshot(spark, t, as_of_time_ms=t2 - 1)) == [0, 1, 2]
     with pytest.raises(ValueError, match="not both"):
         read_snapshot(spark, t, as_of=1, as_of_time_ms=t1)
+
+
+# ---------------------------------------------------------------------------
+# keyed primitives against the left-semi / left-anti join reference, on both
+# routes: the literal IN list (key set within KEY_LITERAL_MAX) and the join
+# (KEY_LITERAL_MAX forced to 0, so every non-empty key set exceeds it)
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(params=["literal", "join"])
+def route(request, monkeypatch):
+    from mpower_feature_analysis_spark.sources import snapshots
+
+    if request.param == "join":
+        monkeypatch.setattr(snapshots, "KEY_LITERAL_MAX", 0)
+    return request.param
+
+
+def _bag(df, cols):
+    return Counter(tuple(r) for r in df.select(*cols).collect())
+
+
+def _check_keyed_read(spark, t, keys, key_cols):
+    """read_snapshot_for_keys == the snapshot left-semi-joined to the keys."""
+    from mpower_feature_analysis_spark.sources.snapshots import (
+        read_snapshot_for_keys)
+
+    full = read_snapshot(spark, t)
+    want = full.join(keys.select(*key_cols).distinct(), key_cols, "left_semi")
+    got = read_snapshot_for_keys(spark, t, keys, key_cols)
+    assert got.columns == full.columns
+    assert _bag(got, full.columns) == _bag(want, full.columns)
+    return got
+
+
+def _check_merge(spark, t, source, key_cols, delete_keys=None):
+    """merge_into == (previous snapshot left-anti-joined to the source and
+    delete keys) plus every source row."""
+    from mpower_feature_analysis_spark.sources.snapshots import merge_into
+
+    before = read_snapshot(spark, t)
+    cols = before.columns
+    scope = source.select(*key_cols)
+    if delete_keys is not None:
+        scope = scope.unionByName(delete_keys.select(*key_cols))
+    want = _bag(before.join(scope.distinct(), key_cols, "left_anti"), cols)
+    want += _bag(source, cols)  # reference read before the merge commits
+    merge_into(spark, t, source, key_cols, delete_keys=delete_keys)
+    assert _bag(read_snapshot(spark, t), cols) == want
+
+
+PAIR_SCHEMA = "k1 int, k2 string, v double"
+
+
+def _pair_table(spark, t):
+    rows = [(k1, k2, float(i)) for i, (k1, k2) in enumerate(
+        [(1, "a"), (1, "a"), (1, None), (None, "a"), (2, "b"), (3, "c")])]
+    commit_snapshot(spark.createDataFrame(rows[:4], PAIR_SCHEMA).coalesce(1), t)
+    commit_snapshot(
+        spark.createDataFrame(rows[4:], PAIR_SCHEMA).coalesce(1), t, "append")
+
+
+def test_keyed_two_column_key_with_null_component(spark, tmp_path, route):
+    t = str(tmp_path / "tbl")
+    _pair_table(spark, t)
+    keys = spark.createDataFrame(
+        [(1, "a"), (1, None), (None, "a"), (3, "c"), (9, "z")],
+        "k1 int, k2 string")
+    got = _check_keyed_read(spark, t, keys, ["k1", "k2"])
+    assert got.count() == 3  # (1, a) twice and (3, c); no NULL component
+    src = spark.createDataFrame(
+        [(1, "a", 10.0), (1, None, 11.0), (None, "a", 12.0)], PAIR_SCHEMA)
+    _check_merge(spark, t, src, ["k1", "k2"])
+    # a NULL-component target row is never matched, so it is never dropped
+    assert read_snapshot(spark, t).filter("k1 IS NULL").count() == 2
+
+
+def test_keyed_timestamp_ntz_key(spark, tmp_path, route):
+    """Wall-clock keys match under a session zone other than the process
+    zone, across a DST gap (02:00 on 2024-03-10 does not exist in
+    America/Los_Angeles)."""
+    import datetime
+
+    t = str(tmp_path / "tbl")
+    base = datetime.datetime(2024, 3, 10, 1, 59, 59, 999_998)
+    ts = [base + datetime.timedelta(microseconds=i) for i in range(6)]
+    schema = "ts timestamp_ntz, v bigint"
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        commit_snapshot(spark.createDataFrame(
+            [(x, i) for i, x in enumerate(ts[:3])], schema).coalesce(1), t)
+        commit_snapshot(spark.createDataFrame(
+            [(x, i) for i, x in enumerate(ts[3:], 3)], schema).coalesce(1), t,
+            "append")
+        keys = spark.createDataFrame(
+            [(ts[1],), (ts[4],), (None,)], "ts timestamp_ntz")
+        got = _check_keyed_read(spark, t, keys, ["ts"])
+        assert sorted(r.v for r in got.collect()) == [1, 4]
+        src = spark.createDataFrame([(ts[4], 40), (ts[5], 50)], schema)
+        _check_merge(spark, t, src, ["ts"])
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+def test_keyed_timestamp_key_across_dst_fold(spark, tmp_path, route):
+    """TimestampType keys are instants: in a process and session zone that
+    repeats 01:00-02:00 on 2024-11-03 (America/Los_Angeles), a key in the
+    second 01:30 matches that instant only, never the first 01:30 (a key
+    round-tripped through a local Python datetime would land there)."""
+    import time
+
+    t = str(tmp_path / "tbl")
+    first = 1_730_622_600_000_000  # 2024-11-03 01:30 PDT = 08:30 UTC
+    micros = [first - 3_600_000_000, first, first + 3_600_000_000]
+    rows = spark.createDataFrame(
+        [(us, i) for i, us in enumerate(micros)], "us bigint, v bigint")
+    tbl = rows.select(F.timestamp_micros("us").alias("ts"), "v")
+    old_tz, old_session = os.environ.get("TZ"), spark.conf.get(
+        "spark.sql.session.timeZone")
+    os.environ["TZ"] = "America/Los_Angeles"
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        commit_snapshot(tbl.coalesce(1), t)
+        second = tbl.filter("v = 2").select("ts")  # 01:30 PST = 09:30 UTC
+        got = _check_keyed_read(spark, t, second, ["ts"])
+        assert [r.v for r in got.collect()] == [2]
+        src = tbl.filter("v = 2").select("ts", F.lit(20).cast("bigint").alias("v"))
+        _check_merge(spark, t, src, ["ts"])
+        assert sorted(r.v for r in read_snapshot(spark, t).collect()) == [0, 1, 20]
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+        spark.conf.set("spark.sql.session.timeZone", old_session)
+
+
+def test_keyed_empty_key_set(spark, tmp_path, route):
+    t = str(tmp_path / "tbl")
+    commit_snapshot(_df(spark, 0, 10), t)
+    empty = spark.createDataFrame([], "id bigint")
+    got = _check_keyed_read(spark, t, empty, ["id"])
+    assert got.count() == 0
+    # all-NULL keys are an empty key set too
+    nulls = spark.createDataFrame([(None,)], "id bigint")
+    assert _check_keyed_read(spark, t, nulls, ["id"]).count() == 0
+    before = _files_of(t, 1)
+    _check_merge(spark, t, spark.createDataFrame([], SCHEMA), ["id"],
+                 delete_keys=empty)
+    assert before <= _files_of(t, 2)  # every file carried by reference
+
+
+def test_keyed_keys_outside_every_envelope(spark, tmp_path, route):
+    t = str(tmp_path / "tbl")
+    commit_snapshot(_df(spark, 0, 10), t)
+    commit_snapshot(_df(spark, 10, 20), t, "append")
+    # envelope disjoint from every file: nothing is planned
+    keys = spark.createDataFrame([(500,), (600,)], "id bigint")
+    assert _check_keyed_read(spark, t, keys, ["id"]).inputFiles() == []
+    # envelope spans the files, but no key lies in any of them
+    wide = spark.createDataFrame([(-5,), (500,)], "id bigint")
+    assert _check_keyed_read(spark, t, wide, ["id"]).count() == 0
+    src = spark.createDataFrame([(500, "x", 1.0)], SCHEMA)
+    _check_merge(spark, t, src, ["id"], delete_keys=keys)
+    assert _files_of(t, 2) <= _files_of(t, 3)  # nothing rewritten
+
+
+def test_keyed_merge_source_key_absent_from_delete_keys(spark, tmp_path, route):
+    """The delete scope is the union of the source keys and delete_keys:
+    a replaced key that delete_keys does not name is still swapped.  A
+    NULL-key row in a rewritten file is kept, a NULL-key source row
+    inserted."""
+    t = str(tmp_path / "tbl")
+    commit_snapshot(_df(spark, 0, 10), t)
+    null_row = spark.createDataFrame([(None, "n", 0.5)], SCHEMA)
+    commit_snapshot(_df(spark, 10, 20).unionByName(null_row).coalesce(1), t,
+                    "append")
+    src = spark.createDataFrame(
+        [(4, "r", -4.0), (4, "r", -5.0), (30, "n", 0.0), (None, "s", 9.0)],
+        SCHEMA)
+    dead = spark.createDataFrame([(12,), (15,)], "id bigint")
+    _check_merge(spark, t, src, ["id"], delete_keys=dead)
+    cur = read_snapshot(spark, t)
+    assert cur.filter("id = 4").count() == 2
+    assert cur.filter("id IS NULL").count() == 2
+
+
+def test_keyed_decision_log(spark, tmp_path, caplog):
+    """One DEBUG record per keyed read or merge, with the key and file
+    counts the driver planned from."""
+    import logging
+
+    from mpower_feature_analysis_spark.sources.snapshots import (
+        merge_into, read_snapshot_for_keys)
+
+    t = str(tmp_path / "tbl")
+    commit_snapshot(_df(spark, 0, 10), t)
+    commit_snapshot(_df(spark, 10, 20), t, "append")
+    caplog.set_level(logging.DEBUG, logger="mpower_feature_analysis_spark.snapshots")
+    keys = spark.createDataFrame([(3,), (4,), (None,)], "id bigint")
+    read_snapshot_for_keys(spark, t, keys, ["id"])
+    merge_into(spark, t, spark.createDataFrame([(15, "m", 0.0)], SCHEMA), ["id"])
+    recs = [r.decision for r in caplog.records
+            if r.name == "mpower_feature_analysis_spark.snapshots"]
+    assert [r["op"] for r in recs] == ["read_snapshot_for_keys", "merge_into"]
+    assert {k: recs[0][k] for k in ("keys", "candidate_files", "files_pruned",
+                                    "files_rewritten")} == {
+        "keys": 2, "candidate_files": 1, "files_pruned": 1, "files_rewritten": 0}
+    assert {k: recs[1][k] for k in ("keys", "candidate_files", "files_pruned",
+                                    "files_rewritten")} == {
+        "keys": 1, "candidate_files": 1, "files_pruned": 1, "files_rewritten": 1}
+    assert recs[0]["literal"] and recs[1]["literal"]
+
+
+def test_keyed_route_switches_above_literal_max(spark, tmp_path, caplog,
+                                                monkeypatch):
+    """A key set above KEY_LITERAL_MAX is matched by a join (and logged as
+    such, with its size unknown); one within it by the literal IN list."""
+    import logging
+
+    from mpower_feature_analysis_spark.sources import snapshots
+
+    t = str(tmp_path / "tbl")
+    commit_snapshot(_df(spark, 0, 10), t)
+    caplog.set_level(logging.DEBUG, logger="mpower_feature_analysis_spark.snapshots")
+    monkeypatch.setattr(snapshots, "KEY_LITERAL_MAX", 2)
+    small = spark.createDataFrame([(3,), (4,)], "id bigint")
+    big = spark.createDataFrame([(3,), (4,), (5,)], "id bigint")
+    assert "Join" not in _plan_text(_check_keyed_read(spark, t, small, ["id"]))
+    assert "Join" in _plan_text(_check_keyed_read(spark, t, big, ["id"]))
+    recs = [r.decision for r in caplog.records
+            if r.name == "mpower_feature_analysis_spark.snapshots"]
+    assert [(r["keys"], r["literal"]) for r in recs] == [(2, True), (None, False)]
+
+
+def _plan_text(df):
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()

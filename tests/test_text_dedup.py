@@ -468,6 +468,37 @@ def test_materialize_unpersist_all(spark, docs):
                for df in cached)
 
 
+def test_ngram_exact_capped_persists_no_single_consumer_frame(spark, docs):
+    """exact=True with a cap: the exploded shingle frame feeds only the
+    candidate groupBy, so it takes no materialize barrier — the call parks
+    exactly the hashed capped path's frames (candidates + verify shingle
+    arrays), one fewer than before, and its pair set is unchanged."""
+    from mpower_feature_analysis_spark.functions.dedup_text import (
+        ngram_jaccard_exact_pairs,
+    )
+    from mpower_feature_analysis_spark.utils import _PERSISTED, unpersist_all
+
+    def pairs(df):
+        return {(r.id_a, r.id_b, round(r.jaccard, 12)) for r in df.collect()}
+
+    unpersist_all()
+    exact = ngram_jaccard_exact_pairs(
+        docs, min_jaccard=0.3, max_shingle_freq=3, exact=True)
+    n_exact = len(_PERSISTED)
+    got = pairs(exact)
+    unpersist_all()
+    hashed = ngram_jaccard_exact_pairs(docs, min_jaccard=0.3, max_shingle_freq=3)
+    n_hashed = len(_PERSISTED)
+    want = pairs(hashed)
+    unpersist_all()
+    assert n_exact == n_hashed == 2
+    assert got == want and len(got) > 0
+    # the barrier-free plan is the same pair set as the fully unbarriered one
+    assert got == pairs(ngram_jaccard_exact_pairs(
+        docs, min_jaccard=0.3, max_shingle_freq=3, exact=True,
+        cache_shingles=False))
+
+
 def test_ngram_kernel_pairs_equal_self_join(spark, docs):
     """Round-7: the uncapped hashed path's bucket-pairs kernel must
     reproduce the old shingle self-join EXACTLY — same pair set, bit-equal
