@@ -12,7 +12,6 @@ from .asof import asof_join, burst_membership_counts, burst_schedule, interval_j
 from .aggregate import group_median_iqr, user_aggregate, pivot_wide, ordered_categorical_max
 from .kernels import (
     windowed_summary_features,
-    windowed_summary_features_jvm,
     windowed_summary_features_skew_split,
     WINDOW_FEATURE_SCHEMA,
 )
@@ -36,7 +35,7 @@ __all__ = [
     "sessionize", "session_summary",
     "asof_join", "interval_join", "burst_schedule", "burst_membership_counts",
     "group_median_iqr", "user_aggregate", "pivot_wide", "ordered_categorical_max",
-    "windowed_summary_features", "windowed_summary_features_jvm",
+    "windowed_summary_features",
     "windowed_summary_features_skew_split", "WINDOW_FEATURE_SCHEMA",
     "signal_summary_features", "freq_domain_features", "loess_detrend",
     "signal_summary_features_skew_split", "freq_domain_features_skew_split",

@@ -9,17 +9,24 @@ via mhealthtools::time_domain_summary — extract_mhealthtools_tremor_features.R
 Errors never kill the job: they become an ``error``-string row
 (extract_mhealthtools_tapping_features.R:117-121).
 
-Engine form: ``df.groupBy("conv_id").applyInPandas(kernel, schema)`` — one
-Arrow batch per conversation, numpy-vectorized inside (sliding windows via
-stride tricks), variable-row output, nullable ``error`` column declared up
-front (§1.3: Spark schemas are static). No per-row Python anywhere.
+Engine form: one grouped-batch harness, :func:`mapgroups_with_carry`. The
+input is hash-partitioned on the group key and sorted within partitions, so
+a ``mapInArrow`` loop can hold back the group that spans an Arrow batch
+boundary and hand the kernel whole groups, many per call, as a
+``pyarrow.Table``. Kernels are numpy over the Arrow columns (sliding
+windows via stride tricks) and return one array per output column; the
+harness builds the output batch from the declared schema (§1.3: Spark
+schemas are static), writing NaN float cells as NULL. No per-row Python
+anywhere. The window, signal, frequency and loess kernels all run on it.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window as W
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 WINDOW_FEATURE_SCHEMA = (
@@ -34,6 +41,13 @@ WINDOW_FEATURE_SCHEMA = (
 #: bin of x is ``clip(floor((x - min) / (max - min) * B), 0, B-1)``;
 #: 0.0 when all values are equal.
 _ENTROPY_BINS = 10
+
+_WINDOW_STATS = ("mean_gap_ms", "median_gap_ms", "iqr_gap_ms", "entropy_gap")
+
+
+def window_step(window: int, overlap: float) -> int:
+    """Window start stride for ``overlap`` (a fraction of ``window``)."""
+    return max(1, int(round(window * (1.0 - overlap))))
 
 
 def _entropy_rows(sw: np.ndarray) -> np.ndarray:
@@ -60,67 +74,190 @@ def _entropy_rows(sw: np.ndarray) -> np.ndarray:
     return out
 
 
-def make_window_kernel(window: int = 8, overlap: float = 0.5, min_turns: int = 2):
-    """Build the per-group kernel: overlapping windows of ``window`` turns
-    with ``overlap`` fraction (step = window*(1-overlap)), one output row per
-    window over the inter-turn gap series. Groups with < ``min_turns`` turns
-    emit a single error row (F5 error channel) instead of raising."""
-    step = max(1, int(round(window * (1.0 - overlap))))
+def run_starts(col) -> np.ndarray:
+    """Offsets at which a run of equal values starts in the Arrow column
+    ``col`` (NULL equals NULL). Compared C-side: turning every row's key
+    into a Python object was ~30% of kernel time."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    n = len(col)
+    if not n:
+        return np.zeros(0, dtype=np.int64)
+    a, b = col.slice(1), col.slice(0, n - 1)
+    change = pc.not_equal(a, b)
+    if col.null_count:
+        # NULL compares as unknown: a run starts where exactly one side is NULL
+        change = pc.if_else(
+            pc.is_null(change), pc.xor(pc.is_null(a), pc.is_null(b)), change)
+    return np.flatnonzero(
+        np.concatenate([[True], change.to_numpy(zero_copy_only=False)]))
+
+
+def mapgroups_with_carry(
+    df: DataFrame,
+    kernel,
+    schema: str,
+    columns: list[str],
+    group_col: str = "conv_id",
+    sort_cols: tuple[str, ...] = ("turn_idx", "ts"),
+    shuffle_key: str | None = None,
+    presorted: bool = False,
+) -> DataFrame:
+    """Run ``kernel`` over whole groups of ``df``, many groups per call.
+
+    The input is arranged with ``repartition(key)`` and
+    ``sortWithinPartitions(key, group_col, *sort_cols)``, so every group is
+    contiguous and ordered even when ``key`` maps to several groups.
+    ``key`` is ``shuffle_key`` when given — a precursor of the group column
+    (e.g. the raw ``user_id`` that ``conv_id`` derives from), so an upstream
+    exchange on it is reused instead of re-shuffling on the derived
+    string — else the group column. ``presorted=True`` skips that step; the
+    input must then already hold every group wholly inside one partition,
+    contiguous and ordered (the bucketed, sorted layout
+    ``sources.write_stable_parquet`` writes, read with
+    ``spark.sql.files.maxPartitionBytes`` above the largest file).
+
+    Only the group column, renamed ``conv_id``, and ``columns`` cross the
+    Arrow boundary. The group that ends a batch is held back and prepended
+    to the next, so ``kernel(table)`` sees whole groups only; it is called
+    once per run of them and returns one numpy array per column of
+    ``schema``. NaN float cells are written as NULL.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    out_schema = to_arrow_schema(StructType.fromDDL(schema))
+    key = shuffle_key or group_col
+    if not presorted:
+        sort_keys = [key] + ([group_col] if group_col != key else []) + list(sort_cols)
+        df = df.repartition(key).sortWithinPartitions(*sort_keys)
+    shipped = df.select(F.col(group_col).alias("conv_id"), *columns)
+
+    def emit(tbl: pa.Table) -> pa.RecordBatch:
+        cols = kernel(tbl)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(cols[f.name], type=f.type, from_pandas=True)
+             for f in out_schema],
+            schema=out_schema,
+        )
+
+    def run(batches):
+        carry = None
+        for rb in batches:
+            tbl = pa.Table.from_batches([rb])
+            if carry is not None:
+                tbl = pa.concat_tables([carry, tbl]).combine_chunks()
+            if not tbl.num_rows:
+                continue
+            cut = int(run_starts(tbl.column("conv_id"))[-1])
+            carry = tbl.slice(cut)
+            if cut:
+                yield emit(tbl.slice(0, cut))
+        if carry is not None and carry.num_rows:
+            yield emit(carry)
+
+    return shipped.mapInArrow(run, schema)
+
+
+def _window_kernel(window: int, overlap: float):
+    """Batch window kernel over a table of whole conversations (``conv_id``,
+    ``turn_idx``, ``ts_ms``; each ordered by turn): overlapping windows of
+    ``window`` gaps, one output row per window over the inter-turn gap
+    series, one window over all gaps for a conversation shorter than that.
+
+    Windows of one width (every full window, and short conversations of
+    equal length) are stacked into one matrix, so each statistic runs once
+    per width, not once per conversation. A conversation with fewer than 2
+    turns, or with a NULL ``ts_ms`` or ``turn_idx``, emits one error row
+    (F5 error channel); so does one the kernel fails on, never the task.
+    """
+    step = window_step(window, overlap)
+
+    def error_row(conv: str, msg: str) -> dict:
+        row = {"conv_id": np.array([conv], dtype=object),
+               "window_idx": np.array([-1], dtype="int32"),
+               "n": np.array([0], dtype="int32"),
+               "start_turn_idx": np.array([-1], dtype="int32"),
+               "end_turn_idx": np.array([-1], dtype="int32")}
+        row.update({c: np.array([np.nan]) for c in _WINDOW_STATS})
+        row["error"] = np.array([msg], dtype=object)
+        return row
+
+    def windows(tbl: pa.Table, starts: np.ndarray) -> dict:
+        n_turns = np.diff(np.append(starts, tbl.num_rows))
+        tid_col, ts_col = tbl.column("turn_idx"), tbl.column("ts_ms")
+        n_null = np.zeros(len(starts), dtype=np.int64)
+        if tid_col.null_count or ts_col.null_count:
+            null = pc.or_(pc.is_null(tid_col), pc.is_null(ts_col))
+            n_null = np.add.reduceat(null.to_numpy().astype(np.int64), starts)
+            tid_col, ts_col = tid_col.fill_null(0), ts_col.fill_null(0)
+        tid = tid_col.to_numpy().astype(np.int64, copy=False)
+        # gaps[i] = ts[i+1] - ts[i], labeled by its right turn tid[i+1]
+        gaps = np.diff(ts_col.to_numpy().astype(np.int64, copy=False)).astype("float64")
+
+        n_gaps = n_turns - 1
+        ok = (n_null == 0) & (n_gaps >= 1)
+        full = ok & (n_gaps >= window)
+        width = np.where(full, window, n_gaps)
+        m = np.where(full, (n_gaps - window) // step + 1, 1)
+        first = np.cumsum(m) - m
+        run = np.repeat(np.arange(len(starts)), m)
+        widx = np.arange(len(run)) - first[run]
+        pos = starts[run] + widx * step  # gap offset of each window's first gap
+        ok_row, w_row = ok[run], width[run]
+
+        out = {
+            "conv_id": tbl.column("conv_id").take(starts).to_numpy(
+                zero_copy_only=False)[run],
+            "window_idx": np.where(ok_row, widx, -1).astype("int32"),
+            "n": np.where(ok_row, w_row, 0).astype("int32"),
+            "start_turn_idx": np.full(len(run), -1, dtype="int32"),
+            "end_turn_idx": np.full(len(run), -1, dtype="int32"),
+        }
+        out.update({c: np.full(len(run), np.nan) for c in _WINDOW_STATS})
+        for w in np.unique(w_row[ok_row]):
+            rows = np.flatnonzero(ok_row & (w_row == w))
+            p = pos[rows]
+            sw = np.lib.stride_tricks.sliding_window_view(gaps, w)[p]
+            q1, md, q3 = np.percentile(sw, [25, 50, 75], axis=1, method="linear")
+            out["mean_gap_ms"][rows] = sw.mean(axis=1)
+            out["median_gap_ms"][rows] = md
+            out["iqr_gap_ms"][rows] = q3 - q1
+            out["entropy_gap"][rows] = _entropy_rows(sw)
+            out["start_turn_idx"][rows] = tid[p + 1]
+            out["end_turn_idx"][rows] = tid[p + w]
+        out["error"] = np.full(len(run), None, dtype=object)
+        for r in np.flatnonzero(~ok):
+            out["error"][first[r]] = (
+                f"null ts or turn_idx in {n_null[r]} of {n_turns[r]} turns"
+                if n_null[r] else f"group too small: {n_turns[r]} turns")
+        return out
+
+    def kernel(tbl: pa.Table) -> dict:
+        starts = run_starts(tbl.column("conv_id"))
+        try:
+            return windows(tbl, starts)
+        except Exception as e:  # F5: never fail the task
+            if len(starts) == 1:
+                conv = tbl.column("conv_id")[0].as_py()
+                return error_row(conv, f"{type(e).__name__}: {e}")
+            ends = np.append(starts[1:], tbl.num_rows)
+            parts = [kernel(tbl.slice(s, e - s)) for s, e in zip(starts, ends)]
+            return {c: np.concatenate([p[c] for p in parts]) for c in parts[0]}
+
+    return kernel
+
+
+def make_window_kernel(window: int = 8, overlap: float = 0.5):
+    """Per-group pandas form of the window kernel (one conversation, or one
+    chunk of it, in any row order), for the skew split's applyInPandas."""
+    batch = _window_kernel(window, overlap)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        conv = pdf["conv_id"].iloc[0]
-
-        def err(msg: str) -> pd.DataFrame:
-            return pd.DataFrame(
-                {
-                    "conv_id": [conv], "window_idx": [np.int32(-1)],
-                    "n": [np.int32(0)],
-                    "start_turn_idx": [np.int32(-1)], "end_turn_idx": [np.int32(-1)],
-                    "mean_gap_ms": [np.nan], "median_gap_ms": [np.nan],
-                    "iqr_gap_ms": [np.nan], "entropy_gap": [np.nan],
-                    "error": [msg],
-                }
-            )
-
-        try:
-            if len(pdf) < min_turns:
-                return err(f"group too small: {len(pdf)} turns")
-            if "ts_ms" in pdf.columns:  # pre-cast JVM-side (fast path)
-                g = pdf.sort_values(["turn_idx", "ts_ms"], kind="mergesort")
-                ts_ms = g["ts_ms"].to_numpy(dtype="int64")
-            else:
-                g = pdf.sort_values(["turn_idx", "ts"], kind="mergesort")
-                ts_ms = g["ts"].values.astype("datetime64[ms]").astype("int64")
-            gaps = np.diff(ts_ms).astype("float64")
-            turn_idx = g["turn_idx"].values.astype("int64")[1:]  # gap i ends at turn i+1
-            if len(gaps) < window:
-                # short conversation: one window over everything
-                sw = gaps[None, :]
-                start_t = turn_idx[:1]
-                end_t = turn_idx[-1:]
-            else:
-                sw = np.lib.stride_tricks.sliding_window_view(gaps, window)[::step]
-                starts = np.arange(0, len(gaps) - window + 1, step, dtype=np.int64)
-                start_t = turn_idx[starts]
-                end_t = turn_idx[starts + window - 1]
-            m = sw.shape[0]
-            q1, md, q3 = np.percentile(sw, [25, 50, 75], axis=1, method="linear")
-            return pd.DataFrame(
-                {
-                    "conv_id": conv,
-                    "window_idx": np.arange(m, dtype="int32"),
-                    "n": np.full(m, sw.shape[1], dtype="int32"),
-                    "start_turn_idx": start_t.astype("int32"),
-                    "end_turn_idx": end_t.astype("int32"),
-                    "mean_gap_ms": sw.mean(axis=1),
-                    "median_gap_ms": md,
-                    "iqr_gap_ms": q3 - q1,
-                    "entropy_gap": _entropy_rows(sw),
-                    "error": None,
-                }
-            )
-        except Exception as e:  # F5: never fail the task
-            return err(f"{type(e).__name__}: {e}")
+        g = pdf.sort_values(["turn_idx", "ts_ms"], kind="mergesort")
+        tbl = pa.Table.from_pandas(
+            g[["conv_id", "turn_idx", "ts_ms"]], preserve_index=False)
+        return pd.DataFrame(batch(tbl))
 
     return kernel
 
@@ -129,451 +266,31 @@ def windowed_summary_features(
     transcripts: DataFrame,
     window: int = 8,
     overlap: float = 0.5,
-    min_turns: int = 2,
     group_col: str = "conv_id",
-    strategy: str = "mapInArrow",
     shuffle_key: str | None = None,
-) -> DataFrame:
-    """Per-conversation windowed summary features.
-
-    Physically different, semantically identical strategies
-    (tests/test_kernels.py asserts equality):
-
-    * ``mapInArrow`` (default) — zero-copy numpy over Arrow batches, batch
-      stacking across conversations; fastest (no pandas conversion).
-    * ``mapInPandas`` — same streaming shape via pandas; kept as the
-      readable reference implementation.
-    * ``applyInPandas`` — one Arrow exchange per group. Right when groups
-      are large (hot conversations): bounded memory per task.
-
-    Both map strategies amortize per-group overhead across thousands of
-    small conversations — the dominant case at 10^12-turn scale (billions
-    of short conversations) — by repartitioning on conv_id +
-    sortWithinPartitions and carrying the conversation that spans a batch
-    boundary.
-    """
-    if strategy == "mapInArrow":
-        if min_turns != 2:  # the arrow path hardcodes the 2-turn minimum
-            strategy = "mapInPandas"
-        else:
-            return windowed_summary_features_arrow(
-                transcripts, window=window, overlap=overlap,
-                group_col=group_col, shuffle_key=shuffle_key,
-            )
-    from ..utils import ts_ms as _ts_ms_expr
-
-    kernel = make_window_kernel(window=window, overlap=overlap, min_turns=min_turns)
-    # ship the timestamp as int64 epoch-ms: the JVM cast is codegen'd and the
-    # Python side skips per-batch datetime conversion entirely
-    key = shuffle_key or group_col
-    cols = [group_col, "turn_idx"]
-    if shuffle_key and shuffle_key not in cols:
-        cols.append(shuffle_key)
-    slim = transcripts.select(*cols, _ts_ms_expr("ts").alias("ts_ms"))
-    if strategy == "applyInPandas":
-        if shuffle_key and shuffle_key != group_col:
-            # grouping by a coarser key would hand the kernel several
-            # conversations per task (its misuse guard turns that into
-            # error rows) — refuse loudly instead of silently ignoring the
-            # requested exchange reuse (round-2 advice)
-            raise ValueError(
-                "strategy='applyInPandas' groups by group_col and cannot "
-                "honor shuffle_key; use 'mapInArrow' or 'mapInPandas'"
-            )
-        return slim.groupBy(group_col).applyInPandas(kernel, WINDOW_FEATURE_SCHEMA)
-    if strategy != "mapInPandas":
-        raise ValueError(
-            "strategy must be 'mapInArrow', 'applyInPandas' or 'mapInPandas'"
-        )
-
-    def run_batches(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            # hold back the trailing run of the final (possibly incomplete)
-            # conversation; a run mask (not searchsorted) stays correct when
-            # the partition sort leads with shuffle_key, under which conv_id
-            # is contiguous but not globally ordered
-            mask = (pdf["conv_id"] == pdf["conv_id"].iat[-1]).to_numpy()
-            cut = 0 if mask.all() else len(pdf) - int(np.argmin(mask[::-1]))
-            carry = pdf.iloc[cut:]
-            head = pdf.iloc[:cut]
-            if len(head):
-                out = [kernel(g) for _, g in head.groupby("conv_id", sort=False)]
-                yield pd.concat(out, ignore_index=True)
-        if carry is not None and len(carry):
-            out = [kernel(g) for _, g in carry.groupby("conv_id", sort=False)]
-            yield pd.concat(out, ignore_index=True)
-
-    # same sort-key construction as the arrow path: the requested exchange
-    # reuse survives the min_turns fallback instead of silently vanishing
-    sort_keys = [key] + ([group_col] if group_col != key else []) + ["turn_idx", "ts_ms"]
-    arranged = slim.repartition(key).sortWithinPartitions(*sort_keys)
-    return arranged.mapInPandas(run_batches, WINDOW_FEATURE_SCHEMA)
-
-
-def _arrow_window_stats(run_starts, run_convs, turn_idx, ts_ms, window: int, step: int):
-    """Vectorized per-batch window stats over contiguous conversation runs.
-
-    ``run_starts`` are the start offsets of conversation runs in the batch
-    (computed C-side with pyarrow compare — converting every row's conv_id
-    string to a Python object was ~30% of kernel time); ``run_convs`` holds
-    ONE conv_id string per run. All full windows across all conversations
-    in the batch are stacked into one matrix so the percentile pass runs
-    once per batch, not once per conversation.
-    """
-    n = len(ts_ms)
-    starts = run_starts
-    ends = np.append(starts[1:], n)
-
-    mats, metas = [], []  # full-window matrices + (conv, widx, start_t, end_t)
-    shorts = []           # (conv, gaps, start_t, end_t)
-    errors = []           # (conv, msg)
-    for s, e, conv in zip(starts, ends, run_convs):
-        k = e - s
-        if k < 2:
-            errors.append((conv, f"group too small: {k} turns"))
-            continue
-        ts = ts_ms[s:e]
-        tid = turn_idx[s:e]
-        gaps = np.diff(ts).astype("float64")
-        if len(gaps) < window:
-            shorts.append((conv, gaps, tid[1], tid[-1]))
-            continue
-        sw = np.lib.stride_tricks.sliding_window_view(gaps, window)[::step]
-        w_starts = np.arange(0, len(gaps) - window + 1, step, dtype=np.int64)
-        mats.append(sw)
-        # gap i is labeled by its right turn: window [s, s+window-1] spans
-        # turns tid[s+1] .. tid[s+window]
-        metas.append((conv, w_starts, tid[w_starts + 1], tid[w_starts + window]))
-
-    out = {k: [] for k in (
-        "conv_id", "window_idx", "n", "start_turn_idx", "end_turn_idx",
-        "mean_gap_ms", "median_gap_ms", "iqr_gap_ms", "entropy_gap", "error")}
-
-    if mats:
-        big = np.vstack(mats)
-        q1, md, q3 = np.percentile(big, [25, 50, 75], axis=1, method="linear")
-        ent = _entropy_rows(big)
-        mean = big.mean(axis=1)
-        pos = 0
-        for (conv, w_starts, st, en), m in zip(metas, mats):
-            cnt = m.shape[0]
-            sl = slice(pos, pos + cnt)
-            out["conv_id"].extend([conv] * cnt)
-            out["window_idx"].append((w_starts // step).astype("int32"))
-            out["n"].append(np.full(cnt, window, dtype="int32"))
-            out["start_turn_idx"].append(st.astype("int32"))
-            out["end_turn_idx"].append(en.astype("int32"))
-            out["mean_gap_ms"].append(mean[sl])
-            out["median_gap_ms"].append(md[sl])
-            out["iqr_gap_ms"].append(q3[sl] - q1[sl])
-            out["entropy_gap"].append(ent[sl])
-            out["error"].extend([None] * cnt)
-            pos += cnt
-
-    for conv, gaps, st, en in shorts:
-        q1, md, q3 = np.percentile(gaps, [25, 50, 75], method="linear")
-        out["conv_id"].append(conv)
-        out["window_idx"].append(np.array([0], dtype="int32"))
-        out["n"].append(np.array([len(gaps)], dtype="int32"))
-        out["start_turn_idx"].append(np.array([st], dtype="int32"))
-        out["end_turn_idx"].append(np.array([en], dtype="int32"))
-        out["mean_gap_ms"].append(np.array([gaps.mean()]))
-        out["median_gap_ms"].append(np.array([md]))
-        out["iqr_gap_ms"].append(np.array([q3 - q1]))
-        out["entropy_gap"].append(_entropy_rows(gaps[None, :]))
-        out["error"].append(None)
-    for conv, msg in errors:
-        out["conv_id"].append(conv)
-        out["window_idx"].append(np.array([-1], dtype="int32"))
-        out["n"].append(np.array([0], dtype="int32"))
-        out["start_turn_idx"].append(np.array([-1], dtype="int32"))
-        out["end_turn_idx"].append(np.array([-1], dtype="int32"))
-        for c in ("mean_gap_ms", "median_gap_ms", "iqr_gap_ms", "entropy_gap"):
-            out[c].append(np.array([np.nan]))
-        out["error"].append(msg)
-
-    def cat(key, dtype):
-        parts = out[key]
-        if not parts:
-            return np.empty(0, dtype=dtype)
-        return np.concatenate([np.asarray(p, dtype=dtype) for p in parts])
-
-    return {
-        "conv_id": out["conv_id"]
-        if isinstance(out["conv_id"], list) else out["conv_id"],
-        "window_idx": cat("window_idx", "int32"),
-        "n": cat("n", "int32"),
-        "start_turn_idx": cat("start_turn_idx", "int32"),
-        "end_turn_idx": cat("end_turn_idx", "int32"),
-        "mean_gap_ms": cat("mean_gap_ms", "float64"),
-        "median_gap_ms": cat("median_gap_ms", "float64"),
-        "iqr_gap_ms": cat("iqr_gap_ms", "float64"),
-        "entropy_gap": cat("entropy_gap", "float64"),
-        "error": out["error"],
-    }
-
-
-def windowed_summary_features_arrow(
-    transcripts: DataFrame,
-    window: int = 8,
-    overlap: float = 0.5,
-    group_col: str = "conv_id",
     presorted: bool = False,
-    shuffle_key: str | None = None,
 ) -> DataFrame:
-    """mapInArrow kernel: zero-copy numpy views over Arrow batches — no
-    pandas conversion on either side. Same output contract as
-    :func:`windowed_summary_features` (equality asserted in tests); built
-    because the pandas conversion copies were the kernel's scaling
-    bottleneck (memory-bandwidth stalls at high core counts).
+    """Per-conversation windowed summary features: the window kernel on
+    :func:`mapgroups_with_carry`, which amortizes per-group overhead across
+    thousands of small conversations per Arrow batch — the dominant case at
+    10^12-turn scale (billions of short conversations).
 
-    Batch-boundary conversations are carried between batches exactly like
-    the mapInPandas path.
-
-    ``presorted=True`` skips the repartition+sort — the kernel becomes a
-    pure scan→Python map with NO shuffle. Preconditions (the bucketed-table
-    layout a production deployment writes anyway, cf. sources.write_stable_parquet):
-    every conversation lives wholly inside one input file, rows sorted by
-    (conv_id, turn_idx, ts) within each file, and
-    ``spark.sql.files.maxPartitionBytes`` at least the largest file size so
-    parquet row-group splitting cannot slice a conversation across tasks.
+    The timestamp crosses as int64 epoch-ms: the JVM cast is codegen'd and
+    the Python side does no datetime conversion. ``shuffle_key`` and
+    ``presorted`` are the harness's. With ``presorted=True`` the kernel is
+    a pure scan→Python map with NO shuffle.
     """
-    import pyarrow as pa
-
     from ..utils import ts_ms as _ts_ms_expr
-
-    step = max(1, int(round(window * (1.0 - overlap))))
-    out_schema = pa.schema([
-        ("conv_id", pa.string()), ("window_idx", pa.int32()), ("n", pa.int32()),
-        ("start_turn_idx", pa.int32()), ("end_turn_idx", pa.int32()),
-        ("mean_gap_ms", pa.float64()), ("median_gap_ms", pa.float64()),
-        ("iqr_gap_ms", pa.float64()), ("entropy_gap", pa.float64()),
-        ("error", pa.string()),
-    ])
-
-    def run(batches):
-        import pyarrow.compute as pc
-
-        carry: "pa.Table | None" = None
-        def flush(tbl):
-            n = tbl.num_rows
-            conv = tbl.column("conv_id").combine_chunks()
-            # run boundaries via C-side string compare; one .as_py() per RUN
-            if n > 1:
-                neq = pc.not_equal(conv.slice(1), conv.slice(0, n - 1))
-                change = np.concatenate(
-                    [[True], neq.to_numpy(zero_copy_only=False).astype(bool)]
-                )
-            else:
-                change = np.array([True])
-            run_starts = np.flatnonzero(change)
-            run_convs = [conv[int(s)].as_py() for s in run_starts]
-            tid = tbl.column("turn_idx").to_numpy(zero_copy_only=False).astype("int64", copy=False)
-            tsm = tbl.column("ts_ms").to_numpy(zero_copy_only=False).astype("int64", copy=False)
-            cols = _arrow_window_stats(run_starts, run_convs, tid, tsm, window, step)
-            arrays = [
-                pa.array(cols["conv_id"], type=pa.string()),
-                pa.array(cols["window_idx"], type=pa.int32()),
-                pa.array(cols["n"], type=pa.int32()),
-                pa.array(cols["start_turn_idx"], type=pa.int32()),
-                pa.array(cols["end_turn_idx"], type=pa.int32()),
-                pa.array(cols["mean_gap_ms"], type=pa.float64()),
-                pa.array(cols["median_gap_ms"], type=pa.float64()),
-                pa.array(cols["iqr_gap_ms"], type=pa.float64()),
-                pa.array(cols["entropy_gap"], type=pa.float64()),
-                pa.array(cols["error"], type=pa.string()),
-            ]
-            return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if carry is not None and carry.num_rows:
-                tbl = pa.concat_tables([carry, tbl])
-            if not tbl.num_rows:
-                continue
-            conv_col = tbl.column("conv_id")
-            last_conv = conv_col[-1]
-            import pyarrow.compute as pc
-            mask = pc.equal(conv_col, last_conv)
-            n_last = pc.sum(mask).as_py()
-            cut = tbl.num_rows - n_last
-            carry = tbl.slice(cut)
-            head = tbl.slice(0, cut)
-            if head.num_rows:
-                yield flush(head)
-        if carry is not None and carry.num_rows:
-            yield flush(carry)
 
     cols = [group_col, "turn_idx", _ts_ms_expr("ts").alias("ts_ms")]
     if shuffle_key and shuffle_key != group_col:
         cols.append(shuffle_key)
-    slim = transcripts.select(*cols)
-    if presorted:
-        return slim.mapInArrow(run, WINDOW_FEATURE_SCHEMA)
-    # shuffle_key: shuffle on a 1:1 precursor of the group col (e.g. the
-    # raw user_id that conv_id is derived from) so an upstream exchange on
-    # that key is reused instead of re-shuffling on the derived string;
-    # the sort keeps groups contiguous either way
-    key = shuffle_key or group_col
-    sort_keys = [key] + ([group_col] if group_col != key else []) \
-        + ["turn_idx", "ts_ms"]
-    arranged = slim.repartition(key).sortWithinPartitions(*sort_keys)
-    return arranged.mapInArrow(run, WINDOW_FEATURE_SCHEMA)
-
-
-def windowed_summary_features_jvm(
-    transcripts: DataFrame,
-    window: int = 8,
-    overlap: float = 0.5,
-    group_col: str = "conv_id",
-    entropy_bins: int = _ENTROPY_BINS,
-) -> DataFrame:
-    """The window-summary operator with NO Python in the hot path.
-
-    Same output contract as :func:`windowed_summary_features` (equality
-    asserted by tests, allclose on floats): strided overlapping windows over
-    each conversation's gap series with mean/median/IQR/entropy per window.
-    Mechanics, all Catalyst expressions inside whole-stage codegen:
-
-    * trailing ``collect_list(gap_ms)`` window frame per gap row;
-    * stride = keep only rows on the step grid (plus the single short-conv
-      window at the conversation's last gap);
-    * exact type-7 quantiles via ``array_sort`` + linear interpolation;
-    * histogram entropy via ``filter``/``aggregate`` array lambdas;
-    * 1-turn conversations contribute error rows (F5 channel), built with a
-      grouped count — no Python either.
-
-    This path scales like any JVM window chain (the Arrow hop and Python
-    worker pool of the kernel path are the only parts of the flagship that
-    don't); the pandas kernel remains the extension point for custom
-    metrics.
-
-    Mechanics: strided windows become a GROUP-BY, not a sliding frame — a
-    per-row sliding ``collect_list`` frame is an allocation storm (measured
-    16x slower than the Python kernel). Instead each gap row explodes into
-    the <= window/step windows that own it (50% overlap → 2 copies) and one
-    hash aggregation per (conv, window) collects the window's values once.
-    """
-    from ..utils import ts_ms as _ts_ms_expr
-
-    step = max(1, int(round(window * (1.0 - overlap))))
-    w_order = W.partitionBy(group_col).orderBy("turn_idx", "ts_ms")
-
-    slim = transcripts.select(
-        group_col, "turn_idx", _ts_ms_expr("ts").alias("ts_ms")
+    return mapgroups_with_carry(
+        transcripts.select(*cols), _window_kernel(window, overlap),
+        WINDOW_FEATURE_SCHEMA, ["turn_idx", "ts_ms"], group_col=group_col,
+        sort_cols=("turn_idx", "ts_ms"), shuffle_key=shuffle_key,
+        presorted=presorted,
     )
-    ms = F.col("ts_ms")
-    base = slim.withColumn("gap_ms", (ms - F.lag(ms).over(w_order)).cast("double"))
-    gaps = base.filter(F.col("gap_ms").isNotNull())
-
-    w_gap_order = W.partitionBy(group_col).orderBy("turn_idx", "ts_ms")
-    w_all = W.partitionBy(group_col)
-    gaps = gaps.withColumn("gi", F.row_number().over(w_gap_order) - 1).withColumn(
-        "n_gaps", F.count(F.lit(1)).over(w_all)
-    )
-
-    # owning window starts for gap gi: s ≡ 0 (mod step),
-    # max(0, gi-window+1) <= s <= min(gi, n_gaps-window); short conv → s=0
-    gi_c, ng = F.col("gi"), F.col("n_gaps")
-    lo_s = F.greatest(F.lit(0), gi_c - F.lit(window - 1))
-    hi_s = F.least(gi_c, ng - F.lit(window))
-    k_lo = F.ceil(lo_s / F.lit(step)).cast("long")
-    k_hi = F.floor(hi_s / F.lit(step)).cast("long")
-    owning = F.when(ng < window, F.array(F.lit(0).cast("long"))).otherwise(
-        F.when(
-            k_hi >= k_lo,
-            F.transform(F.sequence(k_lo, k_hi), lambda k: k * step),
-        ).otherwise(F.array().cast("array<long>"))
-    )
-    exploded = gaps.select(
-        group_col, "turn_idx", "gap_ms", "gi", "n_gaps",
-        F.explode(owning).alias("win_start"),
-    )
-
-    # pass 1: per-window hash aggregation — counts, bounds, exact type-7
-    # quantiles via the JVM percentile aggregate (linear interpolation at
-    # rank p*(n-1), identical to np.percentile method='linear')
-    agg1 = exploded.groupBy(group_col, "win_start").agg(
-        F.count(F.lit(1)).alias("n_l"),
-        F.sum("gap_ms").alias("sum_gap"),
-        F.min("gap_ms").alias("lo"),
-        F.max("gap_ms").alias("hi"),
-        F.min("turn_idx").alias("start_turn_idx_l"),
-        F.max("turn_idx").alias("end_turn_idx_l"),
-        F.percentile(
-            F.col("gap_ms"), F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))
-        ).alias("q"),
-    )
-
-    # pass 2: entropy — bin each member against its window's [lo, hi], count
-    # per (window, bin), fold -p ln p. All shuffles share the (conv,
-    # win_start) key, so the exchanges line up.
-    bounds = agg1.select(group_col, "win_start", "lo", "hi", "n_l")
-    member = exploded.join(bounds, [group_col, "win_start"])
-    bin_col = F.when(
-        F.col("hi") > F.col("lo"),
-        F.least(
-            F.greatest(
-                F.floor(
-                    (F.col("gap_ms") - F.col("lo"))
-                    / (F.col("hi") - F.col("lo"))
-                    * entropy_bins
-                ).cast("int"),
-                F.lit(0),
-            ),
-            F.lit(entropy_bins - 1),
-        ),
-    ).otherwise(F.lit(0))
-    per_bin = member.withColumn("bin", bin_col).groupBy(
-        group_col, "win_start", "bin"
-    ).agg(F.count(F.lit(1)).alias("cnt"), F.min("n_l").alias("n_l"))
-    p = F.col("cnt").cast("double") / F.col("n_l").cast("double")
-    ent = per_bin.groupBy(group_col, "win_start").agg(
-        F.sum(-p * F.log(p)).alias("entropy_raw")
-    )
-
-    joined = agg1.join(ent, [group_col, "win_start"], "left")
-    out = joined.select(
-        F.col(group_col).alias("conv_id"),
-        (F.col("win_start") / step).cast("int").alias("window_idx"),
-        F.col("n_l").cast("int").alias("n"),
-        F.col("start_turn_idx_l").cast("int").alias("start_turn_idx"),
-        F.col("end_turn_idx_l").cast("int").alias("end_turn_idx"),
-        (F.col("sum_gap") / F.col("n_l").cast("double")).alias("mean_gap_ms"),
-        F.col("q")[1].alias("median_gap_ms"),
-        (F.col("q")[2] - F.col("q")[0]).alias("iqr_gap_ms"),
-        F.when(F.col("hi") > F.col("lo"), F.col("entropy_raw"))
-        .otherwise(F.lit(0.0))
-        .alias("entropy_gap"),
-        F.lit(None).cast("string").alias("error"),
-    )
-
-    # F5 error channel for <2-turn conversations, JVM-built
-    tiny = (
-        slim.groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .filter(F.col("n_turns") < 2)
-        .select(
-            F.col(group_col).alias("conv_id"),
-            F.lit(-1).cast("int").alias("window_idx"),
-            F.lit(0).cast("int").alias("n"),
-            F.lit(-1).cast("int").alias("start_turn_idx"),
-            F.lit(-1).cast("int").alias("end_turn_idx"),
-            F.lit(None).cast("double").alias("mean_gap_ms"),
-            F.lit(None).cast("double").alias("median_gap_ms"),
-            F.lit(None).cast("double").alias("iqr_gap_ms"),
-            F.lit(None).cast("double").alias("entropy_gap"),
-            F.concat(
-                F.lit("group too small: "), F.col("n_turns").cast("string"), F.lit(" turns")
-            ).alias("error"),
-        )
-    )
-    return out.unionByName(tiny)
 
 
 def windowed_summary_features_skew_split(
@@ -595,7 +312,7 @@ def windowed_summary_features_skew_split(
     a multiple of the window step. A 100M-turn conversation becomes ~24k
     bounded tasks instead of one straggler.
     """
-    step = max(1, int(round(window * (1.0 - overlap))))
+    step = window_step(window, overlap)
     if split_turns % step:
         raise ValueError("split_turns must be a multiple of the window step")
     if split_turns < window:
@@ -603,7 +320,7 @@ def windowed_summary_features_skew_split(
         # chunk; a window spanning 3+ chunks would be computed from a
         # truncated gap series and silently mis-valued
         raise ValueError("split_turns must be >= window")
-    base = make_window_kernel(window=window, overlap=overlap, min_turns=2)
+    base = make_window_kernel(window=window, overlap=overlap)
     from ..utils import ts_ms as _ts_ms_expr
 
     slim = transcripts.select(
@@ -625,7 +342,7 @@ def windowed_summary_features_skew_split(
         k = int(pdf["__chunk"].iloc[0])
         out = base(pdf.drop(columns="__chunk"))
         if out["error"].iloc[0] is not None and k > 0:
-            # overlap-only fragment (< min_turns) of a later chunk: no windows
+            # overlap-only fragment (< 2 turns) of a later chunk: no windows
             return out.iloc[0:0]
         if out["error"].iloc[0] is not None:
             return out

@@ -12,16 +12,20 @@ Same pipeline shape, re-specced deterministically:
   windows → {mean, sd, skew, kurtosis (excess), acf_lag1..m, spectral
   energy in band} per window.
 
-Runs per conversation/sensor-group under the same mapInPandas/applyInPandas
-harness as kernels.py; one row per window; error-channel column.
+Runs per conversation/sensor-group on the grouped-batch harness of
+kernels.py (``mapgroups_with_carry``); one row per window; error-channel
+column.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .kernels import mapgroups_with_carry, run_starts, window_step
 
 SIGNAL_FEATURE_SCHEMA = (
     "conv_id string, window_idx int, n int, "
@@ -261,51 +265,93 @@ def _detrend_rows(X: np.ndarray, mode) -> np.ndarray:
     )
 
 
-def _make_batch_kernel(
-    featurize,
-    float_cols: list[str],
-    per_group_kernel,
-    window: int,
-    overlap: float,
-    value_col: str,
-    detrend,
-    taps,
-    zero_phase: bool,
-):
-    """Shared whole-frame kernel skeleton (round-7): processes EVERY
-    complete group in a carry batch in one call — group boundaries found
-    with numpy (no ``pandas.groupby`` split), groups stacked BY EFFECTIVE
-    LENGTH so detrend / windowing / ``featurize`` run one vectorized pass
-    per distinct length instead of one Python dispatch per group
-    (measured ~0.3-0.5 ms/group dispatch at 66-row groups, the dominant
-    kernel cost after the round-7 sort removal).
+def _values(tbl: pa.Table, value_col: str) -> np.ndarray:
+    """``value_col`` as float64, NULL as NaN (both are dropped)."""
+    return tbl.column(value_col).cast(pa.float64()).to_numpy()
 
-    Output is row-for-row identical to looping ``per_group_kernel`` over
-    the groups in frame order (pinned by test): same error rows for
-    too-small groups, same window_idx/n labelling, and bit-equal floats —
-    every stacked operation is an elementwise/axis-1 twin of the 1-D op.
-    Any unexpected exception falls back to the per-group loop so the
-    error-channel contract (F5: per-group err rows, never a task failure)
-    is preserved exactly."""
-    step = max(1, int(round(window * (1.0 - overlap))))
 
-    def fallback(frame: pd.DataFrame) -> dict:
-        outs = [per_group_kernel(g) for _, g in
-                frame.groupby("conv_id", sort=False)]
+def _make_group_kernel(featurize, float_cols: list[str], window: int,
+                       overlap: float, value_col: str, detrend, band,
+                       n_taps: int, zero_phase: bool):
+    """Per-group kernel over ONE group's rows in order (a ``pyarrow.Table``
+    with ``conv_id`` and ``value_col``): NaN/NULL values dropped → detrend
+    → optional zero-phase band-pass (filtfilt; ``zero_phase=False`` keeps
+    the single forward pass) → overlapping windows → ``featurize`` per
+    window. Returns one numpy array per output column. The batch kernels'
+    F5 fallback and the reference their output is tested against."""
+    step = window_step(window, overlap)
+    taps = fir_bandpass(n_taps, *band) if band else None
+
+    def kernel(tbl: pa.Table) -> dict:
+        conv = tbl.column("conv_id")[0].as_py()
+
+        def err(msg: str) -> dict:
+            row = {"conv_id": np.array([conv], dtype=object),
+                   "window_idx": np.array([-1], dtype="int32"),
+                   "n": np.array([0], dtype="int32")}
+            row.update({c: np.array([np.nan]) for c in float_cols})
+            row["error"] = np.array([msg], dtype=object)
+            return row
+
+        try:
+            x = _values(tbl, value_col)
+            x = x[~np.isnan(x)]
+            if len(x) < 4:
+                return err(f"group too small: {len(x)} samples")
+            x = _detrend(x, detrend)
+            if taps is not None:
+                x = apply_fir_filtfilt(x, taps) if zero_phase else apply_fir(x, taps)
+            if len(x) < window:
+                sw = x[None, :]
+            else:
+                sw = np.lib.stride_tricks.sliding_window_view(x, window)[::step]
+            m = sw.shape[0]
+            out = {"conv_id": np.full(m, conv, dtype=object),
+                   "window_idx": np.arange(m, dtype="int32"),
+                   "n": np.full(m, sw.shape[1], dtype="int32")}
+            out.update(featurize(sw))
+            out["error"] = np.full(m, None, dtype=object)
+            return out
+        except Exception as e:  # F5: error channel, never a task failure
+            return err(f"{type(e).__name__}: {e}")
+
+    return kernel
+
+
+def _make_batch_kernel(featurize, float_cols: list[str], window: int,
+                       overlap: float, value_col: str, detrend, band,
+                       n_taps: int, zero_phase: bool):
+    """Whole-table kernel for :func:`kernels.mapgroups_with_carry`: every
+    group in the table in one call, groups stacked BY EFFECTIVE LENGTH so
+    detrend / windowing / ``featurize`` run one vectorized pass per
+    distinct length instead of one Python dispatch per group (measured
+    ~0.3-0.5 ms/group dispatch at 66-row groups).
+
+    Output is row-for-row identical to looping the per-group kernel
+    (:func:`_make_group_kernel`, same arguments) over the groups in table
+    order (pinned by test): same error rows for too-small groups, same
+    window_idx/n labelling, and bit-equal floats — every stacked operation
+    is an elementwise/axis-1 twin of the 1-D op. Any unexpected exception
+    falls back to that per-group loop, so a failing group becomes its own
+    error row (F5), never a task failure."""
+    step = window_step(window, overlap)
+    taps = fir_bandpass(n_taps, *band) if band else None
+    per_group = _make_group_kernel(featurize, float_cols, window, overlap,
+                                   value_col, detrend, band, n_taps, zero_phase)
+
+    def fallback(tbl: pa.Table) -> dict:
+        starts = run_starts(tbl.column("conv_id"))
+        ends = np.append(starts[1:], tbl.num_rows)
+        outs = [per_group(tbl.slice(s, e - s)) for s, e in zip(starts, ends)]
         return {c: np.concatenate([o[c] for o in outs]) for c in outs[0]}
 
-    def kernel(frame: pd.DataFrame) -> dict:
+    def kernel(tbl: pa.Table) -> dict:
         try:
-            conv = frame["conv_id"].to_numpy()
-            vals = frame[value_col].to_numpy(dtype="float64")
-            nrow = len(conv)
-            change = np.empty(nrow, dtype=bool)
-            change[0] = True
-            change[1:] = conv[1:] != conv[:-1]
-            gstart = np.flatnonzero(change)
+            gstart = run_starts(tbl.column("conv_id"))
+            vals = _values(tbl, value_col)
+            nrow = len(vals)
             gend = np.append(gstart[1:], nrow)
             G = len(gstart)
-            gconv = conv[gstart]
             ok = ~np.isnan(vals)
             cum = np.zeros(nrow + 1, dtype=np.int64)
             np.cumsum(ok, out=cum[1:])
@@ -327,18 +373,14 @@ def _make_batch_kernel(
             np.cumsum(m_per, out=offs[1:])
             total = int(offs[-1])
 
-            out_conv = np.empty(total, dtype=object)
-            out_widx = np.empty(total, dtype="int32")
-            out_n = np.empty(total, dtype="int32")
+            gconv = tbl.column("conv_id").take(gstart).to_numpy(zero_copy_only=False)
+            out_widx = (np.arange(total) - np.repeat(offs[:-1], m_per)).astype("int32")
+            out_widx[offs[:-1][small]] = -1
+            out_n = np.zeros(total, dtype="int32")
             out_err = np.full(total, None, dtype=object)
             floats = {c: np.full(total, np.nan) for c in float_cols}
-
             for g in np.flatnonzero(small):
-                o = offs[g]
-                out_conv[o] = gconv[g]
-                out_widx[o] = -1
-                out_n[o] = 0
-                out_err[o] = f"group too small: {elen[g]} samples"
+                out_err[offs[g]] = f"group too small: {elen[g]} samples"
 
             valid = np.flatnonzero(~small)
             for L in np.unique(elen[valid]):
@@ -360,22 +402,37 @@ def _make_batch_kernel(
                     sw = sw.reshape(-1, sw.shape[2])
                 cols = featurize(sw)
                 rows = (offs[gi][:, None] + np.arange(m)).ravel()
-                out_conv[rows] = np.repeat(gconv[gi], m)
-                out_widx[rows] = np.tile(
-                    np.arange(m, dtype="int32"), len(gi))
                 out_n[rows] = sw.shape[1]
                 for c in float_cols:
                     floats[c][rows] = cols[c]
 
-            out = {"conv_id": out_conv, "window_idx": out_widx, "n": out_n}
+            out = {"conv_id": np.repeat(gconv, m_per), "window_idx": out_widx,
+                   "n": out_n}
             out.update(floats)
             out["error"] = out_err
             return out
         except Exception:
-            return fallback(frame)
+            return fallback(tbl)
 
-    kernel.is_batch_kernel = True
     return kernel
+
+
+_SIGNAL_COLS = ["mean", "sd", "skew", "kurtosis", "acf1", "acf2", "energy"]
+
+
+def make_signal_kernel(
+    window: int = 64,
+    overlap: float = 0.5,
+    value_col: str = "value",
+    detrend: bool | str = True,
+    band: tuple[float, float] | None = None,
+    n_taps: int = 21,
+    zero_phase: bool = True,
+):
+    """Per-group signal kernel (moments + acf + energy per window; see
+    :func:`_make_group_kernel`)."""
+    return _make_group_kernel(_time_featurize, _SIGNAL_COLS, window, overlap,
+                              value_col, detrend, band, n_taps, zero_phase)
 
 
 def make_signal_batch_kernel(
@@ -387,192 +444,10 @@ def make_signal_batch_kernel(
     n_taps: int = 21,
     zero_phase: bool = True,
 ):
-    """Whole-frame twin of :func:`make_signal_kernel` (assume_sorted form)
-    — see :func:`_make_batch_kernel`."""
-    taps = fir_bandpass(n_taps, *band) if band else None
-    per_group = make_signal_kernel(
-        window=window, overlap=overlap, value_col=value_col,
-        detrend=detrend, band=band, n_taps=n_taps, zero_phase=zero_phase,
-        assume_sorted=True,
-    )
-    cols = ["mean", "sd", "skew", "kurtosis", "acf1", "acf2", "energy"]
-
-    def featurize(sw):
-        return _time_featurize(sw)
-
-    return _make_batch_kernel(featurize, cols, per_group, window, overlap,
-                              value_col, detrend, taps, zero_phase)
-
-
-def make_freq_batch_kernel(
-    window: int = 64,
-    overlap: float = 0.5,
-    value_col: str = "value",
-    detrend: bool | str = True,
-    band: tuple[float, float] | None = None,
-    n_taps: int = 21,
-    zero_phase: bool = True,
-):
-    """Whole-frame twin of :func:`make_freq_kernel` (assume_sorted form)
-    — see :func:`_make_batch_kernel`."""
-    taps = fir_bandpass(n_taps, *band) if band else None
-    per_group = make_freq_kernel(
-        window=window, overlap=overlap, value_col=value_col,
-        detrend=detrend, band=band, n_taps=n_taps, zero_phase=zero_phase,
-        assume_sorted=True,
-    )
-    cols = [f"{k}{i + 1}" for i in range(_NPEAKS) for k in ("freq", "mag")]
-    cols += ["spec_centroid", "spec_entropy"]
-    cols += [f"band_e{b + 1}" for b in range(_NBANDS)]
-
-    return _make_batch_kernel(_freq_features, cols, per_group, window,
-                              overlap, value_col, detrend, taps, zero_phase)
-
-
-def mapgroups_with_carry(
-    df: DataFrame,
-    kernel,
-    schema: str,
-    group_col: str = "conv_id",
-    sort_cols: tuple[str, ...] = ("turn_idx", "ts"),
-    shuffle_key: str | None = None,
-    project: list[str] | None = None,
-) -> DataFrame:
-    """Run a per-group kernel through mapInPandas with a cross-batch group
-    carry — the many-small-groups amortization kernels.py measured 2x over
-    per-group applyInPandas (one Arrow exchange per GROUP becomes one per
-    BATCH; the group spanning a batch boundary is held back and prepended
-    to the next batch). Requires groups contiguous under the partition
-    sort: guaranteed when shuffle_key is the group col or a 1:1 function
-    of it (the kernels' shuffle-key guard catches violations)."""
-    import numpy as np
-
-    key = shuffle_key or group_col
-    # sort by (key, group, ...) so every GROUP is contiguous even when the
-    # shuffle key maps to several groups — the carry then holds back whole
-    # groups and each is processed exactly once
-    sort_keys = [key] + ([group_col] if group_col != key else []) + list(sort_cols)
-    arranged = df.repartition(key).sortWithinPartitions(*sort_keys)
-    if project is not None:
-        # guide §4: ship only the columns the kernel reads across the
-        # Arrow boundary — the sort/shuffle columns (ts, turn_idx, raw
-        # key) have done their job Spark-side by this point (round-7:
-        # the datetime column alone was a measurable share of the
-        # per-batch pandas conversion)
-        arranged = arranged.select(*project)
-
-    if getattr(kernel, "is_batch_kernel", False):
-        # whole-frame kernel (round-7): one call per carry batch, no
-        # pandas groupby split — the kernel finds group boundaries itself
-        def emit(frame: pd.DataFrame):
-            return pd.DataFrame(kernel(frame))
-    else:
-        def emit(frame: pd.DataFrame):
-            outs = [kernel(g) for _, g in frame.groupby(group_col, sort=False)]
-            if outs and isinstance(outs[0], dict):
-                # dict-of-arrays kernel protocol (round-7): one DataFrame
-                # per BATCH instead of per group — the per-group
-                # pd.DataFrame constructor was ~25% of kernel wall at
-                # 66-row groups
-                return pd.DataFrame(
-                    {c: np.concatenate([o[c] for o in outs]) for c in outs[0]}
-                )
-            return pd.concat(outs, ignore_index=True)
-
-    def run(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            mask = (pdf[group_col] == pdf[group_col].iat[-1]).to_numpy()
-            # contiguous trailing run of the final group → held back
-            cut = 0 if mask.all() else len(pdf) - int(np.argmin(mask[::-1]))
-            carry = pdf.iloc[cut:]
-            head = pdf.iloc[:cut]
-            if len(head):
-                yield emit(head)
-        if carry is not None and len(carry):
-            yield emit(carry)
-
-    return arranged.mapInPandas(run, schema)
-
-
-def make_signal_kernel(
-    window: int = 64,
-    overlap: float = 0.5,
-    value_col: str = "value",
-    detrend: bool | str = True,
-    band: tuple[float, float] | None = None,
-    n_taps: int = 21,
-    zero_phase: bool = True,
-    assume_sorted: bool = False,
-):
-    """Per-group kernel over a numeric signal column ordered by
-    (turn_idx, ts): detrend ('linear' or 'savgol') → optional zero-phase
-    band-pass (filtfilt; ``zero_phase=False`` keeps the single forward
-    pass) → overlapping windows → moments + acf + energy.
-
-    ``assume_sorted=True`` (set by the mapInPandas carry path, whose
-    partition sort already ordered every group by (turn_idx, ts)) skips
-    the per-group mergesort — 45% of per-group wall at 66-row groups
-    (round-7 profile) — and the nunique shuffle-key guard, which is
-    structurally satisfied there because the carry splits ON the group
-    column. Returns dict-of-arrays (assembled per batch by the carry
-    loop); the applyInPandas path wraps it back into DataFrames."""
-    step = max(1, int(round(window * (1.0 - overlap))))
-    taps = fir_bandpass(n_taps, *band) if band else None
-
-    def kernel(pdf: pd.DataFrame) -> dict:
-        conv = pdf["conv_id"].iat[0] if assume_sorted else pdf["conv_id"].min()
-
-        def err(msg: str) -> dict:
-            return {
-                "conv_id": np.array([conv], dtype=object),
-                "window_idx": np.array([-1], dtype="int32"),
-                "n": np.array([0], dtype="int32"),
-                "mean": np.array([np.nan]), "sd": np.array([np.nan]),
-                "skew": np.array([np.nan]), "kurtosis": np.array([np.nan]),
-                "acf1": np.array([np.nan]), "acf2": np.array([np.nan]),
-                "energy": np.array([np.nan]),
-                "error": np.array([msg], dtype=object),
-            }
-
-        try:
-            if not assume_sorted and pdf["conv_id"].nunique() > 1:
-                # shuffle_key misuse: the physical key must map 1:1 to the
-                # logical group — splicing two conversations into one
-                # series would silently mislabel features
-                return err(f"shuffle_key groups {pdf['conv_id'].nunique()} conversations")
-            g = pdf if assume_sorted else pdf.sort_values(
-                ["turn_idx", "ts"], kind="mergesort")
-            x = g[value_col].to_numpy(dtype="float64")
-            x = x[~np.isnan(x)]
-            if len(x) < 4:
-                return err(f"group too small: {len(x)} samples")
-            x = _detrend(x, detrend)
-            if taps is not None:
-                x = apply_fir_filtfilt(x, taps) if zero_phase else apply_fir(x, taps)
-            if len(x) < window:
-                sw = x[None, :]
-            else:
-                sw = np.lib.stride_tricks.sliding_window_view(x, window)[::step]
-            mean, sd, skew, kurt = _moments(sw)
-            m = sw.shape[0]
-            return {
-                "conv_id": np.full(m, conv, dtype=object),
-                "window_idx": np.arange(m, dtype="int32"),
-                "n": np.full(m, sw.shape[1], dtype="int32"),
-                "mean": mean, "sd": sd, "skew": skew, "kurtosis": kurt,
-                "acf1": _acf(sw, 1), "acf2": _acf(sw, 2),
-                "energy": (sw ** 2).mean(axis=1),
-                "error": np.full(m, None, dtype=object),
-            }
-        except Exception as e:  # F5: error channel, never a task failure
-            return err(f"{type(e).__name__}: {e}")
-
-    return kernel
+    """Whole-table twin of :func:`make_signal_kernel` (see
+    :func:`_make_batch_kernel`)."""
+    return _make_batch_kernel(_time_featurize, _SIGNAL_COLS, window, overlap,
+                              value_col, detrend, band, n_taps, zero_phase)
 
 
 def signal_summary_features(
@@ -586,12 +461,11 @@ def signal_summary_features(
     shuffle_key: str | None = None,
     zero_phase: bool = True,
     n_taps: int = 21,
-    strategy: str = "mapInPandas",
     validate_keys: bool = False,
     sort_cols: tuple = ("turn_idx", "ts"),
 ) -> DataFrame:
-    """Per-group signal summary (batched Arrow kernel with group carry by
-    default; see _dispatch_kernel for the applyInPandas variant).
+    """Per-group signal summary: the batch kernel on
+    :func:`kernels.mapgroups_with_carry`.
 
     ``shuffle_key``: physical grouping column when it differs from
     ``group_col`` but partitions identically (e.g. ``user_id`` when
@@ -601,23 +475,13 @@ def signal_summary_features(
     ``validate_keys=True`` adds an eager one-pass check that the key really
     is constant per group (see :func:`validate_shuffle_key`).
     """
-    if strategy == "mapInPandas":
-        # batched whole-frame kernel under the carry (round-7): output
-        # row-identical to the per-group kernel, pinned by test
-        kernel = make_signal_batch_kernel(
-            window=window, overlap=overlap, value_col=value_col,
-            detrend=detrend, band=band, zero_phase=zero_phase,
-            n_taps=n_taps,
-        )
-    else:
-        kernel = make_signal_kernel(
-            window=window, overlap=overlap, value_col=value_col,
-            detrend=detrend, band=band, zero_phase=zero_phase,
-            n_taps=n_taps, assume_sorted=False,
-        )
-    return _dispatch_kernel(
+    kernel = make_signal_batch_kernel(
+        window=window, overlap=overlap, value_col=value_col,
+        detrend=detrend, band=band, zero_phase=zero_phase, n_taps=n_taps,
+    )
+    return _run_grouped(
         df, kernel, SIGNAL_FEATURE_SCHEMA, value_col, group_col,
-        shuffle_key, strategy, validate_keys, sort_cols,
+        shuffle_key, validate_keys, sort_cols,
     )
 
 
@@ -625,10 +489,10 @@ def validate_shuffle_key(df: DataFrame, group_col: str, shuffle_key: str) -> Non
     """Eager guard for the silent half of the shuffle_key contract: a group
     whose rows span SEVERAL shuffle_key values is split across partitions
     and each fragment would be windowed independently — wrong/duplicate
-    feature rows with no error channel (the in-kernel guard only catches
-    the other direction, one key covering several groups). One extra
-    aggregate pass over (group, key) — opt-in via ``validate_keys=True``
-    because it is a real scan at 100 TB.
+    feature rows with no error channel (a key covering several groups is
+    fine: the harness sorts by (key, group)). One extra aggregate pass
+    over (group, key) — opt-in via ``validate_keys=True`` because it is a
+    real scan at 100 TB.
 
     NULL keys count as their own value (round-3 advice: ``countDistinct``
     ignores NULLs, so a group mixing NULL and real keys passed validation
@@ -655,40 +519,24 @@ def validate_shuffle_key(df: DataFrame, group_col: str, shuffle_key: str) -> Non
         )
 
 
-def _dispatch_kernel(df, kernel, schema, value_col, group_col, shuffle_key,
-                     strategy, validate_keys=False,
-                     sort_cols=("turn_idx", "ts")):
-    """Physical strategies (output-equal, pinned by tests):
-    'mapInPandas' (default) — batched with cross-batch group carry, one
-    Arrow exchange per batch; 'applyInPandas' — one exchange per group,
-    right when single groups are huge (bounded task memory).
+def _run_grouped(df, kernel, schema, value_col, group_col, shuffle_key,
+                 validate_keys, sort_cols):
+    """Run a batch kernel over (group, ``value_col``) on the carry harness.
 
     ``sort_cols``: the within-group ordering columns. Any column list
     that induces the same per-group permutation is equivalent — e.g.
     ``("ts", "event_id")`` when ``turn_idx`` IS the row_number of that
     ordering — which lets callers skip deriving ``turn_idx`` (a full
     Sort + Window pass) when the kernel never emits it (round-7)."""
-    key = shuffle_key or group_col
     cols = [group_col, *sort_cols, value_col]
     if shuffle_key and shuffle_key not in cols:
         cols.append(shuffle_key)
     slim = df.select(*cols)
     if validate_keys and shuffle_key and shuffle_key != group_col:
         validate_shuffle_key(slim, group_col, shuffle_key)
-    if strategy == "applyInPandas":
-        def as_frame(pdf):
-            out = kernel(pdf)
-            return pd.DataFrame(out) if isinstance(out, dict) else out
-        return slim.groupBy(key).applyInPandas(as_frame, schema)
-    if strategy != "mapInPandas":
-        raise ValueError("strategy must be 'mapInPandas' or 'applyInPandas'")
     return mapgroups_with_carry(
-        slim, kernel, schema, group_col=group_col, shuffle_key=shuffle_key,
-        sort_cols=tuple(sort_cols),
-        project=(
-            [group_col, value_col]
-            if getattr(kernel, "is_batch_kernel", False) else None
-        ),
+        slim, kernel, schema, [value_col], group_col=group_col,
+        sort_cols=tuple(sort_cols), shuffle_key=shuffle_key,
     )
 
 
@@ -777,6 +625,11 @@ def _freq_features(sw: np.ndarray) -> dict[str, np.ndarray]:
     return out
 
 
+_FREQ_COLS = [f"{k}{i + 1}" for i in range(_NPEAKS) for k in ("freq", "mag")]
+_FREQ_COLS += ["spec_centroid", "spec_entropy"]
+_FREQ_COLS += [f"band_e{b + 1}" for b in range(_NBANDS)]
+
+
 def make_freq_kernel(
     window: int = 64,
     overlap: float = 0.5,
@@ -785,57 +638,26 @@ def make_freq_kernel(
     band: tuple[float, float] | None = None,
     n_taps: int = 21,
     zero_phase: bool = True,
-    assume_sorted: bool = False,
 ):
-    """Per-group frequency-domain kernel: detrend → optional zero-phase
-    band-pass → overlapping windows → rfft summary per window.
-    ``assume_sorted`` as in :func:`make_signal_kernel` (dict-of-arrays
-    protocol, sort/guard skipped under the carry path's partition sort)."""
-    step = max(1, int(round(window * (1.0 - overlap))))
-    taps = fir_bandpass(n_taps, *band) if band else None
-    float_cols = [f"{k}{i + 1}" for i in range(_NPEAKS) for k in ("freq", "mag")]
-    float_cols += ["spec_centroid", "spec_entropy"]
-    float_cols += [f"band_e{b + 1}" for b in range(_NBANDS)]
+    """Per-group frequency-domain kernel (rfft summary per window; see
+    :func:`_make_group_kernel`)."""
+    return _make_group_kernel(_freq_features, _FREQ_COLS, window, overlap,
+                              value_col, detrend, band, n_taps, zero_phase)
 
-    def kernel(pdf: pd.DataFrame) -> dict:
-        conv = pdf["conv_id"].iat[0] if assume_sorted else pdf["conv_id"].min()
 
-        def err(msg: str) -> dict:
-            row = {"conv_id": np.array([conv], dtype=object),
-                   "window_idx": np.array([-1], dtype="int32"),
-                   "n": np.array([0], dtype="int32")}
-            row.update({c: np.array([np.nan]) for c in float_cols})
-            row["error"] = np.array([msg], dtype=object)
-            return row
-
-        try:
-            if not assume_sorted and pdf["conv_id"].nunique() > 1:
-                return err(f"shuffle_key groups {pdf['conv_id'].nunique()} conversations")
-            g = pdf if assume_sorted else pdf.sort_values(
-                ["turn_idx", "ts"], kind="mergesort")
-            x = g[value_col].to_numpy(dtype="float64")
-            x = x[~np.isnan(x)]
-            if len(x) < 4:
-                return err(f"group too small: {len(x)} samples")
-            x = _detrend(x, detrend)
-            if taps is not None:
-                x = apply_fir_filtfilt(x, taps) if zero_phase else apply_fir(x, taps)
-            if len(x) < window:
-                sw = x[None, :]
-            else:
-                sw = np.lib.stride_tricks.sliding_window_view(x, window)[::step]
-            cols = _freq_features(sw)
-            m = sw.shape[0]
-            out = {"conv_id": np.full(m, conv, dtype=object),
-                   "window_idx": np.arange(m, dtype="int32"),
-                   "n": np.full(m, sw.shape[1], dtype="int32")}
-            out.update(cols)
-            out["error"] = np.full(m, None, dtype=object)
-            return out
-        except Exception as e:  # F5: error channel, never a task failure
-            return err(f"{type(e).__name__}: {e}")
-
-    return kernel
+def make_freq_batch_kernel(
+    window: int = 64,
+    overlap: float = 0.5,
+    value_col: str = "value",
+    detrend: bool | str = True,
+    band: tuple[float, float] | None = None,
+    n_taps: int = 21,
+    zero_phase: bool = True,
+):
+    """Whole-table twin of :func:`make_freq_kernel` (see
+    :func:`_make_batch_kernel`)."""
+    return _make_batch_kernel(_freq_features, _FREQ_COLS, window, overlap,
+                              value_col, detrend, band, n_taps, zero_phase)
 
 
 def freq_domain_features(
@@ -849,29 +671,20 @@ def freq_domain_features(
     shuffle_key: str | None = None,
     n_taps: int = 21,
     zero_phase: bool = True,
-    strategy: str = "mapInPandas",
     validate_keys: bool = False,
     sort_cols: tuple = ("turn_idx", "ts"),
 ) -> DataFrame:
     """Per-window frequency-domain summary (rfft peaks, spectral centroid/
-    entropy, band energies) under the same applyInPandas harness — and the
-    same filter knobs — as signal_summary_features, so the two feature
-    families can be computed from identically filtered signals."""
-    if strategy == "mapInPandas":
-        kernel = make_freq_batch_kernel(
-            window=window, overlap=overlap, value_col=value_col,
-            detrend=detrend, band=band, n_taps=n_taps,
-            zero_phase=zero_phase,
-        )
-    else:
-        kernel = make_freq_kernel(
-            window=window, overlap=overlap, value_col=value_col,
-            detrend=detrend, band=band, n_taps=n_taps,
-            zero_phase=zero_phase, assume_sorted=False,
-        )
-    return _dispatch_kernel(
+    entropy, band energies) on the same harness — and with the same filter
+    knobs — as signal_summary_features, so the two feature families can be
+    computed from identically filtered signals."""
+    kernel = make_freq_batch_kernel(
+        window=window, overlap=overlap, value_col=value_col,
+        detrend=detrend, band=band, n_taps=n_taps, zero_phase=zero_phase,
+    )
+    return _run_grouped(
         df, kernel, FREQ_FEATURE_SCHEMA, value_col, group_col,
-        shuffle_key, strategy, validate_keys, sort_cols,
+        shuffle_key, validate_keys, sort_cols,
     )
 
 
@@ -930,7 +743,7 @@ def _skew_split_signal(
     """
     from pyspark.sql import Window as W
 
-    step = max(1, int(round(window * (1.0 - overlap))))
+    step = window_step(window, overlap)
     if split_size % step:
         raise ValueError("split_size must be a multiple of the window step")
     if split_size < window:
@@ -1090,10 +903,8 @@ def signal_summary_features_skew_split(
     tests/test_signal.py (bit-exact for detrend False/'savgol', allclose
     for the global-line 'linear' mode)."""
     return _skew_split_signal(
-        df, _time_featurize, SIGNAL_FEATURE_SCHEMA,
-        ["mean", "sd", "skew", "kurtosis", "acf1", "acf2", "energy"],
-        value_col, window, overlap, detrend, band, n_taps, zero_phase,
-        split_size, group_col,
+        df, _time_featurize, SIGNAL_FEATURE_SCHEMA, _SIGNAL_COLS, value_col, window, overlap,
+        detrend, band, n_taps, zero_phase, split_size, group_col,
     )
 
 
@@ -1111,11 +922,7 @@ def freq_domain_features_skew_split(
 ) -> DataFrame:
     """Skew path for :func:`freq_domain_features` — same chunking contract
     as :func:`signal_summary_features_skew_split`."""
-    float_cols = [f"{p}{i + 1}" for i in range(_NPEAKS) for p in ("freq", "mag")]
-    float_cols += ["spec_centroid", "spec_entropy"]
-    float_cols += [f"band_e{b + 1}" for b in range(_NBANDS)]
     return _skew_split_signal(
-        df, _freq_features, FREQ_FEATURE_SCHEMA, float_cols,
-        value_col, window, overlap, detrend, band, n_taps, zero_phase,
-        split_size, group_col,
+        df, _freq_features, FREQ_FEATURE_SCHEMA, _FREQ_COLS, value_col, window, overlap,
+        detrend, band, n_taps, zero_phase, split_size, group_col,
     )

@@ -272,9 +272,9 @@ def q_loess_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH branches run against real driver rows — at width 31 no group was
     short and the fallback would be vacuously green."""
     import numpy as np
-    import pandas as pd
 
-    from ..operators.signal import loess_detrend, mapgroups_with_carry
+    from ..operators.kernels import mapgroups_with_carry, run_starts
+    from ..operators.signal import loess_detrend
     from ..transcripts import events_df, signal_frame_from_events
 
     # with_turn_idx=False (round-7): ordering by (ts, event_id) is the
@@ -283,40 +283,28 @@ def q_loess_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = signal_frame_from_events(
         events_df(spark, sf_dir), keep_key=True, with_turn_idx=False)
 
-    def kernel(frame: pd.DataFrame) -> dict:
-        # whole-frame kernel (round-7): group boundaries via numpy, one
-        # output assembly per carry batch; loess_detrend still runs per
-        # group (its wall is vectorized point math, not dispatch), so
-        # every residual is bit-identical to the per-group form
-        conv = frame["conv_id"].to_numpy()
-        vals = frame["value"].to_numpy(dtype="float64")
-        change = np.empty(len(conv), dtype=bool)
-        change[0] = True
-        change[1:] = conv[1:] != conv[:-1]
-        gstart = np.flatnonzero(change)
-        gend = np.append(gstart[1:], len(conv))
+    def kernel(tbl) -> dict:
+        # loess_detrend runs per group (its wall is vectorized point math,
+        # not dispatch), so every residual is bit-identical to the
+        # per-group form; output is assembled once per table
+        conv = tbl.column("conv_id")
+        gstart = run_starts(conv)
+        gend = np.append(gstart[1:], tbl.num_rows)
+        vals = tbl.column("value").cast("double").to_numpy()
         ok = ~np.isnan(vals)
-        convs, ts, resids = [], [], []
-        for s, e in zip(gstart, gend):
-            x = vals[s:e]
-            x = x[ok[s:e]]
-            convs.append(np.full(len(x), conv[s], dtype=object))
-            ts.append(np.arange(len(x), dtype="int32"))
-            # n < width -> linear fallback rows
-            resids.append(loess_detrend(x, width=Q_LOESS_WIDTH))
-        cat = lambda a, d: np.concatenate(a) if a else np.array([], dtype=d)
+        resids = [loess_detrend(vals[s:e][ok[s:e]], width=Q_LOESS_WIDTH)
+                  for s, e in zip(gstart, gend)]  # n < width: linear fallback
+        n = np.array([len(r) for r in resids], dtype=np.int64)
         return {
-            "conv_id": cat(convs, object),
-            "t": cat(ts, "int32"),
-            "resid": cat(resids, "float64"),
+            "conv_id": np.repeat(conv.take(gstart).to_numpy(zero_copy_only=False), n),
+            "t": np.arange(int(n.sum())) - np.repeat(np.cumsum(n) - n, n),
+            "resid": np.concatenate(resids),
         }
-
-    kernel.is_batch_kernel = True
 
     out = mapgroups_with_carry(
         sig.select("conv_id", "ts", "event_id", "value", "user_id"),
-        kernel, "conv_id string, t int, resid double", shuffle_key="user_id",
-        sort_cols=("ts", "event_id"), project=["conv_id", "value"],
+        kernel, "conv_id string, t int, resid double", ["value"],
+        sort_cols=("ts", "event_id"), shuffle_key="user_id",
     )
     return out.select(
         "conv_id", "t",

@@ -384,18 +384,12 @@ FROM dupdocs d LEFT JOIN comp c ON c.id = d.doc_id
 WK_WINDOW, WK_STEP = 8, 4
 
 
-def _nan_to_null(c: str):
-    """Error rows carry NaN in float columns (pandas/Arrow); the SQL oracle
-    produces NULL — align on NULL for the driver's canonical compare."""
-    return F.when(~F.isnan(F.col(c)), F.col(c))
-
-
 def _f32(c: str):
     """Cross-engine float canonicalization: snap to the float32 grid and
-    widen back to double (NaN → NULL first). Defined ONCE — the Spark
-    queries and every oracle's CAST(CAST(x AS FLOAT4) AS DOUBLE) must stay
-    in lockstep."""
-    return _nan_to_null(c).cast("float").cast("double").alias(c)
+    widen back to double (kernel outputs hold NULL, never NaN, where the
+    oracles hold NULL). Defined ONCE — the Spark queries and every
+    oracle's CAST(CAST(x AS FLOAT4) AS DOUBLE) must stay in lockstep."""
+    return F.col(c).cast("float").cast("double").alias(c)
 
 
 def q_window_kernel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -412,10 +406,8 @@ def q_window_kernel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = windowed_summary_features(t, window=WK_WINDOW, shuffle_key="user_id")
     return out.select(
         "conv_id", "window_idx", "n", "start_turn_idx", "end_turn_idx",
-        _nan_to_null("mean_gap_ms").alias("mean_gap_ms"),
-        _nan_to_null("median_gap_ms").alias("median_gap_ms"),
-        _nan_to_null("iqr_gap_ms").alias("iqr_gap_ms"),
-        F.round(_nan_to_null("entropy_gap"), 9).alias("entropy_gap"),
+        "mean_gap_ms", "median_gap_ms", "iqr_gap_ms",
+        F.round("entropy_gap", 9).alias("entropy_gap"),
         "error",
     )
 

@@ -20,6 +20,17 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def batches_of_32(spark):
+    """32-row Arrow batches, so grouped kernels see groups split across
+    batch boundaries."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    yield
+    spark.conf.set(key, prev)
+
+
 @pytest.fixture(scope="session")
 def transcripts_pdf() -> pd.DataFrame:
     return generate_transcripts(n_turns=1500, n_convs=30, seed=42)

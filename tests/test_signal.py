@@ -191,8 +191,9 @@ def test_freq_kernel_error_channel(spark):
 
 
 def test_shuffle_key_misuse_hits_error_channel(spark):
-    """A shuffle_key that groups two conversations must produce an error
-    row, never silently spliced features."""
+    """A shuffle_key that groups two conversations never splices them into
+    one series: the carry harness sorts by (key, conv), so each
+    conversation is processed whole, separately, and correctly."""
     import pandas as pd
     pdf = pd.DataFrame({
         "conv_id": ["a"] * 10 + ["b"] * 10,
@@ -202,54 +203,62 @@ def test_shuffle_key_misuse_hits_error_channel(spark):
         "user_id": [1] * 20,  # one physical key, two conversations
     })
     df = spark.createDataFrame(pdf)
-    # applyInPandas: one physical group holds both convs → error row
-    out = signal_summary_features(
-        df, window=4, shuffle_key="user_id", strategy="applyInPandas"
-    ).collect()
-    assert len(out) == 1 and "shuffle_key groups 2" in out[0]["error"]
-    # batched carry path sorts by (key, conv) → each conv processed whole,
-    # separately, and correctly
-    ok = signal_summary_features(
-        df, window=4, shuffle_key="user_id", strategy="mapInPandas"
-    ).collect()
+    ok = signal_summary_features(df, window=4, shuffle_key="user_id").collect()
     assert {r.conv_id for r in ok} == {"a", "b"}
     assert all(r.error is None for r in ok)
 
 
-def test_signal_strategies_identical(spark):
-    """Batched carry path == per-group applyInPandas, bit-exact, including
-    groups that span Arrow batch boundaries."""
+def _per_group_reference(make_kernel, pdf, **kw):
+    """Loop the per-group kernel over each conversation in Python."""
+    import pyarrow as pa
+    kernel = make_kernel(**kw)
+    outs = [kernel(pa.Table.from_pandas(g, preserve_index=False))
+            for _, g in pdf.sort_values(["conv_id", "turn_idx"])
+            .groupby("conv_id", sort=True)]
+    return pd.DataFrame(
+        {c: np.concatenate([o[c] for o in outs]) for c in outs[0]})
+
+
+def test_signal_freq_carry_equals_per_group_loop(spark, batches_of_32):
+    """Signal and freq operators under 32-row Arrow batches — groups span
+    batch boundaries and are carried — equal the per-group kernels looped
+    in Python: exact on keys, labels and floats."""
+    from mpower_feature_analysis_spark.operators.signal import (
+        freq_domain_features,
+        make_freq_kernel,
+        make_signal_kernel,
+    )
     rng = np.random.default_rng(23)
     frames = []
     for c in range(12):
-        n = int(rng.integers(5, 120))
+        n = int(rng.integers(2, 120))
+        v = rng.normal(0, 2, n)
+        v[rng.random(n) < 0.05] = np.nan
         frames.append(pd.DataFrame({
             "conv_id": f"c{c:03d}",
             "turn_idx": np.arange(n, dtype="int32"),
             "ts": pd.to_datetime(1_700_000_000_000 + np.arange(n) * 10, unit="ms"),
-            "value": rng.normal(0, 2, n),
+            "value": v,
         }))
     pdf = pd.concat(frames, ignore_index=True)
     df = spark.createDataFrame(
         pdf, "conv_id string, turn_idx int, ts timestamp, value double"
     )
-    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    try:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "32")
-        kw = dict(window=16, overlap=0.5, detrend=True, band=(0.1, 0.4))
-        a = signal_summary_features(df, strategy="mapInPandas", **kw) \
-            .orderBy("conv_id", "window_idx").toPandas()
-        b = signal_summary_features(df, strategy="applyInPandas", **kw) \
-            .orderBy("conv_id", "window_idx").toPandas()
-        pd.testing.assert_frame_equal(a, b)
-        from mpower_feature_analysis_spark.operators.signal import freq_domain_features
-        fa = freq_domain_features(df, strategy="mapInPandas", window=16) \
-            .orderBy("conv_id", "window_idx").toPandas()
-        fb = freq_domain_features(df, strategy="applyInPandas", window=16) \
-            .orderBy("conv_id", "window_idx").toPandas()
-        pd.testing.assert_frame_equal(fa, fb)
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    sig_kw = dict(window=16, overlap=0.5, detrend=True, band=(0.1, 0.4))
+    for op, maker, kw in (
+        (signal_summary_features, make_signal_kernel, sig_kw),
+        (freq_domain_features, make_freq_kernel, dict(window=16)),
+    ):
+        got = op(df, **kw).orderBy("conv_id", "window_idx").toPandas()
+        want = _per_group_reference(maker, pdf, **kw)
+        assert list(got.columns) == list(want.columns)
+        for c in got.columns:
+            if want[c].dtype == object:
+                assert list(got[c]) == list(want[c]), c
+            else:
+                np.testing.assert_array_equal(
+                    got[c].to_numpy(want[c].dtype), want[c].to_numpy(),
+                    err_msg=c)
 
 
 # ---------------------------------------------------------------------------
@@ -535,7 +544,7 @@ def test_validate_shuffle_key_catches_null_mixing_group(spark):
 
 
 def test_batch_kernel_equals_per_group_loop():
-    """Round-7: the whole-frame batch kernel must be row-for-row identical
+    """Round-7: the whole-table batch kernel must be row-for-row identical
     (bit-equal floats, same err rows) to looping the per-group kernel over
     the frame's groups, across detrend modes, NaN-holed values, too-small
     groups, constant signals, and a FIR band."""
@@ -545,6 +554,7 @@ def test_batch_kernel_equals_per_group_loop():
         make_signal_batch_kernel,
         make_signal_kernel,
     )
+    import pyarrow as pa
 
     rng = np.random.default_rng(7)
     frames = []
@@ -562,6 +572,10 @@ def test_batch_kernel_equals_per_group_loop():
             "value": v,
         }))
     frame = pd.concat(frames, ignore_index=True)
+    table = pa.Table.from_pandas(frame[["conv_id", "value"]], preserve_index=False)
+    starts = np.flatnonzero(frame["conv_id"].ne(frame["conv_id"].shift()))
+    groups = [table.slice(s, e - s)
+              for s, e in zip(starts, np.append(starts[1:], len(frame)))]
 
     for maker_b, maker_g in ((make_signal_batch_kernel, make_signal_kernel),
                              (make_freq_batch_kernel, make_freq_kernel)):
@@ -569,9 +583,8 @@ def test_batch_kernel_equals_per_group_loop():
                    dict(window=16, overlap=0.5, detrend="savgol",
                         band=(0.1, 0.4)),
                    dict(window=32, overlap=0.25, detrend="loess")):
-            batch = maker_b(**kw)(frame)
-            outs = [maker_g(assume_sorted=True, **kw)(g)
-                    for _, g in frame.groupby("conv_id", sort=False)]
+            batch = maker_b(**kw)(table)
+            outs = [maker_g(**kw)(g) for g in groups]
             ref = {c: np.concatenate([o[c] for o in outs]) for c in outs[0]}
             assert list(batch) == list(ref)
             for c in batch:
