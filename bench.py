@@ -372,7 +372,7 @@ def _run_at(master: str, data_dir: str, shuffle_partitions: int,
 
     def sim_job():
         return lsh_bucketed_topk(
-            emb, queries, k=10, bits=8, dims=SCALE_DIMS, scorer="arrow"
+            emb, queries, k=10, bits=8, dims=SCALE_DIMS
         )
 
     _force(extract_turn_features(t))            # discarded warm passes
@@ -471,8 +471,8 @@ def run_scaling(n_turns: int, lo_cpus: int = 8, hi_cpus: int = 32,
 
     Round-3 additions (judge item #3): the suite covers feature extraction
     (turn features + window kernel), ONE dedup query (MinHash-LSH
-    candidates, capped) and ONE similarity query (LSH-bucketed top-k,
-    arrow scorer); and ``gate`` > 0 keeps sampling until ``want_runs``
+    candidates, capped) and ONE similarity query (LSH-bucketed top-k);
+    and ``gate`` > 0 keeps sampling until ``want_runs``
     runs whose pure-CPU control efficiency is >= gate (quiet host) are
     collected — the reported cohort no longer leans on the median of a
     noisy set.
@@ -1024,7 +1024,7 @@ def run_corpus_bench(n_docs: int = 1_000_000) -> None:
     )
     from mpower_feature_analysis_spark.functions.graph import near_dup_clusters
     from mpower_feature_analysis_spark.functions.similarity import (
-        cosine_topk_matmul,
+        cosine_topk_bruteforce,
         embedding_near_dup_pairs,
         ivf_topk,
         lsh_bucketed_topk,
@@ -1090,20 +1090,18 @@ def run_corpus_bench(n_docs: int = 1_000_000) -> None:
     # the round-3 bits=8-at-1M-vectors cliff (981 s vs 38 s) cannot be
     # configured anymore unless the caller forces an explicit bits
     ejobs = {
-        "lsh_bucketed_topk(256q, auto-bits, arrow)": lambda e: lsh_bucketed_topk(
-            e, queries, k=10, bits="auto", dims=SCALE_DIMS, scorer="arrow"
+        "lsh_bucketed_topk(256q, auto-bits)": lambda e: lsh_bucketed_topk(
+            e, queries, k=10, bits="auto", dims=SCALE_DIMS
         ),
         "embedding_near_dups(auto-bits, capped)": lambda e: embedding_near_dup_pairs(
-            e, min_cos=0.95, bits="auto", dims=SCALE_DIMS, scorer="arrow",
-            max_bucket_size=4096,
+            e, min_cos=0.95, bits="auto", dims=SCALE_DIMS, max_bucket_size=4096,
         ),
-        "cosine_topk_matmul(256q)": lambda e: cosine_topk_matmul(e, queries, k=10),
-        # round-4: IVF at corpus scale — auto cells (~sqrt n) + the
-        # one-matmul-per-batch coarse quantizer (the C x N broadcast join
-        # is the training wall at 1M vectors)
-        "ivf_topk(256q, auto-cells, matmul-assign, arrow)": lambda e: ivf_topk(
-            e, queries, k=10, n_cells="auto", nprobe=8, scorer="arrow",
-            strategy="matmul",
+        "cosine_topk_bruteforce(256q)": lambda e: cosine_topk_bruteforce(
+            e, queries, k=10
+        ),
+        # IVF at corpus scale: auto cells (~sqrt n)
+        "ivf_topk(256q, auto-cells)": lambda e: ivf_topk(
+            e, queries, k=10, n_cells="auto", nprobe=8
         ),
     }
     ewarm = emb.limit(50_000).cache()

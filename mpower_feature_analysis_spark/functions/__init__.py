@@ -23,9 +23,7 @@ from .graph import connected_components, near_dup_clusters
 from .similarity import (
     auto_ivf_cells,
     auto_lsh_bits,
-    cosine_arrow,
     cosine_topk_bruteforce,
-    cosine_topk_matmul,
     embedding_near_dup_pairs,
     ivf_assign_cells,
     ivf_topk,
@@ -48,7 +46,7 @@ __all__ = [
     "simhash_block_layout", "auto_simhash_blocks",
     "ngram_jaccard_pairs", "ngram_jaccard_exact_pairs",
     "connected_components", "near_dup_clusters",
-    "cosine_topk_bruteforce", "cosine_topk_matmul", "cosine_arrow",
+    "cosine_topk_bruteforce",
     "embedding_near_dup_pairs", "auto_lsh_bits", "auto_ivf_cells",
     "ivf_assign_cells", "ivf_topk", "lsh_bucketed_topk", "lsh_signature",
     "extract_media_features", "resize_media", "sample_frames", "synth_media",

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..utils import ensure_parallelism, materialize
-from .text import fingerprint, rolling_hash_shingles
+from .text import fingerprint
 
 
 # ---------------------------------------------------------------------------
@@ -200,7 +200,6 @@ def minhash_signatures(
     text_col: str = "text",
     num_hashes: int = 32,
     shingle_k: int = 5,
-    strategy: str = "arrow",
 ) -> DataFrame:
     """num_hashes MinHash values per document over k-word shingles.
 
@@ -218,8 +217,7 @@ def minhash_signatures(
     planted-dup recall gates are insensitive: identical text gives
     identical signatures under either semantics.)
 
-    The whole computation runs in ONE ``mapInArrow`` kernel
-    (``strategy='arrow'``, default): the text is whitespace-normalized
+    The whole computation runs in ONE ``mapInArrow`` kernel: the text is whitespace-normalized
     JVM-side (``regexp_replace(trim(lower(text)), '\\s+', ' ')`` — after
     which every k-word shingle STRING is literally a byte-SPAN of the
     normalized text), shingle spans are derived from the space positions
@@ -229,27 +227,10 @@ def minhash_signatures(
     ``hashLong(·, 42)`` → ``hashInt(position, ·)`` and folded with a
     segmented ``minimum.reduceat``; the single min is broadcast to all
     slots. No shingle strings are ever materialized. The expression form
-    (``strategy='jvm'``) is the equality reference. The interpreted
+    is the equality reference in ``tests/references.py``. The interpreted
     per-shingle slice+concat+hash expression tree was the minhash
     family's corpus-scale wall (round-7: 10.4 s of a 14.3 s pipeline at
     1M docs)."""
-    if strategy == "jvm":
-        sh = df.select(
-            F.col(id_col),
-            rolling_hash_shingles(text_col, k=shingle_k, out="sh"),
-        )
-        sig = F.array(
-            *[
-                F.array_min(
-                    F.transform(F.col("sh"), lambda s, i=i: F.xxhash64(s, F.lit(i)))
-                )
-                for i in range(num_hashes)
-            ]
-        )
-        return sh.select(id_col, sig.alias("minhash"))
-    if strategy != "arrow":
-        raise ValueError("strategy must be 'arrow' or 'jvm'")
-
     id_type = df.schema[id_col].dataType.simpleString()
     norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
     src = ensure_parallelism(df.select(F.col(id_col), norm.alias("__norm")))
@@ -467,45 +448,23 @@ def simhash64(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "arrow",
 ) -> DataFrame:
     """64-bit SimHash over word tokens: per bit, sign of the sum of ±1 votes
     from each token's xxhash64 bit (bit 63 excluded — keeps the value
     non-negative).
 
     Token hashes stay JVM-side (xxhash64 in codegen); the 63-bit vote fold
-    runs in a ``mapInArrow`` kernel (``strategy='arrow'``, default): the
+    runs in a ``mapInArrow`` kernel: the
     list column is flattened ZERO-COPY into one contiguous int64 buffer
     plus per-row lengths, the (tokens × 63) bit matrix is segment-summed
     with ``np.add.reduceat`` — no per-row Python objects anywhere (round-7:
     the old pandas_udf spent most of its wall converting 55k list cells to
-    per-row ndarrays). The all-JVM fold (``strategy='jvm'``) is kept as
-    the equality reference — 63 interpreted higher-order ``aggregate``
-    lambdas per row, measured ~10x slower, don't use it at corpus scale.
+    per-row ndarrays). The all-JVM fold — 63 interpreted higher-order
+    ``aggregate`` lambdas per row, measured ~10x slower — is the equality
+    reference in ``tests/references.py``.
     """
     words = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     hashes = F.transform(words, lambda w: F.xxhash64(w))
-
-    if strategy == "jvm":
-        def bit_sum(i: int):
-            return F.aggregate(
-                hashes,
-                F.lit(0).cast("long"),
-                lambda acc, h: acc
-                + F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-            )
-
-        sim = sum(
-            (
-                F.when(bit_sum(i) > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0))
-                for i in range(63)
-            ),
-            F.lit(0).cast("long"),
-        )
-        return df.select(F.col(id_col), sim.alias("simhash"))
-    if strategy != "arrow":
-        raise ValueError("strategy must be 'arrow' or 'jvm'")
-
     id_type = df.schema[id_col].dataType.simpleString()
     # single-row-group corpora plan as ONE scan task; spread the text
     # before the per-word hashing + fold (no-op on well-split inputs)

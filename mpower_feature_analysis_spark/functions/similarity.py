@@ -1,24 +1,46 @@
 """Similarity search over embedding columns (array<float>).
 
-* :func:`cosine_topk_bruteforce` — exact baseline: broadcast the (small)
-  query set against the corpus, fold the dot product with JVM array exprs
-  (``aggregate``/``zip_with``), rank per query. The corpus side streams —
-  no shuffle of the big table at all when queries broadcast.
-* :func:`lsh_bucketed_topk` — the scale path: random-hyperplane signs
-  (SimHash-for-vectors) bucket the corpus; queries probe only their own
-  bucket (plus optional multi-probe flips), turning O(Q·N) into
-  O(Q·N/2^bits) with an equi-join the optimizer can shuffle-partition.
+* :func:`cosine_topk_bruteforce` — exact top-k: every query against every
+  corpus vector.
+* :func:`lsh_bucketed_topk` — approximate top-k: random-hyperplane signs
+  (SimHash-for-vectors) bucket the corpus, and a query ranks only its own
+  bucket, O(Q·N/2^bits) instead of O(Q·N).
+* :func:`ivf_assign_cells` / :func:`ivf_topk` — IVF-flat: every corpus
+  vector lives in its nearest cell, and a query ranks the cells it probes.
+* :func:`embedding_near_dup_pairs` — LSH-bucketed pairs verified at a
+  cosine threshold.
 
-Hyperplanes are seeded-Gaussian (numpy PCG64, platform-deterministic),
-regenerated per Arrow batch — identical across runs and batch boundaries.
+Every score is the sequential fold of Spark's ``try_divide(aggregate(
+zip_with(a, b, x*y), 0D, acc + x), sqrt(a·a) * sqrt(b·b))``, which the
+DuckDB oracles reproduce bit for bit. A pair with a NULL vector, a NULL
+element, a length mismatch or a zero denominator has no score and never
+ranks; a NaN score (non-finite input) ranks first in a top-k. NULL ids are
+dropped.
+
+Top-k and cell assignment run one kernel, :func:`_topk`, in one
+``mapInArrow`` pass over the corpus. The small side (queries or IVF
+centroids) is collected at plan build and broadcast. Each corpus Arrow
+batch is split by key (constant, LSH bucket or IVF cell), and each group is
+scored with one numpy gemm. Only the rows near each query's k-th gemm score
+are re-scored with the fold, and the fold values alone decide rank and
+output. The final rank is Spark's window over (cos desc, id asc), so the
+union of per-batch top-k rows is enough.
+
+Hyperplanes are seeded-Gaussian (numpy PCG64, platform-deterministic) and
+regenerated where used, so buckets are identical across runs and batches.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+
+from ..utils import ensure_parallelism
 
 
 def _as_double(col) -> Column:
@@ -118,216 +140,183 @@ def _resolve_bits(
     raise ValueError("bits must be a positive int or 'auto'")
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product (deterministic summation order)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+_U = 2.0 ** -53
+# a pair whose norms both lie in (_TINY, _HUGE) has no product or partial
+# sum that underflows or overflows, so the rounding bound in _topk holds
+_TINY, _HUGE = 1e-140, 1e140
+_BLOCK = 1 << 20  # score-matrix entries per gemm: bounds kernel memory
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
+def _fold(x, ia, y, ib):
+    """Dot products of vectors ``x[:, ia]`` and ``y[:, ib]`` (matrices are
+    ``(d, n)``, one vector per column), pair by pair, as ``acc ← acc +
+    x[j, a]·y[j, b]`` for j left to right from ``acc = 0``: the IEEE-754
+    operation sequence of Spark's ``aggregate(zip_with(...))``, so every
+    value is bit-identical to the JVM fold."""
+    acc = np.zeros(len(ia))
+    with np.errstate(all="ignore"):  # non-finite input folds to inf/NaN
+        for xj, yj in zip(x, y):
+            acc = acc + xj[ia] * yj[ib]
+    return acc
 
 
-def _cos_hof(a: Column, b: Column) -> Column:
-    """Interpreted JVM higher-order fold — O(dims) lambda steps per pair.
-    Bit-reproducible by the DuckDB oracles (sequential summation), so the
-    hash-exact driver queries keep it; at dims≥768 use ``cosine_arrow``.
-    try_divide: a zero-norm vector scores NULL (ranked last / dropped by
-    threshold filters) instead of failing the task under ANSI mode."""
-    return F.try_divide(dot(a, b), norm(a) * norm(b))
+def _by_dims(vecs) -> dict:
+    """The scoreable rows of an Arrow ``list<double>`` column by length:
+    ``{d: (row indices, (d, n) matrix, fold norms)}``. NULL, empty and
+    NULL-element rows are left out: every fold they enter is NULL."""
+    lens = pc.fill_null(pc.list_value_length(vecs), 0).to_numpy(
+        zero_copy_only=False).astype(np.int64)
+    flat = pc.list_flatten(vecs)
+    vals = flat.to_numpy(zero_copy_only=False)
+    starts = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=starts[1:])
+    ok = lens > 0
+    if flat.null_count:
+        nulls = np.zeros(len(vals) + 1, dtype=np.int64)
+        np.cumsum(flat.is_null().to_numpy(zero_copy_only=False), out=nulls[1:])
+        ok &= nulls[starts[1:]] == nulls[starts[:-1]]
+    out = {}
+    for d in np.unique(lens[ok]).tolist():
+        rows = np.flatnonzero(ok & (lens == d))
+        m = vals[starts[rows] + np.arange(d)[:, None]]
+        r = np.arange(len(rows))
+        out[d] = (rows, m, np.sqrt(_fold(m, r, m, r)))
+    return out
 
 
-def cosine_arrow():
-    """Arrow-batched cosine: one numpy einsum per batch instead of an
-    interpreted O(dims) fold per pair (the repo's BENCH_NOTES measured HOF
-    lambdas 3x slower at dims=64; the gap grows linearly with dims). NULL
-    or dimension-mismatched pairs score NULL, matching the HOF path's
-    null propagation. Summation order differs from the sequential fold in
-    the last ulps (numpy pairwise sum) — allclose-equal, pinned by test."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        va = a.to_numpy(dtype=object)
-        vb = b.to_numpy(dtype=object)
-        out = np.full(len(va), np.nan)
-        valid = [
-            i for i in range(len(va))
-            if va[i] is not None and vb[i] is not None
-            and len(va[i]) == len(vb[i]) and len(va[i]) > 0
-        ]
-        if valid:
-            for d in {len(va[i]) for i in valid}:  # ragged-safe: per-dims
-                idx = np.array([i for i in valid if len(va[i]) == d])
-                A = np.stack([np.asarray(va[i], dtype="float64") for i in idx])
-                B = np.stack([np.asarray(vb[i], dtype="float64") for i in idx])
-                num = np.einsum("ij,ij->i", A, B)
-                den = np.sqrt(np.einsum("ij,ij->i", A, A)) * np.sqrt(
-                    np.einsum("ij,ij->i", B, B)
-                )
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    out[idx] = np.where(den > 0, num / den, np.nan)
-        return pd.Series(out)
-
-    return cos
+def _take(side, idx):
+    return tuple(a[..., idx] for a in side)
 
 
-def _cos(a: Column, b: Column, scorer: str) -> Column:
-    if scorer == "hof":
-        return _cos_hof(a, b)
-    if scorer == "arrow":
-        return cosine_arrow()(a, b)
-    raise ValueError("scorer must be 'hof' (oracle-exact) or 'arrow' (high dims)")
+def _topk(q, c, k: int, nan_first: bool = True):
+    """For each row of ``q``, its ``k`` best rows of ``c`` by fold cosine,
+    as arrays ``(q index, c index, cos)``. ``q`` and ``c`` are ``(ids,
+    matrix, fold norms)`` of one dims class.
 
+    ``nan_first`` is the top-k order (NaN first, cos desc, id asc) with
+    self-matches (equal ids) excluded; otherwise it is the assignment order
+    (NaN last, cos desc, id asc) with nothing excluded.
 
-def _cosine_topk_seq(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """BIT-EXACT vectorized twin of the ``scorer='hof'`` bruteforce
-    (round-7): same doubles, same ranks, ~5x less wall at dims=64.
-
-    The HOF path evaluates an interpreted O(dims) lambda fold per
-    (query, corpus) pair.  This path collects the (small) query side
-    driver-side — the same rows the join path broadcasts — and scores
-    each corpus Arrow batch in numpy with the accumulation order pinned
-    to the fold's: ``acc ← acc + a[j]·b[j]`` left-to-right over dims,
-    norms likewise, one final divide.  Every step is the same IEEE-754
-    double op in the same order, so the values are bit-identical, not
-    allclose (pinned by tests/test_similarity.py).  Null-semantics parity:
-    a pair with mismatched lengths, a null element, or a zero denominator
-    scores NULL in the HOF path and is excluded here; NaN scores are KEPT
-    and rank first on descending order, exactly like Spark's NaN-greatest
-    ordering.  Per-batch pruning keeps each query's top-k under the total
-    (cos desc, id asc) order — the global top-k is a subset of the union
-    — and the final rank window is the same JVM window as the HOF plan's.
+    The gemm picks the candidates and the fold ranks them. The gemm score
+    uses the fold norms, so it differs from the fold score only through the
+    dot product. Both dots are within γ_d·‖x‖‖y‖ of the exact value, where
+    γ_d ≈ d·u and u = 2⁻⁵³, so with the two divisions the scores differ by
+    about (2d + 2)·u at most when neither norm is tiny or huge. A row whose
+    gemm score is more than twice that below the k-th best gemm score has
+    k rows with a strictly larger fold score, so it cannot rank. The rows
+    kept are those within ``8·(d + 4)·u`` of the k-th best (a safety factor
+    of two over that), plus every pair the bound does not cover: a
+    non-finite score, or a norm outside (1e-140, 1e140).
     """
-    from ..utils import ensure_parallelism
+    qid, qm, qn = q
+    cid, cm, cn = c
+    nc = len(cid)
+    margin = 8 * (qm.shape[0] + 4) * _U
+    c_ok = (cn > _TINY) & (cn < _HUGE)
+    step = max(1, _BLOCK // nc)
+    parts = []
+    for lo in range(0, len(qid), step):
+        s = slice(lo, lo + step)
+        with np.errstate(all="ignore"):
+            den = qn[s, None] * cn
+            g = (qm[:, s].T @ cm) / den
+        live = den != 0
+        if nan_first:
+            live &= qid[s, None] != cid
+        sure = np.isfinite(g) & c_ok & ((qn[s] > _TINY) & (qn[s] < _HUGE))[:, None]
+        if 0 < k < nc:
+            kth = np.partition(np.where(live & sure, g, -np.inf), nc - k, axis=1)
+            live &= ~sure | (g >= kth[:, nc - k, None] - margin)
+        qi, ci = np.nonzero(live)
+        with np.errstate(all="ignore"):
+            f = _fold(qm, qi + lo, cm, ci) / den[qi, ci]
+        nan = np.isnan(f)
+        o = np.lexsort((cid[ci], np.where(nan, 0.0, -f), ~nan if nan_first else nan, qi))
+        qi, ci, f = qi[o], ci[o], f[o]
+        top = np.arange(len(qi)) - np.searchsorted(qi, qi) < k
+        parts.append((qi[top] + lo, ci[top], f[top]))
+    return tuple(np.concatenate(p) for p in zip(*parts))
 
-    id_type = embeddings.schema[id_col].dataType.simpleString()
-    qrows = (
-        queries.select(F.col(id_col), _as_double(vec_col).alias("qv"))
-        .collect()
+
+def _groups(keys, idx=None) -> dict:
+    """``{key: idx[keys == key]}`` for every distinct key (``idx`` defaults
+    to the positions)."""
+    idx = np.arange(len(keys)) if idx is None else idx
+    o = np.argsort(keys, kind="stable")
+    u, first = np.unique(keys[o], return_index=True)
+    return dict(zip(u.tolist(), np.split(idx[o], first[1:])))
+
+
+def _id_type(frame: DataFrame, id_col: str):
+    return to_arrow_type(frame.schema[id_col].dataType)
+
+
+def _side(frame: DataFrame, id_col: str, vec_col: str, id_type) -> dict:
+    """Collected ``(id, vector)`` rows by dims: ``{d: (ids, matrix, fold
+    norms)}``. A driver-side action at plan build; the ids convert exactly
+    as the corpus batches' do, so the two sides compare equal."""
+    rows = [tuple(r) for r in frame.select(F.col(id_col), _as_double(vec_col))
+            .filter(F.col(id_col).isNotNull()).collect()]
+    return _rows_side(rows, id_type)
+
+
+def _rows_side(rows, id_type) -> dict:
+    ids = pa.array([r[0] for r in rows], type=id_type).to_numpy(zero_copy_only=False)
+    vecs = pa.array([r[1] for r in rows], type=pa.list_(pa.float64()))
+    return {d: (ids[r], m, n) for d, (r, m, n) in _by_dims(vecs).items()}
+
+
+def _scan(frame: DataFrame, id_col: str, vec_col: str, names, fn) -> DataFrame:
+    """The one ``mapInArrow`` pass over a vector frame. Per Arrow batch and
+    per dims class, ``fn(d, (ids, matrix, fold norms))`` yields ``(values,
+    class row indices, cos)``; each becomes a row ``(names[0] = value,
+    names[1] = the row's id, cos_sim)``. ``names[0]`` has the id type."""
+    id_type = _id_type(frame, id_col)
+    src = ensure_parallelism(
+        frame.select(F.col(id_col), _as_double(vec_col))
+        .filter(F.col(id_col).isNotNull())
     )
-    by_dims: dict = {}
-    for r in qrows:
-        if r[1] is None or any(x is None for x in r[1]):
-            continue  # null vec / null element -> NULL cos -> never ranks
-        v = np.asarray(r[1], dtype="float64")
-        if v.size == 0:
-            continue  # empty: 0/0 -> NULL
-        nb = np.float64(0.0)
-        for j in range(v.size):  # sequential, mirroring norm(qv)
-            nb = nb + v[j] * v[j]
-        # zero-norm queries are KEPT: 0 * a NaN/inf corpus norm is a NaN
-        # denominator, and the fold scores such pairs NaN (ranked), not
-        # NULL — only an exactly-zero denominator excludes (per pair below)
-        by_dims.setdefault(v.size, []).append((r[0], v, np.sqrt(nb)))
-    spark = embeddings.sparkSession
-    out_schema = (
-        f"query_id {id_type}, neighbor_id {id_type}, cos_sim double"
-    )
-    if not by_dims:
-        cand = spark.createDataFrame([], out_schema)
-    else:
-        bq = spark.sparkContext.broadcast(by_dims)
-        corpus = ensure_parallelism(
-            embeddings.select(
-                F.col(id_col).alias("nid"), _as_double(vec_col).alias("cv")
-            )
-        )
 
-        def run(batches):
-            import pyarrow as pa
-            import pyarrow.compute as pc
+    def run(batches):
+        for rb in batches:
+            ids = rb.column(0).to_numpy(zero_copy_only=False)
+            out = [
+                (a, rows[r], f)
+                for d, (rows, m, n) in _by_dims(rb.column(1)).items()
+                for a, r, f in fn(d, (ids[rows], m, n))
+            ]
+            if out:
+                a, r, f = (np.concatenate(x) for x in zip(*out))
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(a, type=id_type), rb.column(0).take(r),
+                     pa.array(f, type=pa.float64())],
+                    names=[*names, "cos_sim"],
+                )
 
-            groups = bq.value
-            for rb in batches:
-                ids_arr, cvs = rb.column(0), rb.column(1)
-                lens = pc.list_value_length(cvs).to_numpy(
-                    zero_copy_only=False)
-                lens = np.nan_to_num(lens, nan=-1).astype(np.int64)
-                flat = pc.list_flatten(cvs)
-                fvals = flat.to_numpy(zero_copy_only=False)
-                # rows with a null ELEMENT score NULL in the fold: exclude
-                if flat.null_count and len(flat):
-                    nullmask = flat.is_null().to_numpy(zero_copy_only=False)
-                    starts = np.zeros(len(lens) + 1, dtype=np.int64)
-                    starts[1:] = np.cumsum(np.maximum(lens, 0))
-                    # clip: zero-length tail rows would index past the end;
-                    # the lens>0 mask below discards their (garbage) sums
-                    idx = np.minimum(starts[:-1], len(nullmask) - 1)
-                    has_null = np.add.reduceat(
-                        nullmask.astype(np.int64), idx) > 0
-                    has_null &= np.maximum(lens, 0) > 0
-                else:
-                    has_null = np.zeros(len(lens), dtype=bool)
-                ids_np = np.arange(len(lens))
-                outq, outn, outc = [], [], []
-                for d, qgroup in groups.items():
-                    rows = np.flatnonzero((lens == d) & ~has_null)
-                    if not len(rows):
-                        continue
-                    row_starts = np.zeros(len(lens), dtype=np.int64)
-                    row_starts[1:] = np.cumsum(np.maximum(lens, 0))[:-1]
-                    gat = row_starts[rows][:, None] + np.arange(d)
-                    cm = fvals[gat]  # (n, d) float64
-                    na = np.zeros(len(rows))
-                    for j in range(d):  # sequential norm fold
-                        na = na + cm[:, j] * cm[:, j]
-                    sq_na = np.sqrt(na)
-                    for qid, qv, sq_nb in qgroup:
-                        acc = np.zeros(len(rows))
-                        for j in range(d):  # sequential dot fold
-                            acc = acc + qv[j] * cm[:, j]
-                        denom = sq_na * sq_nb
-                        cos = np.full(len(rows), np.nan)
-                        nz = denom != 0.0
-                        cos[nz] = acc[nz] / denom[nz]
-                        keep = nz  # zero denominator -> NULL -> excluded
-                        # NaN results are NOT null: they rank (NaN-greatest)
-                        sel = np.flatnonzero(keep)
-                        row_ids = ids_np[rows[sel]]
-                        c = cos[sel]
-                        # self-match exclusion needs real ids; defer via
-                        # mask on the Arrow id values
-                        id_vals = ids_arr.take(
-                            pa.array(row_ids, type=pa.int64())
-                        ).to_numpy(zero_copy_only=False)
-                        m = id_vals != qid
-                        id_vals, c = id_vals[m], c[m]
-                        if not len(c):
-                            continue
-                        # total order (NaN first, cos desc, id asc): prune
-                        # to the per-batch top-k of the SAME order the
-                        # final JVM window uses
-                        isnan = np.isnan(c)
-                        coskey = np.where(isnan, -np.inf, -c)
-                        order = np.lexsort((id_vals, coskey, ~isnan))
-                        top = order[:k]
-                        outq.append(np.full(len(top), qid))
-                        outn.append(id_vals[top])
-                        outc.append(c[top])
-                if outq:
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(np.concatenate(outq)),
-                            pa.array(np.concatenate(outn)),
-                            pa.array(np.concatenate(outc),
-                                     type=pa.float64()),
-                        ],
-                        names=["query_id", "neighbor_id", "cos_sim"],
-                    )
+    t = frame.schema[id_col].dataType.simpleString()
+    return src.mapInArrow(run, f"{names[0]} {t}, {names[1]} {t}, cos_sim double")
 
-        cand = corpus.mapInArrow(run, out_schema)
-    from pyspark.sql import Window as W
 
+def _topk_frame(embeddings, side, k, id_col, vec_col, keys=None) -> DataFrame:
+    """Top-k neighbours of the queries in ``side`` (``{d: (ids, matrix,
+    norms, {key: query indices})}``). ``keys(d, corpus class)`` returns the
+    corpus rows that have a key and their keys; a query ranks the rows
+    under its keys. Without ``keys`` every row has key 0."""
+    bside = embeddings.sparkSession.sparkContext.broadcast(side)
+
+    def score(d, c):
+        s = bside.value.get(d)
+        if s is None:
+            return
+        q, by_key = s[:3], s[3]
+        rows, ck = keys(d, c) if keys else (np.arange(len(c[0])), np.zeros(len(c[0]), np.int64))
+        for key, ci in _groups(ck, rows).items():
+            qi = by_key.get(key)
+            if qi is not None:
+                a, b, f = _topk(_take(q, qi), _take(c, ci), k)
+                yield q[0][qi[a]], ci[b], f
+
+    cand = _scan(embeddings, id_col, vec_col, ("query_id", "neighbor_id"), score)
     w = W.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
@@ -343,215 +332,49 @@ def cosine_topk_bruteforce(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scorer: str = "hof",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for every query vector.
+    """Exact top-k cosine neighbours of every query vector.
 
-    Returns (query_id, neighbor_id, cos_sim, rank); self-matches excluded.
-    ``scorer='arrow'`` swaps the interpreted JVM fold for the Arrow-batched
-    einsum — same ranking, last-ulp value differences, linear speedup with
-    dims (use it at dims>=768; 'hof' stays the oracle-exact default).
-    ``scorer='seq'`` is the BIT-EXACT vectorized twin of 'hof' — same
-    doubles, same ranks, ~5x faster (see :func:`_cosine_topk_seq`).
+    Returns (query_id, neighbor_id, cos_sim, rank) with self-matches
+    excluded and ties broken by ascending neighbour id. ``queries`` is
+    collected at plan build (the small side; see the module docstring for
+    the kernel and its exactness).
     """
-    if scorer == "seq":
-        return _cosine_topk_seq(embeddings, queries, k, id_col, vec_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    )
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cos(F.col("qv"), F.col("cv"), scorer))
-        .filter(F.col("cos_sim").isNotNull())  # zero-norm/ragged never rank
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    side = {
+        d: (*q, {0: np.arange(len(q[0]))})
+        for d, q in _side(queries, id_col, vec_col, _id_type(embeddings, id_col)).items()
+    }
+    return _topk_frame(embeddings, side, k, id_col, vec_col)
 
 
-def cosine_topk_matmul(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine, high-dims scale path: the query matrix is
-    collected driver-side (the SMALL side — the same rows
-    :func:`cosine_topk_bruteforce` broadcasts) and each corpus partition
-    scores a whole Arrow batch against it with ONE numpy matmul, emitting
-    only its per-batch top-k (id, score) rows — never the vectors.
-
-    Why it beats per-pair scoring at dims>=768: the join formulations ship
-    both vectors of every (query, corpus) pair through Arrow or the
-    interpreted fold — ~12 KB per pair at dims=768 — while this path moves
-    each corpus vector into Python exactly once and returns 24-byte rows,
-    at most ``batches x |Q| x k`` of them (global top-k is a subset of the
-    union of per-batch top-k). Measured ~32x over the HOF join at dims=768
-    (BENCH_NOTES §7). Same result as bruteforce: pinned allclose by test.
-
-    Contract notes: collecting ``queries`` is a driver-side ACTION at plan
-    build (documented deviation from the lazy join paths — acceptable for
-    the query side, which must fit in every executor anyway); NULL/ragged/
-    zero-norm vectors on EITHER side are skipped, mirroring the join paths
-    where such pairs score NULL and can never enter a top-k (a zero-norm or
-    ragged QUERY therefore emits no rows — round-3 advice: the earlier code
-    normalized a zero query to the all-zero row, fabricating k cos=0.0
-    neighbors, and raised on ragged queries at plan build). Queries are
-    grouped by vector length: a mixed-dims query set scores each length
-    class against same-length corpus vectors, exactly as the per-pair
-    paths' length-mismatch -> NULL semantics.
-    """
-    id_type = embeddings.schema[id_col].dataType.simpleString()
-    qrows = (
-        queries.select(F.col(id_col), _as_double(vec_col).alias("qv"))
-        .filter(F.col("qv").isNotNull())
-        .collect()
-    )
-    empty = f"query_id {id_type}, neighbor_id {id_type}, cos_sim double, rank long"
-    # group by dims; drop zero-norm / empty queries (they match nothing in
-    # the join paths — do not fabricate neighbors for them)
-    by_dims: dict = {}
-    for r in qrows:
-        v = np.asarray(r[1], dtype="float64")
-        if v.size == 0 or not np.isfinite(v).all() or np.linalg.norm(v) == 0:
-            continue
-        by_dims.setdefault(v.size, ([], []))
-        by_dims[v.size][0].append(r[0])
-        by_dims[v.size][1].append(v)
-    if not by_dims:
-        return embeddings.sparkSession.createDataFrame([], empty)
-    # per group: (ids, normalized matrix for the gemm, RAW matrix + norms
-    # for the shape-independent re-score — see the recompute note in run())
-    groups = {}
-    for d, (ids, vs) in by_dims.items():
-        raw = np.stack(vs)
-        qn = np.linalg.norm(raw, axis=1)
-        groups[d] = (ids, raw / qn[:, None], raw, qn)
-    sc = embeddings.sparkSession.sparkContext
-    bq = sc.broadcast(groups)
-
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cos_sim double"
-
-    def run(batches):
-        groups_b = bq.value
-        for pdf in batches:
-            vals = pdf[vec_col].to_numpy(dtype=object)
-            all_ids = pdf[id_col].to_numpy()
-            for dims, (ids_b, mat_b, qraw_b, qn_b) in groups_b.items():
-                nq = len(ids_b)
-                ok = [
-                    i for i, v in enumerate(vals)
-                    if v is not None and len(v) == dims
-                ]
-                if not ok:
-                    continue
-                cm_raw = np.stack(
-                    [np.asarray(vals[i], dtype="float64") for i in ok]
-                )
-                cn = np.linalg.norm(cm_raw, axis=1)
-                good = cn > 0
-                if not good.any():
-                    continue
-                cm_raw = cm_raw[good]
-                cn = cn[good]
-                cm = cm_raw / cn[:, None]
-                nids = all_ids[np.asarray(ok)][good]
-                sims = cm @ mat_b.T  # (batch, nq): the one matmul
-                # self-match exclusion before per-batch pruning
-                for qi, qid in enumerate(ids_b):
-                    sims[nids == qid, qi] = -np.inf
-                n_rows = sims.shape[0]
-                kk = min(k, n_rows)
-                # per-query partial top-k: argpartition to a candidate pool
-                # wide enough to absorb score ties at the k boundary, then an
-                # exact (cos desc, id asc) sort of the pool — the global rank's
-                # tie order is preserved unless >k+16 corpus vectors tie at the
-                # exact boundary score (pathological mass-duplicate corpora:
-                # dedup first)
-                pool = min(kk + 16, n_rows)
-                part = np.argpartition(-sims, pool - 1, axis=0)[:pool]  # (pool, nq)
-                rows_q, rows_n, rows_c = [], [], []
-                for qi in range(nq):
-                    sel = part[:, qi]
-                    sel = sel[np.isfinite(sims[sel, qi])]
-                    if not len(sel):
-                        continue
-                    # RE-SCORE the WHOLE candidate pool with per-pair 1-D
-                    # dots BEFORE the tie-break sort and kk cut: gemm
-                    # results differ in the last ulp with MATRIX SHAPE
-                    # (BLAS blocking/FMA), so two bitwise-identical corpus
-                    # vectors in different Arrow batches could get
-                    # different gemm scores and break the cross-batch
-                    # (cos desc, id asc) tie rule — a hypothesis-found bug
-                    # on exact-duplicate corpora. A fixed-length 1-D dot
-                    # is shape-independent: identical inputs -> identical
-                    # score in every batch. Re-scoring the pool (<= k+16
-                    # rows, negligible) rather than only the emitted rows
-                    # means SELECTION and emission use the same scores, so
-                    # gemm ulps can no longer prune a row the emitted
-                    # ordering would have ranked ahead (round-4 advice).
-                    qv_raw = qraw_b[qi]
-                    # 1-D np.dot per pair (NOT a gemv: BLAS may still
-                    # block/FMA differently with the row count)
-                    rescored = np.array([
-                        np.dot(cm_raw[s], qv_raw) / (cn[s] * qn_b[qi])
-                        for s in sel
-                    ])
-                    order = np.lexsort((nids[sel], -rescored))[:kk]
-                    sel = sel[order]
-                    rows_q.extend([ids_b[qi]] * len(sel))
-                    rows_n.extend(nids[sel])
-                    rows_c.extend(rescored[order])
-                if rows_q:
-                    yield pd.DataFrame(
-                        {"query_id": rows_q, "neighbor_id": rows_n, "cos_sim": rows_c}
-                    )
-
-    cand = embeddings.select(id_col, vec_col).mapInPandas(run, out_schema)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def lsh_signature(bits: int = 8, seed: int = 2024, dims: int | None = None):
-    """Arrow-batched LSH bucket id: sign pattern of ``bits`` seeded-Gaussian
-    hyperplanes, computed as ONE numpy matmul per batch.
-
-    Replaces the round-1 JVM formulation, which (a) probed the vector
-    dimensionality with a driver-side ``.first()`` during plan build and
-    (b) materialized hyperplane weights as ``bits × dims`` literal
-    expressions — a 12k-literal codegen blob at dims=768. Weights are
-    regenerated per batch from the seed (PCG64 is platform-deterministic;
-    dims × bits doubles, trivial).
-
-    ``dims`` is REQUIRED (round-2 advice): the earlier fallback inferred
-    the modal vector length per Arrow batch, so on a ragged corpus bucket
-    assignment depended on batch partitioning — run-to-run nondeterminism
-    with no error. Raising at plan build keeps the contract visible;
-    vectors whose length differs from ``dims`` get a NULL bucket (dropped
-    by the bucket equi-join) instead of crashing the task.
-    """
+def _hyperplanes(dims, bits: int, seed: int = 2024):
     if dims is None or dims <= 0:
         raise ValueError(
             "lsh_signature requires explicit dims: per-batch inference made "
             "bucket ids depend on batch partitioning for ragged corpora "
             "(silently unstable ANN results)"
         )
+    return np.random.default_rng(seed).standard_normal((dims, bits))
+
+
+def _signs(m, w):
+    """LSH bucket of each vector (row) of ``m``: the sign pattern of
+    ``m @ w``."""
+    with np.errstate(all="ignore"):  # non-finite rows get some bucket
+        proj = m @ w
+    return ((proj > 0).astype(np.int64) << np.arange(w.shape[1])).sum(axis=1)
+
+
+def lsh_signature(bits: int = 8, seed: int = 2024, dims: int | None = None):
+    """Arrow-batched LSH bucket id: sign pattern of ``bits`` seeded-Gaussian
+    hyperplanes, computed as ONE numpy matmul per batch.
+
+    ``dims`` is REQUIRED: inferring it per batch would make bucket ids of a
+    ragged corpus depend on batch partitioning. Vectors whose length
+    differs from ``dims`` get a NULL bucket (dropped by a bucket equi-join)
+    instead of failing the task.
+    """
+    w = _hyperplanes(dims, bits, seed)
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
@@ -559,13 +382,9 @@ def lsh_signature(bits: int = 8, seed: int = 2024, dims: int | None = None):
         vals = vecs.to_numpy(dtype=object)
         out = pd.array([None] * len(vals), dtype="Int64")
         valid = [i for i, v in enumerate(vals) if v is not None and len(v) == dims]
-        if not valid:
-            return pd.Series(out)
-        arr = np.stack([np.asarray(vals[i], dtype="float64") for i in valid])
-        w = np.random.default_rng(seed).standard_normal((dims, bits))
-        proj = arr @ w
-        bucket = ((proj > 0).astype(np.int64) << np.arange(bits, dtype=np.int64)).sum(axis=1)
-        out[np.asarray(valid)] = bucket
+        if valid:
+            arr = np.stack([np.asarray(vals[i], dtype="float64") for i in valid])
+            out[np.asarray(valid)] = _signs(arr, w)
         return pd.Series(out)
 
     return sig
@@ -579,41 +398,24 @@ def lsh_bucketed_topk(
     dims: int | None = None,  # REQUIRED; None raises (see lsh_signature)
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scorer: str = "hof",
     target_bucket_size: int = 64,
 ) -> DataFrame:
     """Approximate top-k: exact cosine ranking within the query's LSH bucket.
 
     Recall/cost dial = ``bits``; the default ``'auto'`` derives it from a
     corpus count so expected occupancy tracks ``target_bucket_size`` (see
-    :func:`auto_lsh_bits` — fixes the round-3 26x misconfiguration cliff).
-    Candidates that share no bucket are missed (ANN semantics); tests
-    measure recall vs the brute-force oracle. Plan build is lazy when
-    ``bits`` is an explicit int; ``'auto'`` runs one count job.
+    :func:`auto_lsh_bits`). Candidates that share no bucket are missed (ANN
+    semantics); tests measure recall vs the brute-force result. Only
+    vectors of length ``dims`` get a bucket. ``queries`` is collected at
+    plan build; ``'auto'`` bits also run one count job.
     """
     bits = _resolve_bits(bits, embeddings, target_bucket_size)
-    sig = lsh_signature(bits=bits, dims=dims)
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    ).withColumn("bucket", sig(F.col("cv")))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("bucket", sig(F.col("qv")))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cos(F.col("qv"), F.col("cv"), scorer))
-        .filter(F.col("cos_sim").isNotNull())  # zero-norm/ragged never rank
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+    w = _hyperplanes(dims, bits)
+    q = _side(queries, id_col, vec_col, _id_type(embeddings, id_col)).get(dims)
+    side = {} if q is None else {dims: (*q, _groups(_signs(q[1].T, w)))}
+    return _topk_frame(
+        embeddings, side, k, id_col, vec_col,
+        keys=lambda d, c: (np.arange(len(c[0])), _signs(c[1].T, w)),
     )
 
 
@@ -624,185 +426,91 @@ def _bucket_pairs_seq(
     cap: int | None = None,
     mode: str = "star",
 ) -> DataFrame:
-    """BIT-EXACT vectorized twin of the bucket self-join + ``scorer='hof'``
-    verify of :func:`embedding_near_dup_pairs` (round-7): one groupBy on
-    ``bucket`` gathers each bucket's members; a mapInArrow kernel emits the
-    verified pairs.
+    """Verified in-bucket pairs of :func:`embedding_near_dup_pairs`: one
+    groupBy on ``bucket`` gathers each bucket's members, and a mapInArrow
+    kernel emits the pairs whose fold cosine is ``>= min_cos``.
 
-    Why: the self-join shuffles on ``bucket`` — a key with only ``2^bits``
-    distinct values — so a hot bucket is ONE post-shuffle partition that
-    AQE's skew splitting cannot divide (single key), and every candidate
-    pair then pays an interpreted O(dims) lambda fold AND materializes both
-    full vectors through the join row (~1 KB/pair).  At sf1.0 (20.8k
-    vectors, bits=4) that serialized 13.5M pairs into single tasks:
-    400 s.  The kernel scores the same pairs in ~1 s.
-
-    Bit-exactness contract, mirroring ``try_divide(dot, norm*norm)`` with
-    the sequential fold (same discipline as :func:`_cosine_topk_seq`,
-    pinned by test):
+    A self-join on ``bucket`` would shuffle on a key with only ``2^bits``
+    values: a hot bucket is then one post-shuffle partition that AQE's
+    skew split cannot divide, and every pair carries both vectors through
+    the join row. At sf1.0 (20.8k vectors, bits=4) that put 13.5M pairs
+    into single tasks (400 s); the kernel scores them in ~1 s.
 
     * pair set: all unordered in-bucket pairs under STRICT ``id_a < id_b``
-      value comparison (members sorted per bucket; duplicate ids never
-      pair, exactly like the join predicate);
-    * dot/norm accumulate left-to-right over dims — the same IEEE-754 op
-      sequence as the HOF fold, vectorized across pairs, so survivors'
-      ``cos_sim`` doubles are identical;
-    * a pair with mismatched dims, a null vector, a null element, or an
-      exactly-zero denominator scores NULL in the HOF path and is dropped
-      by the ``>= min_cos`` filter — excluded here;
-    * a NaN cosine (possible only from non-finite inputs) PASSES Spark's
-      ``>=`` (NaN ranks greatest) — kept here too.
-
-    ``cap``/``mode`` (round-7, late) resolve the hot-bucket treatment
-    INSIDE the kernel — the bucket's member count is visible here, so the
-    caller's stats aggregate (count/min/min_by per bucket) and the
-    full-corpus re-join that carried every vector through an extra
-    exchange just to tag bucket sizes are gone.  Semantics identical to
-    the outer form: a bucket with more than ``cap`` members either pairs
-    every member with the bucket's min-id canonical (``'star'``; the
-    member set excludes ids equal to the canonical's, exactly the JVM
-    ``id != __canon`` filter under the unique-id corpus contract) or is
-    dropped (``'skip'``); star pairs verify through the SAME sequential
-    fold, which is bit-exact to the ``_cos(..., 'hof')`` the outer star
-    branch applied.
+      (members sorted per bucket; duplicate ids never pair);
+    * scores: :func:`_fold`, so ``cos_sim`` is bit-identical to the JVM
+      fold; a pair with no score (see the module docstring) is dropped,
+      and a NaN score passes, as NaN passes Spark's ``>=``;
+    * ``cap``: a bucket with more than ``cap`` members either pairs every
+      member with its min-id canonical (``'star'``, O(bucket) pairs,
+      verified the same way) or is dropped (``'skip'``).
     """
-    import pyarrow as pa
-
     id_type = frame.schema[id_col].dataType.simpleString()
 
     def run(batches):
-        import pyarrow.compute as pc
-
         for rb in batches:
             ms = rb.column(0)
             blens = pc.list_value_length(ms).to_numpy(zero_copy_only=False)
-            blens = np.nan_to_num(blens, nan=0).astype(np.int64)
+            blens = blens.astype(np.int64)
             flat = pc.list_flatten(ms)
-            ids_arr = flat.field("i").combine_chunks() if isinstance(
-                flat.field("i"), pa.ChunkedArray) else flat.field("i")
-            vecs = flat.field("v")
-            if isinstance(vecs, pa.ChunkedArray):
-                vecs = vecs.combine_chunks()
-            n = len(ids_arr)
+            ids_arr = flat.field("i")
             ids_np = ids_arr.to_numpy(zero_copy_only=False)
-            # per-member vector span straight from the list offsets (null
-            # lists keep their offset slot, unlike list_flatten output)
-            offs = vecs.offsets.to_numpy(zero_copy_only=False).astype(
-                np.int64)[vecs.offset:vecs.offset + n + 1]
-            d_of = np.diff(offs)
-            vals_arr = vecs.values
-            vals = vals_arr.to_numpy(zero_copy_only=False).astype(
-                np.float64, copy=False)
-            vec_null = (
-                vecs.is_null().to_numpy(zero_copy_only=False)
-                if vecs.null_count else np.zeros(n, dtype=bool)
-            )
-            if vals_arr.null_count:
-                en = vals_arr.is_null().to_numpy(zero_copy_only=False)
-                cn = np.zeros(len(en) + 1, dtype=np.int64)
-                np.cumsum(en, out=cn[1:])
-                has_null_el = (cn[offs[1:]] - cn[offs[:-1]]) > 0
-            else:
-                has_null_el = np.zeros(n, dtype=bool)
-            valid = ~vec_null & ~has_null_el & (d_of > 0)
-
-            # sequential norm fold per member, by dims class
-            na = np.zeros(n)
-            for d in np.unique(d_of[valid]):
-                rows = np.flatnonzero(valid & (d_of == d))
-                gat = offs[rows][:, None] + np.arange(int(d))
-                acc = np.zeros(len(rows))
-                for j in range(int(d)):
-                    acc = acc + vals[gat[:, j]] * vals[gat[:, j]]
-                na[rows] = np.sqrt(acc)
+            n = len(ids_arr)
+            # per member: dims (0 = never scores), row in its dims matrix
+            dims, loc, na, mats = np.zeros(n, np.int64), np.zeros(n, np.int64), np.zeros(n), {}
+            for d, (rows, m, nm) in _by_dims(flat.field("v")).items():
+                dims[rows], loc[rows], na[rows], mats[d] = d, np.arange(len(rows)), nm, m
 
             # in-bucket pair enumeration: drop singleton buckets, sort
             # members by id per bucket, upper triangle per size class
             multi = blens >= 2
-            emask = np.repeat(multi, blens)
-            midx = np.flatnonzero(emask)       # flat member index
+            midx = np.flatnonzero(np.repeat(multi, blens))  # flat member index
             blens_m = blens[multi]
             bkt = np.repeat(np.arange(len(blens_m)), blens_m)
-            order = np.lexsort((ids_np[midx], bkt))
-            midx_s = midx[order]
+            midx_s = midx[np.lexsort((ids_np[midx], bkt))]
             starts = np.zeros(len(blens_m), dtype=np.int64)
             starts[1:] = np.cumsum(blens_m)[:-1]
 
             out_a, out_b, out_c = [], [], []
 
             def score(ia, ib):
-                """Shared verify for triangle and star pairs: strict id
-                order + validity + dims match, then the sequential fold."""
-                keep = (
-                    (ids_np[ia] < ids_np[ib])
-                    & valid[ia] & valid[ib]
-                    & (d_of[ia] == d_of[ib])
-                )
+                """Shared verify for triangle and star pairs."""
+                keep = (ids_np[ia] < ids_np[ib]) & (dims[ia] > 0) & (dims[ia] == dims[ib])
                 ia, ib = ia[keep], ib[keep]
-                if not len(ia):
-                    return
-                cos = np.full(len(ia), np.nan)
-                for d in np.unique(d_of[ia]):
-                    pr = np.flatnonzero(d_of[ia] == d)
-                    sa = offs[ia[pr]]
-                    sb = offs[ib[pr]]
-                    acc = np.zeros(len(pr))
-                    for j in range(int(d)):  # sequential dot fold
-                        acc = acc + vals[sa + j] * vals[sb + j]
-                    denom = na[ia[pr]] * na[ib[pr]]
-                    c = np.full(len(pr), np.nan)
-                    nz = denom != 0.0
-                    with np.errstate(invalid="ignore"):
-                        c[nz] = acc[nz] / denom[nz]
-                    # zero denominator -> NULL -> dropped; NaN passes
-                    # Spark's >= (NaN ranks greatest)
-                    c[~nz] = -np.inf
-                    cos[pr] = c
+                cos = np.empty(len(ia))
+                for d in np.unique(dims[ia]).tolist():
+                    pr = np.flatnonzero(dims[ia] == d)
+                    dot = _fold(mats[d], loc[ia[pr]], mats[d], loc[ib[pr]])
+                    with np.errstate(all="ignore"):
+                        den = na[ia[pr]] * na[ib[pr]]
+                        cos[pr] = np.where(den != 0, dot / den, -np.inf)
                 pk = np.isnan(cos) | (cos >= min_cos)
-                if pk.any():
-                    out_a.append(ia[pk])
-                    out_b.append(ib[pk])
-                    out_c.append(cos[pk])
+                out_a.append(ia[pk])
+                out_b.append(ib[pk])
+                out_c.append(cos[pk])
 
-            if cap is not None:
-                hot = blens_m > cap
-                if mode == "star" and hot.any():
-                    for st, ln in zip(starts[hot], blens_m[hot]):
-                        canon = midx_s[st]          # min-id member
-                        mem = midx_s[st + 1:st + int(ln)]
-                        score(np.full(len(mem), canon, dtype=np.int64), mem)
-                tri_sizes = np.unique(blens_m[~hot])
-            else:
-                tri_sizes = np.unique(blens_m)
-            for L in tri_sizes:
-                # every size-L bucket is below the cap when L made it into
-                # tri_sizes, so the plain size mask selects exactly them
+            hot = blens_m > cap if cap is not None else np.zeros(len(blens_m), bool)
+            if mode == "star":
+                for st, ln in zip(starts[hot], blens_m[hot]):
+                    mem = midx_s[st + 1:st + int(ln)]
+                    score(np.full(len(mem), midx_s[st]), mem)
+            for L in np.unique(blens_m[~hot]).tolist():
+                # a size class below the cap holds no hot bucket
                 sel = starts[blens_m == L]
-                iu, ju = np.triu_indices(int(L), 1)
-                P = len(iu)
-                step = max(1, 2_000_000 // max(P, 1))
+                iu, ju = np.triu_indices(L, 1)
+                step = max(1, 2_000_000 // len(iu))
                 for lo in range(0, len(sel), step):
-                    gat = sel[lo:lo + step, None] + np.arange(int(L))
-                    score(midx_s[gat[:, iu].ravel()],
-                          midx_s[gat[:, ju].ravel()])
-            if out_a:
-                fa = np.concatenate(out_a)
-                fb = np.concatenate(out_b)
-                fc = np.concatenate(out_c)
-            else:
-                fa = fb = np.array([], dtype=np.int64)
-                fc = np.array([], dtype=np.float64)
+                    gat = sel[lo:lo + step, None] + np.arange(L)
+                    score(midx_s[gat[:, iu].ravel()], midx_s[gat[:, ju].ravel()])
+            fa = np.concatenate(out_a) if out_a else np.array([], np.int64)
+            fb = np.concatenate(out_b) if out_b else np.array([], np.int64)
+            fc = np.concatenate(out_c) if out_c else np.array([])
             yield pa.RecordBatch.from_arrays(
-                [
-                    ids_arr.take(pa.array(fa, type=pa.int64())),
-                    ids_arr.take(pa.array(fb, type=pa.int64())),
-                    pa.array(fc, type=pa.float64()),
-                ],
+                [ids_arr.take(fa), ids_arr.take(fb), pa.array(fc, type=pa.float64())],
                 names=["id_a", "id_b", "cos_sim"],
             )
 
-    # null-bucket rows never satisfy the join predicate (NULL == NULL is
-    # not true), but groupBy WOULD collect them into a group — drop first
+    # groupBy would collect NULL buckets into a group; they never pair
     buckets = frame.filter(F.col("bucket").isNotNull()).groupBy("bucket").agg(
         F.collect_list(
             F.struct(F.col(id_col).alias("i"), F.col("v").alias("v"))
@@ -822,27 +530,12 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     max_bucket_size: int | None = None,
     hot_bucket_mode: str = "star",
-    scorer: str = "seq",
     target_bucket_size: int = 32,
-    cache_buckets: bool | str = "persist",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: LSH-bucketed candidate
-    generation (corpus self-join on the bucket key — never all-pairs) +
-    exact cosine verification at ``min_cos``.
-
-    ``scorer='seq'`` (default, round-7) verifies buckets in the
-    :func:`_bucket_pairs_seq` kernel — bit-exact to the ``'hof'``
-    join+fold (pinned by test) at a fraction of the wall (the join
-    serializes hot buckets into single-key partitions and pays an
-    interpreted O(dims) fold per pair: 400 s vs ~2 s at sf1.0, bits=4).
-    Non-numeric id columns fall back to the join automatically (the
-    kernel's vectorized per-bucket sort needs a numeric dtype).
-    ``max_bucket_size`` now also resolves inside that kernel (round-7,
-    late), which deletes the bucket-stats aggregate and the corpus
-    re-join that tagged rows with their bucket size; capped
-    ``scorer='arrow'`` (numeric ids) routes through the same kernel —
-    identical pair set, cos doubles from the hof-bit-exact fold, which
-    sits inside the allclose contract the arrow scorer documents.
+    generation (never all-pairs) + exact fold cosine verification at
+    ``min_cos`` (see :func:`_bucket_pairs_seq`). Returns (id_a, id_b,
+    cos_sim) with ``id_a < id_b``.
 
     Approximate by design: a near-dup pair hashing into different buckets
     is missed (recall grows as ``bits`` shrinks; tests measure recall vs
@@ -850,121 +543,30 @@ def embedding_near_dup_pairs(
     functions.graph.near_dup_clusters for canonical selection.
 
     Template-heavy corpora concentrate near-identical vectors in ONE bucket
-    by construction (that is exactly why they are candidates), making the
-    self-join quadratic. ``max_bucket_size`` bounds it with the same
-    star/skip treatment as the text dedup paths: oversized buckets either
-    pair every member with the bucket's min-id canonical only (``'star'``,
-    cosine still verified — O(n) pairs, transitive closure over the pairs
+    by construction, making the bucket quadratic. ``max_bucket_size``
+    bounds it with the same star/skip treatment as the text dedup paths:
+    oversized buckets either pair every member with the bucket's min-id
+    canonical only (``'star'``, cosine still verified — transitive closure
     still connects the bucket) or leave candidate generation entirely
-    (``'skip'``). ``None`` keeps exact all-pairs-within-bucket semantics.
+    (``'skip'``). ``None`` keeps all pairs within a bucket.
 
     ``bits='auto'`` (default) sizes the bucket space from a corpus count so
     MEAN occupancy tracks ``target_bucket_size`` (32 here — tighter than
-    the top-k path because the self-join is quadratic per bucket);
+    the top-k path because pairs are quadratic per bucket);
     ``max_bucket_size`` still bounds the hot tail that the mean can't see.
     """
-    from pyspark.sql.types import NumericType
-
-    numeric_ids = isinstance(embeddings.schema[id_col].dataType, NumericType)
-    if scorer == "seq" and not numeric_ids:
-        scorer = "hof"  # bit-equal join fallback for non-numeric ids
     bits = _resolve_bits(bits, embeddings, target_bucket_size)
     sig = lsh_signature(bits=bits, dims=dims)
     if max_bucket_size is not None and hot_bucket_mode not in ("star", "skip"):
         raise ValueError("hot_bucket_mode must be 'star' or 'skip'")
-    base = embeddings.select(
-        F.col(id_col), _as_double(vec_col).alias("v")
-    ).withColumn("bucket", sig(F.col("v")))
-    # kernel routes (round-7, late): ONE groupBy consumes the bucketed
-    # frame and the cap/star/skip treatment resolves inside the kernel, so
-    # no materialize barrier, no bucket-stats aggregate, and no re-join of
-    # the corpus (which carried every vector through an extra exchange).
-    if scorer == "seq":
-        return _bucket_pairs_seq(
-            base, id_col, min_cos, cap=max_bucket_size, mode=hot_bucket_mode
-        )
-    if max_bucket_size is not None and scorer == "arrow" and numeric_ids:
-        # capped 'arrow': identical pair set from the same kernel; the
-        # cos_sim doubles come from the sequential fold, which is
-        # bit-exact to the 'hof' join — inside the allclose contract the
-        # arrow scorer documents (the join path's einsum was never
-        # bit-equal to hof either). At 1M x 64-dim vectors the capped
-        # arrow join measured 43.8 s vs ~12 s through the kernel.
-        return _bucket_pairs_seq(
-            base, id_col, min_cos, cap=max_bucket_size, mode=hot_bucket_mode
-        )
-    # join routes (non-numeric ids, or scorer='hof'/'arrow' uncapped):
-    # both self-join sides (and the capped mode's bucket-stats agg) consume
-    # the bucketed frame; materialize so the signature matmul runs once per
-    # corpus, not once per plan branch. Default 'persist': non-eager and
-    # lineage-preserving (no plan-build barrier job, executor-loss safe on
-    # a real cluster) — see utils.materialize for the modes.
-    from ..utils import materialize
-
-    v = materialize(base, cache_buckets)
-
-    def _verified_pairs(frame: DataFrame) -> DataFrame:
-        if scorer == "seq":
-            # bit-exact vectorized twin of the join+HOF path below — see
-            # :func:`_bucket_pairs_seq` for the contract and why the join
-            # serializes hot buckets (single-key post-shuffle partitions)
-            return _bucket_pairs_seq(frame, id_col, min_cos)
-        a, b = frame.alias("a"), frame.alias("b")
-        return (
-            a.join(b, (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .withColumn("cos_sim", _cos(F.col("a.v"), F.col("b.v"), scorer))
-            .filter(F.col("cos_sim") >= min_cos)
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                "cos_sim",
-            )
-        )
-
-    if max_bucket_size is None:
-        return _verified_pairs(v)
-
-    # aggregation on the bucket key the self-join shuffles on (shared
-    # exchange); min_by carries the canonical's vector so star pairs verify
-    # cosine without a re-join against the corpus
-    stats = v.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("__sz"),
-        F.min(id_col).alias("__canon"),
-        F.min_by("v", F.col(id_col)).alias("__canon_v"),
+    base = (
+        embeddings.select(F.col(id_col), _as_double(vec_col).alias("v"))
+        .filter(F.col(id_col).isNotNull())
+        .withColumn("bucket", sig(F.col("v")))
     )
-    tagged = v.join(stats, "bucket")
-    small = tagged.filter(F.col("__sz") <= max_bucket_size).select(
-        id_col, "v", "bucket"
+    return _bucket_pairs_seq(
+        base, id_col, min_cos, cap=max_bucket_size, mode=hot_bucket_mode
     )
-    pairs = _verified_pairs(small)
-    if hot_bucket_mode == "star":
-        hot = (
-            tagged.filter(
-                (F.col("__sz") > max_bucket_size)
-                & (F.col(id_col) != F.col("__canon"))
-            )
-            .withColumn(
-                "cos_sim",
-                # star verify is one fold per MEMBER (O(bucket), not
-                # O(bucket²)); 'seq' maps to the bit-equal HOF here
-                _cos(F.col("__canon_v"), F.col("v"),
-                     "hof" if scorer == "seq" else scorer),
-            )
-            .filter(F.col("cos_sim") >= min_cos)
-            .select(
-                F.col("__canon").alias("id_a"),
-                F.col(id_col).alias("id_b"),
-                "cos_sim",
-            )
-        )
-        pairs = pairs.unionByName(hot)
-    return pairs
-
-
-def _neg_cos(a: Column, b: Column, scorer: str = "hof") -> Column:
-    """Distance for cell assignment: negative cosine (argmin ≡ nearest)."""
-    return -_cos(a, b, scorer)
 
 
 def auto_ivf_cells(n: int, lo: int = 16, hi: int = 65536) -> int:
@@ -989,171 +591,88 @@ def _resolve_cells(n_cells, embeddings: DataFrame) -> int:
     raise ValueError("n_cells must be a positive int or 'auto'")
 
 
+def _centroids(embeddings, n_cells, id_col, vec_col, refine_iters) -> list:
+    """The IVF coarse quantizer as driver-side ``(cell, vector)`` rows: the
+    ``n_cells`` corpus vectors with the smallest xxhash64(id), then
+    ``refine_iters`` Lloyd iterations (assign → per-cell mean; a cell left
+    empty keeps its centroid)."""
+    n_cells = _resolve_cells(n_cells, embeddings)
+    vecs = embeddings.select(F.col(id_col), _as_double(vec_col).alias("__v")).filter(
+        F.col(id_col).isNotNull()
+    )
+    rows = [tuple(r) for r in vecs.orderBy(F.xxhash64(id_col)).limit(n_cells).collect()]
+    for _ in range(refine_iters):
+        means = dict(
+            vecs.join(_assign(embeddings, rows, 1, id_col, vec_col), id_col)
+            .select("cell", F.posexplode("__v").alias("pos", "x"))
+            .groupBy("cell", "pos")
+            .agg(F.avg("x").alias("m"))
+            .groupBy("cell")
+            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("s"))
+            .select("cell", F.transform("s", lambda t: t["m"]))
+            .collect()
+        )
+        rows = [(c, means.get(c, v)) for c, v in rows]
+    return rows
+
+
+def _assign(embeddings, cells, keep, id_col, vec_col) -> DataFrame:
+    """(id, cell) for each corpus vector's ``keep`` nearest of the ``cells``
+    rows, in the assignment order of :func:`_topk`."""
+    bc = embeddings.sparkSession.sparkContext.broadcast(
+        _rows_side(cells, _id_type(embeddings, id_col))
+    )
+
+    def score(d, c):
+        cs = bc.value.get(d)
+        if cs is not None:
+            a, b, f = _topk(c, cs, keep, nan_first=False)
+            yield cs[0][b], a, f
+
+    return _scan(embeddings, id_col, vec_col, ("cell", id_col), score).select(
+        id_col, "cell"
+    )
+
+
 def ivf_assign_cells(
     embeddings: DataFrame,
     n_cells: int | str = "auto",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep: int = 1,
-    scorer: str = "hof",
     refine_iters: int = 0,
-    strategy: str = "join",
 ):
     """IVF coarse quantizer: deterministic centroids (the ``n_cells``
     corpus vectors with the smallest xxhash64(id) — reproducible without
-    RNG state or a k-means fit) broadcast against the corpus; every vector
-    is assigned its ``keep`` nearest cells by cosine.
+    RNG state or a k-means fit); every vector is assigned its ``keep``
+    nearest cells by cosine. Returns (centroids, assignment): centroids
+    has (cell, cv) with ``cell`` the seeding vector's id, and assignment
+    has one row per (id, cell).
 
-    Cost is the classic IVF assignment term C·N (a broadcast nested loop —
-    one pass over the corpus, no shuffle of the big side); returns
-    (centroids, assignment) where assignment has one row per (id, cell).
+    The centroids are collected at plan build (``n_cells × dims`` values,
+    the index itself) and each corpus batch is assigned in one pass of the
+    cosine kernel. Ties break by ascending cell id and a NaN distance ranks
+    last. A pair with no score (NULL, ragged or zero-norm on either side)
+    never ranks, so a zero-norm centroid never wins and a degenerate corpus
+    vector gets no cell.
 
     ``refine_iters > 0`` runs that many Lloyd iterations (assign → per-cell
     mean → reassign) on the hash-seeded init — the classic IVF *training*
     step, improving recall-at-nprobe on clustered corpora. Each iteration
-    is one distributed assignment pass plus a tiny driver collect of the
-    ``n_cells × dims`` means (training is eagerly executed, like any ANN
-    index build; ``refine_iters=0``, the default, keeps plan build fully
-    lazy for the oracle-exact exhaustive mode). Deterministic given the
-    seed: fixed iteration count, empty cells keep their previous centroid,
-    means are exact up to distributed-sum ordering in the last ulps.
+    is one distributed assignment pass plus a driver collect of the
+    ``n_cells × dims`` means. Deterministic given the seed: fixed iteration
+    count, empty cells keep their previous centroid, means are exact up to
+    distributed-sum ordering in the last ulps.
 
     ``n_cells='auto'`` (default) = ``ceil(sqrt(n))`` from a corpus count
-    (:func:`auto_ivf_cells`); pass an int to keep plan build lazy.
-
-    ``strategy`` picks the physical assignment (round 4 — the corpus-scale
-    fix): ``'join'`` (default, plan-lazy, oracle-exact) materializes the
-    broadcast nested-loop ``C x N`` pair rows and scores each with the
-    per-pair scorer — at ``C = sqrt(1M) = 1000`` cells that is 1e9
-    interpreted rows, the classic IVF-training wall. ``'matmul'`` collects
-    the centroids driver-side (a tiny ``C x dims`` matrix — a driver
-    ACTION at plan build, same contract note as `cosine_topk_matmul`) and
-    assigns each Arrow batch with ONE numpy matmul, emitting only
-    ``(id, cell)`` rows: each corpus vector crosses into Python exactly
-    once. Ranking ties at equal cosine break by ascending cell id in both
-    strategies; scores differ from the HOF fold in the last ulps (numpy
-    pairwise sums — the `cosine_arrow` caveat), so an exact-boundary tie
-    could order differently on adversarial corpora; equality on random
-    corpora is pinned by test. Degenerate vectors (NULL / ragged /
-    zero-norm) on EITHER side score NULL and are filtered before ranking
-    in BOTH strategies: degenerate corpus vectors get no assignment, and a
-    degenerate centroid can never win a rank (round-4 advice: the earlier
-    'join' path inherited Spark's NULLS-FIRST ascending order, so one
-    zero-norm centroid would have captured every assignment).
+    (:func:`auto_ivf_cells`).
     """
-    if strategy not in ("join", "matmul"):
-        raise ValueError("strategy must be 'join' or 'matmul'")
-    n_cells = _resolve_cells(n_cells, embeddings)
-    base = embeddings.select(
-        F.col(id_col).alias("__id"), _as_double(vec_col).alias("__v")
+    rows = _centroids(embeddings, n_cells, id_col, vec_col, refine_iters)
+    t = embeddings.schema[id_col].dataType.simpleString()
+    centroids = embeddings.sparkSession.createDataFrame(
+        rows, f"cell {t}, cv array<double>"
     )
-    centroids = (
-        base.withColumn("__h", F.xxhash64(F.col("__id")))
-        .orderBy("__h")
-        .limit(n_cells)  # TakeOrdered of a tiny K — no full sort materialized
-        .select(F.col("__id").alias("cell"), F.col("__v").alias("cv"))
-    )
-
-    id_type = embeddings.schema[id_col].dataType.simpleString()
-
-    def _assign_join(cents, k_keep):
-        w = W.partitionBy("__id").orderBy(F.col("__d").asc(), F.col("cell").asc())
-        return (
-            base.join(F.broadcast(cents))
-            .withColumn("__d", _neg_cos(F.col("__v"), F.col("cv"), scorer))
-            # NULL distance = degenerate pair (zero-norm / ragged / NULL on
-            # EITHER side). Without this filter, ascending orderBy puts NULLS
-            # FIRST, so a single zero-norm CENTROID would win rank-1 for
-            # every corpus vector and collapse all assignments into one cell
-            # (round-4 advice). Filtering also makes degenerate corpus
-            # vectors unassigned — matching the 'matmul' strategy exactly.
-            .filter(F.col("__d").isNotNull())
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k_keep)
-            .select(F.col("__id").alias(id_col), "cell")
-        )
-
-    def _assign_matmul(cents, k_keep):
-        # centroid collect: O(n_cells) rows, the index structure itself
-        rows = sorted(cents.collect(), key=lambda r: r["cell"])  # cell asc
-        cells_arr = np.array([r["cell"] for r in rows])
-        cm = np.stack([np.asarray(r["cv"], dtype="float64") for r in rows])
-        cn = np.linalg.norm(cm, axis=1)
-        cn[cn == 0] = np.inf  # zero-norm centroid matches nothing
-        cmn = cm / cn[:, None]
-        dims = cmn.shape[1]
-        sc = embeddings.sparkSession.sparkContext
-        bc = sc.broadcast((cells_arr, cmn))
-        schema = f"{id_col} {id_type}, cell {id_type}"
-
-        def run(batches):
-            cells_b, cmn_b = bc.value
-            kk = min(k_keep, len(cells_b))
-            for pdf in batches:
-                vals = pdf["__v"].to_numpy(dtype=object)
-                ok = [
-                    i for i, v in enumerate(vals)
-                    if v is not None and len(v) == dims
-                ]
-                if not ok:
-                    continue
-                vm = np.stack([np.asarray(vals[i], dtype="float64") for i in ok])
-                vn = np.linalg.norm(vm, axis=1)
-                good = vn > 0
-                if not good.any():
-                    continue
-                vm = vm[good] / vn[good][:, None]
-                ids = pdf["__id"].to_numpy()[np.asarray(ok)][good]
-                sims = vm @ cmn_b.T                    # (batch, C)
-                # centroid rows are cell-ascending, so "first max" ==
-                # (cos desc, cell asc). keep=1 (the corpus-assignment hot
-                # path) is a plain argmax — O(C) per row; keep>1 partitions
-                # to a pool then stable-argsorts only the pool (pool
-                # indices are cell-ascending positions, so stability
-                # preserves the tie rule exactly)
-                if kk == 1:
-                    sel = np.argmax(sims, axis=1)[:, None]
-                else:
-                    pool = min(kk + 16, sims.shape[1])
-                    part = np.argpartition(-sims, pool - 1, axis=1)[:, :pool]
-                    part.sort(axis=1)  # restore cell-ascending positions
-                    psims = np.take_along_axis(sims, part, axis=1)
-                    order = np.argsort(-psims, axis=1, kind="stable")[:, :kk]
-                    sel = np.take_along_axis(part, order, axis=1)
-                out_ids = np.repeat(ids, kk)
-                out_cells = cells_b[sel.reshape(-1)]
-                yield pd.DataFrame({id_col: out_ids, "cell": out_cells})
-
-        return base.mapInPandas(run, schema)
-
-    _assign = _assign_join if strategy == "join" else _assign_matmul
-
-    spark = embeddings.sparkSession
-    for _ in range(refine_iters):
-        a = _assign(centroids, 1).withColumnRenamed(id_col, "__id")
-        means = (
-            base.join(a, "__id")
-            .select("cell", F.posexplode("__v").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("s"))
-            .select("cell", F.transform("s", lambda t: t["m"]).alias("cv_new"))
-        )
-        updated = [
-            (r["cell"], list(r["cv_new"]))
-            for r in centroids.join(means, "cell", "left")
-            .select(
-                "cell", F.coalesce("cv_new", "cv").alias("cv_new")
-            )
-            .collect()
-        ]
-        cell_t = embeddings.schema[id_col].dataType.simpleString()
-        centroids = spark.createDataFrame(
-            updated, f"cell {cell_t}, cv array<double>"
-        ) if updated else centroids
-
-    return centroids, _assign(centroids, keep)
+    return centroids, _assign(embeddings, rows, keep, id_col, vec_col)
 
 
 def ivf_topk(
@@ -1164,52 +683,37 @@ def ivf_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scorer: str = "hof",
     refine_iters: int = 0,
-    strategy: str = "join",
 ) -> DataFrame:
     """IVF-flat approximate top-k: corpus vectors live in their nearest
-    cell; each query probes its ``nprobe`` nearest cells and ranks exact
-    cosine within them. ``nprobe = n_cells`` probes everything and is
-    EXACTLY the brute-force result (pinned by test + driver oracle);
+    cell (:func:`ivf_assign_cells`, ``keep=1``); each query probes its
+    ``nprobe`` nearest cells under the same assignment order and ranks
+    exact cosine within them. ``nprobe >= n_cells`` probes every cell and
+    is EXACTLY the brute-force result (pinned by test + driver oracle);
     smaller nprobe trades recall for a 1/n_cells-ish candidate fraction.
-    ``strategy='matmul'`` swaps the corpus-side assignment for the
-    one-matmul-per-batch path (see :func:`ivf_assign_cells`) — required at
-    ~1M+ vectors where ``C x N`` pair rows are the training wall; the
-    query side stays on the broadcast join (queries are small).
+
+    One pass: each corpus batch is assigned its cells and ranked against
+    the queries probing them, so a corpus vector meets a query at most
+    once. Centroids and queries are collected at plan build.
     """
-    # one shared quantizer: centroids come from the CORPUS; queries are
-    # assigned against the same centroids with keep=nprobe
-    centroids, corpus_cells = ivf_assign_cells(
-        embeddings, n_cells=n_cells, id_col=id_col, vec_col=vec_col, keep=1,
-        scorer=scorer, refine_iters=refine_iters, strategy=strategy,
-    )
-    qbase = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    )
-    wq = W.partitionBy("query_id").orderBy(F.col("__d").asc(), F.col("cell").asc())
-    query_cells = (
-        qbase.join(F.broadcast(centroids))
-        .withColumn("__d", _neg_cos(F.col("qv"), F.col("cv"), scorer))
-        .withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "qv", "cell")
-    )
-    cand = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("nv")
-    ).join(corpus_cells.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id")
-    scored = (
-        cand.join(F.broadcast(query_cells), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cos(F.col("qv"), F.col("nv"), scorer))
-        # a corpus vector can reach one query through several probed cells
-        .select("query_id", "neighbor_id", "cos_sim")
-        .distinct()
-    )
-    wr = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    id_type = _id_type(embeddings, id_col)
+    rows = _centroids(embeddings, n_cells, id_col, vec_col, refine_iters)
+    cells = _rows_side(rows, id_type)
+    side = {}
+    for d, q in _side(queries, id_col, vec_col, id_type).items():
+        if d not in cells:
+            continue
+        if nprobe >= len(rows):
+            probes = {c: np.arange(len(q[0])) for c in cells[d][0].tolist()}
+        else:
+            a, b, _ = _topk(q, cells[d], nprobe, nan_first=False)
+            probes = _groups(cells[d][0][b], a)
+        side[d] = (*q, probes)
+    bc = embeddings.sparkSession.sparkContext.broadcast(cells)
+
+    def keys(d, c):
+        cs = bc.value[d]
+        a, b, _ = _topk(c, cs, 1, nan_first=False)
+        return a, cs[0][b]
+
+    return _topk_frame(embeddings, side, k, id_col, vec_col, keys)

@@ -144,11 +144,11 @@ EMB_DIMS = 64  # uniform at every SF (TESTDATA.md)
 
 def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact top-k cosine neighbors for the first few vectors.
-    ``scorer='seq'`` (round-7) is bit-identical to the interpreted HOF
-    fold — same doubles, same ranks, pinned by test — at ~5x less wall."""
+    The kernel's scores are bit-identical to the sequential fold the
+    oracle computes, so the values hash-match."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < KNN_NQ)
-    return cosine_topk_bruteforce(emb, q, k=KNN_K, scorer="seq").select(
+    return cosine_topk_bruteforce(emb, q, k=KNN_K).select(
         "query_id", "neighbor_id", F.round("cos_sim", 9).alias("cos_sim"), "rank"
     )
 

@@ -1,0 +1,212 @@
+"""Equality references for the engine's vectorized kernels.
+
+These are the Spark-expression forms the engine used to run, kept so that
+tests can require the kernels to return the same rows:
+
+* cosine top-k (brute force, LSH, IVF), IVF cell assignment and embedding
+  near-dup pairs as broadcast or bucket joins, each pair scored by the
+  interpreted higher-order fold ``try_divide(dot(a, b), norm(a) *
+  norm(b))``. The DuckDB oracles reproduce that fold bit for bit, so the
+  kernels must match these forms with ``==``, not within a tolerance;
+* MinHash signatures and SimHash as all-JVM expression folds.
+
+NULL ids are dropped first: they never rank, pair or seed a cell.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import functions as F
+
+from mpower_feature_analysis_spark.functions.similarity import lsh_signature
+from mpower_feature_analysis_spark.functions.text import rolling_hash_shingles
+
+
+def _as_double(col) -> Column:
+    return F.transform(F.col(col), lambda x: x.cast("double"))
+
+
+def dot(a: Column, b: Column) -> Column:
+    """Sequential-fold dot product: ``acc + x * y`` left to right."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def cos(a: Column, b: Column) -> Column:
+    """NULL for a NULL vector, a NULL element, a length mismatch or a zero
+    denominator (``try_divide``); NaN when an input is non-finite."""
+    return F.try_divide(dot(a, b), F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+
+
+def _vectors(frame: DataFrame, id_col, vec_col, id_name, vec_name) -> DataFrame:
+    return frame.select(
+        F.col(id_col).alias(id_name), _as_double(vec_col).alias(vec_name)
+    ).filter(F.col(id_name).isNotNull())
+
+
+def _ranked(scored: DataFrame, k: int) -> DataFrame:
+    w = W.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _score(pairs: DataFrame, qv: str, cv: str) -> DataFrame:
+    return (
+        pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("cos_sim", cos(F.col(qv), F.col(cv)))
+        .filter(F.col("cos_sim").isNotNull())
+        .select("query_id", "neighbor_id", "cos_sim")
+    )
+
+
+def cosine_topk_bruteforce(embeddings, queries, k=5, id_col="vec_id",
+                           vec_col="embedding") -> DataFrame:
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv")
+    c = _vectors(embeddings, id_col, vec_col, "neighbor_id", "cv")
+    return _ranked(_score(c.crossJoin(F.broadcast(q)), "qv", "cv"), k)
+
+
+def lsh_bucketed_topk(embeddings, queries, k=5, bits=4, dims=None,
+                      id_col="vec_id", vec_col="embedding") -> DataFrame:
+    sig = lsh_signature(bits=bits, dims=dims)
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv")
+    c = _vectors(embeddings, id_col, vec_col, "neighbor_id", "cv")
+    pairs = c.withColumn("bucket", sig("cv")).join(
+        F.broadcast(q.withColumn("bucket", sig("qv"))), "bucket"
+    )
+    return _ranked(_score(pairs, "qv", "cv"), k)
+
+
+def _assign(base: DataFrame, centroids: DataFrame, keep: int) -> DataFrame:
+    """Each ``(__id, __v)`` row's ``keep`` nearest cells: distance is the
+    negated cosine, NULL distances never rank, NaN ranks last, ties go to
+    the smaller cell id."""
+    w = W.partitionBy("__id").orderBy(F.col("__d").asc(), F.col("cell").asc())
+    return (
+        base.crossJoin(F.broadcast(centroids))
+        .withColumn("__d", -cos(F.col("__v"), F.col("cv")))
+        .filter(F.col("__d").isNotNull())
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= keep)
+        .select("__id", "cell")
+    )
+
+
+def ivf_assign_cells(embeddings, n_cells, keep=1, id_col="vec_id",
+                     vec_col="embedding"):
+    base = _vectors(embeddings, id_col, vec_col, "__id", "__v")
+    centroids = base.orderBy(F.xxhash64("__id")).limit(n_cells).select(
+        F.col("__id").alias("cell"), F.col("__v").alias("cv")
+    )
+    return centroids, _assign(base, centroids, keep).withColumnRenamed(
+        "__id", id_col
+    )
+
+
+def ivf_topk(embeddings, queries, k=5, n_cells=8, nprobe=2, id_col="vec_id",
+             vec_col="embedding") -> DataFrame:
+    """Corpus vectors live in their nearest cell; a query ranks the vectors
+    of its ``nprobe`` nearest cells, or of every cell once ``nprobe``
+    reaches ``n_cells``."""
+    centroids, cells = ivf_assign_cells(embeddings, n_cells, 1, id_col, vec_col)
+    q = _vectors(queries, id_col, vec_col, "__id", "__v")
+    if nprobe >= n_cells:
+        probes = q.select("__id").crossJoin(centroids.select("cell"))
+    else:
+        probes = _assign(q, centroids, nprobe)
+    probes = probes.join(q, "__id").select(
+        F.col("__id").alias("query_id"), F.col("__v").alias("qv"), "cell"
+    )
+    corpus = _vectors(embeddings, id_col, vec_col, "neighbor_id", "nv").join(
+        cells.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id"
+    )
+    return _ranked(_score(corpus.join(F.broadcast(probes), "cell"), "qv", "nv"), k)
+
+
+def embedding_near_dup_pairs(embeddings, min_cos=0.9, bits=4, dims=None,
+                             id_col="vec_id", vec_col="embedding",
+                             max_bucket_size=None, hot_bucket_mode="star"):
+    """Bucket self-join under strict ``id_a < id_b``, verified at
+    ``min_cos``; a bucket above ``max_bucket_size`` members pairs each
+    member with its min-id canonical (``'star'``) or is dropped
+    (``'skip'``), through a per-bucket stats aggregate."""
+    sig = lsh_signature(bits=bits, dims=dims)
+    v = _vectors(embeddings, id_col, vec_col, id_col, "v").withColumn(
+        "bucket", sig("v")
+    )
+
+    def verified(frame):
+        a, b = frame.alias("a"), frame.alias("b")
+        return (
+            a.join(b, (F.col("a.bucket") == F.col("b.bucket"))
+                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+            .withColumn("cos_sim", cos(F.col("a.v"), F.col("b.v")))
+            .filter(F.col("cos_sim") >= min_cos)
+            .select(F.col(f"a.{id_col}").alias("id_a"),
+                    F.col(f"b.{id_col}").alias("id_b"), "cos_sim")
+        )
+
+    if max_bucket_size is None:
+        return verified(v)
+    stats = v.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("__sz"),
+        F.min(id_col).alias("__canon"),
+        F.min_by("v", F.col(id_col)).alias("__canon_v"),
+    )
+    tagged = v.join(stats, "bucket")
+    pairs = verified(
+        tagged.filter(F.col("__sz") <= max_bucket_size).select(id_col, "v", "bucket")
+    )
+    if hot_bucket_mode == "star":
+        hot = (
+            tagged.filter((F.col("__sz") > max_bucket_size)
+                          & (F.col(id_col) != F.col("__canon")))
+            .withColumn("cos_sim", cos(F.col("__canon_v"), F.col("v")))
+            .filter(F.col("cos_sim") >= min_cos)
+            .select(F.col("__canon").alias("id_a"), F.col(id_col).alias("id_b"),
+                    "cos_sim")
+        )
+        pairs = pairs.unionByName(hot)
+    return pairs
+
+
+def minhash_signatures(df, id_col="doc_id", text_col="text", num_hashes=32,
+                       shingle_k=5) -> DataFrame:
+    """The expression chain ``array_min(transform(shingles, (s, i) ->
+    xxhash64(s, i)))`` per slot. The two-parameter lambda binds ``i`` to
+    the element index, so every slot holds the same value — the shipped
+    semantics the ``mapInArrow`` kernel reproduces."""
+    sh = df.select(
+        F.col(id_col), rolling_hash_shingles(text_col, k=shingle_k, out="sh")
+    )
+    sig = F.array(*[
+        F.array_min(F.transform(F.col("sh"), lambda s, i=i: F.xxhash64(s, F.lit(i))))
+        for i in range(num_hashes)
+    ])
+    return sh.select(id_col, sig.alias("minhash"))
+
+
+def simhash64(df, id_col="doc_id", text_col="text") -> DataFrame:
+    """63 interpreted ``aggregate`` vote folds per row, one per bit."""
+    words = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    hashes = F.transform(words, lambda w: F.xxhash64(w))
+
+    def bit_sum(i: int):
+        return F.aggregate(
+            hashes,
+            F.lit(0).cast("long"),
+            lambda acc, h: acc
+            + F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
+        )
+
+    sim = sum(
+        (F.when(bit_sum(i) > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0))
+         for i in range(63)),
+        F.lit(0).cast("long"),
+    )
+    return df.select(F.col(id_col), sim.alias("simhash"))

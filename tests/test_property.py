@@ -205,20 +205,19 @@ def embedding_case(draw):
 )
 def test_matmul_topk_equals_bruteforce_property(spark, case):
     """Property: for ANY corpus — duplicates, ties, tiny dims, queries in
-    the corpus — the per-batch-pruned matmul path returns exactly the
-    brute-force join's neighbor ids and ranks."""
+    the corpus — the per-batch-pruned gemm kernel returns exactly the
+    brute-force join reference's neighbor ids, ranks and cosines."""
+    import references as ref
     from mpower_feature_analysis_spark.functions.similarity import (
         cosine_topk_bruteforce,
-        cosine_topk_matmul,
     )
     rows, k, n_q = case
     if not rows:
         return
-    dims = len(rows[0][1])
     df = spark.createDataFrame(rows, f"vec_id long, embedding array<float>")
     q = df.filter(f"vec_id < {n_q}")
-    want = {(r.query_id, r.rank): r.neighbor_id
-            for r in cosine_topk_bruteforce(df, q, k=k).collect()}
-    got = {(r.query_id, r.rank): r.neighbor_id
-           for r in cosine_topk_matmul(df, q, k=k).collect()}
+    want = {(r.query_id, r.rank): (r.neighbor_id, r.cos_sim)
+            for r in ref.cosine_topk_bruteforce(df, q, k=k).collect()}
+    got = {(r.query_id, r.rank): (r.neighbor_id, r.cos_sim)
+           for r in cosine_topk_bruteforce(df, q, k=k).collect()}
     assert want == got

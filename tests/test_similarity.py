@@ -1,13 +1,32 @@
+import math
+
 import numpy as np
 from pyspark.sql import functions as F
 import pytest
 
+import references as ref
 from mpower_feature_analysis_spark.functions.similarity import (
     cosine_topk_bruteforce,
+    embedding_near_dup_pairs,
+    ivf_assign_cells,
+    ivf_topk,
     lsh_bucketed_topk,
 )
 
 DIMS = 16
+
+# zero, NULL, NULL-element, ragged, empty, NaN and 1e308 rows: each pair
+# with a NULL vector, NULL element, length mismatch or zero denominator has
+# no score; a zero-norm query still scores NaN against a NaN- or inf-norm
+# row (0 * NaN is a NaN denominator, not a zero one)
+EDGE = [
+    (0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0, 3.1]),
+    (2, [0.0, 0.0, 0.0]), (3, None), (4, [1.0, None, 3.0]),
+    (5, [4.0, 5.0]), (6, []), (7, [float("nan"), 1.0, 2.0]),
+    (8, [-1.0, -2.0, -3.0]), (9, [1e308, 1e308, 1e308]),
+    (10, [0.3, 0.1, 0.77]),
+]
+EDGE_QUERIES = (0, 2, 3, 5, 7)
 
 
 @pytest.fixture(scope="module")
@@ -17,6 +36,37 @@ def emb(spark):
     rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)]
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>"), vecs
 
+
+def _edge(spark):
+    return spark.createDataFrame(EDGE, "vec_id long, embedding array<double>")
+
+
+def _mixed(spark, str_ids=False):
+    """The edge rows, a NULL id, 10 identical vectors (tie order), 100
+    random 3-dim and 20 random 2-dim rows (mixed dims), shuffled so ties
+    and candidates spread over Arrow batches; with ``str_ids`` the ids are
+    strings. Returns (corpus, queries)."""
+    rng = np.random.default_rng(7)
+    rows = EDGE + [(None, [1.0, 2.0, 3.0])]
+    rows += [(20 + i, [0.5, -1.0, 2.0]) for i in range(10)]
+    rows += [(100 + i, [float(x) for x in rng.normal(size=3)]) for i in range(100)]
+    rows += [(300 + i, [float(x) for x in rng.normal(size=2)]) for i in range(20)]
+    rows = [rows[i] for i in rng.permutation(len(rows))]
+    qids = [0, 2, 3, 5, 7, 9, 20, 100, 101, 300]
+    if str_ids:
+        rows = [(None if i is None else f"v{i:03d}", v) for i, v in rows]
+        qids = [f"v{i:03d}" for i in qids]
+    t = "string" if str_ids else "long"
+    df = spark.createDataFrame(rows, f"vec_id {t}, embedding array<double>")
+    return df, df.filter(F.col("vec_id").isin(qids) | F.col("vec_id").isNull())
+
+
+def _rows(frame):
+    """Sorted row tuples; NaN becomes a string so that NaN == NaN."""
+    return sorted(
+        tuple("nan" if isinstance(x, float) and math.isnan(x) else x for x in r)
+        for r in frame.collect()
+    )
 
 def _numpy_topk(vecs, q_ids, k):
     v = vecs.astype("float64")
@@ -138,14 +188,19 @@ def test_embedding_near_dup_recall(spark, emb):
 
 def test_ivf_exhaustive_equals_bruteforce(spark, emb):
     """nprobe = n_cells probes every cell: IVF output == exact brute force
-    bit-for-bit (same cosine expressions, same ranking)."""
-    from mpower_feature_analysis_spark.functions.similarity import ivf_topk
+    bit-for-bit, on the edge corpus too. A zero-norm query gets no
+    neighbours from either (it has no score against a finite vector)."""
     df, _ = emb
-    q = df.filter("vec_id < 6")
-    a = sorted(map(tuple, ivf_topk(df, q, k=4, n_cells=8, nprobe=8).collect()))
-    b = sorted(map(tuple, cosine_topk_bruteforce(df, q, k=4).collect()))
-    assert a == b
-
+    zero = spark.createDataFrame([(500, [0.0] * DIMS)], "vec_id long, embedding array<float>")
+    edge = _edge(spark)
+    for corpus, q in (
+        (df, df.filter("vec_id < 6").unionByName(zero)),
+        (edge, edge.filter(F.col("vec_id").isin(*EDGE_QUERIES))),
+    ):
+        a = _rows(ivf_topk(corpus, q, k=4, n_cells=8, nprobe=8))
+        b = _rows(cosine_topk_bruteforce(corpus, q, k=4))
+        assert a == b
+    assert not any(r[0] == 500 for r in _rows(ivf_topk(df, zero, k=4, n_cells=8, nprobe=8)))
 
 def test_ivf_probe_recall(spark, emb):
     """nprobe=2 of 8 cells keeps useful recall and everything returned is a
@@ -219,111 +274,26 @@ def test_embedding_near_dup_cap_preserves_small_buckets(spark, emb):
     assert exact == capped
 
 
-def test_arrow_scorer_allclose_to_hof(spark, emb):
-    """The Arrow einsum cosine reproduces the interpreted HOF fold to float
-    summation-order noise, for every scored pair, across brute-force, LSH,
-    and IVF paths — so dims>=768 corpora can use scorer='arrow' without
-    semantic drift (ranking ties break on ids, identical either way)."""
-    from mpower_feature_analysis_spark.functions.similarity import ivf_topk
-    df, vecs = emb
-    q = df.filter("vec_id < 6")
-    for fn in (
-        lambda sc: cosine_topk_bruteforce(df, q, k=5, scorer=sc),
-        lambda sc: lsh_bucketed_topk(df, q, k=5, bits=2, dims=DIMS, scorer=sc),
-        lambda sc: ivf_topk(df, q, k=5, n_cells=4, nprobe=4, scorer=sc),
-    ):
-        hof = {(r.query_id, r.neighbor_id): (r.cos_sim, r.rank)
-               for r in fn("hof").collect()}
-        arr = {(r.query_id, r.neighbor_id): (r.cos_sim, r.rank)
-               for r in fn("arrow").collect()}
-        assert hof.keys() == arr.keys()
-        for k_ in hof:
-            assert abs(hof[k_][0] - arr[k_][0]) < 1e-12
-            assert hof[k_][1] == arr[k_][1]
-
-
-def test_seq_scorer_bit_equals_hof(spark, emb):
-    """scorer='seq' (round-7: the vectorized sequential-order fold behind
-    q_knn_cosine) must be BIT-identical to the interpreted HOF fold —
-    same doubles (==, not allclose), same ranks — including the NaN /
-    zero-norm / null-element / ragged pathologies: a zero-norm query
-    still scores NaN against a NaN- or inf-norm corpus row (0 * NaN),
-    and NaN pairs rank first under descending order."""
-    import math
-
+def test_seq_scorer_bit_equals_hof(spark, emb, batches_of_32):
+    """The kernel ranks by the sequential fold, so brute-force top-k is
+    BIT-identical to the interpreted HOF reference — same doubles (==, not
+    allclose), same ranks — on the random, edge and mixed corpora
+    (including NaN pairs ranked first, exact ties and string ids)."""
     df, _ = emb
-    q = df.filter("vec_id < 6")
-    edge = spark.createDataFrame(
-        [
-            (0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0, 3.1]),
-            (2, [0.0, 0.0, 0.0]), (3, None), (4, [1.0, None, 3.0]),
-            (5, [4.0, 5.0]), (6, []), (7, [float("nan"), 1.0, 2.0]),
-            (8, [-1.0, -2.0, -3.0]), (9, [1e308, 1e308, 1e308]),
-            (10, [0.3, 0.1, 0.77]),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    eq = edge.filter(F.col("vec_id").isin(0, 2, 3, 5, 7))
+    edge = _edge(spark)
+    cases = [(df, df.filter("vec_id < 6"), 5),
+             (edge, edge.filter(F.col("vec_id").isin(*EDGE_QUERIES)), 4)]
+    cases += [(*_mixed(spark, s), 4) for s in (False, True)]
+    for corpus, queries, k in cases:
+        want = _rows(ref.cosine_topk_bruteforce(corpus, queries, k=k))
+        assert _rows(cosine_topk_bruteforce(corpus, queries, k=k)) == want
 
-    def rows(frame):
-        return sorted(
-            (r.query_id, r.neighbor_id,
-             "nan" if r.cos_sim != r.cos_sim else r.cos_sim, r.rank)
-            for r in frame.collect()
-        )
-
-    for corpus, queries, k in ((df, q, 5), (edge, eq, 4)):
-        hof = rows(cosine_topk_bruteforce(corpus, queries, k=k, scorer="hof"))
-        seq = rows(cosine_topk_bruteforce(corpus, queries, k=k, scorer="seq"))
-        assert hof == seq
-
-
-def test_arrow_scorer_null_and_ragged(spark):
-    """NULL and dimension-mismatched vectors score NULL under both
-    scorers (no task failure, no fabricated similarity)."""
-    from mpower_feature_analysis_spark.functions.similarity import cosine_arrow
-    df = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0], [1.0, 0.0]),
-            (1, None, [1.0, 0.0]),
-            (2, [1.0, 0.0, 0.0], [1.0, 0.0]),   # ragged pair
-            (3, [0.0, 0.0], [1.0, 1.0]),        # zero vector -> NULL
-            (4, [1.0, 2.0], [3.0, 4.0]),
-        ],
-        "i long, a array<double>, b array<double>",
-    )
-    out = {r.i: r.c for r in df.select("i", cosine_arrow()(df.a, df.b).alias("c")).collect()}
-    assert abs(out[0] - 1.0) < 1e-12
-    assert out[1] is None and out[2] is None and out[3] is None
-    import math
-    want = (3 + 8) / (math.sqrt(5) * math.sqrt(25))
-    assert abs(out[4] - want) < 1e-12
-
-
-def test_embedding_near_dup_arrow_scorer(spark, emb):
-    """Pair set is identical under both scorers (threshold verified)."""
-    from mpower_feature_analysis_spark.functions.similarity import (
-        embedding_near_dup_pairs,
-    )
-    df, _ = emb
-    hof = {(r.id_a, r.id_b) for r in
-           embedding_near_dup_pairs(df, min_cos=0.9, bits=2, dims=DIMS).collect()}
-    arr = {(r.id_a, r.id_b) for r in
-           embedding_near_dup_pairs(df, min_cos=0.9, bits=2, dims=DIMS,
-                                    scorer="arrow").collect()}
-    assert hof == arr
-
-
-def test_embedding_near_dup_capped_kernel_equals_join(spark, emb):
-    """Round-7 (late): the in-kernel cap/star/skip resolution (seq and
-    capped-arrow routes) must reproduce the stats-aggregate + corpus-join
-    form EXACTLY — scorer='hof' still runs that old machinery, so it is
-    the live reference. Corpus plants a hot template bucket (star/skip
-    both exercised) plus ordinary near-dup pairs in small buckets."""
-    import numpy as np
-    from mpower_feature_analysis_spark.functions.similarity import (
-        embedding_near_dup_pairs,
-    )
+def test_embedding_near_dup_capped_kernel_equals_join(spark, batches_of_32):
+    """The in-kernel cap/star/skip resolution must reproduce the
+    stats-aggregate + corpus-join reference EXACTLY. The template corpus
+    plants a hot bucket (star/skip both exercised) plus ordinary near-dup
+    pairs in small buckets; the mixed corpus adds string ids and the edge
+    rows."""
     rng = np.random.default_rng(11)
     tmpl = [float(x) for x in rng.normal(size=DIMS)]
     rows = [(int(i), tmpl) for i in range(60)]             # hot bucket
@@ -331,25 +301,19 @@ def test_embedding_near_dup_capped_kernel_equals_join(spark, emb):
              for i in range(40)]                           # small buckets
     rows += [(int(6000 + i), rows[60 + i][1]) for i in range(10)]  # dups
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    for mode in ("star", "skip"):
-        ref = {(r.id_a, r.id_b) for r in embedding_near_dup_pairs(
-            df, min_cos=0.9, bits=4, dims=DIMS, scorer="hof",
-            max_bucket_size=16, hot_bucket_mode=mode).collect()}
-        for sc in ("seq", "arrow"):
-            got = {(r.id_a, r.id_b) for r in embedding_near_dup_pairs(
-                df, min_cos=0.9, bits=4, dims=DIMS, scorer=sc,
-                max_bucket_size=16, hot_bucket_mode=mode).collect()}
-            assert got == ref, (mode, sc, len(got), len(ref))
-        assert ref, mode  # the small-bucket dups must survive either mode
+    mixed, _ = _mixed(spark, str_ids=True)
+    for frame, dims, bits in ((df, DIMS, 4), (mixed, 3, 3)):
+        for mode in ("star", "skip"):
+            kw = dict(min_cos=0.5, bits=bits, dims=dims, max_bucket_size=16,
+                      hot_bucket_mode=mode)
+            want = _rows(ref.embedding_near_dup_pairs(frame, **kw))
+            assert _rows(embedding_near_dup_pairs(frame, **kw)) == want, mode
+            assert want, mode  # the small-bucket pairs survive either mode
 
-
-def test_matmul_topk_matches_bruteforce(spark, emb):
-    """The matmul scale path returns the same neighbors/ranks as the HOF
-    brute force (allclose scores), including self-exclusion and id tie
-    order; NULL/ragged/zero-norm corpus vectors are skipped not crashed."""
-    from mpower_feature_analysis_spark.functions.similarity import (
-        cosine_topk_matmul,
-    )
+def test_matmul_topk_matches_bruteforce(spark, emb, batches_of_32):
+    """The gemm-candidate kernel returns the reference brute force's exact
+    rows (==), including self-exclusion and id tie order; NULL/ragged/
+    zero-norm corpus vectors are skipped, not crashed."""
     df, vecs = emb
     # poison the corpus with rows the scorer must skip
     bad = spark.createDataFrame(
@@ -358,29 +322,24 @@ def test_matmul_topk_matches_bruteforce(spark, emb):
     )
     corpus = df.unionByName(bad)
     q = df.filter("vec_id < 6")
-    want = {(r.query_id, r.rank): (r.neighbor_id, r.cos_sim)
-            for r in cosine_topk_bruteforce(corpus, q, k=5).collect()}
-    got = {(r.query_id, r.rank): (r.neighbor_id, r.cos_sim)
-           for r in cosine_topk_matmul(corpus, q, k=5).collect()}
-    assert want.keys() == got.keys()
-    for k_ in want:
-        assert want[k_][0] == got[k_][0]
-        assert abs(want[k_][1] - got[k_][1]) < 1e-12
+    want = _rows(ref.cosine_topk_bruteforce(corpus, q, k=5))
+    assert _rows(cosine_topk_bruteforce(corpus, q, k=5)) == want
 
-
-def test_matmul_topk_tie_order(spark):
+def test_matmul_topk_tie_order(spark, batches_of_32):
     """Duplicate corpus vectors tie exactly; the lower neighbor id must
-    win the rank, matching the join path's (cos desc, id asc) window."""
-    from mpower_feature_analysis_spark.functions.similarity import (
-        cosine_topk_matmul,
-    )
+    win the rank, matching the reference's (cos desc, id asc) window, even
+    when the duplicates sit in different Arrow batches."""
     base = [1.0, 2.0, 3.0, 4.0]
+    rng = np.random.default_rng(2)
     rows = [(i, base) for i in range(10)]          # 10 identical vectors
     rows += [(100, [4.0, 3.0, 2.0, 1.0])]
+    # filler pointing away from the query spreads the ties over batches
+    rows += [(200 + i, [-4.0 * s, -3.0 * s, -2.0 * s, -1.0 * s])
+             for i, s in enumerate(rng.uniform(1, 2, size=100).tolist())]
+    rows = [rows[i] for i in rng.permutation(len(rows))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = cosine_topk_matmul(df, df.filter("vec_id = 100"), k=3).collect()
+    out = cosine_topk_bruteforce(df, df.filter("vec_id = 100"), k=3).collect()
     assert [r.neighbor_id for r in sorted(out, key=lambda r: r.rank)] == [0, 1, 2]
-
 
 def test_ivf_lloyd_refinement_improves_recall(spark):
     """A few Lloyd iterations over the hash-seeded centroids must not hurt
@@ -492,150 +451,147 @@ def test_auto_bits_same_rows_as_explicit(spark, emb):
 
 
 def test_matmul_topk_zero_norm_and_ragged_query(spark, emb):
-    """Round-3 advice (medium): a zero-norm query must emit NO rows (the
-    bruteforce path NULLs and drops it — no fabricated cos=0.0 neighbors),
-    and a ragged query must score like the join paths (length-mismatched
+    """A zero-norm query emits NO rows (no fabricated cos=0.0 neighbors),
+    and a ragged or NULL query scores like the reference (length-mismatched
     pairs never rank) instead of raising at plan build."""
-    from mpower_feature_analysis_spark.functions.similarity import (
-        cosine_topk_matmul,
-    )
     df, _ = emb
     badq = spark.createDataFrame(
         [(500, [0.0] * DIMS), (501, [1.0, 2.0]), (502, None)],
         "vec_id long, embedding array<float>",
     )
     q = df.filter("vec_id < 3").unionByName(badq)
-    got = cosine_topk_matmul(df, q, k=4).collect()
-    want = cosine_topk_bruteforce(df, q, k=4).collect()
-    gm = {(r.query_id, r.rank): (r.neighbor_id, r.cos_sim) for r in got}
-    wm = {(r.query_id, r.rank): (r.neighbor_id, r.cos_sim) for r in want}
-    assert not any(qid in (500, 501, 502) for qid, _ in gm)  # degenerate: no rows
-    assert gm.keys() == wm.keys()
-    for k_ in wm:
-        assert gm[k_][0] == wm[k_][0]
-        assert abs(gm[k_][1] - wm[k_][1]) < 1e-12
-
+    got = _rows(cosine_topk_bruteforce(df, q, k=4))
+    assert not any(r[0] in (500, 501, 502) for r in got)  # degenerate: no rows
+    assert got == _rows(ref.cosine_topk_bruteforce(df, q, k=4))
 
 def test_matmul_topk_mixed_dims_query_scores_matching_corpus(spark):
     """Per-dims query grouping: on a mixed-dims corpus each query scores
     exactly the same-length corpus vectors, mirroring zip_with's
     length-mismatch -> NULL semantics."""
-    from mpower_feature_analysis_spark.functions.similarity import (
-        cosine_topk_matmul,
-    )
     rows = [(0, [1.0, 0.0]), (1, [1.0, 1.0]), (2, [0.0, 1.0]),
             (10, [1.0, 0.0, 0.0]), (11, [1.0, 1.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = df.filter("vec_id in (0, 10)")
-    got = cosine_topk_matmul(df, q, k=5).collect()
+    got = cosine_topk_bruteforce(df, q, k=5).collect()
     by_q = {}
     for r in got:
         by_q.setdefault(r.query_id, set()).add(r.neighbor_id)
     assert by_q[0] == {1, 2}
     assert by_q[10] == {11}
 
+def test_ivf_matmul_assignment_equals_join(spark, emb, batches_of_32):
+    """The one-gemm-per-batch coarse quantizer assigns every vector to
+    exactly the cells of the broadcast-join reference, for keep=1 and
+    keep=2, on the random corpus and on the mixed corpora (degenerate
+    rows, exact ties, mixed dims, string ids)."""
+    df, _ = emb
+    frames = [df] + [_mixed(spark, s)[0] for s in (False, True)]
+    for frame in frames:
+        for keep in (1, 2):
+            _, got = ivf_assign_cells(frame, n_cells=8, keep=keep)
+            _, want = ref.ivf_assign_cells(frame, n_cells=8, keep=keep)
+            assert _rows(got) == _rows(want), keep
 
-def test_ivf_matmul_assignment_equals_join(spark, emb):
-    """The one-matmul-per-batch coarse quantizer assigns every vector to
-    the same cells as the broadcast-join path (random corpus: no exact
-    cosine ties), for keep=1 and keep=2."""
-    from mpower_feature_analysis_spark.functions.similarity import (
-        ivf_assign_cells,
+def test_ivf_topk_matmul_strategy_equals_join(spark, emb, batches_of_32):
+    """End-to-end ivf_topk returns the reference join's exact rows, in
+    both the approximate (nprobe=2) and exhaustive (nprobe=n_cells)
+    regimes, on the random and mixed corpora."""
+    df, _ = emb
+    cases = [(df, df.filter("vec_id < 5"))] + [_mixed(spark, s) for s in (False, True)]
+    for corpus, q in cases:
+        for nprobe in (2, 8):
+            a = ivf_topk(corpus, q, k=3, n_cells=8, nprobe=nprobe)
+            b = ref.ivf_topk(corpus, q, k=3, n_cells=8, nprobe=nprobe)
+            assert _rows(a) == _rows(b), nprobe
+
+
+def test_lsh_topk_equals_reference(spark, batches_of_32):
+    """LSH top-k returns the bucket-join reference's exact rows."""
+    for str_ids in (False, True):
+        corpus, q = _mixed(spark, str_ids)
+        a = lsh_bucketed_topk(corpus, q, k=4, bits=2, dims=3)
+        b = ref.lsh_bucketed_topk(corpus, q, k=4, bits=2, dims=3)
+        assert _rows(a) == _rows(b)
+
+
+def test_knn_cosine_null_id_never_ranks(spark, emb, tmp_path):
+    """A corpus row with a NULL id neither ranks nor fails the task: the
+    knn_cosine query returns what it returns without that row."""
+    from mpower_feature_analysis_spark.plans.driver_queries_text import q_knn_cosine
+    df, _ = emb
+    null = spark.createDataFrame([(None, [1.0] * DIMS)], "vec_id long, embedding array<float>")
+    df.write.parquet(str(tmp_path / "a" / "embeddings.parquet"))
+    df.unionByName(null).write.parquet(str(tmp_path / "b" / "embeddings.parquet"))
+    want = _rows(q_knn_cosine(spark, str(tmp_path / "a")))
+    assert _rows(q_knn_cosine(spark, str(tmp_path / "b"))) == want
+
+
+def test_zero_norm_centroid_cannot_capture_probes(spark, emb):
+    """A zero-norm centroid has no score against any query, so it is never
+    probed: at nprobe=1 every query still probes a real cell."""
+    df, _ = emb
+    first = df.orderBy(F.xxhash64("vec_id")).first().vec_id  # a centroid
+    zero = F.array_repeat(F.lit(0.0).cast("float"), DIMS)
+    corpus = df.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") == first, zero).otherwise(F.col("embedding")),
     )
-    df, _ = emb
-    for keep in (1, 2):
-        _, a = ivf_assign_cells(df, n_cells=8, keep=keep, strategy="join")
-        _, b = ivf_assign_cells(df, n_cells=8, keep=keep, strategy="matmul")
-        sa = {(r.vec_id, r.cell) for r in a.collect()}
-        sb = {(r.vec_id, r.cell) for r in b.collect()}
-        assert sa == sb
-
-
-def test_ivf_topk_matmul_strategy_equals_join(spark, emb):
-    """End-to-end ivf_topk with the matmul corpus assignment returns the
-    identical neighbor/rank rows as the join strategy, in both the
-    approximate (nprobe=2) and exhaustive (nprobe=n_cells) regimes."""
-    from mpower_feature_analysis_spark.functions.similarity import ivf_topk
-    df, _ = emb
-    q = df.filter("vec_id < 5")
-    for nprobe in (2, 8):
-        a = ivf_topk(df, q, k=3, n_cells=8, nprobe=nprobe, strategy="join")
-        b = ivf_topk(df, q, k=3, n_cells=8, nprobe=nprobe, strategy="matmul")
-        ra = {(r.query_id, r.rank): r.neighbor_id for r in a.collect()}
-        rb = {(r.query_id, r.rank): r.neighbor_id for r in b.collect()}
-        assert ra == rb
-
+    q = corpus.filter(F.col("vec_id") != first).limit(10)
+    got = ivf_topk(corpus, q, k=3, n_cells=8, nprobe=1).collect()
+    assert {r.query_id for r in got} == {r.vec_id for r in q.collect()}
 
 def test_ivf_matmul_skips_degenerate_vectors(spark):
-    """NULL / ragged / zero-norm corpus vectors get no cell under the
-    matmul strategy instead of a meaningless NULLS-FIRST assignment."""
-    from mpower_feature_analysis_spark.functions.similarity import (
-        ivf_assign_cells,
-    )
+    """NULL / ragged / zero-norm corpus vectors get no cell instead of a
+    meaningless NULLS-FIRST assignment."""
     rows = [(i, [float(i + 1), 1.0, 0.5]) for i in range(20)]
     rows += [(100, None), (101, [1.0]), (102, [0.0, 0.0, 0.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    _, assign = ivf_assign_cells(df, n_cells=4, strategy="matmul")
+    _, assign = ivf_assign_cells(df, n_cells=4)
     got = {r.vec_id for r in assign.collect()}
     assert got == set(range(20))
 
-
 def test_ivf_matmul_with_lloyd_refinement(spark, emb):
-    """Lloyd refinement composes with the matmul assignment strategy and
-    stays deterministic."""
-    from mpower_feature_analysis_spark.functions.similarity import ivf_topk
+    """Lloyd refinement composes with the kernel's assignment and stays
+    deterministic."""
     df, _ = emb
     q = df.filter("vec_id < 4")
-    a = ivf_topk(df, q, k=3, n_cells=8, nprobe=8, refine_iters=2,
-                 strategy="matmul").orderBy("query_id", "rank").collect()
-    b = ivf_topk(df, q, k=3, n_cells=8, nprobe=8, refine_iters=2,
-                 strategy="matmul").orderBy("query_id", "rank").collect()
+    a = ivf_topk(df, q, k=3, n_cells=8, nprobe=8, refine_iters=2).orderBy(
+        "query_id", "rank").collect()
+    b = ivf_topk(df, q, k=3, n_cells=8, nprobe=8, refine_iters=2).orderBy(
+        "query_id", "rank").collect()
     assert [(r.query_id, r.rank, r.neighbor_id) for r in a] == \
            [(r.query_id, r.rank, r.neighbor_id) for r in b]
 
-
 def test_join_strategy_degenerate_corpus_and_centroid(spark):
-    """Round-4 advice: a zero-norm CENTROID must never win an assignment
-    under strategy='join' (NULL distances were NULLS-FIRST in the
-    ascending rank, collapsing every vector into that cell), and
-    degenerate CORPUS vectors get no assignment — matching 'matmul'.
-    Forcing the degenerate vector into the centroid set via the hash seed
-    is not deterministic, so instead assert strategy agreement on a corpus
-    CONTAINING degenerates: both strategies must produce identical
-    assignments that exclude the degenerate ids."""
-    from mpower_feature_analysis_spark.functions.similarity import (
-        ivf_assign_cells,
-    )
+    """A zero-norm CENTROID must never win an assignment (NULL distances
+    were NULLS-FIRST in the ascending rank, collapsing every vector into
+    that cell), and degenerate CORPUS vectors get no assignment. The
+    kernel and the join reference must agree on a corpus CONTAINING
+    degenerates, and both must exclude the degenerate ids."""
     rows = [(i, [float(i + 1), 1.0, 0.5]) for i in range(20)]
     rows += [(100, None), (101, [1.0]), (102, [0.0, 0.0, 0.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    _, aj = ivf_assign_cells(df, n_cells=4, strategy="join")
-    _, am = ivf_assign_cells(df, n_cells=4, strategy="matmul")
+    _, aj = ref.ivf_assign_cells(df, n_cells=4)
+    _, am = ivf_assign_cells(df, n_cells=4)
     got_j = {(r.vec_id, r.cell) for r in aj.collect()}
     got_m = {(r.vec_id, r.cell) for r in am.collect()}
     assert {v for v, _ in got_j} == set(range(20))
     assert got_j == got_m
 
-
 def test_zero_norm_centroid_cannot_capture_assignments(spark):
-    """Directly exercise the NULL-distance filter: every corpus vector is
+    """Directly exercise the no-score rule: every corpus vector is
     zero-norm except the real ones, so SOME centroid is guaranteed
     degenerate (n_cells exceeds the count of valid vectors). No real
     vector may be assigned to a zero-norm centroid's cell."""
-    from mpower_feature_analysis_spark.functions.similarity import (
-        ivf_assign_cells,
-    )
     rows = [(i, [0.0, 0.0, 0.0]) for i in range(10)]
     rows += [(50, [1.0, 2.0, 3.0]), (51, [1.1, 2.0, 3.0]), (52, [-1.0, 0.5, 2.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    for strategy in ("join", "matmul"):
-        _, assign = ivf_assign_cells(df, n_cells=8, strategy=strategy)
-        got = assign.collect()
-        # only the 3 valid vectors are assigned, and never to a zero-norm
-        # vector's cell (cells are centroid ids; 0..9 are all zero-norm)
-        assert {r.vec_id for r in got} == {50, 51, 52}, strategy
-        assert all(r.cell >= 50 for r in got), strategy
-
+    _, assign = ivf_assign_cells(df, n_cells=8)
+    got = assign.collect()
+    # only the 3 valid vectors are assigned, and never to a zero-norm
+    # vector's cell (cells are centroid ids; 0..9 are all zero-norm)
+    assert {r.vec_id for r in got} == {50, 51, 52}
+    assert all(r.cell >= 50 for r in got)
 
 def test_resolve_bits_and_cells_reject_bool(spark, emb):
     """bool is an int subclass: bits=True must raise, not mean 1 bit."""
@@ -675,47 +631,29 @@ def test_corpus_rows_metadata_no_scan_job(spark, emb, tmp_path):
     assert _corpus_rows(df) == len(vecs)  # in-memory: count() fallback
 
 
-def test_bucket_pairs_seq_bit_equals_hof_join(spark, emb):
-    """Round-7: embedding_near_dup_pairs' default 'seq' bucket kernel must
-    be BIT-identical (==, not allclose) to the 'hof' self-join + fold —
-    pair set AND cos_sim doubles — on the planted corpus and on a
-    pathological one (null vector, null element, ragged dims, empty and
-    zero vectors, duplicate ids, inf/NaN elements, null LSH bucket)."""
-    from mpower_feature_analysis_spark.functions.similarity import (
-        embedding_near_dup_pairs,
-    )
-
+def test_bucket_pairs_seq_bit_equals_hof_join(spark, emb, batches_of_32):
+    """embedding_near_dup_pairs' bucket kernel must be BIT-identical (==,
+    not allclose) to the HOF self-join reference — pair set AND cos_sim
+    doubles — on the random corpus, on a pathological one (null vector,
+    null element, ragged dims, empty and zero vectors, duplicate ids,
+    inf/NaN elements, null LSH bucket) and on the mixed corpora."""
     df, _ = emb
-    for frame, dims, min_cos in [
-        (df, DIMS, 0.9),
-        (
-            spark.createDataFrame(
-                [
-                    (1, [1.0, 2.0, 3.0]), (2, [1.0, 2.0, 3.0]),
-                    (3, [2.0, 4.0, 6.0]), (4, None),
-                    (5, [1.0, None, 3.0]), (6, []),
-                    (7, [0.0, 0.0, 0.0]), (8, [1.0, 2.0]),
-                    (9, [1.0, 2.0]), (2, [9.0, 9.0, 9.0]),
-                    (10, [float("inf"), 1.0, 0.0]),
-                    (11, [float("inf"), 1.0, 0.0]),
-                    (12, [float("nan"), 1.0, 2.0]), (13, [1.0, 1.0, 2.0]),
-                ],
-                "vec_id long, embedding array<double>",
-            ),
-            3,
-            0.5,
-        ),
-    ]:
-        a = (
-            embedding_near_dup_pairs(
-                frame, min_cos=min_cos, bits=2, dims=dims, scorer="seq"
-            )
-            .toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
-        )
-        b = (
-            embedding_near_dup_pairs(
-                frame, min_cos=min_cos, bits=2, dims=dims, scorer="hof"
-            )
-            .toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
-        )
-        assert a.equals(b), f"seq != hof join:\n{a}\n{b}"
+    patho = spark.createDataFrame(
+        [
+            (1, [1.0, 2.0, 3.0]), (2, [1.0, 2.0, 3.0]),
+            (3, [2.0, 4.0, 6.0]), (4, None),
+            (5, [1.0, None, 3.0]), (6, []),
+            (7, [0.0, 0.0, 0.0]), (8, [1.0, 2.0]),
+            (9, [1.0, 2.0]), (2, [9.0, 9.0, 9.0]),
+            (10, [float("inf"), 1.0, 0.0]),
+            (11, [float("inf"), 1.0, 0.0]),
+            (12, [float("nan"), 1.0, 2.0]), (13, [1.0, 1.0, 2.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    cases = [(df, DIMS, 0.9), (patho, 3, 0.5)]
+    cases += [(_mixed(spark, s)[0], 3, 0.5) for s in (False, True)]
+    for frame, dims, min_cos in cases:
+        kw = dict(min_cos=min_cos, bits=2, dims=dims)
+        want = _rows(ref.embedding_near_dup_pairs(frame, **kw))
+        assert _rows(embedding_near_dup_pairs(frame, **kw)) == want

@@ -117,11 +117,12 @@ def test_fingerprint_normalization(spark):
 
 
 def test_simhash_arrow_equals_jvm(spark, docs):
-    """The numpy-batched SimHash fold reproduces the all-JVM fold exactly
-    (same token hashes, same vote rule, same 63-bit assembly)."""
+    """The numpy-batched SimHash fold reproduces the all-JVM reference fold
+    exactly (same token hashes, same vote rule, same 63-bit assembly)."""
+    import references as ref
     from mpower_feature_analysis_spark.functions.dedup_text import simhash64
-    a = {r.doc_id: r.simhash for r in simhash64(docs, strategy="arrow").collect()}
-    b = {r.doc_id: r.simhash for r in simhash64(docs, strategy="jvm").collect()}
+    a = {r.doc_id: r.simhash for r in simhash64(docs).collect()}
+    b = {r.doc_id: r.simhash for r in ref.simhash64(docs).collect()}
     assert a == b
 
 
@@ -605,8 +606,9 @@ def test_ngram_capped_bucket_groupby_equals_freq_join(spark, docs):
 
 def test_minhash_arrow_equals_jvm(spark, docs):
     """The mapInArrow signature fold must be BIT-equal to the JVM
-    transform+array_min expression chain, including NULL/empty/short
+    transform+array_min reference chain, including NULL/empty/short
     texts (null shingle arrays → all-null signatures)."""
+    import references as ref
     from mpower_feature_analysis_spark.functions.dedup_text import (
         minhash_signatures,
     )
@@ -619,15 +621,14 @@ def test_minhash_arrow_equals_jvm(spark, docs):
     a = {r.doc_id: r.minhash
          for r in minhash_signatures(corpus, num_hashes=8).collect()}
     b = {r.doc_id: r.minhash
-         for r in minhash_signatures(corpus, num_hashes=8,
-                                     strategy="jvm").collect()}
+         for r in ref.minhash_signatures(corpus, num_hashes=8).collect()}
     assert a == b and len(a) == corpus.count()
 
 
 def test_xxh64_numpy_twins_match_jvm(spark):
     """_xxh64_long / _xxh64_int are bit-exact twins of Spark's xxhash64
     over long / chained int columns (the contract minhash_signatures'
-    arrow strategy rests on)."""
+    Arrow kernel rests on)."""
     import numpy as np
     from mpower_feature_analysis_spark.functions.dedup_text import (
         _xxh64_int,
