@@ -611,16 +611,15 @@ def run_scaling(n_turns: int, lo_cpus: int = 8, hi_cpus: int = 32,
 
 
 def _dedup_probe_worker(master: str, cache_root: str,
-                        shuffle_partitions: int, repeats: int = 3,
-                        cache_mode: str = "persist") -> dict:
+                        shuffle_partitions: int, repeats: int = 3) -> dict:
     """Isolated dedup-scaling worker: ONLY the minhash-LSH dedup job plus
     the two host-quietness controls (pure-CPU and bandwidth-sensitive
     scan), warm pass discarded then best-of-``repeats``. Runs in a
     taskset-pinned subprocess exactly like the full scaling worker — but
     ~4x cheaper per attempt, so quiet-window hunting for the dedup-family
     headline (round-4 verdict item 2: >= 0.85) doesn't cost a full-cohort
-    attempt per sample. clearCache() before every timed pass keeps the
-    persist-based signature sharing an honest one-shot (BENCH_NOTES §7)."""
+    attempt per sample. clearCache() before every timed pass keeps every
+    timed pass an honest one-shot (BENCH_NOTES §7)."""
     from mpower_feature_analysis_spark.functions.dedup_text import (
         minhash_lsh_candidates,
     )
@@ -635,12 +634,10 @@ def _dedup_probe_worker(master: str, cache_root: str,
             "spark.sql.execution.arrow.maxRecordsPerBatch": "131072",
         })
     docs = spark.read.parquet(os.path.join(cache_root, f"docs_{SCALE_DOCS}"))
-    cache = False if cache_mode == "nocache" else cache_mode
 
     def dedup_job():
         return minhash_lsh_candidates(
             docs, num_hashes=32, bands=8, max_bucket_size=256,
-            cache_signatures=cache,
         )
 
     h = F.col("id")
@@ -668,8 +665,7 @@ def _dedup_probe_worker(master: str, cache_root: str,
 
 
 def run_dedup_probe(lo_cpus: int = 2, hi_cpus: int = 8, gate: float = 0.95,
-                    max_attempts: int = 4, want_runs: int = 1,
-                    cache_mode: str = "persist") -> None:
+                    max_attempts: int = 4, want_runs: int = 1) -> None:
     """Isolated dedup-family scaling probe: lo vs hi core pinning, double
     host-quietness gate, per-attempt JSON lines; qualifying attempts are
     appended to BENCH.md. Reuses the cohort's 160k-doc cache."""
@@ -684,7 +680,7 @@ def run_dedup_probe(lo_cpus: int = 2, hi_cpus: int = 8, gate: float = 0.95,
         cmd = [
             "taskset", "-c", f"0-{cpus - 1}", sys.executable,
             os.path.abspath(__file__), "--dedup-worker",
-            f"local[{cpus}]", cache_root, str(cpus * 8), cache_mode,
+            f"local[{cpus}]", cache_root, str(cpus * 8),
         ]
         out = subprocess.run(cmd, capture_output=True, text=True, cwd=here)
         return _worker_json(out, cmd)
@@ -714,7 +710,7 @@ def run_dedup_probe(lo_cpus: int = 2, hi_cpus: int = 8, gate: float = 0.95,
         f.write(
             f"\n## Isolated dedup probe: local[{lo_cpus}] vs "
             f"local[{hi_cpus}] ({SCALE_DOCS:,} docs, minhash-LSH capped, "
-            f"cache_signatures={cache_mode}, honest one-shot clearCache)\n\n"
+            f"honest one-shot clearCache)\n\n"
             f"| attempt | dedup eff | lo s | hi s | cpu-control eff "
             f"| scan-control eff | quiet (both >= {gate})? |\n"
             f"|---|---|---|---|---|---|---|\n"
@@ -1012,9 +1008,11 @@ def run_corpus_bench(n_docs: int = 1_000_000) -> None:
     (the per-round driver bench corpus is sf0.1 = 25k docs — 40x too small
     to exercise the capped candidate joins). Generates a deterministic
     n_docs corpus with planted dup groups (every 10th doc repeats a base
-    doc) and an n_docs 64-dim embedding corpus, runs each family once at
-    local[32] after a JIT warm pass on a 50k slice, and appends wall times
-    to BENCH.md."""
+    doc) and an n_docs 64-dim embedding corpus, runs each family once
+    after a JIT warm pass on a 50k slice, and appends wall times to
+    BENCH.md. Master, shuffle partitions and the local dir are
+    :func:`get_spark`'s defaults (``local[$SPARK_GRAFT_CPUS]``), so the run
+    fits the host it is on."""
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from mpower_feature_analysis_spark.functions.dedup_text import (
         exact_text_dedup,
@@ -1036,17 +1034,16 @@ def run_corpus_bench(n_docs: int = 1_000_000) -> None:
     docs_path = os.path.join(root, f"corpus_docs_{n_docs}")
     emb_path = os.path.join(root, f"corpus_emb_{n_docs}")
     spark = get_spark(
-        "local[32]", app_name="corpus-bench", shuffle_partitions=128,
-        extra_confs={
-            "spark.local.dir": "/dev/shm/spark-bench",
-            "spark.sql.execution.arrow.maxRecordsPerBatch": "131072",
-        },
+        app_name="corpus-bench",
+        extra_confs={"spark.sql.execution.arrow.maxRecordsPerBatch": "131072"},
     )
+    master = spark.sparkContext.master
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if not os.path.exists(docs_path):
-        _gen_docs_distributed(spark, n_docs).repartition(128) \
+        _gen_docs_distributed(spark, n_docs).repartition(parts) \
             .write.mode("overwrite").parquet(docs_path)
     if not os.path.exists(emb_path):
-        _gen_embeddings_distributed(spark, n_docs, SCALE_DIMS).repartition(128) \
+        _gen_embeddings_distributed(spark, n_docs, SCALE_DIMS).repartition(parts) \
             .write.mode("overwrite").parquet(emb_path)
     docs = spark.read.parquet(docs_path)
     emb = spark.read.parquet(emb_path)
@@ -1115,11 +1112,11 @@ def run_corpus_bench(n_docs: int = 1_000_000) -> None:
     spark.stop()
 
     print(json.dumps({"metric": "corpus_bench", "n_docs": n_docs,
-                      "results": results}))
+                      "master": master, "results": results}))
     with open("BENCH.md", "a") as f:
         f.write(
             f"\n## Corpus-scale dedup/similarity bench: {n_docs:,} docs / "
-            f"{n_docs:,} x {SCALE_DIMS}-dim embeddings (local[32])\n\n"
+            f"{n_docs:,} x {SCALE_DIMS}-dim embeddings ({master})\n\n"
             f"Deterministic corpus, every 10th doc a planted duplicate of a "
             f"base doc; one timed pass after a 50k-slice JIT warm.\n\n"
             f"| query | wall s | docs/sec | output rows |\n"
@@ -1178,10 +1175,8 @@ if __name__ == "__main__":
     elif "--dedup-worker" in sys.argv:
         i = sys.argv.index("--dedup-worker")
         sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-        cm = sys.argv[i + 4] if len(sys.argv) > i + 4 else "persist"
         print(json.dumps(_dedup_probe_worker(
-            sys.argv[i + 1], sys.argv[i + 2], int(sys.argv[i + 3]),
-            cache_mode=cm)))
+            sys.argv[i + 1], sys.argv[i + 2], int(sys.argv[i + 3]))))
     elif "--dedup-probe" in sys.argv:
         gate = 0.95
         if "--gate" in sys.argv:
@@ -1195,9 +1190,8 @@ if __name__ == "__main__":
         lo, hi = 2, 8
         if "--cpus" in sys.argv:
             lo, hi = (int(x) for x in sys.argv[sys.argv.index("--cpus") + 1].split(","))
-        cm = "nocache" if "--nocache" in sys.argv else "persist"
         run_dedup_probe(lo_cpus=lo, hi_cpus=hi, gate=gate, max_attempts=k,
-                        want_runs=want, cache_mode=cm)
+                        want_runs=want)
     elif "--incremental-bench" in sys.argv:
         n = 1_000_000
         if "--turns" in sys.argv:

@@ -1,9 +1,12 @@
 """Near-duplicate detection at corpus scale: exact, MinHash+LSH, SimHash,
 n-gram Jaccard.
 
-All candidate generation is shuffle-bounded (band-bucket equi-joins), never
-O(n²); the only pairwise work happens inside buckets. Hash functions are
-``xxhash64`` with integer seeds — deterministic across runs and engines.
+All candidate generation is shuffle-bounded, never O(n²): one groupBy
+gathers each bucket's members (MinHash band, SimHash block key, capped
+n-gram shingle), and :func:`.buckets.bucket_pairs` expands them into
+pairs, so the only pairwise work happens inside buckets. Hash functions
+are ``xxhash64`` with integer seeds — deterministic across runs and
+engines.
 """
 
 from __future__ import annotations
@@ -14,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..utils import ensure_parallelism, materialize
+from .buckets import bucket_pairs
 from .text import fingerprint
 
 
@@ -370,16 +374,15 @@ def minhash_lsh_candidates(
     shingle_k: int = 5,
     max_bucket_size: int | None = None,
     hot_bucket_mode: str = "star",
-    cache_signatures: bool | str = "persist",
 ) -> DataFrame:
     """LSH banding: split the signature into ``bands`` rows-per-band chunks,
-    hash each chunk to a bucket, equi-join within (band, bucket) → candidate
-    pairs (a < b). Shuffle cost = one exchange on the bucket key.
+    hash each chunk to a bucket; docs sharing a (band, bucket) are
+    candidate pairs (a < b). One shuffle on the bucket key gathers each
+    bucket's members, and :func:`.buckets.bucket_pairs` expands them.
 
     Hot buckets (boilerplate/template corpora put thousands of docs in one
-    bucket) go QUADRATIC inside the self-join — AQE skew-splitting spreads
-    the work but cannot shrink it. ``max_bucket_size`` bounds it: buckets
-    larger than the cap switch to ``hot_bucket_mode``:
+    bucket) are quadratic. ``max_bucket_size`` bounds them: buckets larger
+    than the cap switch to ``hot_bucket_mode``:
 
     * ``'star'`` (default) — every member pairs with the bucket's min-id
       canonical only: O(n) pairs per bucket, and transitive closure over
@@ -388,25 +391,25 @@ def minhash_lsh_candidates(
     * ``'skip'`` — drop oversized buckets entirely (they are near-always
       boilerplate; verify-stage Jaccard would reject most pairs anyway).
 
-    ``max_bucket_size=None`` keeps exact all-pairs semantics.
-
-    ``cache_signatures`` shares one computation of the signature frame
-    across the plan branches that consume it (both self-join sides and, in
-    capped mode, the bucket-stats aggregate) — see
-    :func:`..utils.materialize` for the modes. Default ``'persist'``
-    (non-eager, lineage-preserving: no barrier job, cluster-safe);
-    ``'checkpoint'`` is the single-box fast path; ``False`` recomputes the
-    ``num_hashes``-hash signature scan per branch.
+    ``max_bucket_size=None`` keeps exact all-pairs semantics. A pair that
+    shares several bands is emitted once.
     """
-    assert num_hashes % bands == 0
-    if max_bucket_size is not None and hot_bucket_mode not in ("star", "skip"):
-        raise ValueError("hot_bucket_mode must be 'star' or 'skip'")
+    buckets = _minhash_bands(
+        df, id_col, text_col, num_hashes, bands, shingle_k
+    ).groupBy("band", "bucket").agg(
+        F.collect_list(F.struct(F.col(id_col).alias("i"))).alias("ms")
+    )
+    return bucket_pairs(buckets, max_bucket_size, hot_bucket_mode).distinct()
+
+
+def _minhash_bands(df, id_col, text_col, num_hashes, bands, shingle_k):
+    """(id, band, bucket) rows: one per doc and band, the bucket hashing
+    the band's ``num_hashes // bands`` signature values."""
+    if num_hashes % bands:
+        raise ValueError("bands must divide num_hashes")
     r = num_hashes // bands
-    # single-consumer plan (round-7, mirrors simhash_near_dups): the
-    # signatures feed exactly one groupBy, so no materialize barrier is
-    # needed — ``cache_signatures`` is accepted for API compat but unused
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
-    banded = sigs.select(
+    return sigs.select(
         id_col,
         F.explode(
             F.array(
@@ -428,20 +431,6 @@ def minhash_lsh_candidates(
             )
         ).alias("bb"),
     ).select(id_col, "bb.band", "bb.bucket")
-
-    # ONE shuffle on (band, bucket) gathers each bucket's members; the
-    # vectorized kernel emits the candidate pairs (round-7; see
-    # _bucket_members_kernel — replaces the bucket self-join, whose Σ m²
-    # JVM row materialization and per-bucket tasks were the wall, and the
-    # capped path's extra stats join)
-    buckets = banded.groupBy("band", "bucket").agg(
-        F.collect_list(F.struct(F.col(id_col).alias("i"))).alias("ms")
-    )
-    id_type = df.schema[id_col].dataType.simpleString()
-    kernel, out_schema = _bucket_members_kernel(
-        id_type, None, max_bucket_size, hot_bucket_mode
-    )
-    return buckets.select("ms").mapInArrow(kernel, out_schema).distinct()
 
 
 def simhash64(
@@ -581,222 +570,6 @@ def auto_simhash_blocks(
     return best
 
 
-def _bucket_members_kernel(
-    id_type: str,
-    max_hamming: int | None,
-    cap: int | None,
-    mode: str,
-):
-    """mapInArrow kernel over bucketed member lists → verified pairs.
-
-    Input rows: ``ms: array<struct<i, s>>`` — one row per (band, bucket)
-    with its members' (id, simhash).  Output: (id_a, id_b[, hamming])
-    pairs with ``id_a < id_b`` (members sorted by id per bucket), hamming
-    verified ≤ ``max_hamming`` when given (pass ``None`` for plain
-    candidate generation à la MinHash).  Buckets larger than ``cap``
-    switch to ``mode``: ``'star'`` pairs every member with the min-id
-    canonical, ``'skip'`` drops the bucket.
-
-    All segment math is vectorized: buckets are grouped BY LENGTH so each
-    distinct length L runs one (n_buckets_L × C(L,2)) popcount — the JVM
-    self-join this replaces materialized Σ m² wide rows through a
-    sort-merge join (7 s at sf1.0 where the numpy fold is ~0.2 s) and
-    serialized the hot buckets into single tasks."""
-    import pyarrow as pa
-
-    with_ham = max_hamming is not None
-
-    def run(batches):
-        import pyarrow.compute as pc
-
-        pa_id = None
-        for rb in batches:
-            ms = rb.column(0)
-            lens = pc.list_value_length(ms).to_numpy(zero_copy_only=False)
-            lens = np.nan_to_num(lens, nan=0).astype(np.int64)
-            flat = pc.list_flatten(ms)
-            ids_flat = flat.field("i").to_numpy(zero_copy_only=False)
-            if pa_id is None:
-                pa_id = flat.field("i").type
-            sims_flat = (
-                flat.field("s").to_numpy(zero_copy_only=False)
-                .astype(np.int64, copy=False).view(np.uint64)
-                if with_ham else None
-            )
-            # singleton buckets emit nothing — drop their entries BEFORE
-            # the per-bucket sort (round-7 late: they dominate the input)
-            multi = lens >= 2
-            emask = np.repeat(multi, lens)
-            ids_flat = ids_flat[emask]
-            if with_ham:
-                sims_flat = sims_flat[emask]
-            lens = lens[multi]
-            # sort members by id within each bucket (stable; bucket-major)
-            bkt = np.repeat(np.arange(len(lens)), lens)
-            order = np.lexsort((ids_flat, bkt))
-            ids_s = ids_flat[order]
-            sims_s = sims_flat[order] if with_ham else None
-            starts = np.zeros(len(lens), dtype=np.int64)
-            starts[1:] = np.cumsum(lens)[:-1]
-
-            out_a, out_b, out_h = [], [], []
-
-            def emit(a, b, h):
-                out_a.append(a)
-                out_b.append(b)
-                if with_ham:
-                    out_h.append(h)
-
-            if cap is not None:
-                hot = lens > cap
-                if mode == "star" and hot.any():
-                    for st, ln in zip(starts[hot], lens[hot]):
-                        canon_id = ids_s[st]
-                        mem = slice(st + 1, st + ln)
-                        m_ids = ids_s[mem]
-                        keep = m_ids != canon_id
-                        if with_ham:
-                            ham = _popcount_u64(
-                                sims_s[st] ^ sims_s[mem]).astype(np.int64)
-                            keep &= ham <= max_hamming
-                            emit(np.full(keep.sum(), canon_id,
-                                         dtype=ids_s.dtype),
-                                 m_ids[keep], ham[keep])
-                        else:
-                            emit(np.full(keep.sum(), canon_id,
-                                         dtype=ids_s.dtype), m_ids[keep], None)
-                allp = (lens >= 2) & ~hot
-            else:
-                allp = lens >= 2
-
-            ls, ss = lens[allp], starts[allp]
-            for L in np.unique(ls):
-                sel = ss[ls == L]
-                if L <= 4096:
-                    iu, ju = np.triu_indices(int(L), 1)
-                    P = len(iu)
-                    step = max(1, 4_000_000 // max(P, 1))  # cap nb*P per slab
-                    for lo in range(0, len(sel), step):
-                        gat = sel[lo:lo + step, None] + np.arange(L)
-                        ia = gat[:, iu].ravel()
-                        ib = gat[:, ju].ravel()
-                        if with_ham:
-                            ham = _popcount_u64(
-                                sims_s[ia] ^ sims_s[ib]).astype(np.int64)
-                            keep = ham <= max_hamming
-                            emit(ids_s[ia[keep]], ids_s[ib[keep]], ham[keep])
-                        else:
-                            emit(ids_s[ia], ids_s[ib], None)
-                else:
-                    # enormous bucket (uncapped degenerate corpus): block
-                    # the row axis so memory stays bounded
-                    for st in sel:
-                        for lo in range(0, int(L), 2048):
-                            hi = min(lo + 2048, int(L))
-                            rows = np.arange(lo, hi)
-                            cols = np.arange(int(L))
-                            mask = cols[None, :] > rows[:, None]
-                            ia = (st + np.repeat(rows, int(L)))[mask.ravel()]
-                            ib = (st + np.tile(cols, hi - lo))[mask.ravel()]
-                            if with_ham:
-                                ham = _popcount_u64(
-                                    sims_s[ia] ^ sims_s[ib]).astype(np.int64)
-                                keep = ham <= max_hamming
-                                emit(ids_s[ia[keep]], ids_s[ib[keep]],
-                                     ham[keep])
-                            else:
-                                emit(ids_s[ia], ids_s[ib], None)
-
-            a = np.concatenate(out_a) if out_a else np.array([], ids_s.dtype)
-            b = np.concatenate(out_b) if out_b else np.array([], ids_s.dtype)
-            arrays = [pa.array(a, type=pa_id), pa.array(b, type=pa_id)]
-            names = ["id_a", "id_b"]
-            if with_ham:
-                h = np.concatenate(out_h) if out_h else np.array([], np.int64)
-                arrays.append(pa.array(h.astype(np.int32), type=pa.int32()))
-                names.append("hamming")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    schema = f"id_a {id_type}, id_b {id_type}"
-    if with_ham:
-        schema += ", hamming int"
-    return run, schema
-
-
-def _sorted_list_pairs_kernel(id_type: str):
-    """mapInArrow kernel: rows of ``ms: array<id>`` (pre-sorted ascending,
-    pre-filtered to ``2 <= size``) → upper-triangle ``(id_a, id_b)`` pairs
-    with strict ``id_a < id_b`` (equal ids, i.e. a doc id repeated in the
-    input, emit no pair).
-
-    The capped ngram path's JVM higher-order-function expansion
-    (``flatten(transform(ms, (x, ix) -> transform(slice(ms, ix+2, ...),
-    y -> struct(x, y))))``) evaluates INTERPRETED — nested lambda
-    expressions are not whole-stage-codegen'd — and measured ~7.7 µs and
-    one struct allocation per emitted pair (2,400 CPU-seconds for 33 M
-    pair instances at 1 M docs, the single most CPU-dense stage in the
-    repo, and the one that amplified host-throttle windows 10x).  Here the
-    same expansion is ~50 ns/pair of numpy gather math, and the input is a
-    plain ``list<id>`` column — the cheap Arrow shape (the round-7
-    ``list<struct>`` kernels pay most of their cost in Arrow conversion;
-    a flat list does not)."""
-    import pyarrow as pa
-
-    def run(batches):
-        import pyarrow.compute as pc
-
-        pa_id = None
-        for rb in batches:
-            ms = rb.column(0)
-            lens = pc.list_value_length(ms).to_numpy(zero_copy_only=False)
-            lens = np.nan_to_num(lens, nan=0).astype(np.int64)
-            flat = pc.list_flatten(ms)
-            if pa_id is None:
-                pa_id = flat.type
-            ids_s = flat.to_numpy(zero_copy_only=False)
-            starts = np.zeros(len(lens), dtype=np.int64)
-            starts[1:] = np.cumsum(lens)[:-1]
-            out_a, out_b = [], []
-            for L in np.unique(lens):
-                if L < 2:
-                    continue
-                sel = starts[lens == L]
-                if L <= 4096:
-                    iu, ju = np.triu_indices(int(L), 1)
-                    step = max(1, 4_000_000 // max(len(iu), 1))
-                    for lo in range(0, len(sel), step):
-                        gat = sel[lo:lo + step, None] + np.arange(int(L))
-                        out_a.append(ids_s[gat[:, iu].ravel()])
-                        out_b.append(ids_s[gat[:, ju].ravel()])
-                else:
-                    # enormous bucket (only reachable with a huge cap):
-                    # block the row axis so memory stays bounded
-                    for st in sel:
-                        for lo in range(0, int(L), 2048):
-                            hi = min(lo + 2048, int(L))
-                            rows = np.arange(lo, hi)
-                            cols = np.arange(int(L))
-                            mask = cols[None, :] > rows[:, None]
-                            out_a.append(
-                                ids_s[(st + np.repeat(rows, int(L)))[mask.ravel()]])
-                            out_b.append(
-                                ids_s[(st + np.tile(cols, hi - lo))[mask.ravel()]])
-            a = np.concatenate(out_a) if out_a else np.array([], ids_s.dtype)
-            b = np.concatenate(out_b) if out_b else np.array([], ids_s.dtype)
-            # strict id re-check (as in similarity._bucket_pairs_seq): a
-            # doc id repeated across rows sits twice in one sorted list,
-            # and its positional pair would be an id_a == id_b self-pair
-            keep = a < b
-            if not keep.all():
-                a, b = a[keep], b[keep]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(a, type=pa_id), pa.array(b, type=pa_id)],
-                names=["id_a", "id_b"],
-            )
-
-    return run, f"id_a {id_type}, id_b {id_type}"
-
-
 def simhash_near_dups(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -805,11 +578,13 @@ def simhash_near_dups(
     blocks: int | str = "auto",
     max_bucket_size: int | None = None,
     hot_bucket_mode: str = "star",
-    cache_signatures: bool | str = "persist",
 ) -> DataFrame:
     """Near-dups by SimHash: pigeonhole candidate generation over compound
-    block keys (see :func:`simhash_block_layout`), equi-join per key, verify
-    exact hamming distance via ``bit_count(xor)`` on the full 64-bit hash.
+    block keys (see :func:`simhash_block_layout`), one shuffle on the key
+    to gather each bucket's members, and :func:`.buckets.bucket_pairs` to
+    expand them, verifying the exact hamming distance of the full 64-bit
+    hashes in numpy. Returns (id_a, id_b, hamming) with ``id_a < id_b``; a
+    pair that shares several keys is emitted once.
 
     ``blocks`` picks the layout: ``max_hamming + 1`` is the classic minimal
     pigeonhole (fewest keys, smallest key space), larger values scale the
@@ -821,10 +596,10 @@ def simhash_near_dups(
     layout (the verify stage is exact; layouts only change candidate cost).
 
     Degenerate corpora make one bucket quadratic: every empty/whitespace doc
-    folds to simhash=0, so ALL of them share ALL compound keys and the
-    self-join emits n² verified pairs. ``max_bucket_size`` bounds it exactly
-    like :func:`minhash_lsh_candidates`: oversized (cid, key) buckets switch
-    to ``hot_bucket_mode`` —
+    folds to simhash=0, so ALL of them share ALL compound keys.
+    ``max_bucket_size`` bounds it exactly like
+    :func:`minhash_lsh_candidates`: oversized (cid, key) buckets switch to
+    ``hot_bucket_mode`` —
 
     * ``'star'`` (default) — members pair with the bucket's min-id canonical
       only (hamming still verified against the canonical's full simhash):
@@ -835,20 +610,40 @@ def simhash_near_dups(
     ``max_bucket_size=None`` keeps exact all-pairs semantics (the oracle
     path).
     """
+    buckets = _simhash_keys(
+        df, id_col, text_col, max_hamming, blocks
+    ).groupBy("cid", "key").agg(
+        F.collect_list(
+            F.struct(F.col(id_col).alias("i"), F.col("simhash").alias("s"))
+        ).alias("ms")
+    )
+
+    def verify(flat):
+        s = flat.field("s").to_numpy(zero_copy_only=False).view(np.uint64)
+
+        def check(a, b):
+            h = _popcount_u64(s[a] ^ s[b]).astype(np.int32)
+            return h <= max_hamming, {"hamming": h}
+
+        return check
+
+    return bucket_pairs(
+        buckets, max_bucket_size, hot_bucket_mode, verify, "hamming int"
+    ).distinct()
+
+
+def _simhash_keys(df, id_col, text_col, max_hamming, blocks):
+    """(id, simhash, cid, key) rows: one per doc and block subset ``cid``
+    of the layout, ``key`` hashing the subset's chunk values."""
     if blocks == "auto":
         # zero-job footer count when the corpus is a bare parquet scan
-        # (guide §1/§5: no driver-blocking count job at plan build unless
-        # the plan actually needs one); any valid layout yields identical
-        # output pairs, so an exact count is a nicety, not a requirement
+        # (no driver-blocking count job at plan build unless the plan
+        # actually needs one); any valid layout yields identical output
+        # pairs, so an exact count is a nicety, not a requirement
         from .similarity import _corpus_rows
 
         blocks = auto_simhash_blocks(_corpus_rows(df), max_hamming)
-    if max_bucket_size is not None and hot_bucket_mode not in ("star", "skip"):
-        raise ValueError("hot_bucket_mode must be 'star' or 'skip'")
     offsets, widths, combos = simhash_block_layout(blocks, max_hamming)
-    # single-consumer plan (round-7): the signatures feed exactly one
-    # groupBy, so no materialize barrier is needed anymore —
-    # ``cache_signatures`` is accepted for API compatibility but unused
     sims = simhash64(df, id_col, text_col)
 
     def chunk_expr(i: int):
@@ -859,7 +654,7 @@ def simhash_near_dups(
     # one compound key per block subset: xxhash64 over the subset's chunk
     # values (multi-arg, JVM codegen). Hash collisions only ADD candidates;
     # the exact verify stage removes them.
-    keyed = sims.select(
+    return sims.select(
         id_col,
         "simhash",
         F.explode(
@@ -874,24 +669,6 @@ def simhash_near_dups(
             )
         ).alias("c"),
     ).select(id_col, "simhash", "c.cid", "c.key")
-
-    # ONE shuffle on (cid, key) gathers each bucket's members; the
-    # vectorized kernel then verifies pairs in numpy (round-7). The old
-    # self-join + bit_count + filter materialized Σ m² rows through a
-    # sort-merge join — 69.6M intermediate rows for 131k survivors at
-    # sf1.0, with hot buckets serialized into single JVM tasks; the same
-    # popcounts take ~0.2 s vectorized, and the capped path loses its
-    # extra stats join entirely (cap and star/skip are kernel arguments).
-    buckets = keyed.groupBy("cid", "key").agg(
-        F.collect_list(
-            F.struct(F.col(id_col).alias("i"), F.col("simhash").alias("s"))
-        ).alias("ms")
-    )
-    id_type = df.schema[id_col].dataType.simpleString()
-    kernel, out_schema = _bucket_members_kernel(
-        id_type, max_hamming, max_bucket_size, hot_bucket_mode
-    )
-    return buckets.select("ms").mapInArrow(kernel, out_schema).distinct()
 
 
 def exploded_word_shingles(
@@ -1042,7 +819,6 @@ def ngram_jaccard_exact_pairs(
     shingle_k: int = 5,
     min_jaccard: float = 0.7,
     max_shingle_freq: int | None = None,
-    cache_shingles: bool | str = "persist",
     exact: bool = False,
 ) -> DataFrame:
     """Deterministic near-dup pairs: Jaccard >= ``min_jaccard`` over k-word
@@ -1073,15 +849,12 @@ def ngram_jaccard_exact_pairs(
     shingle sets, so it is exact regardless; ``exact=True`` removes the
     epsilon from the uncapped path too.
 
-    ``cache_shingles`` materializes the multi-consumer frame of each
-    mode — the CAPPED path's candidate-pair frame (id harvest + verify
-    join base) and the uncapped ``exact=True`` shingle frame (sizes
-    aggregate + join sides; capped, it has one consumer and is not
-    materialized) — see :func:`..utils.materialize`. The uncapped hashed
-    path (round-7, late) is single-consumer (one groupBy feeding the
-    in-JVM pair expansion), so it takes no barrier at all; the old
-    self-join form shuffled the exploded frame twice and persisted it
-    across three branches.
+    Multi-consumer frames are shared with :func:`..utils.materialize`'s
+    ``'persist'``: the CAPPED path's candidate-pair frame (id harvest +
+    verify join base) and verify shingle arrays, and the uncapped
+    ``exact=True`` shingle frame (sizes aggregate + join sides). The
+    uncapped hashed path is single-consumer (one groupBy feeding the
+    in-JVM pair expansion), so it takes no barrier at all.
     """
     if exact:
         ex = exploded_word_shingles(docs, id_col, text_col, shingle_k)
@@ -1089,7 +862,7 @@ def ngram_jaccard_exact_pairs(
         if max_shingle_freq is None:
             # uncapped exact: sizes aggregate + both self-join sides; the
             # capped path reads it once (its groupBy), so no barrier there
-            exh = materialize(exh, cache_shingles)
+            exh = materialize(exh, "persist")
     else:
         # shingle keys are built hash-native (JVM word xxhash64 + numpy
         # Horner fold) — no shingle strings, no per-row Python (round-7)
@@ -1184,16 +957,14 @@ def ngram_jaccard_exact_pairs(
     #
     # 1. Candidate generation is ONE groupBy of the hashed exploded frame:
     #    a bucket's row count IS the shingle's corpus frequency (``exh``
-    #    is per-doc distinct), so ``count <= cap AND size(ms) >= 2``
-    #    reproduces the old freq-aggregate + cap-join, and the sorted
-    #    member list expands upper-triangle in the
-    #    :func:`_sorted_list_pairs_kernel` — the identical pair set the
-    #    exploded self-join emitted (``a.gh == b.gh AND a.id < b.id``),
-    #    from one exchange of (id, gh) instead of three passes over it
-    #    (freq aggregate, cap join, self-join both sides).
-    #    ``__f`` counts ALL bucket rows (null ids included) to match the
-    #    old frequency exactly; ``collect_list`` drops null ids, which is
-    #    what the old strict ``<`` join predicate did to them.
+    #    is per-doc distinct), so ``count <= cap`` reproduces the old
+    #    freq-aggregate + cap-join, and :func:`.buckets.bucket_pairs`
+    #    expands each bucket into the identical pair set the exploded
+    #    self-join emitted (``a.gh == b.gh AND a.id < b.id``), from one
+    #    exchange of (id, gh) instead of three passes over it (freq
+    #    aggregate, cap join, self-join both sides). ``__f`` counts ALL
+    #    bucket rows (null ids included) to match the old frequency
+    #    exactly; null ids never pair, as under the old strict ``<``.
     # 2. The shingle STRING arrays — by far the heaviest frame here — are
     #    built only for docs that appear in a candidate pair (semi-join),
     #    not the whole corpus; candidates are few by design, so the
@@ -1205,20 +976,12 @@ def ngram_jaccard_exact_pairs(
     from .text import word_shingles
 
     grouped = exh.select(id_col, "gh").groupBy("gh").agg(
-        F.sort_array(F.collect_list(id_col)).alias("ms"),
+        F.collect_list(F.struct(F.col(id_col).alias("i"))).alias("ms"),
         F.count(F.lit(1)).alias("__f"),
     )
-    kernel, out_schema = _sorted_list_pairs_kernel(
-        docs.schema[id_col].dataType.simpleString()
-    )
     cands = materialize(
-        grouped.filter(
-            (F.col("__f") <= max_shingle_freq) & (F.size("ms") >= 2)
-        )
-        .select("ms")
-        .mapInArrow(kernel, out_schema)
-        .distinct(),
-        cache_shingles,
+        bucket_pairs(grouped.filter(F.col("__f") <= max_shingle_freq)).distinct(),
+        "persist",
     )
     ids = (
         cands.select(F.col("id_a").alias(id_col))
@@ -1234,7 +997,7 @@ def ngram_jaccard_exact_pairs(
                 word_shingles(text_col, k=shingle_k, out="sh")
             ).alias("sh"),
         ),
-        cache_shingles,
+        "persist",
     )
     j = (
         cands.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 
 from ..utils import ensure_parallelism
+from .buckets import bucket_pairs
 
 
 def _as_double(col) -> Column:
@@ -419,106 +420,34 @@ def lsh_bucketed_topk(
     )
 
 
-def _bucket_pairs_seq(
-    frame: DataFrame,
-    id_col: str,
-    min_cos: float,
-    cap: int | None = None,
-    mode: str = "star",
-) -> DataFrame:
-    """Verified in-bucket pairs of :func:`embedding_near_dup_pairs`: one
-    groupBy on ``bucket`` gathers each bucket's members, and a mapInArrow
-    kernel emits the pairs whose fold cosine is ``>= min_cos``.
+def _cosine_verify(min_cos: float):
+    """:func:`.buckets.bucket_pairs` verify of the embedding near-dups: the
+    fold cosine of each pair (bit-identical to the JVM fold), kept when
+    ``>= min_cos``. A pair with no score (see the module docstring) is
+    dropped, and a NaN score passes, as NaN passes Spark's ``>=``."""
 
-    A self-join on ``bucket`` would shuffle on a key with only ``2^bits``
-    values: a hot bucket is then one post-shuffle partition that AQE's
-    skew split cannot divide, and every pair carries both vectors through
-    the join row. At sf1.0 (20.8k vectors, bits=4) that put 13.5M pairs
-    into single tasks (400 s); the kernel scores them in ~1 s.
+    def verify(flat):
+        vecs = flat.field("v")
+        n = len(vecs)
+        # per member: dims (0 = never scores), row in its dims matrix, norm
+        dims, loc, na, mats = np.zeros(n, np.int64), np.zeros(n, np.int64), np.zeros(n), {}
+        for d, (rows, m, nm) in _by_dims(vecs).items():
+            dims[rows], loc[rows], na[rows], mats[d] = d, np.arange(len(rows)), nm, m
 
-    * pair set: all unordered in-bucket pairs under STRICT ``id_a < id_b``
-      (members sorted per bucket; duplicate ids never pair);
-    * scores: :func:`_fold`, so ``cos_sim`` is bit-identical to the JVM
-      fold; a pair with no score (see the module docstring) is dropped,
-      and a NaN score passes, as NaN passes Spark's ``>=``;
-    * ``cap``: a bucket with more than ``cap`` members either pairs every
-      member with its min-id canonical (``'star'``, O(bucket) pairs,
-      verified the same way) or is dropped (``'skip'``).
-    """
-    id_type = frame.schema[id_col].dataType.simpleString()
+        def check(a, b):
+            cos = np.full(len(a), -np.inf)
+            ok = (dims[a] > 0) & (dims[a] == dims[b])
+            for d in np.unique(dims[a[ok]]).tolist():
+                pr = np.flatnonzero(ok & (dims[a] == d))
+                dot = _fold(mats[d], loc[a[pr]], mats[d], loc[b[pr]])
+                with np.errstate(all="ignore"):
+                    den = na[a[pr]] * na[b[pr]]
+                    cos[pr] = np.where(den != 0, dot / den, -np.inf)
+            return np.isnan(cos) | (cos >= min_cos), {"cos_sim": cos}
 
-    def run(batches):
-        for rb in batches:
-            ms = rb.column(0)
-            blens = pc.list_value_length(ms).to_numpy(zero_copy_only=False)
-            blens = blens.astype(np.int64)
-            flat = pc.list_flatten(ms)
-            ids_arr = flat.field("i")
-            ids_np = ids_arr.to_numpy(zero_copy_only=False)
-            n = len(ids_arr)
-            # per member: dims (0 = never scores), row in its dims matrix
-            dims, loc, na, mats = np.zeros(n, np.int64), np.zeros(n, np.int64), np.zeros(n), {}
-            for d, (rows, m, nm) in _by_dims(flat.field("v")).items():
-                dims[rows], loc[rows], na[rows], mats[d] = d, np.arange(len(rows)), nm, m
+        return check
 
-            # in-bucket pair enumeration: drop singleton buckets, sort
-            # members by id per bucket, upper triangle per size class
-            multi = blens >= 2
-            midx = np.flatnonzero(np.repeat(multi, blens))  # flat member index
-            blens_m = blens[multi]
-            bkt = np.repeat(np.arange(len(blens_m)), blens_m)
-            midx_s = midx[np.lexsort((ids_np[midx], bkt))]
-            starts = np.zeros(len(blens_m), dtype=np.int64)
-            starts[1:] = np.cumsum(blens_m)[:-1]
-
-            out_a, out_b, out_c = [], [], []
-
-            def score(ia, ib):
-                """Shared verify for triangle and star pairs."""
-                keep = (ids_np[ia] < ids_np[ib]) & (dims[ia] > 0) & (dims[ia] == dims[ib])
-                ia, ib = ia[keep], ib[keep]
-                cos = np.empty(len(ia))
-                for d in np.unique(dims[ia]).tolist():
-                    pr = np.flatnonzero(dims[ia] == d)
-                    dot = _fold(mats[d], loc[ia[pr]], mats[d], loc[ib[pr]])
-                    with np.errstate(all="ignore"):
-                        den = na[ia[pr]] * na[ib[pr]]
-                        cos[pr] = np.where(den != 0, dot / den, -np.inf)
-                pk = np.isnan(cos) | (cos >= min_cos)
-                out_a.append(ia[pk])
-                out_b.append(ib[pk])
-                out_c.append(cos[pk])
-
-            hot = blens_m > cap if cap is not None else np.zeros(len(blens_m), bool)
-            if mode == "star":
-                for st, ln in zip(starts[hot], blens_m[hot]):
-                    mem = midx_s[st + 1:st + int(ln)]
-                    score(np.full(len(mem), midx_s[st]), mem)
-            for L in np.unique(blens_m[~hot]).tolist():
-                # a size class below the cap holds no hot bucket
-                sel = starts[blens_m == L]
-                iu, ju = np.triu_indices(L, 1)
-                step = max(1, 2_000_000 // len(iu))
-                for lo in range(0, len(sel), step):
-                    gat = sel[lo:lo + step, None] + np.arange(L)
-                    score(midx_s[gat[:, iu].ravel()], midx_s[gat[:, ju].ravel()])
-            fa = np.concatenate(out_a) if out_a else np.array([], np.int64)
-            fb = np.concatenate(out_b) if out_b else np.array([], np.int64)
-            fc = np.concatenate(out_c) if out_c else np.array([])
-            yield pa.RecordBatch.from_arrays(
-                [ids_arr.take(fa), ids_arr.take(fb), pa.array(fc, type=pa.float64())],
-                names=["id_a", "id_b", "cos_sim"],
-            )
-
-    # groupBy would collect NULL buckets into a group; they never pair
-    buckets = frame.filter(F.col("bucket").isNotNull()).groupBy("bucket").agg(
-        F.collect_list(
-            F.struct(F.col(id_col).alias("i"), F.col("v").alias("v"))
-        ).alias("ms")
-    )
-    return buckets.select("ms").mapInArrow(
-        run, f"id_a {id_type}, id_b {id_type}, cos_sim double"
-    )
+    return verify
 
 
 def embedding_near_dup_pairs(
@@ -534,8 +463,10 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: LSH-bucketed candidate
     generation (never all-pairs) + exact fold cosine verification at
-    ``min_cos`` (see :func:`_bucket_pairs_seq`). Returns (id_a, id_b,
-    cos_sim) with ``id_a < id_b``.
+    ``min_cos``. One groupBy on the bucket gathers its members and
+    :func:`.buckets.bucket_pairs` expands them, scoring each pair with the
+    sequential fold (:func:`_cosine_verify`). Returns (id_a, id_b, cos_sim)
+    with ``id_a < id_b``.
 
     Approximate by design: a near-dup pair hashing into different buckets
     is missed (recall grows as ``bits`` shrinks; tests measure recall vs
@@ -557,15 +488,17 @@ def embedding_near_dup_pairs(
     """
     bits = _resolve_bits(bits, embeddings, target_bucket_size)
     sig = lsh_signature(bits=bits, dims=dims)
-    if max_bucket_size is not None and hot_bucket_mode not in ("star", "skip"):
-        raise ValueError("hot_bucket_mode must be 'star' or 'skip'")
-    base = (
-        embeddings.select(F.col(id_col), _as_double(vec_col).alias("v"))
-        .filter(F.col(id_col).isNotNull())
+    buckets = (
+        embeddings.select(F.col(id_col).alias("i"), _as_double(vec_col).alias("v"))
         .withColumn("bucket", sig(F.col("v")))
+        # groupBy would collect NULL buckets into a group; they never pair
+        .filter(F.col("bucket").isNotNull())
+        .groupBy("bucket")
+        .agg(F.collect_list(F.struct("i", "v")).alias("ms"))
     )
-    return _bucket_pairs_seq(
-        base, id_col, min_cos, cap=max_bucket_size, mode=hot_bucket_mode
+    return bucket_pairs(
+        buckets, max_bucket_size, hot_bucket_mode,
+        _cosine_verify(min_cos), "cos_sim double",
     )
 
 

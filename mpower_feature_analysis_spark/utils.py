@@ -9,18 +9,13 @@ from pyspark.sql import functions as F
 def materialize(df: DataFrame, mode) -> DataFrame:
     """Share one computation of ``df`` across multiple plan branches.
 
-    * ``'persist'`` (the library default for signature/bucket frames) —
-      non-eager ``persist(MEMORY_AND_DISK)``: no barrier job at plan
+    * ``'persist'`` — non-eager ``persist(MEMORY_AND_DISK)``: no barrier job at plan
       build, the FIRST consumer materializes the cache and later branches
       read it. Lineage is preserved, so on a real cluster a lost executor
       recomputes the partitions instead of failing the query (round-4
       advice: ``localCheckpoint`` storage is executor-local and
       non-recoverable). Measured round 5: removes the eager checkpoint's
       serial barrier that capped dedup scaling efficiency at ~0.72.
-    * ``'checkpoint'`` (or legacy ``True``) — eager
-      ``localCheckpoint``: truncates lineage, fastest repeated-reuse on a
-      single box, NOT executor-loss safe. Use from single-node batch
-      drivers (bench) or swap for ``checkpoint()`` to reliable storage.
     * ``False`` / ``None`` — leave the plan alone (every branch
       recomputes; correct, sometimes faster for wide frames — the
       exploded-shingle frame measured 2x slower cached).
@@ -38,15 +33,13 @@ def materialize(df: DataFrame, mode) -> DataFrame:
     """
     if mode in (False, None):
         return df
-    if mode in (True, "checkpoint"):
-        return df.localCheckpoint(eager=True)
     if mode == "persist":
         from pyspark import StorageLevel
 
         p = df.persist(StorageLevel.MEMORY_AND_DISK)
         _PERSISTED.append(p)
         return p
-    raise ValueError("cache mode must be 'persist', 'checkpoint', True, or False")
+    raise ValueError("cache mode must be 'persist' or False")
 
 
 #: frames persisted by :func:`materialize`'s ``'persist'`` mode, pending

@@ -8,6 +8,9 @@ tests can require the kernels to return the same rows:
   interpreted higher-order fold ``try_divide(dot(a, b), norm(a) *
   norm(b))``. The DuckDB oracles reproduce that fold bit for bit, so the
   kernels must match these forms with ``==``, not within a tolerance;
+* the pairs of MinHash bands, SimHash block keys and capped n-gram
+  shingles as bucket self-joins under strict ``id_a < id_b``, with hot
+  buckets resolved through a per-bucket stats aggregate;
 * MinHash signatures and SimHash as all-JVM expression folds.
 
 NULL ids are dropped first: they never rank, pair or seed a cell.
@@ -18,8 +21,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from mpower_feature_analysis_spark.functions.dedup_text import (
+    _minhash_bands,
+    _simhash_keys,
+    exploded_shingle_hashes,
+)
 from mpower_feature_analysis_spark.functions.similarity import lsh_signature
-from mpower_feature_analysis_spark.functions.text import rolling_hash_shingles
+from mpower_feature_analysis_spark.functions.text import (
+    rolling_hash_shingles,
+    word_shingles,
+)
 
 
 def _as_double(col) -> Column:
@@ -128,51 +139,124 @@ def ivf_topk(embeddings, queries, k=5, n_cells=8, nprobe=2, id_col="vec_id",
     return _ranked(_score(corpus.join(F.broadcast(probes), "cell"), "qv", "nv"), k)
 
 
+def _bucket_self_join(keyed, keys, id_col, cap=None, mode="star", verify=None):
+    """Pairs of rows of ``keyed`` that share the ``keys`` columns, under
+    strict ``id_a < id_b``. ``verify`` is ``(payload column, output name,
+    score(a, b), keep(score))`` over Columns. A bucket above ``cap``
+    members (NULL ids not counted) pairs each member with its min-id
+    canonical (``'star'``) or is dropped (``'skip'``), through a per-bucket
+    stats aggregate."""
+    pay, name, score, keep = verify or (None, None, None, None)
+
+    def checked(frame, a_pay, b_pay, out):
+        """``out`` columns of ``frame``, scored and filtered by ``verify``
+        on the payload columns named ``a_pay`` and ``b_pay``."""
+        if verify:
+            frame = frame.withColumn(name, score(F.col(a_pay), F.col(b_pay)))
+            frame = frame.filter(keep(F.col(name)))
+            out = [*out, name]
+        return frame.select(*out)
+
+    def pairs(frame):
+        a, b = frame.alias("a"), frame.alias("b")
+        on = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+        for k in keys:
+            on &= F.col(f"a.{k}") == F.col(f"b.{k}")
+        return checked(
+            a.join(b, on), f"a.{pay}", f"b.{pay}",
+            [F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")],
+        )
+
+    if cap is None:
+        return pairs(keyed)
+    aggs = [F.count(id_col).alias("__sz"), F.min(id_col).alias("__canon")]
+    if verify:
+        aggs.append(F.min_by(pay, F.col(id_col)).alias("__canon_p"))
+    tagged = keyed.join(keyed.groupBy(*keys).agg(*aggs), keys)
+    out = pairs(tagged.filter(F.col("__sz") <= cap).select(*keyed.columns))
+    if mode == "star":
+        hot = tagged.filter(
+            (F.col("__sz") > cap) & (F.col(id_col) != F.col("__canon"))
+        )
+        out = out.unionByName(checked(
+            hot, "__canon_p", pay,
+            [F.col("__canon").alias("id_a"), F.col(id_col).alias("id_b")],
+        ))
+    return out
+
+
+def minhash_lsh_candidates(df, id_col="doc_id", text_col="text", num_hashes=32,
+                           bands=8, shingle_k=5, max_bucket_size=None,
+                           hot_bucket_mode="star") -> DataFrame:
+    """Band-bucket self-join of the engine's (id, band, bucket) rows; a
+    pair sharing several bands is emitted once."""
+    banded = _minhash_bands(df, id_col, text_col, num_hashes, bands, shingle_k)
+    return _bucket_self_join(
+        banded, ["band", "bucket"], id_col, max_bucket_size, hot_bucket_mode
+    ).distinct()
+
+
+def simhash_near_dups(df, id_col="doc_id", text_col="text", max_hamming=3,
+                      blocks=4, max_bucket_size=None,
+                      hot_bucket_mode="star") -> DataFrame:
+    """Block-key self-join of the engine's (id, simhash, cid, key) rows,
+    verified by ``bit_count(xor) <= max_hamming``; a pair sharing several
+    keys is emitted once."""
+    keyed = _simhash_keys(df, id_col, text_col, max_hamming, blocks)
+    verify = ("simhash", "hamming",
+              lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("int"),
+              lambda h: h <= max_hamming)
+    return _bucket_self_join(
+        keyed, ["cid", "key"], id_col, max_bucket_size, hot_bucket_mode, verify
+    ).distinct()
+
+
 def embedding_near_dup_pairs(embeddings, min_cos=0.9, bits=4, dims=None,
                              id_col="vec_id", vec_col="embedding",
                              max_bucket_size=None, hot_bucket_mode="star"):
-    """Bucket self-join under strict ``id_a < id_b``, verified at
-    ``min_cos``; a bucket above ``max_bucket_size`` members pairs each
-    member with its min-id canonical (``'star'``) or is dropped
-    (``'skip'``), through a per-bucket stats aggregate."""
+    """LSH-bucket self-join, verified at ``min_cos``."""
     sig = lsh_signature(bits=bits, dims=dims)
     v = _vectors(embeddings, id_col, vec_col, id_col, "v").withColumn(
         "bucket", sig("v")
     )
-
-    def verified(frame):
-        a, b = frame.alias("a"), frame.alias("b")
-        return (
-            a.join(b, (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .withColumn("cos_sim", cos(F.col("a.v"), F.col("b.v")))
-            .filter(F.col("cos_sim") >= min_cos)
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"), "cos_sim")
-        )
-
-    if max_bucket_size is None:
-        return verified(v)
-    stats = v.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("__sz"),
-        F.min(id_col).alias("__canon"),
-        F.min_by("v", F.col(id_col)).alias("__canon_v"),
+    verify = ("v", "cos_sim", cos, lambda c: c >= min_cos)
+    return _bucket_self_join(
+        v, ["bucket"], id_col, max_bucket_size, hot_bucket_mode, verify
     )
-    tagged = v.join(stats, "bucket")
-    pairs = verified(
-        tagged.filter(F.col("__sz") <= max_bucket_size).select(id_col, "v", "bucket")
+
+
+def ngram_jaccard_capped_pairs(corpus, cap, min_jaccard=0.0, id_col="doc_id",
+                               text_col="text", k=5) -> DataFrame:
+    """The capped n-gram path as a shingle-frequency aggregate, a cap join
+    and a shingle self-join, verified against the full string shingle
+    sets of the whole corpus."""
+    sh = corpus.select(
+        F.col(id_col),
+        F.array_distinct(word_shingles(text_col, k=k, out="sh")).alias("sh"),
     )
-    if hot_bucket_mode == "star":
-        hot = (
-            tagged.filter((F.col("__sz") > max_bucket_size)
-                          & (F.col(id_col) != F.col("__canon")))
-            .withColumn("cos_sim", cos(F.col("__canon_v"), F.col("v")))
-            .filter(F.col("cos_sim") >= min_cos)
-            .select(F.col("__canon").alias("id_a"), F.col(id_col).alias("id_b"),
-                    "cos_sim")
+    exh = exploded_shingle_hashes(corpus, id_col, text_col, k)
+    freq = exh.groupBy("gh").agg(F.count(F.lit(1)).alias("__f"))
+    exc = exh.join(freq.filter(F.col("__f") <= cap), "gh").select(id_col, "gh")
+    a, b = exc.alias("a"), exc.alias("b")
+    cands = (
+        a.join(b, (F.col("a.gh") == F.col("b.gh"))
+               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+        .select(F.col(f"a.{id_col}").alias("id_a"),
+                F.col(f"b.{id_col}").alias("id_b"))
+        .distinct()
+    )
+    return (
+        cands
+        .join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
+        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
+        .withColumn(
+            "jaccard",
+            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+            / F.greatest(F.size(F.array_union("sh_a", "sh_b")), F.lit(1)),
         )
-        pairs = pairs.unionByName(hot)
-    return pairs
+        .select("id_a", "id_b", "jaccard")
+        .filter(F.col("jaccard") >= min_jaccard)
+    )
 
 
 def minhash_signatures(df, id_col="doc_id", text_col="text", num_hashes=32,

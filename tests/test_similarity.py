@@ -292,14 +292,15 @@ def test_embedding_near_dup_capped_kernel_equals_join(spark, batches_of_32):
     """The in-kernel cap/star/skip resolution must reproduce the
     stats-aggregate + corpus-join reference EXACTLY. The template corpus
     plants a hot bucket (star/skip both exercised) plus ordinary near-dup
-    pairs in small buckets; the mixed corpus adds string ids and the edge
-    rows."""
+    pairs in small buckets, a NULL id and repeated ids; the mixed corpus
+    adds string ids and the edge rows."""
     rng = np.random.default_rng(11)
     tmpl = [float(x) for x in rng.normal(size=DIMS)]
     rows = [(int(i), tmpl) for i in range(60)]             # hot bucket
     rows += [(int(5000 + i), [float(x) for x in rng.normal(size=DIMS)])
              for i in range(40)]                           # small buckets
     rows += [(int(6000 + i), rows[60 + i][1]) for i in range(10)]  # dups
+    rows += [(None, tmpl), (3, tmpl), (5003, rows[63][1])]  # NULL, repeated ids
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     mixed, _ = _mixed(spark, str_ids=True)
     for frame, dims, bits in ((df, DIMS, 4), (mixed, 3, 3)):
@@ -631,7 +632,7 @@ def test_corpus_rows_metadata_no_scan_job(spark, emb, tmp_path):
     assert _corpus_rows(df) == len(vecs)  # in-memory: count() fallback
 
 
-def test_bucket_pairs_seq_bit_equals_hof_join(spark, emb, batches_of_32):
+def test_embedding_near_dup_bit_equals_hof_join(spark, emb, batches_of_32):
     """embedding_near_dup_pairs' bucket kernel must be BIT-identical (==,
     not allclose) to the HOF self-join reference — pair set AND cos_sim
     doubles — on the random corpus, on a pathological one (null vector,

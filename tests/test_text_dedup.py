@@ -205,33 +205,6 @@ def test_ngram_jaccard_exact_hot_shingle_cap(spark):
     assert uncapped.count() == 30 * 29 / 2
 
 
-def test_sorted_list_pairs_kernel_strict_ids():
-    """The capped path's pair kernel emits exactly the strict ``a < b``
-    pairs of each sorted member list: unique lists give the full upper
-    triangle, a repeated id gives no self-pair."""
-    from itertools import combinations
-
-    import pyarrow as pa
-
-    from mpower_feature_analysis_spark.functions.dedup_text import (
-        _sorted_list_pairs_kernel,
-    )
-    run, _ = _sorted_list_pairs_kernel("bigint")
-
-    def pairs(lists):
-        rb = pa.RecordBatch.from_arrays(
-            [pa.array(lists, type=pa.list_(pa.int64()))], names=["ms"])
-        out = pa.Table.from_batches(list(run(iter([rb])))).to_pydict()
-        return list(zip(out["id_a"], out["id_b"]))
-
-    unique = [[1, 4, 9], [2, 3], [5, 6, 7, 8]]
-    assert sorted(pairs(unique)) == sorted(
-        p for ms in unique for p in combinations(ms, 2))
-    dup = [[1, 4, 4, 9], [3, 3]]
-    assert sorted(pairs(dup)) == sorted(
-        (a, b) for ms in dup for a, b in combinations(ms, 2) if a < b)
-
-
 def test_ngram_jaccard_capped_duplicate_doc_id(spark):
     """A doc id repeated across input rows yields no ``id_a == id_b``
     self-pair on the capped path, and the pair set equals the one of the
@@ -456,8 +429,7 @@ def test_materialize_unpersist_all(spark, docs):
     from mpower_feature_analysis_spark.utils import _PERSISTED, unpersist_all
 
     unpersist_all()  # drain anything earlier tests parked
-    out = ngram_jaccard_exact_pairs(
-        docs, cache_shingles="persist", max_shingle_freq=50)
+    out = ngram_jaccard_exact_pairs(docs, max_shingle_freq=50)
     out.count()  # materialize → the shingle frame is now cached
     assert len(_PERSISTED) >= 1
     cached = [df for df in _PERSISTED if df.storageLevel.useMemory or df.storageLevel.useDisk]
@@ -494,10 +466,6 @@ def test_ngram_exact_capped_persists_no_single_consumer_frame(spark, docs):
     unpersist_all()
     assert n_exact == n_hashed == 2
     assert got == want and len(got) > 0
-    # the barrier-free plan is the same pair set as the fully unbarriered one
-    assert got == pairs(ngram_jaccard_exact_pairs(
-        docs, min_jaccard=0.3, max_shingle_freq=3, exact=True,
-        cache_shingles=False))
 
 
 def test_ngram_kernel_pairs_equal_self_join(spark, docs):
@@ -543,11 +511,10 @@ def test_ngram_capped_bucket_groupby_equals_freq_join(spark, docs):
     freq-aggregate + cap-join + self-join + full-corpus-verify form
     EXACTLY — same pair set, bit-equal jaccard — on edge docs and around
     the cap boundary of a planted hot shingle."""
+    import references as ref_
     from mpower_feature_analysis_spark.functions.dedup_text import (
-        exploded_shingle_hashes,
         ngram_jaccard_exact_pairs,
     )
-    from mpower_feature_analysis_spark.functions.text import word_shingles
 
     edge = spark.createDataFrame(
         [(200, ""), (201, None), (202, "one two"), (203, "  spaced   out  "),
@@ -563,43 +530,13 @@ def test_ngram_capped_bucket_groupby_equals_freq_join(spark, docs):
     )
     corpus = docs.unionByName(edge).unionByName(hot)
 
-    def old_capped(cap):
-        sh = corpus.select(
-            F.col("doc_id"),
-            F.array_distinct(word_shingles("text", k=5, out="sh")).alias("sh"),
-        )
-        exh = exploded_shingle_hashes(corpus, "doc_id", "text", 5)
-        freq = exh.groupBy("gh").agg(F.count(F.lit(1)).alias("__f"))
-        exc = (exh.join(freq.filter(F.col("__f") <= cap), "gh")
-               .select("doc_id", "gh"))
-        a, b = exc.alias("a"), exc.alias("b")
-        cands = (
-            a.join(b, (F.col("a.gh") == F.col("b.gh"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("id_a"),
-                    F.col("b.doc_id").alias("id_b"))
-            .distinct()
-        )
-        return (
-            cands
-            .join(sh.withColumnRenamed("doc_id", "id_a")
-                  .withColumnRenamed("sh", "sh_a"), "id_a")
-            .join(sh.withColumnRenamed("doc_id", "id_b")
-                  .withColumnRenamed("sh", "sh_b"), "id_b")
-            .withColumn(
-                "jaccard",
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.greatest(F.size(F.array_union("sh_a", "sh_b")), F.lit(1)),
-            )
-            .select("id_a", "id_b", "jaccard")
-        )
-
     # caps straddle the hot shingle's frequency (8) and the dup-group size
     for cap in (4, 8, 64):
         new = {(r.id_a, r.id_b): r.jaccard
                for r in ngram_jaccard_exact_pairs(
                    corpus, min_jaccard=0.0, max_shingle_freq=cap).collect()}
-        ref = {(r.id_a, r.id_b): r.jaccard for r in old_capped(cap).collect()}
+        ref = {(r.id_a, r.id_b): r.jaccard for r in
+               ref_.ngram_jaccard_capped_pairs(corpus, cap).collect()}
         assert new == ref, (cap, len(new), len(ref))
     assert len(ref) > 0
 
@@ -643,3 +580,73 @@ def test_xxh64_numpy_twins_match_jvm(spark):
         jvm2 = [r[0] for r in df.select(F.xxhash64("v", F.lit(i))).collect()]
         h = _xxh64_int(np.uint64(i), _xxh64_long(arr, np.uint64(42)))
         assert list(h.view(np.int64)) == jvm2
+
+
+def test_minhash_simhash_null_doc_id(spark):
+    """A NULL doc id never pairs, and never fails the task, capped or not:
+    the pairs equal those of the corpus without the NULL row."""
+    rows = [(1, BASE), (2, BASE), (3, "another short text here"), (None, BASE)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    clean = df.filter("doc_id IS NOT NULL")
+    for cap in (None, 1):
+        mh = dict(num_hashes=32, bands=8, max_bucket_size=cap)
+        sh = dict(max_hamming=3, max_bucket_size=cap)
+        for fn, kw in ((minhash_lsh_candidates, mh), (simhash_near_dups, sh)):
+            got = sorted(tuple(r) for r in fn(df, **kw).collect())
+            assert got == sorted(tuple(r) for r in fn(clean, **kw).collect())
+            assert got and got[0][:2] == (1, 2), (fn.__name__, cap, got)
+
+
+def test_minhash_simhash_duplicate_doc_id_no_self_pair(spark):
+    """A doc id repeated across input rows yields no ``id_a == id_b``
+    self-pair, capped or not; the pairs equal those of the same corpus
+    with unique ids."""
+    rows = [(1, BASE), (2, BASE)]
+    schema = "doc_id long, text string"
+    uniq = spark.createDataFrame(rows, schema)
+    dup = spark.createDataFrame(rows + [(1, BASE)], schema)
+    for cap in (None, 1):
+        mh = dict(num_hashes=32, bands=8, max_bucket_size=cap)
+        sh = dict(max_hamming=3, max_bucket_size=cap)
+        for fn, kw in ((minhash_lsh_candidates, mh), (simhash_near_dups, sh)):
+            got = sorted(tuple(r) for r in fn(dup, **kw).collect())
+            assert got == sorted(tuple(r) for r in fn(uniq, **kw).collect())
+            assert [p[:2] for p in got] == [(1, 2)], (fn.__name__, cap, got)
+
+
+def test_bucket_callers_equal_references(spark, batches_of_32):
+    """MinHash candidates, SimHash near-dups and capped n-gram pairs equal
+    their bucket self-join references (``==`` on sorted rows) under 32-row
+    Arrow batches, on a corpus with a NULL id, a duplicated id, singletons,
+    planted near-dups and a hot bucket above the cap, uncapped and capped
+    in 'star' and 'skip'."""
+    import references as ref
+    from mpower_feature_analysis_spark.functions.dedup_text import (
+        ngram_jaccard_exact_pairs,
+    )
+
+    boiler = " ".join(f"tpl{j}" for j in range(40))
+    rows = [(None, BASE), (1, BASE), (1, BASE), (2, BASE),
+            (3, BASE.replace("dog", "cat")), (4, BASE.replace("band", "group")),
+            (5, ""), (6, "   ")]
+    rows += [(10 + i, f"single doc {i} " + " ".join(f"s{i}_{j}" for j in range(20)))
+             for i in range(20)]
+    rows += [(100 + i, boiler) for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def rows_of(frame):
+        return sorted(tuple(r) for r in frame.collect())
+
+    for cap, mode in ((None, "star"), (16, "star"), (16, "skip")):
+        kw = dict(max_bucket_size=cap, hot_bucket_mode=mode)
+        want = rows_of(ref.minhash_lsh_candidates(df, bands=8, **kw))
+        assert rows_of(minhash_lsh_candidates(df, bands=8, **kw)) == want, kw
+        assert want
+        want = rows_of(ref.simhash_near_dups(df, blocks=4, **kw))
+        assert rows_of(simhash_near_dups(df, blocks=4, **kw)) == want, kw
+        assert want
+    for cap in (4, 16):
+        want = rows_of(ref.ngram_jaccard_capped_pairs(df, cap))
+        got = rows_of(ngram_jaccard_exact_pairs(
+            df, min_jaccard=0.0, max_shingle_freq=cap))
+        assert got == want and want, cap
