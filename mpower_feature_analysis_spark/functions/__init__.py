@@ -10,7 +10,6 @@ from .text import (
 from .dedup_text import (
     auto_simhash_blocks,
     exact_text_dedup,
-    exploded_word_shingles,
     minhash_signatures,
     minhash_lsh_candidates,
     simhash64,
@@ -41,7 +40,7 @@ from .multimodal import (
 __all__ = [
     "token_count", "bpe_ish_token_count", "text_quality_features",
     "language_id", "fingerprint", "word_shingles", "rolling_hash_shingles",
-    "exact_text_dedup", "exploded_word_shingles", "minhash_signatures",
+    "exact_text_dedup", "minhash_signatures",
     "minhash_lsh_candidates", "simhash64", "simhash_near_dups",
     "simhash_block_layout", "auto_simhash_blocks",
     "ngram_jaccard_pairs", "ngram_jaccard_exact_pairs",

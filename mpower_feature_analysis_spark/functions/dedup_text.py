@@ -12,7 +12,6 @@ engines.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -671,39 +670,6 @@ def _simhash_keys(df, id_col, text_col, max_hamming, blocks):
     ).select(id_col, "simhash", "c.cid", "c.key")
 
 
-def exploded_word_shingles(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-) -> DataFrame:
-    """(id, shingle) rows — DISTINCT k-word shingles per doc, built in an
-    Arrow kernel. Output-equal to
-    ``explode(array_distinct(text.word_shingles(...)))`` (pinned by a
-    test) but ~10x faster: the per-shingle slice+concat_ws expression tree
-    evaluates interpreted at ~2 ms/doc, while Python string slicing over
-    an Arrow batch is microseconds."""
-
-    def run(batches):
-        for pdf in batches:
-            ids, gs = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                w = ("" if t is None else t).strip().lower().split()
-                if len(w) < k:
-                    ss = {" ".join(w)}
-                else:
-                    ss = {" ".join(w[j:j + k]) for j in range(len(w) - k + 1)}
-                ids.extend([i] * len(ss))
-                gs.extend(ss)
-            yield pd.DataFrame({id_col: ids, "g": gs})
-
-    # id type follows the input schema (round-2 advice: hardcoding long
-    # broke string doc ids with an Arrow cast failure)
-    id_type = docs.schema[id_col].dataType.simpleString()
-    return ensure_parallelism(docs.select(id_col, text_col)).mapInPandas(
-        run, f"{id_col} {id_type}, g string")
-
-
 def exploded_shingle_hashes(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -712,8 +678,8 @@ def exploded_shingle_hashes(
 ) -> DataFrame:
     """(id, gh) rows — one 64-bit hash per DISTINCT k-word shingle per doc.
 
-    Key-equal to hashing the shingle STRINGS (``xxhash64(g)`` over
-    :func:`exploded_word_shingles`) up to hash collisions of the same
+    Key-equal to hashing the shingle STRINGS (``xxhash64`` over the
+    distinct ``text.word_shingles``) up to hash collisions of the same
     ~2⁻⁶⁴-per-pair class: words are hashed JVM-side (``xxhash64`` in
     codegen), and each shingle's key is a Horner fold of its k word
     hashes finished with a splitmix64 avalanche — equal word sequences
@@ -725,9 +691,9 @@ def exploded_shingle_hashes(
     the string-building kernel cost 2.4 s/pass at sf1.0 and ran once per
     consuming plan branch).
 
-    Matches :func:`exploded_word_shingles`'s short-document contract: a
-    doc with fewer than k words yields ONE shingle (the whole text; the
-    empty/NULL text folds to the empty shingle)."""
+    Matches ``text.word_shingles``'s short-document contract: a doc with
+    fewer than k words yields ONE shingle (the whole text; the empty/NULL
+    text folds to the empty shingle)."""
     hw = ensure_parallelism(docs).select(
         F.col(id_col),
         F.transform(
@@ -819,24 +785,25 @@ def ngram_jaccard_exact_pairs(
     shingle_k: int = 5,
     min_jaccard: float = 0.7,
     max_shingle_freq: int | None = None,
-    exact: bool = False,
 ) -> DataFrame:
     """Deterministic near-dup pairs: Jaccard >= ``min_jaccard`` over k-word
     shingle sets — exact up to xxhash64 join-key collisions (~2⁻⁶⁴ per
-    shingle pair; see the join-key note below), or bit-exact with
-    ``exact=True``, which keeps full shingle STRINGS as join keys (no hash
-    epsilon, ~5x more shuffle bytes). Either way recall is structurally
+    shingle pair; see the join-key note below). Recall is structurally
     100%, unlike the MinHash-LSH candidate path, which is probabilistic.
     Any pair with Jaccard > 0 shares at least one shingle, so candidates =
-    equi-join on exploded DISTINCT shingles — a bounded shuffle, never a
-    cross join. Verification is exact set Jaccard.
+    the members of each shingle's bucket, paired — a bounded shuffle,
+    never a cross join. Verification is exact set Jaccard.
 
-    Scale note: a corpus-frequent shingle is a hot join key (same failure
+    Input rows that repeat an (id, text) pair count once: shingle buckets
+    collect a member SET, and the capped verify reads one text per id. No
+    pair is a self-pair, and none is emitted twice.
+
+    Scale note: a corpus-frequent shingle is a hot bucket (same failure
     mode as an LSH hot bucket); ``max_shingle_freq`` drops shingles shared
     by more than that many docs from candidate generation — sacrificing
     recall only for pairs whose EVERY common shingle is boilerplate-frequent.
 
-    Join-key layout (round-5, verdict item 5): the self-join shuffles on
+    Join-key layout (round-5, verdict item 5): buckets are keyed on
     ``xxhash64(shingle)`` — an 8-byte long — instead of the full k-word
     shingle STRING (~40 bytes/row x ~36 rows/doc), cutting exchange bytes
     ~5x. Distinct strings map to distinct hashes except xxhash64
@@ -846,46 +813,34 @@ def ngram_jaccard_exact_pairs(
     ``(36n)²/2^65`` ≈ 7e-5 at n=1M docs — the same epsilon the
     rolling-hash verify path (:func:`ngram_jaccard_pairs`) already
     carries. The capped path verifies survivors against TRUE string
-    shingle sets, so it is exact regardless; ``exact=True`` removes the
-    epsilon from the uncapped path too.
+    shingle sets, so it is exact regardless.
 
     Multi-consumer frames are shared with :func:`..utils.materialize`'s
     ``'persist'``: the CAPPED path's candidate-pair frame (id harvest +
-    verify join base) and verify shingle arrays, and the uncapped
-    ``exact=True`` shingle frame (sizes aggregate + join sides). The
-    uncapped hashed path is single-consumer (one groupBy feeding the
-    in-JVM pair expansion), so it takes no barrier at all.
+    verify join base) and verify shingle arrays. The uncapped path is
+    single-consumer (one groupBy feeding the in-JVM pair expansion), so it
+    takes no barrier at all.
     """
-    if exact:
-        ex = exploded_word_shingles(docs, id_col, text_col, shingle_k)
-        exh = ex.select(id_col, F.col("g").alias("gh"))
-        if max_shingle_freq is None:
-            # uncapped exact: sizes aggregate + both self-join sides; the
-            # capped path reads it once (its groupBy), so no barrier there
-            exh = materialize(exh, "persist")
-    else:
-        # shingle keys are built hash-native (JVM word xxhash64 + numpy
-        # Horner fold) — no shingle strings, no per-row Python (round-7)
-        exh = exploded_shingle_hashes(docs, id_col, text_col, shingle_k)
-    if max_shingle_freq is None and not exact:
-        # uncapped hashed path (round-7, late): the shingle self-join
-        # shuffled BOTH exploded sides (2x ~36 rows/doc) into a sort-merge
-        # join only to emit one row per shared shingle; one groupBy on the
-        # shingle key + in-JVM pair expansion produces the identical pair
-        # instances from HALF the shuffled bytes and no join sort.
-        # Equality: members are value-sorted by id per bucket
-        # (``sort_array`` orders the structs by leading field ``i``; ids
-        # are distinct within a bucket because ``exh`` is per-doc
-        # DISTINCT) and expanded strictly upper-triangle — exactly the
-        # join predicate (``a.gh == b.gh AND a.id < b.id``); the per-doc
-        # ``sz`` stamp rides along as before.  The expansion runs as
-        # array higher-order functions, so no rows ever cross the Python
+    # shingle keys are built hash-native (JVM word xxhash64 + numpy
+    # Horner fold) — no shingle strings, no per-row Python (round-7)
+    exh = exploded_shingle_hashes(docs, id_col, text_col, shingle_k)
+    if max_shingle_freq is None:
+        # uncapped path (round-7, late): one groupBy on the shingle key +
+        # in-JVM pair expansion produces the pair instances of a shingle
+        # self-join (``a.gh == b.gh AND a.id < b.id``) from HALF the
+        # shuffled bytes and no join sort. Members are a SET (a repeated
+        # (id, text) row adds nothing), value-sorted by id per bucket
+        # (``sort_array`` orders the structs by leading field ``i``) and
+        # expanded upper-triangle; the ``id_a < id_b`` filter keeps one id
+        # that carries two texts from pairing with itself. The per-doc
+        # ``sz`` stamp rides along. The expansion runs as array
+        # higher-order functions, so no rows ever cross the Python
         # boundary here (guide §4.1: the earlier mapInArrow pair kernel's
         # compute was free — a passthrough kernel timed the same — the
         # whole cost was shipping list<struct> batches to Python).
         grouped = exh.filter(F.col(id_col).isNotNull()).groupBy("gh").agg(
             F.sort_array(
-                F.collect_list(
+                F.collect_set(
                     F.struct(F.col(id_col).alias("i"), F.col("sz").alias("z"))
                 )
             ).alias("ms")
@@ -907,40 +862,12 @@ def ngram_jaccard_exact_pairs(
             grouped.filter(F.size("ms") >= 2)
             .select(F.explode(pairs).alias("p"))
             .select("p.*")
+            .filter(F.col("id_a") < F.col("id_b"))
         )
         j = inst.groupBy("id_a", "id_b").agg(
             F.count(F.lit(1)).alias("isz"),
             F.min("sa").alias("sa"),
             F.min("sb").alias("sb"),
-        )
-        j = j.withColumn(
-            "jaccard",
-            F.col("isz").cast("double")
-            / F.greatest(F.col("sa") + F.col("sb") - F.col("isz"), F.lit(1)),
-        ).select("id_a", "id_b", "jaccard")
-        return j.filter(F.col("jaccard") >= min_jaccard)
-    if max_shingle_freq is None:
-        # one aggregation of the exploded self-join gives the intersection
-        # size directly — no per-pair shingle-array re-join/materialization
-        # (jaccard = isz / (|A| + |B| - isz), same shape as the SQL oracle)
-        a, b = exh.alias("a"), exh.alias("b")
-        joined = a.join(
-            b,
-            (F.col("a.gh") == F.col("b.gh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        grp = joined.groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        # exact=True only (the hashed uncapped path returned above)
-        sizes = exh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-        j = (
-            grp.agg(F.count(F.lit(1)).alias("isz"))
-            .join(sizes.withColumnRenamed(id_col, "id_a")
-                  .withColumnRenamed("sz", "sa"), "id_a")
-            .join(sizes.withColumnRenamed(id_col, "id_b")
-                  .withColumnRenamed("sz", "sb"), "id_b")
         )
         j = j.withColumn(
             "jaccard",
@@ -956,31 +883,27 @@ def ngram_jaccard_exact_pairs(
     # ngram_jaccard_pairs:
     #
     # 1. Candidate generation is ONE groupBy of the hashed exploded frame:
-    #    a bucket's row count IS the shingle's corpus frequency (``exh``
-    #    is per-doc distinct), so ``count <= cap`` reproduces the old
-    #    freq-aggregate + cap-join, and :func:`.buckets.bucket_pairs`
-    #    expands each bucket into the identical pair set the exploded
-    #    self-join emitted (``a.gh == b.gh AND a.id < b.id``), from one
-    #    exchange of (id, gh) instead of three passes over it (freq
-    #    aggregate, cap join, self-join both sides). ``__f`` counts ALL
-    #    bucket rows (null ids included) to match the old frequency
-    #    exactly; null ids never pair, as under the old strict ``<``.
+    #    a bucket's member-set size IS the shingle's corpus frequency in
+    #    distinct non-NULL ids (NULL ids never pair), so
+    #    ``size(ms) <= cap`` replaces a freq-aggregate + cap-join, and
+    #    :func:`.buckets.bucket_pairs` expands each bucket into the pair
+    #    set the exploded self-join emitted (``a.gh == b.gh AND
+    #    a.id < b.id``), from one exchange of (id, gh) instead of three
+    #    passes over it (freq aggregate, cap join, self-join both sides).
     # 2. The shingle STRING arrays — by far the heaviest frame here — are
     #    built only for docs that appear in a candidate pair (semi-join),
-    #    not the whole corpus; candidates are few by design, so the
-    #    verify joins carry O(candidates) array payloads.
+    #    one text per id, not the whole corpus; candidates are few by
+    #    design, so the verify joins carry O(candidates) array payloads.
     #
     # The candidate frame has three consumers (both id-harvest branches +
-    # the verify join base), so it takes the materialize barrier the
-    # shingle frame used to hold.
+    # the verify join base), so it takes a materialize barrier.
     from .text import word_shingles
 
-    grouped = exh.select(id_col, "gh").groupBy("gh").agg(
-        F.collect_list(F.struct(F.col(id_col).alias("i"))).alias("ms"),
-        F.count(F.lit(1)).alias("__f"),
+    grouped = exh.filter(F.col(id_col).isNotNull()).groupBy("gh").agg(
+        F.collect_set(F.struct(F.col(id_col).alias("i"))).alias("ms"),
     )
     cands = materialize(
-        bucket_pairs(grouped.filter(F.col("__f") <= max_shingle_freq)).distinct(),
+        bucket_pairs(grouped.filter(F.size("ms") <= max_shingle_freq)).distinct(),
         "persist",
     )
     ids = (
@@ -991,7 +914,7 @@ def ngram_jaccard_exact_pairs(
     # two consumers (sh_a / sh_b join branches) — barrier the array build
     # or the semi-join + shingling runs once per branch
     sh = materialize(
-        docs.join(ids, id_col, "leftsemi").select(
+        docs.join(ids, id_col, "leftsemi").dropDuplicates([id_col]).select(
             F.col(id_col),
             F.array_distinct(
                 word_shingles(text_col, k=shingle_k, out="sh")
@@ -1023,8 +946,9 @@ def ngram_jaccard_pairs(
     """Verify candidate pairs with exact shingle-set Jaccard.
 
     ``candidates`` has (id_a, id_b); Jaccard is computed over each doc's
-    DISTINCT k-word shingle set.  Requires unique doc ids (the standard
-    corpus contract; every in-repo caller satisfies it).
+    DISTINCT k-word shingle set. Doc rows that repeat an (id, text) pair
+    count once (one text per id is shingled), and a self-pair candidate
+    (``id_a == id_b``) is dropped.
 
     Round-7 shape (guide §2.3/§4): the old form evaluated the interpreted
     per-shingle ``rolling_hash_shingles`` expression tree over EVERY doc
@@ -1044,13 +968,16 @@ def ngram_jaccard_pairs(
     # three plan branches consume the candidate frame (id harvest, the
     # shared-shingle join, the presence base); without a barrier the whole
     # candidate-generation pipeline upstream would run once per branch
-    cand = materialize(candidates.select("id_a", "id_b"), "persist")
+    cand = materialize(
+        candidates.select("id_a", "id_b").filter(F.col("id_a") != F.col("id_b")),
+        "persist",
+    )
     ids = (
         cand.select(F.col("id_a").alias(id_col))
         .unionByName(cand.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    docs_c = docs.join(ids, id_col, "leftsemi")
+    docs_c = docs.join(ids, id_col, "leftsemi").dropDuplicates([id_col])
     # three consumers (both pair sides + the presence/size aggregate):
     # barrier the kernel output or the shingling chain runs once per branch
     exh = materialize(

@@ -10,9 +10,10 @@ smallest label among itself and its neighbors, then shortcuts to its
 label's label — pointer doubling) — converges to the component-minimum in
 O(log diameter) rounds. Each round is a bounded number of shuffles on the
 vertex id (map-side combinable min agg + one label self-join).
-``localCheckpoint`` every few rounds truncates the lineage so plans don't
-grow unboundedly (the standard Spark iterative-algorithm discipline; at
-cluster scale use checkpoint() to reliable storage instead).
+``localCheckpoint`` of the label frame every round (and of the edge frame
+once) truncates the lineage so plans don't grow unboundedly (the standard
+Spark iterative-algorithm discipline; at cluster scale use checkpoint() to
+reliable storage instead).
 
 The fixpoint is unique (component minimum), so output is deterministic and
 a DuckDB recursive-CTE oracle verifies it exactly.
@@ -29,9 +30,7 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    checkpoint_every: int = 1,
     strict: bool = True,
-    cache_edges: bool = True,
 ) -> DataFrame:
     """Component label (= min vertex id in the component) for every vertex
     appearing in ``pairs``. Returns (id, component).
@@ -51,14 +50,15 @@ def connected_components(
     diameter ~2^25 — hitting the cap means a pathological graph or a bug,
     not a tuning problem.
 
-    ``checkpoint_every=1`` (round-7 default — was 5): every round BOTH
-    re-derives labels through two joins and an aggregate AND runs the
-    convergence count over them, so an un-materialized round re-executes
-    the whole chain since the last checkpoint once per consumer — at
-    sf1.0 the per-round wall grew 0.9 s → 13 s by round 3 and the
-    round-5 checkpoint itself took 29 s replaying it all.  Checkpointing
-    the (tiny, O(V)) label frame each round keeps every round at the
-    cost of its own two joins; total 31 s → ~4 s, fixpoint identical.
+    The label frame is checkpointed EVERY round (round-7 — was every 5th):
+    every round BOTH re-derives labels through two joins and an aggregate
+    AND runs the convergence count over them, so an un-materialized round
+    re-executes the whole chain since the last checkpoint once per
+    consumer — at sf1.0 the per-round wall grew 0.9 s → 13 s by round 3
+    and the round-5 checkpoint itself took 29 s replaying it all.
+    Checkpointing the (tiny, O(V)) label frame each round keeps every
+    round at the cost of its own two joins; total 31 s → ~4 s, fixpoint
+    identical.
     """
     from ..utils import materialize
 
@@ -66,27 +66,25 @@ def connected_components(
     # candidate pipeline upstream runs once per branch inside the edges
     # checkpoint
     sel = materialize(
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")),
-        "persist" if cache_edges else False,
+        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")), "persist"
     )
+    # every round joins edges; without this the candidate-generation plan
+    # upstream of `pairs` (often an LSH bucket join over the whole corpus)
+    # is re-planned each round and only saved by shuffle-stage reuse, which
+    # AQE re-optimization can defeat. One materialization, O(E) local
+    # storage; at cluster scale use checkpoint() to reliable storage
+    # instead (same discipline as the label checkpoints below).
     edges = (
         sel.unionByName(sel.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if cache_edges:
-        # every round joins edges; without this the candidate-generation
-        # plan upstream of `pairs` (often an LSH bucket join over the whole
-        # corpus) is re-planned each round and only saved by shuffle-stage
-        # reuse, which AQE re-optimization can defeat. One materialization,
-        # O(E) local storage; at cluster scale use checkpoint() to reliable
-        # storage instead (same discipline as the label checkpoints below).
-        edges = edges.localCheckpoint(eager=True)
     labels = (
         edges.select(F.col("u").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
     )
-    for i in range(max_iter):
+    for _ in range(max_iter):
         # neighbor labels: for each edge u→v, v hears u's current label
         msgs = (
             edges.join(labels, edges["u"] == labels["id"])
@@ -109,8 +107,7 @@ def connected_components(
             F.col("x.id").alias("id"),
             F.coalesce(F.col("y.component"), F.col("x.component")).alias("component"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels = new_labels.localCheckpoint(eager=True)
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "id")

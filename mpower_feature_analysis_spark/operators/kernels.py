@@ -18,16 +18,22 @@ windows via stride tricks) and return one array per output column; the
 harness builds the output batch from the declared schema (§1.3: Spark
 schemas are static), writing NaN float cells as NULL. No per-row Python
 anywhere. The window, signal, frequency and loess kernels all run on it.
+
+Hot conversations take the same path: :func:`run_chunked` assigns each row
+to every (conversation, chunk) group that needs it in the JVM, runs the
+operator's own batch kernel on the harness with one group per chunk, and
+keeps each chunk's own windows — the ``*_skew_split`` operators.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..utils import ts_ms
 
 WINDOW_FEATURE_SCHEMA = (
     "conv_id string, window_idx int, n int, "
@@ -248,20 +254,6 @@ def _window_kernel(window: int, overlap: float):
     return kernel
 
 
-def make_window_kernel(window: int = 8, overlap: float = 0.5):
-    """Per-group pandas form of the window kernel (one conversation, or one
-    chunk of it, in any row order), for the skew split's applyInPandas."""
-    batch = _window_kernel(window, overlap)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = pdf.sort_values(["turn_idx", "ts_ms"], kind="mergesort")
-        tbl = pa.Table.from_pandas(
-            g[["conv_id", "turn_idx", "ts_ms"]], preserve_index=False)
-        return pd.DataFrame(batch(tbl))
-
-    return kernel
-
-
 def windowed_summary_features(
     transcripts: DataFrame,
     window: int = 8,
@@ -280,9 +272,7 @@ def windowed_summary_features(
     ``presorted`` are the harness's. With ``presorted=True`` the kernel is
     a pure scan→Python map with NO shuffle.
     """
-    from ..utils import ts_ms as _ts_ms_expr
-
-    cols = [group_col, "turn_idx", _ts_ms_expr("ts").alias("ts_ms")]
+    cols = [group_col, "turn_idx", ts_ms("ts").alias("ts_ms")]
     if shuffle_key and shuffle_key != group_col:
         cols.append(shuffle_key)
     return mapgroups_with_carry(
@@ -293,6 +283,74 @@ def windowed_summary_features(
     )
 
 
+def run_chunked(
+    df: DataFrame,
+    kernel,
+    schema: str,
+    columns: list[str],
+    group_col: str,
+    pos,
+    sort_cols: tuple[str, ...],
+    split: int,
+    window: int,
+    step: int,
+    left: int,
+    right: int,
+) -> DataFrame:
+    """Skew path for HOT groups: run a batch window kernel per (group,
+    chunk) on :func:`mapgroups_with_carry`, so one huge group becomes
+    bounded tasks instead of one straggler held whole in the carry.
+
+    ``pos`` is each row's dense position in its group (a Column). Chunk k
+    owns the windows whose global start lies in ``[k·split, (k+1)·split)``
+    and gets the rows at positions ``[k·split − M, (k+1)·split + right)``,
+    where ``M`` is ``left`` rounded up to a multiple of ``step`` — so the
+    slice starts on the global window grid and the kernel's chunk-local
+    windows are global windows. ``left``/``right`` must cover the kernel's
+    context (filter and detrend reach) on each side.
+
+    A JVM explode assigns rows to chunks; the kernel sees one group per
+    (group, chunk), keyed by a string that also separates NULL groups; the
+    thin step below keeps each chunk's own full windows (plus, in chunk 0
+    only, the short window and the error rows of a group that fits one
+    chunk) and restores ``window_idx = start / step`` and the group id.
+    ``split`` must be a multiple of ``step`` (chunks start on the window
+    grid) and at least ``window``.
+    """
+    if split % step:
+        raise ValueError(f"split {split} must be a multiple of the window step {step}")
+    if split < window:
+        raise ValueError(f"split {split} must be >= window {window}")
+    M = -(-left // step) * step
+    k_lo = F.greatest(F.floor((pos - right) / split), F.lit(0))
+    k_hi = F.floor((pos + M) / split)
+    chunked = df.withColumn(
+        "__chunk", F.explode(F.sequence(k_lo.cast("long"), k_hi.cast("long")))
+    ).withColumn("__key", F.concat_ws(  # a NULL group drops its ':'
+        ":", F.col("__chunk").cast("string"), F.col(group_col).cast("string")))
+
+    def own_windows(tbl: pa.Table) -> dict:
+        gstart = run_starts(tbl.column("conv_id"))
+        out = kernel(tbl)
+        # every group emits >= 1 row, in table order
+        ostart = run_starts(pa.array(out["conv_id"], type=pa.string()))
+        m = np.diff(np.append(ostart, len(out["conv_id"])))
+        k = np.repeat(tbl.column("__chunk").take(gstart).to_numpy(), m)
+        g = np.maximum(k * split - M, 0) + out["window_idx"] * step
+        full = out["n"] == window
+        keep = np.where(full, (g >= k * split) & (g < (k + 1) * split), k == 0)
+        out["window_idx"] = np.where(
+            full, g // step, out["window_idx"]).astype("int32")
+        out["conv_id"] = np.repeat(
+            tbl.column("__conv").take(gstart).to_numpy(zero_copy_only=False), m)
+        return {c: v[keep] for c, v in out.items()}
+
+    return mapgroups_with_carry(
+        chunked.withColumn("__conv", F.col(group_col)), own_windows, schema,
+        ["__conv", "__chunk", *columns], group_col="__key", sort_cols=sort_cols,
+    )
+
+
 def windowed_summary_features_skew_split(
     transcripts: DataFrame,
     window: int = 8,
@@ -300,66 +358,22 @@ def windowed_summary_features_skew_split(
     split_turns: int = 4096,
     group_col: str = "conv_id",
 ) -> DataFrame:
-    """Skew path for HOT conversations (SURVEY.md §4 skew row): range-split
-    each conversation into ``split_turns``-sized chunks of dense turn_idx,
-    duplicating ``window`` boundary turns into the preceding chunk so every
-    overlapping window is computed exactly once with full context, then run
-    the kernel per (conv, chunk).
+    """Skew path for HOT conversations (SURVEY.md §4 skew row): the window
+    kernel on :func:`run_chunked`, chunked by ``split_turns`` of dense
+    turn_idx; each chunk also gets the ``window`` turns after it, so every
+    window is computed exactly once with full context.
 
     Output is EXACTLY equal to :func:`windowed_summary_features` on deduped,
-    dense-turn_idx input (asserted by tests/test_kernels.py) — window_idx is
-    reconstructed globally from the chunk offset. Requires split_turns to be
-    a multiple of the window step. A 100M-turn conversation becomes ~24k
-    bounded tasks instead of one straggler.
+    dense-turn_idx input (asserted by tests/test_kernels.py). Requires
+    split_turns to be a multiple of the window step. A 100M-turn
+    conversation becomes ~24k bounded tasks instead of one straggler.
     """
-    step = window_step(window, overlap)
-    if split_turns % step:
-        raise ValueError("split_turns must be a multiple of the window step")
-    if split_turns < window:
-        # boundary turns are only duplicated into the immediately preceding
-        # chunk; a window spanning 3+ chunks would be computed from a
-        # truncated gap series and silently mis-valued
-        raise ValueError("split_turns must be >= window")
-    base = make_window_kernel(window=window, overlap=overlap)
-    from ..utils import ts_ms as _ts_ms_expr
-
-    slim = transcripts.select(
-        group_col, "turn_idx", _ts_ms_expr("ts").alias("ts_ms")
-    )
-    # chunk of the windows STARTING in [k*C, (k+1)*C); a turn t feeds chunks
-    # k = t div C and (k-1) when t < k*C + window (left-boundary overlap)
-    c = F.lit(split_turns)
-    own = (F.col("turn_idx") / c).cast("long")
-    needs_prev = (own > 0) & (F.col("turn_idx") < own * c + F.lit(window))
-    exploded = slim.withColumn(
-        "__chunk",
-        F.explode(
-            F.when(needs_prev, F.array(own, own - 1)).otherwise(F.array(own))
-        ),
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        k = int(pdf["__chunk"].iloc[0])
-        out = base(pdf.drop(columns="__chunk"))
-        if out["error"].iloc[0] is not None and k > 0:
-            # overlap-only fragment (< 2 turns) of a later chunk: no windows
-            return out.iloc[0:0]
-        if out["error"].iloc[0] is not None:
-            return out
-        lo = k * split_turns
-        hi = lo + split_turns
-        # keep windows whose start GAP index (= start_turn_idx - 1, dense
-        # turn_idx) lies in this chunk's range; short-conv single-window rows
-        # (n < window) only from chunk 0
-        start_gap = out["start_turn_idx"] - 1
-        keep = (start_gap >= lo) & (start_gap < hi)
-        if k > 0:
-            keep &= out["n"] == window
-        out = out[keep].copy()
-        out["window_idx"] = ((out["start_turn_idx"] - 1) // step).astype("int32")
-        return out
-
-    return (
-        exploded.groupBy(group_col, "__chunk")
-        .applyInPandas(kernel, WINDOW_FEATURE_SCHEMA)
+    slim = transcripts.select(group_col, "turn_idx", ts_ms("ts").alias("ts_ms"))
+    # window g (on gap g, between turns g and g+1) reads turns [g, g+window];
+    # a NULL turn_idx goes to chunk 0, whose kernel reports it (F5)
+    return run_chunked(
+        slim, _window_kernel(window, overlap), WINDOW_FEATURE_SCHEMA,
+        ["turn_idx", "ts_ms"], group_col, F.coalesce(F.col("turn_idx"), F.lit(0)),
+        ("turn_idx", "ts_ms"), split_turns, window, window_step(window, overlap),
+        0, window,
     )

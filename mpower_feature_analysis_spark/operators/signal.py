@@ -14,18 +14,18 @@ Same pipeline shape, re-specced deterministically:
 
 Runs per conversation/sensor-group on the grouped-batch harness of
 kernels.py (``mapgroups_with_carry``); one row per window; error-channel
-column.
+column. The hot-conversation ``*_skew_split`` variants run the same batch
+kernels per (conversation, chunk) through ``kernels.run_chunked``.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .kernels import mapgroups_with_carry, run_starts, window_step
+from .kernels import mapgroups_with_carry, run_chunked, run_starts, window_step
 
 SIGNAL_FEATURE_SCHEMA = (
     "conv_id string, window_idx int, n int, "
@@ -182,23 +182,6 @@ def loess_detrend(
     return x - baseline
 
 
-def _detrend(x: np.ndarray, mode) -> np.ndarray:
-    """mode: False → identity; True/'linear' → least-squares line;
-    'savgol' → Sav-Gol local polynomial; 'loess' → tricube-weighted local
-    regression (true loess)."""
-    if mode is False or mode is None:
-        return x
-    if mode is True or mode == "linear":
-        return linear_detrend(x)
-    if mode == "savgol":
-        return savgol_detrend(x)
-    if mode == "loess":
-        return loess_detrend(x)
-    raise ValueError(
-        "detrend must be False, 'linear'/True, 'savgol', or 'loess'"
-    )
-
-
 def _moments(sw: np.ndarray):
     """Vectorized per-row mean/sd/skew/excess-kurtosis (population
     moments, ddof=0 — the deterministic spec mirrored by tests).
@@ -249,10 +232,11 @@ def _linear_detrend_rows(X: np.ndarray) -> np.ndarray:
 
 
 def _detrend_rows(X: np.ndarray, mode) -> np.ndarray:
-    """Row-wise detrend of a (G, n) same-length stack. Linear is fully
-    vectorized; savgol/loess call the 1-D functions per row (their wall is
-    C-level convolve/einsum work, not Python dispatch), keeping every row
-    bit-equal to the per-group path."""
+    """Row-wise detrend of a (G, n) same-length stack. mode: False →
+    identity; True/'linear' → least-squares line (fully vectorized);
+    'savgol' → Sav-Gol local polynomial; 'loess' → tricube-weighted local
+    regression (true loess). savgol/loess call the 1-D functions per row
+    (their wall is C-level convolve/einsum work, not Python dispatch)."""
     if mode is False or mode is None:
         return X
     if mode is True or mode == "linear":
@@ -298,7 +282,7 @@ def _make_group_kernel(featurize, float_cols: list[str], window: int,
             x = x[~np.isnan(x)]
             if len(x) < 4:
                 return err(f"group too small: {len(x)} samples")
-            x = _detrend(x, detrend)
+            x = _detrend_rows(x[None, :], detrend)[0]
             if taps is not None:
                 x = apply_fir_filtfilt(x, taps) if zero_phase else apply_fir(x, taps)
             if len(x) < window:
@@ -706,9 +690,8 @@ def _time_featurize(sw: np.ndarray) -> dict[str, np.ndarray]:
 
 def _skew_split_signal(
     df: DataFrame,
-    featurize,
+    make_kernel,
     schema: str,
-    float_cols: list[str],
     value_col: str,
     window: int,
     overlap: float,
@@ -719,40 +702,35 @@ def _skew_split_signal(
     split_size: int,
     group_col: str,
 ) -> DataFrame:
-    """Shared skew path for the signal/freq kernels: range-split each
-    conversation's NaN-filtered SAMPLE index into ``split_size`` chunks,
-    fanning boundary samples into neighbouring chunks so every overlapping
-    window — and the filter context it needs — is computed exactly once
-    with full context. One 100M-turn conversation becomes bounded
-    (split_size + margin)-row tasks instead of one straggler holding the
-    whole series in the carry (the round-2 judge's weak #4; mirrors
-    kernels.windowed_summary_features_skew_split).
+    """Shared skew path for the signal/freq kernels: the operator's own
+    batch kernel on :func:`kernels.run_chunked`, chunked by ``split_size``
+    on each conversation's NaN-filtered SAMPLE index, with enough boundary
+    samples on each side that every window — and the filter context it
+    needs — is computed exactly once with full context. One 100M-turn
+    conversation becomes bounded (split_size + margin)-row tasks instead
+    of one straggler holding the whole series in the carry.
 
     Exactness vs the unsplit kernel (asserted by tests/test_signal.py):
 
     * ``detrend in (False, 'savgol', 'loess')`` — BIT-EXACT: local baselines and
       'same'-mode FIR convolutions are local; a margin of
-      ``(savgol half) + (n_taps - 1 per filtfilt pass)`` raw samples on
-      each side reproduces every interior value, and true signal edges
+      ``(detrend half-window) + (n_taps - 1 per filtfilt pass)`` raw samples
+      on each side reproduces every interior value, and true signal edges
       coincide with chunk-slice edges so edge padding matches too.
     * ``detrend='linear'`` — ALLCLOSE (~1e-12): the global least-squares
-      line is precomputed as a JVM aggregate per conversation (closed-form
-      slope over the dense sample index) and subtracted chunk-locally;
-      Spark's summation order differs from numpy's pairwise sum in the
-      last ulps. The north-rule parity bar is allclose.
+      line is a JVM aggregate per conversation (closed-form slope over the
+      dense sample index), subtracted before the kernel runs with
+      ``detrend=False``; Spark's summation order differs from numpy's
+      pairwise sum in the last ulps. The north-rule parity bar is allclose.
     """
     from pyspark.sql import Window as W
 
-    step = window_step(window, overlap)
-    if split_size % step:
-        raise ValueError("split_size must be a multiple of the window step")
-    if split_size < window:
-        raise ValueError("split_size must be >= window")
     if detrend is True:
         detrend = "linear"
     if detrend == "savgol" and window < 2 * _SAVGOL_HALF + 1:
-        # a chunk slice is >= window samples; below the savgol window_length
-        # the base kernel's linear fallback would diverge chunk-locally
+        # a chunk's full windows lie in a slice of >= window samples; below
+        # the savgol window_length the kernel's linear fallback would
+        # diverge chunk-locally
         raise ValueError("skew split with savgol detrend needs window >= 11")
     if detrend == "loess" and window < LOESS_WIDTH:
         # same guard: the loess linear fallback (series < width) must only
@@ -760,129 +738,48 @@ def _skew_split_signal(
         raise ValueError(
             f"skew split with loess detrend needs window >= {LOESS_WIDTH}"
         )
-    # filtfilt = two 'same' convolutions -> n_taps-1 context samples each
-    # side; a single forward pass needs (n_taps-1)/2, but the upper bound
-    # costs nothing vs split_size. savgol baselines need their half-window
-    # of RAW samples beyond the filter context.
-    # loess/savgol baselines are local regressions over a centered window
+    # savgol/loess baselines are local regressions over a centered window
     # (clipped at the TRUE series edges, which coincide with chunk-slice
-    # edges): half their window of raw context each side makes interior
-    # values exact
+    # edges): half their window of raw context makes interior values
+    # exact. filtfilt = two 'same' convolutions -> n_taps-1 context samples
+    # each side; a single forward pass needs (n_taps-1)/2, but the upper
+    # bound costs nothing vs split_size.
     margin = (
         (_SAVGOL_HALF if detrend == "savgol" else 0)
         + (LOESS_WIDTH // 2 if detrend == "loess" else 0)
         + ((n_taps - 1) if band is not None else 0)
     )
 
-    slim = df.select(group_col, "turn_idx", "ts", value_col)
-    valid = F.col(value_col).isNotNull() & ~F.isnan(F.col(value_col))
-
-    w_ord = W.partitionBy(group_col).orderBy("turn_idx", "ts")
+    x = F.col(value_col)
+    valid = x.isNotNull() & ~F.isnan(x)
     w_all = W.partitionBy(group_col)
-    v = (
-        slim.filter(valid)
-        .withColumn("__sidx", (F.row_number().over(w_ord) - 1).cast("long"))
-        .withColumn("__n", F.count(F.lit(1)).over(w_all))
-    )
+    w_run = W.partitionBy(group_col).orderBy("turn_idx", "ts").rowsBetween(
+        W.unboundedPreceding, W.currentRow)
+    # dense index among the valid samples; a NaN/NULL row takes the index of
+    # the next valid one (the kernel drops it wherever it lands), so a
+    # conversation with no valid sample still reaches chunk 0's error row
+    v = valid.cast("long")
+    slim = df.select(group_col, "turn_idx", "ts", value_col).withColumn(
+        "__pos", F.sum(v).over(w_run) - v)
     if detrend == "linear":
         # closed-form global least-squares line over the dense sample index:
         # tm = (n-1)/2, Stt = n(n^2-1)/12, slope = (sum(t*x) - n*tm*xm)/Stt
-        n_ = F.col("__n").cast("double")
-        xm = F.avg(value_col).over(w_all)
-        stx = F.sum(F.col("__sidx").cast("double") * F.col(value_col)).over(w_all)
+        n_ = F.sum(v).over(w_all).cast("double")
+        xm = F.avg(F.when(valid, x)).over(w_all)
+        stx = F.sum(F.when(valid, F.col("__pos").cast("double") * x)).over(w_all)
         tm = (n_ - 1) / 2
-        stt = n_ * (n_ * n_ - 1) / 12
-        v = (
-            v.withColumn("__xm", xm)
-            .withColumn(
-                "__slope",
-                F.when(F.col("__n") > 1, (stx - n_ * tm * xm) / stt).otherwise(F.lit(0.0)),
-            )
-        )
-    else:
-        v = v.withColumn("__xm", F.lit(0.0)).withColumn("__slope", F.lit(0.0))
-
-    S, Wn, C = split_size, window, margin
-    i = F.col("__sidx")
-    last_chunk = F.floor(F.greatest(F.col("__n") - Wn, F.lit(0)) / S)
-    k_hi = F.least(F.floor((i + C) / S), last_chunk)
-    k_lo = F.greatest(F.ceil((i - Wn - C + 2).cast("double") / S) - 1, F.lit(0))
-    exploded = v.filter(F.col("__n") >= 4).withColumn(
-        "__chunk", F.explode(F.sequence(k_lo.cast("long"), k_hi.cast("long")))
+        slope = F.when(n_ > 1, (stx - n_ * tm * xm) / (n_ * (n_ * n_ - 1) / 12))
+        slim = slim.withColumn(value_col, x - (
+            xm + F.coalesce(slope, F.lit(0.0)) * (F.col("__pos") - tm)))
+        detrend = False
+    kernel = make_kernel(window=window, overlap=overlap, value_col=value_col,
+                         detrend=detrend, band=band, n_taps=n_taps,
+                         zero_phase=zero_phase)
+    return run_chunked(
+        slim, kernel, schema, [value_col], group_col, F.col("__pos"),
+        ("__pos",), split_size, window, window_step(window, overlap), margin,
+        window + margin - 1,
     )
-
-    taps = fir_bandpass(n_taps, *band) if band else None
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        conv = pdf["conv_id"].min()
-
-        def err(msg: str) -> pd.DataFrame:
-            row = {"conv_id": [conv], "window_idx": [np.int32(-1)], "n": [np.int32(0)]}
-            row.update({c: [np.nan] for c in float_cols})
-            row["error"] = [msg]
-            return pd.DataFrame(row)
-
-        try:
-            k = int(pdf["__chunk"].iloc[0])
-            n_total = int(pdf["__n"].iloc[0])
-            g = pdf.sort_values("__sidx", kind="mergesort")
-            x = g[value_col].to_numpy(dtype="float64")
-            sidx = g["__sidx"].to_numpy(dtype="int64")
-            a0 = int(sidx[0])
-            if detrend == "linear":
-                xm = float(g["__xm"].iloc[0])
-                slope = float(g["__slope"].iloc[0])
-                tm = (n_total - 1) / 2.0
-                x = x - (xm + slope * (sidx.astype("float64") - tm))
-            elif detrend == "savgol":
-                x = savgol_detrend(x)
-            elif detrend == "loess":
-                x = loess_detrend(x)
-            if taps is not None:
-                x = apply_fir_filtfilt(x, taps) if zero_phase else apply_fir(x, taps)
-            if n_total < Wn:  # single full-signal window, chunk 0 holds it all
-                sw = x[None, :]
-                starts = np.array([0], dtype="int64")
-            else:
-                hi = min((k + 1) * S, n_total - Wn + 1)
-                starts = np.arange(k * S, hi, step, dtype="int64")
-                if not len(starts):
-                    return err("")[0:0]
-                sw = np.lib.stride_tricks.sliding_window_view(x, Wn)[starts - a0]
-            out = {
-                "conv_id": conv,
-                "window_idx": (starts // step).astype("int32"),
-                "n": np.full(len(starts), sw.shape[1], dtype="int32"),
-            }
-            out.update(featurize(sw))
-            out["error"] = None
-            return pd.DataFrame(out)
-        except Exception as e:  # F5: error channel, never a task failure
-            return err(f"{type(e).__name__}: {e}")
-
-    split = exploded.groupBy(group_col, "__chunk").applyInPandas(kernel, schema)
-
-    # F5 error rows for <4-sample conversations, JVM-built to match the
-    # base kernel byte-for-byte: the kernel's np.nan feature cells arrive
-    # as SQL NULL (pandas->Arrow treats float NaN as missing), so NULL here
-    nan = F.lit(None).cast("double")
-    tiny = (
-        slim.groupBy(group_col)
-        .agg(F.sum(F.when(valid, 1).otherwise(0)).alias("__nv"))
-        .filter(F.col("__nv") < 4)
-        .select(
-            F.col(group_col).alias("conv_id"),
-            F.lit(-1).cast("int").alias("window_idx"),
-            F.lit(0).cast("int").alias("n"),
-            *[nan.alias(c) for c in float_cols],
-            F.concat(
-                F.lit("group too small: "),
-                F.col("__nv").cast("string"),
-                F.lit(" samples"),
-            ).alias("error"),
-        )
-    )
-    return split.unionByName(tiny)
 
 
 def signal_summary_features_skew_split(
@@ -903,8 +800,9 @@ def signal_summary_features_skew_split(
     tests/test_signal.py (bit-exact for detrend False/'savgol', allclose
     for the global-line 'linear' mode)."""
     return _skew_split_signal(
-        df, _time_featurize, SIGNAL_FEATURE_SCHEMA, _SIGNAL_COLS, value_col, window, overlap,
-        detrend, band, n_taps, zero_phase, split_size, group_col,
+        df, make_signal_batch_kernel, SIGNAL_FEATURE_SCHEMA, value_col,
+        window, overlap, detrend, band, n_taps, zero_phase, split_size,
+        group_col,
     )
 
 
@@ -923,6 +821,7 @@ def freq_domain_features_skew_split(
     """Skew path for :func:`freq_domain_features` — same chunking contract
     as :func:`signal_summary_features_skew_split`."""
     return _skew_split_signal(
-        df, _freq_features, FREQ_FEATURE_SCHEMA, _FREQ_COLS, value_col, window, overlap,
-        detrend, band, n_taps, zero_phase, split_size, group_col,
+        df, make_freq_batch_kernel, FREQ_FEATURE_SCHEMA, value_col,
+        window, overlap, detrend, band, n_taps, zero_phase, split_size,
+        group_col,
     )

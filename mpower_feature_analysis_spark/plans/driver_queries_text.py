@@ -413,7 +413,7 @@ def q_window_kernel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_window_kernel() -> str:
-    """DuckDB re-spec of kernels.make_window_kernel: strided overlapping
+    """DuckDB re-spec of kernels._window_kernel: strided overlapping
     windows over the per-conversation gap series, mean/median/IQR +
     10-bin histogram entropy, plus F5 error rows for <2-turn groups."""
     from ..transcripts import TRANSCRIPTS_CTE

@@ -1346,12 +1346,23 @@ def snapshot_info(table_dir: str, snapshot_id: int | None = None) -> dict:
 
 
 def _changed_files(
-    table_dir: str, from_id: int, to_id: int
+    table_dir: str, from_id: int | None, to_id: int,
+    manifests: dict | None = None,
 ) -> tuple[list[dict], list[dict]]:
-    a = _load_manifest(table_dir, from_id)
-    b = _load_manifest(table_dir, to_id)
-    ap = {e["path"]: e for e in a["files"]}
-    bp = {e["path"]: e for e in b["files"]}
+    """(removed, added) manifest entries of snapshot ``to_id`` vs
+    ``from_id`` — pure manifest JSON, no data touched. ``from_id=None``
+    (the parent of a root commit) diffs against the empty table.
+    ``manifests`` is an optional id→manifest cache, filled as manifests
+    are parsed, so a caller diffing many commits parses each once."""
+    manifests = {} if manifests is None else manifests
+
+    def files(sid: int) -> dict:
+        if sid not in manifests:
+            manifests[sid] = _load_manifest(table_dir, sid)
+        return {e["path"]: e for e in manifests[sid]["files"]}
+
+    ap = {} if from_id is None else files(from_id)
+    bp = files(to_id)
     removed = [ap[p] for p in sorted(set(ap) - set(bp))]
     added = [bp[p] for p in sorted(set(bp) - set(ap))]
     return removed, added
@@ -1367,7 +1378,7 @@ def file_changelog(table_dir: str, from_id: int, to_id: int) -> list[dict]:
 
 
 #: operations whose commits rewrite file layout but are row-content-identical
-#: (mirrors streaming.snapshot_source._SKIPPED_OPS)
+#: (the streaming CDC reader skips them too)
 _MAINTENANCE_OPS = frozenset({"compact", "cluster"})
 
 

@@ -74,7 +74,9 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..sources.snapshots import (
+    _MAINTENANCE_OPS,
     SnapshotConflictError,
+    _changed_files,
     _commit,
     _current_id,
     _file_entries,
@@ -82,42 +84,12 @@ from ..sources.snapshots import (
     snapshot_ids,
 )
 
-#: maintenance operations are content-identical rewrites: never streamed
-_SKIPPED_OPS = frozenset({"compact", "cluster"})
-
 
 @dataclass
 class _FilePartition(InputPartition):
     change: str          # 'add' | 'remove'
     path: str            # absolute parquet path
     snapshot_id: int
-
-
-def _changed_entries(
-    table_dir: str,
-    sid: int,
-    manifests: dict | None = None,
-) -> tuple[list[dict], list[dict]]:
-    """(removed, added) manifest entries for commit ``sid`` vs its parent —
-    pure manifest JSON, no data touched.  ``manifests`` is an optional
-    id→manifest cache so a micro-batch's offset resolution parses each
-    manifest once instead of three times."""
-    manifests = manifests if manifests is not None else {}
-
-    def get(i):
-        if i not in manifests:
-            manifests[i] = _load_manifest(table_dir, i)
-        return manifests[i]
-
-    m = get(sid)
-    if m["parent"] is None:
-        return [], list(m["files"])
-    pm = get(m["parent"])
-    ap = {e["path"]: e for e in pm["files"]}
-    bp = {e["path"]: e for e in m["files"]}
-    removed = [ap[p] for p in sorted(set(ap) - set(bp))]
-    added = [bp[p] for p in sorted(set(bp) - set(ap))]
-    return removed, added
 
 
 class SnapshotCDCStreamReader(DataSourceStreamReader):
@@ -159,7 +131,7 @@ class SnapshotCDCStreamReader(DataSourceStreamReader):
         missing += sorted(
             m["parent"]
             for m in manifests.values()
-            if m["operation"] not in _SKIPPED_OPS
+            if m["operation"] not in _MAINTENANCE_OPS
             and m["parent"] is not None
             and m["parent"] not in available
         )
@@ -173,9 +145,10 @@ class SnapshotCDCStreamReader(DataSourceStreamReader):
         out: list[InputPartition] = []
         root = os.path.abspath(self._dir)
         for sid in wanted:
-            if manifests[sid]["operation"] in _SKIPPED_OPS:
+            if manifests[sid]["operation"] in _MAINTENANCE_OPS:
                 continue
-            removed, added = _changed_entries(self._dir, sid, manifests)
+            removed, added = _changed_files(
+                self._dir, manifests[sid]["parent"], sid, manifests)
             for change, entries in (("remove", removed), ("add", added)):
                 for e in entries:
                     out.append(

@@ -229,12 +229,19 @@ def ngram_jaccard_capped_pairs(corpus, cap, min_jaccard=0.0, id_col="doc_id",
                                text_col="text", k=5) -> DataFrame:
     """The capped n-gram path as a shingle-frequency aggregate, a cap join
     and a shingle self-join, verified against the full string shingle
-    sets of the whole corpus."""
-    sh = corpus.select(
+    sets of the whole corpus. A shingle's frequency counts distinct
+    non-NULL ids, and one text per id is shingled, so rows that repeat an
+    (id, text) pair count once."""
+    sh = corpus.dropDuplicates([id_col]).select(
         F.col(id_col),
         F.array_distinct(word_shingles(text_col, k=k, out="sh")).alias("sh"),
     )
-    exh = exploded_shingle_hashes(corpus, id_col, text_col, k)
+    exh = (
+        exploded_shingle_hashes(corpus, id_col, text_col, k)
+        .filter(F.col(id_col).isNotNull())
+        .select(id_col, "gh")
+        .distinct()
+    )
     freq = exh.groupBy("gh").agg(F.count(F.lit(1)).alias("__f"))
     exc = exh.join(freq.filter(F.col("__f") <= cap), "gh").select(id_col, "gh")
     a, b = exc.alias("a"), exc.alias("b")

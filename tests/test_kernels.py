@@ -50,7 +50,9 @@ def test_matches_oracle_across_batch_boundaries(
 def test_null_ts_or_turn_idx_gives_error_row(spark):
     """A NULL ts or turn_idx used to be cast to int64 as a garbage value
     (a 2.3e18 ms gap); now the conversation is one F5 error row."""
-    from mpower_feature_analysis_spark.operators.kernels import make_window_kernel
+    import pyarrow as pa
+
+    from mpower_feature_analysis_spark.operators.kernels import _window_kernel
     from mpower_feature_analysis_spark.utils import ts_ms
 
     # "a": 7 turns, the last ts NULL; "b": one turn_idx NULL; "c": clean
@@ -73,11 +75,13 @@ def test_null_ts_or_turn_idx_gives_error_row(spark):
     assert c["mean_gap_ms"].iloc[0] == 4000.0  # gaps 1, 3, 5, 7 s
 
     pdf = t.select("conv_id", "turn_idx", ts_ms("ts").alias("ts_ms")).toPandas()
-    kernel = make_window_kernel(window=4)
+    kernel = _window_kernel(window=4, overlap=0.5)
     for conv, msg in (("a", errs["a"]), ("b", errs["b"])):
-        got = kernel(pdf[pdf["conv_id"] == conv])
+        g = pdf[pdf["conv_id"] == conv].sort_values(
+            ["turn_idx", "ts_ms"], kind="mergesort")
+        got = kernel(pa.Table.from_pandas(g, preserve_index=False))
         assert list(got["error"]) == [msg]
-        assert got["mean_gap_ms"].isna().all()
+        assert np.isnan(got["mean_gap_ms"]).all()
 
 
 def _operators():
@@ -125,22 +129,27 @@ def test_error_rows_carry_null_not_nan(spark, op):
     assert out.filter(F.col("error").isNull()).count() > 0
 
 
-def test_skew_split_identical(spark, dedup_df):
+def test_skew_split_identical(spark, dedup_df, request):
     """Hot-conversation range-splitting with boundary overlap reproduces the
-    unsplit output exactly — SURVEY.md §4 skew handling for kernels."""
+    unsplit output exactly — SURVEY.md §4 skew handling for kernels. The
+    second pass runs under 32-row Arrow batches, so (conversation, chunk)
+    groups span batches and are carried."""
     from mpower_feature_analysis_spark.operators import (
         windowed_summary_features_skew_split,
     )
     a = _run(dedup_df, window=8, overlap=0.5)
-    for split in (16, 64):
-        b = (
-            windowed_summary_features_skew_split(
-                dedup_df, window=8, overlap=0.5, split_turns=split
+    for batches in (None, "batches_of_32"):
+        if batches:
+            request.getfixturevalue(batches)
+        for split in (16, 64):
+            b = (
+                windowed_summary_features_skew_split(
+                    dedup_df, window=8, overlap=0.5, split_turns=split
+                )
+                .orderBy(*SORT)
+                .toPandas()
             )
-            .orderBy(*SORT)
-            .toPandas()
-        )
-        pd.testing.assert_frame_equal(a, b)
+            pd.testing.assert_frame_equal(a, b)
 
 
 def test_skew_split_rejects_misaligned_chunk(spark, dedup_df):

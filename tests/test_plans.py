@@ -166,9 +166,9 @@ def test_loess_residuals_single_exchange(spark):
 
 def test_signal_skew_split_bounded_exchanges(spark):
     """The skew path pays bounded coordination: the sample-index window
-    (one exchange on conv_id) + the per-(conv, chunk) applyInPandas
-    grouping — it must NOT degenerate into per-iteration or per-chunk
-    shuffles of the full input."""
+    (one exchange on conv_id) + the carry harness's repartition on the
+    (conv, chunk) key — it must NOT degenerate into per-iteration or
+    per-chunk shuffles of the full input."""
     from mpower_feature_analysis_spark.operators.signal import (
         signal_summary_features_skew_split,
     )
@@ -180,6 +180,30 @@ def test_signal_skew_split_bounded_exchanges(spark):
     )
     plan = _plan(signal_summary_features_skew_split(t, window=16, split_size=64))
     assert _exchanges(plan) <= 3
+
+
+def test_skew_splits_run_on_the_carry_harness(spark):
+    """All three skew splits run the operators' own batch kernels on the
+    mapInArrow carry harness: no grouped-pandas node in any plan."""
+    from mpower_feature_analysis_spark.operators import (
+        freq_domain_features_skew_split,
+        signal_summary_features_skew_split,
+        windowed_summary_features_skew_split,
+    )
+    t = spark.read.parquet(f"{SF}/events.parquet").selectExpr(
+        "CAST(user_id AS STRING) AS conv_id",
+        "CAST(event_id AS INT) AS turn_idx",
+        "ts",
+        "CAST(value AS DOUBLE) AS value",
+    )
+    for df in (
+        windowed_summary_features_skew_split(t, window=8, split_turns=64),
+        signal_summary_features_skew_split(t, window=16, split_size=64),
+        freq_domain_features_skew_split(t, window=16, split_size=64),
+    ):
+        plan = _plan(df)
+        assert "FlatMapGroupsInPandas" not in plan
+        assert "MapInArrow" in plan
 
 
 def test_presorted_flagship_zero_exchange_and_hash_identical(

@@ -60,6 +60,19 @@ def test_detrend_removes_line():
     assert abs(slope) < 1e-12
 
 
+def test_linear_detrend_rows_bit_equal_1d():
+    """The stacked linear detrend the batch and per-group kernels share is
+    BIT-equal, row by row, to the 1-D least-squares line."""
+    from mpower_feature_analysis_spark.operators.signal import _detrend_rows
+
+    rng = np.random.default_rng(5)
+    for n in (0, 1, 2, 7, 64, 1000):
+        X = np.cumsum(rng.normal(size=(5, n)), axis=1)
+        got = _detrend_rows(X, "linear")
+        for g in range(len(X)):
+            np.testing.assert_array_equal(got[g], linear_detrend(X[g]))
+
+
 def test_fir_bandpass_response():
     taps = fir_bandpass(41, 0.15, 0.35)
     t = np.arange(2000, dtype="float64")
@@ -306,19 +319,25 @@ def _mixed_signal_df(spark, n_hot=5000, seed=7):
     (False, (0.1, 0.4)),
     ("savgol", (0.1, 0.4)),
 ])
-def test_signal_skew_split_bit_exact(spark, detrend, band):
+def test_signal_skew_split_bit_exact(spark, detrend, band, request):
     """Chunk-local detrend/filter with the context margin reproduces the
     unsplit kernel BIT-EXACTLY for local modes (savgol/none), filtered or
-    not — including NaN turns, sub-window conversations, and error rows."""
+    not — including NaN turns, sub-window conversations, and error rows.
+    The second pass runs under 32-row Arrow batches, so (conversation,
+    chunk) groups span batches and are carried."""
     from mpower_feature_analysis_spark.operators.signal import (
         signal_summary_features_skew_split,
     )
     df = _mixed_signal_df(spark)
     base = _collect_feat(signal_summary_features(
         df, window=64, overlap=0.5, detrend=detrend, band=band))
-    split = _collect_feat(signal_summary_features_skew_split(
-        df, window=64, overlap=0.5, detrend=detrend, band=band, split_size=512))
-    pd.testing.assert_frame_equal(base, split, check_exact=True)
+    for batches in (None, "batches_of_32"):
+        if batches:
+            request.getfixturevalue(batches)
+        split = _collect_feat(signal_summary_features_skew_split(
+            df, window=64, overlap=0.5, detrend=detrend, band=band,
+            split_size=512))
+        pd.testing.assert_frame_equal(base, split, check_exact=True)
 
 
 def test_signal_skew_split_linear_allclose(spark):

@@ -188,6 +188,24 @@ def test_ngram_jaccard_exact_full_recall(spark, docs):
         assert abs(got[k] - want[k]) < 1e-12
 
 
+def test_ngram_jaccard_exact_true_mode_matches_hashed(spark, docs):
+    """The string-exact mode — the capped path, which verifies survivors
+    against TRUE shingle-string sets (zero hash epsilon) — with a cap no
+    bucket reaches must produce the identical pair set + bit-identical
+    jaccard values as the default xxhash64-keyed uncapped path on a
+    collision-free corpus."""
+    from mpower_feature_analysis_spark.functions.dedup_text import (
+        ngram_jaccard_exact_pairs,
+    )
+    hashed = {(r.id_a, r.id_b): r.jaccard
+              for r in ngram_jaccard_exact_pairs(docs, min_jaccard=0.5).collect()}
+    exact = {(r.id_a, r.id_b): r.jaccard
+             for r in ngram_jaccard_exact_pairs(
+                 docs, min_jaccard=0.5,
+                 max_shingle_freq=docs.count()).collect()}
+    assert exact == hashed and len(exact) > 0
+
+
 def test_ngram_jaccard_exact_hot_shingle_cap(spark):
     """max_shingle_freq drops corpus-frequent shingles from candidate
     generation, bounding the join blowup from boilerplate."""
@@ -205,52 +223,77 @@ def test_ngram_jaccard_exact_hot_shingle_cap(spark):
     assert uncapped.count() == 30 * 29 / 2
 
 
-def test_ngram_jaccard_capped_duplicate_doc_id(spark):
-    """A doc id repeated across input rows yields no ``id_a == id_b``
-    self-pair on the capped path, and the pair set equals the one of the
-    same corpus with unique ids."""
+def _ngram_paths():
     from mpower_feature_analysis_spark.functions.dedup_text import (
         ngram_jaccard_exact_pairs,
     )
-    base = " ".join(f"w{j}" for j in range(12))
-    rows = [(i, base + " " + " ".join(f"t{i}_{j}" for j in range(i % 3)), "en")
-            for i in range(6)]
-    schema = "doc_id long, text string, lang string"
-    uniq = spark.createDataFrame(rows, schema)
-    dup = spark.createDataFrame(rows + [rows[2]], schema)
 
-    def pair_set(df):
-        return {(r.id_a, r.id_b, r.jaccard) for r in ngram_jaccard_exact_pairs(
-            df, min_jaccard=0.0, max_shingle_freq=8).collect()}
+    def verify(df):
+        cands = df.sparkSession.createDataFrame(
+            [(a, b) for a in range(1, 5) for b in range(1, 5)],
+            "id_a long, id_b long")
+        return ngram_jaccard_pairs(cands, df, min_jaccard=0.0)
 
-    want = pair_set(uniq)
-    assert want and all(a < b for a, b, _ in want)
-    got = pair_set(dup)
-    assert all(a != b for a, b, _ in got)
-    assert got == want
+    return {
+        "uncapped": lambda df: ngram_jaccard_exact_pairs(df, min_jaccard=0.0),
+        "capped": lambda df: ngram_jaccard_exact_pairs(
+            df, min_jaccard=0.0, max_shingle_freq=8),
+        "verify": verify,
+    }
+
+
+@pytest.mark.parametrize("path", sorted(_ngram_paths()))
+def test_ngram_jaccard_duplicate_doc_id(spark, path):
+    """Input rows that repeat an (id, text) pair count once on every n-gram
+    entry point: the output equals, row for row, that of the de-duplicated
+    corpus — no ``id_a == id_b`` self-pair, no pair twice, no Jaccard
+    above 1, and no failed task (ANSI division by zero)."""
+    text = " ".join(f"w{j}" for j in range(17))  # 13 distinct 5-shingles
+    rows = [(1, text), (1, text), (2, text),
+            (3, text.replace("w16", "x16")), (4, "an unrelated short doc"),
+            (3, text.replace("w16", "x16"))]
+    schema = "doc_id long, text string"
+    uniq = spark.createDataFrame(sorted(set(rows)), schema)
+    dup = spark.createDataFrame(rows, schema)
+    run = _ngram_paths()[path]
+
+    def pairs(df):
+        return sorted((r.id_a, r.id_b, r.jaccard) for r in run(df).collect())
+
+    want = pairs(uniq)
+    assert want and all(a != b and 0.0 <= j <= 1.0 for a, b, j in want)
+    assert pairs(dup) == want
 
 
 def test_exploded_shingles_arrow_equals_expression(spark, docs):
-    """The Arrow shingle kernel reproduces the JVM expression path exactly
-    (same distinct (doc, shingle) set, incl. short/empty texts)."""
+    """The Arrow shingle-hash kernel keeps exactly the distinct shingles of
+    the JVM expression path: per doc, its row count and its ``sz`` stamp
+    equal ``size(array_distinct(word_shingles))``, short/empty texts
+    included."""
     from mpower_feature_analysis_spark.functions.dedup_text import (
-        exploded_word_shingles,
+        exploded_shingle_hashes,
     )
     from mpower_feature_analysis_spark.functions.text import word_shingles
     extra = spark.createDataFrame(
-        [(900, "", "en"), (901, "   ", "en"), (902, "one two", "en")],
+        [(900, "", "en"), (901, "   ", "en"), (902, "one two", "en"),
+         (903, "a b c d e a b c d e", "en")],
         "doc_id long, text string, lang string",
     )
     d = docs.unionByName(extra)
-    arrow = {(r.doc_id, r.g) for r in exploded_word_shingles(d).collect()}
+    exh = exploded_shingle_hashes(d).collect()
+    rows, stamps = {}, {}
+    for r in exh:
+        rows[r.doc_id] = rows.get(r.doc_id, 0) + 1
+        stamps.setdefault(r.doc_id, set()).add(r.sz)
     expr = {
-        (r.doc_id, r.g)
+        r.doc_id: r.n
         for r in d.select(
             "doc_id",
-            F.explode(F.array_distinct(word_shingles("text", 5, "sh"))).alias("g"),
+            F.size(F.array_distinct(word_shingles("text", 5, "sh"))).alias("n"),
         ).collect()
     }
-    assert arrow == expr
+    assert rows == expr
+    assert stamps == {i: {n} for i, n in expr.items()}
 
 
 def test_simhash_hot_bucket_cap(spark):
@@ -285,18 +328,18 @@ def test_simhash_cap_preserves_small_buckets(spark, docs):
 
 
 def test_exploded_shingles_string_ids(spark):
-    """ADVICE round 2: the mapInPandas output schema derives the id type
-    from the input schema — string doc ids must round-trip."""
+    """ADVICE round 2: the kernel's output schema derives the id type from
+    the input schema — string doc ids must round-trip."""
     from mpower_feature_analysis_spark.functions.dedup_text import (
-        exploded_word_shingles,
+        exploded_shingle_hashes,
     )
     df = spark.createDataFrame(
         [("docA", "one two three four five six"), ("docB", "alpha beta")],
         "doc_id string, text string",
     )
-    got = exploded_word_shingles(df, k=5).collect()
-    assert {r.doc_id for r in got} == {"docA", "docB"}
-    assert any(r.g == "one two three four five" for r in got)
+    got = exploded_shingle_hashes(df, k=5).collect()
+    assert sorted((r.doc_id, r.sz) for r in got) == [
+        ("docA", 2), ("docA", 2), ("docB", 1)]
 
 
 def test_simhash_block_layout_pigeonhole_guarantee():
@@ -401,21 +444,6 @@ def test_simhash_wide_blocks_planted_recall(spark):
         assert planted <= pairs, (b, planted - pairs)
 
 
-def test_ngram_jaccard_exact_true_mode_matches_hashed(spark, docs):
-    """exact=True joins on full shingle STRINGS (zero hash epsilon) and
-    must produce the identical pair set + bit-identical jaccard values as
-    the default xxhash64-keyed path on a collision-free corpus."""
-    from mpower_feature_analysis_spark.functions.dedup_text import (
-        ngram_jaccard_exact_pairs,
-    )
-    hashed = {(r.id_a, r.id_b): r.jaccard
-              for r in ngram_jaccard_exact_pairs(docs, min_jaccard=0.5).collect()}
-    exact = {(r.id_a, r.id_b): r.jaccard
-             for r in ngram_jaccard_exact_pairs(
-                 docs, min_jaccard=0.5, exact=True).collect()}
-    assert exact == hashed and len(exact) > 0
-
-
 def test_materialize_unpersist_all(spark, docs):
     """'persist'-mode frames are parked in the registry and released by
     unpersist_all (round-5 advice: CacheManager holds strong refs, so a
@@ -442,30 +470,21 @@ def test_materialize_unpersist_all(spark, docs):
 
 
 def test_ngram_exact_capped_persists_no_single_consumer_frame(spark, docs):
-    """exact=True with a cap: the exploded shingle frame feeds only the
-    candidate groupBy, so it takes no materialize barrier — the call parks
-    exactly the hashed capped path's frames (candidates + verify shingle
-    arrays), one fewer than before, and its pair set is unchanged."""
+    """With a cap, the exploded shingle frame feeds only the candidate
+    groupBy, so it takes no materialize barrier: the call parks exactly
+    two frames (candidates + verify shingle arrays)."""
     from mpower_feature_analysis_spark.functions.dedup_text import (
         ngram_jaccard_exact_pairs,
     )
     from mpower_feature_analysis_spark.utils import _PERSISTED, unpersist_all
 
-    def pairs(df):
-        return {(r.id_a, r.id_b, round(r.jaccard, 12)) for r in df.collect()}
-
     unpersist_all()
-    exact = ngram_jaccard_exact_pairs(
-        docs, min_jaccard=0.3, max_shingle_freq=3, exact=True)
-    n_exact = len(_PERSISTED)
-    got = pairs(exact)
+    capped = ngram_jaccard_exact_pairs(docs, min_jaccard=0.3, max_shingle_freq=3)
+    n_parked = len(_PERSISTED)
+    got = capped.collect()
     unpersist_all()
-    hashed = ngram_jaccard_exact_pairs(docs, min_jaccard=0.3, max_shingle_freq=3)
-    n_hashed = len(_PERSISTED)
-    want = pairs(hashed)
-    unpersist_all()
-    assert n_exact == n_hashed == 2
-    assert got == want and len(got) > 0
+    assert n_parked == 2
+    assert len(got) > 0
 
 
 def test_ngram_kernel_pairs_equal_self_join(spark, docs):
