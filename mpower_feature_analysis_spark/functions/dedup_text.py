@@ -778,6 +778,15 @@ def exploded_shingle_hashes(
     return hw.mapInArrow(run, f"{id_col} {id_type}, gh long, sz long")
 
 
+def _one_text_per_id(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, text) with one row per id: the smallest of its non-NULL texts
+    (NULL when it has none).  The n-gram entry points shingle exactly this
+    text, so an id that carries several texts gets the same one on every
+    path and partitioning (``dropDuplicates`` keeps whichever row comes
+    first), and its shingles never count twice in one intersection."""
+    return docs.groupBy(id_col).agg(F.min(text_col).alias(text_col))
+
+
 def ngram_jaccard_exact_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -794,9 +803,11 @@ def ngram_jaccard_exact_pairs(
     the members of each shingle's bucket, paired — a bounded shuffle,
     never a cross join. Verification is exact set Jaccard.
 
-    Input rows that repeat an (id, text) pair count once: shingle buckets
-    collect a member SET, and the capped verify reads one text per id. No
-    pair is a self-pair, and none is emitted twice.
+    Each id is shingled from one text, the smallest it carries
+    (:func:`_one_text_per_id`, shared with :func:`ngram_jaccard_pairs`),
+    so repeated or conflicting rows of one id count once and every
+    Jaccard is at most 1. No pair is a self-pair, and none is emitted
+    twice.
 
     Scale note: a corpus-frequent shingle is a hot bucket (same failure
     mode as an LSH hot bucket); ``max_shingle_freq`` drops shingles shared
@@ -821,6 +832,7 @@ def ngram_jaccard_exact_pairs(
     single-consumer (one groupBy feeding the in-JVM pair expansion), so it
     takes no barrier at all.
     """
+    docs = _one_text_per_id(docs, id_col, text_col)
     # shingle keys are built hash-native (JVM word xxhash64 + numpy
     # Horner fold) — no shingle strings, no per-row Python (round-7)
     exh = exploded_shingle_hashes(docs, id_col, text_col, shingle_k)
@@ -828,12 +840,11 @@ def ngram_jaccard_exact_pairs(
         # uncapped path (round-7, late): one groupBy on the shingle key +
         # in-JVM pair expansion produces the pair instances of a shingle
         # self-join (``a.gh == b.gh AND a.id < b.id``) from HALF the
-        # shuffled bytes and no join sort. Members are a SET (a repeated
-        # (id, text) row adds nothing), value-sorted by id per bucket
-        # (``sort_array`` orders the structs by leading field ``i``) and
-        # expanded upper-triangle; the ``id_a < id_b`` filter keeps one id
-        # that carries two texts from pairing with itself. The per-doc
-        # ``sz`` stamp rides along. The expansion runs as array
+        # shuffled bytes and no join sort. Members (one per id: one text
+        # per id) are value-sorted by id per bucket (``sort_array`` orders
+        # the structs by leading field ``i``) and expanded upper-triangle,
+        # so every pair has ``id_a < id_b``. The per-doc ``sz`` stamp
+        # rides along. The expansion runs as array
         # higher-order functions, so no rows ever cross the Python
         # boundary here (guide §4.1: the earlier mapInArrow pair kernel's
         # compute was free — a passthrough kernel timed the same — the
@@ -862,7 +873,6 @@ def ngram_jaccard_exact_pairs(
             grouped.filter(F.size("ms") >= 2)
             .select(F.explode(pairs).alias("p"))
             .select("p.*")
-            .filter(F.col("id_a") < F.col("id_b"))
         )
         j = inst.groupBy("id_a", "id_b").agg(
             F.count(F.lit(1)).alias("isz"),
@@ -892,8 +902,8 @@ def ngram_jaccard_exact_pairs(
     #    passes over it (freq aggregate, cap join, self-join both sides).
     # 2. The shingle STRING arrays — by far the heaviest frame here — are
     #    built only for docs that appear in a candidate pair (semi-join),
-    #    one text per id, not the whole corpus; candidates are few by
-    #    design, so the verify joins carry O(candidates) array payloads.
+    #    not the whole corpus; candidates are few by design, so the
+    #    verify joins carry O(candidates) array payloads.
     #
     # The candidate frame has three consumers (both id-harvest branches +
     # the verify join base), so it takes a materialize barrier.
@@ -914,7 +924,7 @@ def ngram_jaccard_exact_pairs(
     # two consumers (sh_a / sh_b join branches) — barrier the array build
     # or the semi-join + shingling runs once per branch
     sh = materialize(
-        docs.join(ids, id_col, "leftsemi").dropDuplicates([id_col]).select(
+        docs.join(ids, id_col, "leftsemi").select(
             F.col(id_col),
             F.array_distinct(
                 word_shingles(text_col, k=shingle_k, out="sh")
@@ -946,9 +956,9 @@ def ngram_jaccard_pairs(
     """Verify candidate pairs with exact shingle-set Jaccard.
 
     ``candidates`` has (id_a, id_b); Jaccard is computed over each doc's
-    DISTINCT k-word shingle set. Doc rows that repeat an (id, text) pair
-    count once (one text per id is shingled), and a self-pair candidate
-    (``id_a == id_b``) is dropped.
+    DISTINCT k-word shingle set. Each id is shingled from one text, the
+    smallest it carries (as in :func:`ngram_jaccard_exact_pairs`), and a
+    self-pair candidate (``id_a == id_b``) is dropped.
 
     Round-7 shape (guide §2.3/§4): the old form evaluated the interpreted
     per-shingle ``rolling_hash_shingles`` expression tree over EVERY doc
@@ -977,7 +987,8 @@ def ngram_jaccard_pairs(
         .unionByName(cand.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    docs_c = docs.join(ids, id_col, "leftsemi").dropDuplicates([id_col])
+    docs_c = _one_text_per_id(
+        docs.join(ids, id_col, "leftsemi"), id_col, text_col)
     # three consumers (both pair sides + the presence/size aggregate):
     # barrier the kernel output or the shingling chain runs once per branch
     exh = materialize(

@@ -30,7 +30,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..utils import ts_ms
@@ -367,13 +367,23 @@ def windowed_summary_features_skew_split(
     dense-turn_idx input (asserted by tests/test_kernels.py). Requires
     split_turns to be a multiple of the window step. A 100M-turn
     conversation becomes ~24k bounded tasks instead of one straggler.
+    One window aggregate counts each conversation's NULL ``ts`` /
+    ``turn_idx`` turns first; a conversation with any goes whole to chunk
+    0 and gets the unsplit operator's error row.
     """
     slim = transcripts.select(group_col, "turn_idx", ts_ms("ts").alias("ts_ms"))
-    # window g (on gap g, between turns g and g+1) reads turns [g, g+window];
-    # a NULL turn_idx goes to chunk 0, whose kernel reports it (F5)
+    # a conversation with a NULL ts or turn_idx goes whole to chunk 0,
+    # whose kernel sees all of its turns and emits the one error row the
+    # unsplit operator emits (F5); a chunk past 0 would see the NULL only
+    # locally and drop it with the chunk's error rows
+    nulls = F.count(F.when(
+        F.col("turn_idx").isNull() | F.col("ts_ms").isNull(), 1
+    )).over(Window.partitionBy(group_col))
+    slim = slim.withColumn(
+        "__pos", F.when(nulls > 0, F.lit(0)).otherwise(F.col("turn_idx")))
+    # window g (on gap g, between turns g and g+1) reads turns [g, g+window]
     return run_chunked(
         slim, _window_kernel(window, overlap), WINDOW_FEATURE_SCHEMA,
-        ["turn_idx", "ts_ms"], group_col, F.coalesce(F.col("turn_idx"), F.lit(0)),
-        ("turn_idx", "ts_ms"), split_turns, window, window_step(window, overlap),
-        0, window,
+        ["turn_idx", "ts_ms"], group_col, F.col("__pos"), ("turn_idx", "ts_ms"),
+        split_turns, window, window_step(window, overlap), 0, window,
     )

@@ -22,31 +22,32 @@ advances by CDC:
    SAME conversation, so every feature row of an unaffected conversation
    is provably unchanged — no recompute, no rewrite;
 4. the flagship pipeline (`plans/pipeline.py`) reruns on the affected
-   conversations only, and :func:`merge_into` swaps exactly those
-   conversations' feature rows in one atomic copy-on-write commit.
+   conversations only, and one copy-on-write merge swaps exactly those
+   conversations' feature rows in one atomic commit.
 
 Cost model at 100 TB: changelog scan is O(changed files) — a plain scan
 with no shuffle when the range only appends (the common churn), one
-``exceptAll`` over the changed files when it also rewrites.  Nothing is
-persisted, so each of the changelog's three consumers (the keyed read's
-key collect, the states semi-join, the merge's delete scope) reads it
-again: an append-only range re-scans the changed files, a two-sided one
-runs its ``exceptAll`` three times.  That is still O(changed files), and
-on a 60k-turn, 16-file table (4 vCPU) an upsert refresh ran faster this
-way than with the changed set persisted.  Recompute is O(affected
-conversations' turns) and runs once, inside the merge's insert write;
-the merge rewrites O(feature files containing an affected
-conversation).  Both keyed steps — the scan that locates the affected
-conversations' turns (:func:`read_snapshot_for_keys`) and the merge —
-collect the affected ``conv_id`` set to the driver (one job each, at
-most ``KEY_LITERAL_MAX + 1`` tuples), prune the file list from manifest
-key-envelope stats and, for a churn-sized set, filter with a literal
-``IN`` list pushed into the parquet scan: no join and no shuffle touch
-the tables.  A set above ``KEY_LITERAL_MAX`` conversations matches by a
-left-semi / left-anti join instead (see :mod:`..sources.snapshots`).  On
-a conv_id-clustered turns table (:func:`cluster_snapshot` or a
-``repartitionByRange`` writer) the scan plans only the churn's
-neighborhood, so NOTHING in the refresh is O(table).
+``exceptAll`` over the changed files when it also rewrites.  ONE job
+collects the changelog's distinct ``conv_id`` set to the driver (at most
+``KEY_LITERAL_MAX + 1`` tuples), and that one key set serves all three
+consumers: the scan that locates the affected conversations' turns
+(:func:`read_snapshot_for_keys`), the ``states`` filter and the merge's
+delete scope, so the changelog is read once per refresh.  For a
+churn-sized set every consumer filters with a literal ``IN`` list pushed
+into the parquet scan, after the manifest key-envelope stats pruned the
+file list: no join and no shuffle touch the tables.  A set above
+``KEY_LITERAL_MAX`` conversations is persisted for the refresh and
+matched by left-semi / left-anti joins instead (see
+:mod:`..sources.snapshots`).  Recompute is O(affected conversations'
+turns) and runs once, inside the merge's single write job, which stores
+it together with the kept rows of the rewritten feature files (O(feature
+files containing an affected conversation)).  On a conv_id-clustered
+turns table (:func:`cluster_snapshot` or a ``repartitionByRange``
+writer) the scan plans only the churn's neighborhood, so NOTHING in the
+refresh is O(table).  On 4 vCPU an 18-row churn step of a 60k-turn,
+16-file table runs 7 Spark jobs: the key collect, the hit-file scan and
+the write (the recompute's shuffle stages are jobs of their own under
+AQE).
 
 Correctness contract (driver gate ``incremental_flagship``): after any
 sequence of appends, upserts, or copy-on-write deletes to the turns
@@ -54,14 +55,19 @@ table, ``incremental_refresh`` leaves the features table bit-identical to
 a from-scratch ``extract_turn_features`` over the current turns snapshot
 — verified hash-exact against a DuckDB oracle that recomputes the full
 pipeline (deletes: a fully-removed conversation's feature rows are
-dropped via the merge's widened ``delete_keys`` scope).
+dropped because the merge's delete scope is the whole affected set, not
+just the conversations the recompute produced rows for).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.snapshots import (
+# merge_into is imported though the refresh merges with _merge_key_set:
+# perfbench's traced run wraps the snapshot names this module holds
+from ..sources.snapshots import (  # noqa: F401
+    _KeySet,
+    _merge_key_set,
     commit_snapshot,
     merge_into,
     read_snapshot,
@@ -210,33 +216,39 @@ def incremental_refresh(
             f"table's source {last}; rebuild with full_refresh()"
         )
     # CDC: reads only the data files that differ between the manifests.
-    # Nothing is persisted: ``changed`` reads the changed files only
-    # (O(churn)) and is re-read by each consumer — three times in all, so
-    # a two-sided range (upserts, copy-on-write deletes) runs its
-    # exceptAll three times; each keyed primitive below collects it to
-    # the driver once.
-    changed = row_changelog(spark, turns_dir, last, cur).select("conv_id")
-    # affected conversations' turns: manifest key-envelope pruning cuts
-    # the file list to the churn's neighborhood BEFORE the exact key
-    # filter runs (O(affected data) on a conv_id-clustered table, never
-    # O(table)).  as_of=cur pins the recompute to the snapshot being
-    # recorded — a concurrent turns commit cannot leak rows the changelog
-    # (last→cur) did not account for
-    turns = read_snapshot_for_keys(
-        spark, turns_dir, changed, ["conv_id"], as_of=cur
+    # ONE job collects the affected conversations (at most
+    # KEY_LITERAL_MAX + 1 of them) and that one key set serves all three
+    # consumers: the keyed turns read, the states filter and the merge's
+    # delete scope.  Above KEY_LITERAL_MAX the key frame is persisted for
+    # the refresh and the consumers join against it.
+    ks = _KeySet(
+        [row_changelog(spark, turns_dir, last, cur)], ["conv_id"], persist=True
     )
-    if states is not None:
-        states = states.join(changed, "conv_id", "left_semi")
-    # merge_into writes its source first, so the recompute runs once.
-    # Delete scope = ALL affected conversations, not just those the
-    # recompute produced rows for: a conversation whose turns were fully
-    # DELETED from the source table is in ``changed`` (its rows appear as
-    # 'remove' CDC) but yields no feature rows — without the wider scope
-    # its stale features would linger
-    sid = merge_into(
-        spark, features_dir, extract_turn_features(turns, states, config),
-        ["conv_id"], properties={SOURCE_KEY: cur}, delete_keys=changed,
-    )
+    try:
+        # affected conversations' turns: manifest key-envelope pruning
+        # cuts the file list to the churn's neighborhood BEFORE the exact
+        # key filter runs (O(affected data) on a conv_id-clustered table,
+        # never O(table)).  ``ks.keys`` carries the set, so the read
+        # collects nothing.  as_of=cur pins the recompute to the snapshot
+        # being recorded — a concurrent turns commit cannot leak rows the
+        # changelog (last→cur) did not account for
+        turns = read_snapshot_for_keys(
+            spark, turns_dir, ks.keys, ["conv_id"], as_of=cur
+        )
+        if states is not None:
+            states = ks.keep(states)
+        # the recompute reads only conversations in ``ks``, so ``ks`` is
+        # the whole delete scope (the recompute's keys ∪ the changed
+        # ones): a conversation whose turns were fully DELETED yields no
+        # feature rows but is in ``ks`` ('remove' CDC rows), so its stale
+        # features are dropped.  One write job stores the recompute with
+        # the kept rows of the rewritten files.
+        sid = _merge_key_set(
+            spark, features_dir, extract_turn_features(turns, states, config),
+            ks, properties={SOURCE_KEY: cur},
+        )
+    finally:
+        ks.unpersist()
     return {
         "refreshed": True,
         "from_snapshot": last,

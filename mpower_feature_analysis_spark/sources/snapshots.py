@@ -10,11 +10,13 @@ engine actually leans on, from scratch, over plain parquet data files:
 * **time travel** — ``read_snapshot(spark, dir, as_of=N)`` plans the scan
   from manifest N's file list; every historical snapshot stays readable
   until explicitly expired.
-* **copy-on-write overwrite** — ``overwrite_where`` rewrites ONLY the data
-  files that contain matching rows (found with one metadata-cheap
-  ``input_file_name()`` aggregation, the analog of Iceberg's manifest-level
-  file pruning); untouched files are carried into the new snapshot by
-  reference, zero bytes copied.
+* **copy-on-write overwrite** — ``overwrite_where`` and ``merge_into``
+  rewrite ONLY the data files that contain matching rows (found with one
+  metadata-cheap ``input_file_name()`` aggregation, the analog of
+  Iceberg's manifest-level file pruning), through one core
+  (``_copy_on_write``) whose single write job stores the inserted rows
+  together with the kept rows; untouched files are carried into the new
+  snapshot by reference, zero bytes copied.
 
 Layout under ``table_dir``::
 
@@ -100,8 +102,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-#: decision log: one DEBUG record per keyed read or merge, built only from
-#: values the driver already holds (no Spark job is added to log it)
+#: decision log: one DEBUG record per keyed read or copy-on-write commit
+#: (merge, overwrite_where), built only from values the driver already
+#: holds (no Spark job is added to log it)
 _LOG = logging.getLogger("mpower_feature_analysis_spark.snapshots")
 
 #: largest distinct key set the keyed primitives match with a literal
@@ -795,73 +798,120 @@ def overwrite_where(
     """Copy-on-write ``DELETE WHERE condition`` + optional insert of
     ``replacement`` rows, as one atomic snapshot.  Only data files that
     actually contain a matching row are rewritten (without their matching
-    rows); all other files move to the new snapshot by reference.  Returns
-    the new snapshot id."""
-    parent = _current_id(table_dir)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshot committed under {table_dir}")
-    m = _load_manifest(table_dir, parent)
-    files = _abs_files(table_dir, m)
-    schema = StructType.fromJson(json.loads(m["schema"]))
-    sid = parent + 1
-
-    entries: list[dict] = []
-    if files:
-        # manifest-stats pre-prune: a file whose min/max range cannot
-        # satisfy the condition contains no deletable row, so it skips the
-        # candidate scan and carries by reference (same as "no hit")
-        conjuncts = _parse_conjuncts(condition)
-        root0 = os.path.abspath(table_dir)
-        may = {
-            os.path.join(root0, e["path"])
-            for e in m["files"]
-            if _file_may_match(e, conjuncts)
-        }
-        scan_files = [f for f in files if f in may]
-        hit = set()
-        if scan_files:
-            scan = spark.read.schema(schema).parquet(*scan_files)
-            # Iceberg-manifest analog: one aggregation finds the file set
-            # that must be rewritten; collect is O(matching files),
-            # metadata-scale.
-            hit = {
-                _norm_path(r[0])
-                for r in scan.filter(condition)
-                .select(F.input_file_name())
-                .distinct()
-                .collect()
-            }
-        keep_abs = [f for f in files if _norm_path(f) not in hit]
-        rewrite_abs = [f for f in files if _norm_path(f) in hit]
-        root = os.path.abspath(table_dir)
-        entries += [
-            e for e in m["files"]
-            if os.path.join(root, e["path"]) in keep_abs
-        ]
-        if rewrite_abs:
-            # DELETE-WHERE semantics: drop rows where the predicate is
-            # TRUE; rows where it evaluates NULL are kept (a bare
-            # ``~condition`` would drop them too)
-            kept_rows = (
-                spark.read.schema(schema)
-                .parquet(*rewrite_abs)
-                .filter(~F.coalesce(F.expr(condition), F.lit(False)))
-            )
-            entries += _file_entries(
-                _write_commit(kept_rows, table_dir, sid, sub="-rw"), table_dir
-            )
+    rows); all other files move to the new snapshot by reference.  The
+    manifest stats pre-prune the candidate files, and one write job
+    stores ``replacement`` together with the kept rows of the rewritten
+    files (:func:`_copy_on_write`).  A row where ``condition`` is NULL is
+    kept (SQL DELETE semantics).  Returns the new snapshot id."""
+    m = _load_manifest(table_dir, None)
     if replacement is not None:
-        if [(f.name, f.dataType) for f in replacement.schema.fields] != [
-            (f.name, f.dataType) for f in schema.fields
-        ]:
-            raise ValueError(
-                f"replacement schema {replacement.schema.simpleString()} "
-                f"mismatch vs table {schema.simpleString()}"
-            )
-        entries += _file_entries(
-            _write_commit(replacement, table_dir, sid, sub="-add"), table_dir
+        _check_schema(replacement, m, "replacement")
+    return _copy_on_write(
+        spark, table_dir, m, _WhereScope(condition), replacement,
+        "overwrite_where", "overwrite_where",
+    )
+
+
+class _WhereScope:
+    """The delete scope of ``DELETE WHERE condition``, in the form
+    :func:`_copy_on_write` reads (see :class:`_KeySet` for the keyed one)."""
+
+    def __init__(self, condition: str):
+        self.condition = condition
+        self.conjuncts = _parse_conjuncts(condition)
+
+    def may_match(self, entry: dict) -> bool:
+        return _file_may_match(entry, self.conjuncts)
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        return df.filter(self.condition)
+
+    def drop(self, df: DataFrame) -> DataFrame:
+        # a bare ``~condition`` would also drop the rows where it is NULL
+        return df.filter(~F.coalesce(F.expr(self.condition), F.lit(False)))
+
+    def describe(self) -> dict:
+        return {"where": self.condition}
+
+
+def _check_schema(df: DataFrame, m: dict, what: str) -> None:
+    """``df`` must have the table's (name, type) pairs, in order: a name-only
+    check would let a mistyped frame commit files the manifest schema
+    can't read back."""
+    schema = StructType.fromJson(json.loads(m["schema"]))
+    if [(f.name, f.dataType) for f in df.schema.fields] != [
+        (f.name, f.dataType) for f in schema.fields
+    ]:
+        raise ValueError(
+            f"{what} schema {df.schema.simpleString()} mismatch vs table "
+            f"{schema.simpleString()}"
         )
-    return _commit(table_dir, "overwrite_where", m["schema"], entries, parent)
+
+
+def _copy_on_write(
+    spark: SparkSession,
+    table_dir: str,
+    m: dict,
+    scope,
+    inserts: DataFrame | None,
+    op: str,
+    operation: str,
+    properties: dict | None = None,
+    written: list[dict] | None = None,
+) -> int:
+    """The copy-on-write commit every file-scoped write shares: delete the
+    rows ``scope`` matches (a :class:`_WhereScope` or :class:`_KeySet`;
+    ``None`` deletes nothing), insert ``inserts``, commit on top of
+    manifest ``m`` as ``operation``, logging the decision as ``op``.
+
+    Candidate files come from manifest stats (``scope.may_match``), ONE
+    ``input_file_name()`` aggregation over the candidates finds the files
+    holding a deletable row, and ONE write job stores ``inserts`` together
+    with the kept rows of those files (``inserts`` must have the table's
+    columns in order).  Every other file carries into the new snapshot by
+    reference.  ``written`` are entries of data files the caller already
+    wrote for this commit.  A concurrent commit since ``m`` raises
+    :class:`SnapshotConflictError` (see the module docstring)."""
+    schema = StructType.fromJson(json.loads(m["schema"]))
+    root = os.path.abspath(table_dir)
+    cand = [
+        os.path.join(root, e["path"]) for e in m["files"]
+        if scope is not None and scope.may_match(e)
+    ]
+    hit = set()
+    if cand:
+        # tag the file BEFORE any join: input_file_name() is per-scan and
+        # cannot resolve once a second file source joins the plan
+        scan = spark.read.schema(schema).parquet(*cand).withColumn(
+            "__file", F.input_file_name()
+        )
+        hit = {
+            _norm_path(r[0])
+            for r in scope.keep(scan).select("__file").distinct().collect()
+        }
+    rewrite = [f for f in cand if _norm_path(f) in hit]
+    gone = set(rewrite)
+    entries = [
+        e for e in m["files"] if os.path.join(root, e["path"]) not in gone
+    ]
+    out = inserts
+    if rewrite:
+        kept = scope.drop(spark.read.schema(schema).parquet(*rewrite))
+        out = kept if out is None else out.union(kept)
+    if out is not None:
+        entries += _file_entries(
+            _write_commit(out, table_dir, m["snapshot_id"] + 1, sub="-cow"),
+            table_dir,
+        )
+    _log_decision(
+        op, table_dir, candidate_files=len(cand),
+        files_pruned=len(m["files"]) - len(cand), files_rewritten=len(rewrite),
+        **(scope.describe() if scope is not None else {}),
+    )
+    return _commit(
+        table_dir, operation, m["schema"], entries + (written or []),
+        m["snapshot_id"], properties,
+    )
 
 
 def _entry_in_key_envelope(entry: dict, key_cols: list[str], env: dict) -> bool:
@@ -906,7 +956,12 @@ class _KeySet:
     A larger set is the join route: a 1-row min/max aggregation gives the
     envelope and rows match by a left-semi / left-anti join against the key
     frame, which Catalyst/AQE plans (a small frame broadcasts).  The
-    envelope test is a NECESSARY condition for a match on either route."""
+    envelope test is a NECESSARY condition for a match on either route.
+
+    ``keys`` is the distinct key frame, tagged with the set: a keyed read
+    handed that frame uses the set instead of collecting again
+    (:func:`_key_set_of`).  The set is also a delete scope of
+    :func:`_copy_on_write` (``may_match`` / ``keep`` / ``drop``)."""
 
     def __init__(
         self, frames: list[DataFrame], key_cols: list[str],
@@ -916,7 +971,10 @@ class _KeySet:
         for f in frames[1:]:
             kf = kf.unionByName(f.select(*key_cols))
         kf = kf.dropna().distinct()
-        self.cols = key_cols
+        self.cols = list(key_cols)
+        # the distinct key frame, tagged with this set (see _key_set_of)
+        self.keys = kf
+        kf._key_set = self
         dtypes = [f.dataType for f in kf.schema.fields]
         # a TimestampType key crosses to the driver as epoch microseconds:
         # a Python datetime is local wall-clock time, which cannot tell
@@ -943,6 +1001,13 @@ class _KeySet:
             self.env = self.frame.agg(*aggs).collect()[0].asDict()
             self.match = None
 
+    def may_match(self, entry: dict) -> bool:
+        """May manifest file ``entry`` hold a row whose key is in the set?"""
+        return _entry_in_key_envelope(entry, self.cols, self.env)
+
+    def describe(self) -> dict:
+        return {"keys": self.size, "literal": self.literal}
+
     def keep(self, df: DataFrame) -> DataFrame:
         """Rows of ``df`` whose key tuple is in the set."""
         if self.literal:
@@ -959,6 +1024,17 @@ class _KeySet:
     def unpersist(self) -> None:
         if self.frame is not None:
             self.frame.unpersist()
+
+
+def _key_set_of(keys: DataFrame, key_cols: list[str]) -> _KeySet:
+    """The key set of ``keys`` over ``key_cols``: the one it carries when
+    it is a :attr:`_KeySet.keys` frame over those columns (no job), else a
+    freshly collected one.  ``vars`` reads the tag without the column
+    lookup ``DataFrame.__getattr__`` would make."""
+    ks = vars(keys).get("_key_set")
+    if ks is not None and ks.cols == list(key_cols):
+        return ks
+    return _KeySet([keys], key_cols)
 
 
 def _key_envelope(tuples: list[tuple], key_cols: list[str]) -> dict:
@@ -1018,7 +1094,7 @@ def _key_match(tuples: list[tuple], key_cols: list[str], dtypes) -> Column:
     ])
 
 
-def _log_keyed(op: str, table_dir: str, **fields) -> None:
+def _log_decision(op: str, table_dir: str, **fields) -> None:
     if _LOG.isEnabledFor(logging.DEBUG):
         rec = {"op": op, "table": table_dir, **fields}
         _LOG.debug("%s", json.dumps(rec, sort_keys=True), extra={"decision": rec})
@@ -1039,20 +1115,22 @@ def merge_into(
     For a source with unique keys this is exactly ``MERGE INTO ... WHEN
     MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``; with
     several source rows per key it is the replace-by-key form (swap a
-    whole conversation's feature rows in one commit — what
-    ``plans/incremental.py`` does after a CDC-scoped recompute).
+    whole conversation's feature rows in one commit).
 
-    ``source`` is evaluated exactly once: its rows are written first, and
-    the key set is read back from the files just written (plus
-    ``delete_keys``).  One job collects up to :data:`KEY_LITERAL_MAX`
-    distinct key tuples to the driver.  Copy-on-write file scope, like
-    :func:`overwrite_where`: the manifest key envelope prunes the
-    candidate files, ONE ``input_file_name()`` aggregation over the
-    candidates finds the files that contain a matching key, and only
-    those are rewritten (minus their matched rows); every other file
-    carries into the new snapshot by reference. NULL keys never
+    ``source`` is evaluated exactly once: its keys are not known up front,
+    so its rows are written first (one job) and the key set is read back
+    from the files just written (plus ``delete_keys``); one job collects
+    up to :data:`KEY_LITERAL_MAX` distinct key tuples to the driver.  The
+    rest is the copy-on-write core shared with :func:`overwrite_where`
+    (:func:`_copy_on_write`), with nothing left to insert: the manifest
+    key envelope prunes the candidate files, ONE ``input_file_name()``
+    aggregation over the candidates finds the files that contain a
+    matching key, and one write job stores their kept rows; every other
+    file carries into the new snapshot by reference.  NULL keys never
     equi-match: a NULL-key target row is always kept, a NULL-key source
-    row is always inserted.
+    row is always inserted.  (``plans/incremental.py`` knows its
+    recompute's keys before the recompute runs, so it skips the
+    write-first step and inserts the recompute in the kept rows' write.)
 
     ``delete_keys`` widens the DELETE scope beyond the source's own keys:
     rows matching those key tuples are removed even when the source
@@ -1071,8 +1149,10 @@ def merge_into(
     kept rows are a left-semi / left-anti join on ``key_cols`` (Catalyst
     and AQE pick the build side).  On either route ``delete_keys`` is
     evaluated by the key-set collect and, on the join route, once more
-    to fill the persisted frame.  Rewrite volume is O(files containing
-    matched keys), never O(table). Returns the new snapshot id.
+    to fill the persisted frame.  A merge commit adds two data
+    directories (``-add``: the source, ``-cow``: the kept rows).
+    Rewrite volume is O(files containing matched keys), never O(table).
+    Returns the new snapshot id.
     """
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
@@ -1080,31 +1160,13 @@ def merge_into(
         raise ValueError(
             f"delete_keys columns {delete_keys.columns} != key_cols {key_cols}"
         )
-    parent = _current_id(table_dir)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshot committed under {table_dir}")
-    m = _load_manifest(table_dir, parent)
+    m = _load_manifest(table_dir, None)
+    _check_schema(source, m, "source")
     schema = StructType.fromJson(json.loads(m["schema"]))
-    # (name, type) pairs, not names: a name-only check would let a
-    # mistyped source commit files the manifest schema can't read back —
-    # corruption REJECTED here is corruption that never reaches a commit
-    if [(f.name, f.dataType) for f in source.schema.fields] != [
-        (f.name, f.dataType) for f in schema.fields
-    ]:
-        raise ValueError(
-            f"source schema {source.schema.simpleString()} mismatch vs "
-            f"table {schema.simpleString()}"
-        )
     missing = [k for k in key_cols if k not in schema.fieldNames()]
     if missing:
         raise ValueError(f"key columns not in table schema: {missing}")
-    sid = parent + 1
-    added = _write_commit(
-        source.select(*schema.fieldNames()), table_dir, sid, sub="-add"
-    )
-
-    entries: list[dict] = []
-    root = os.path.abspath(table_dir)
+    added = _write_commit(source, table_dir, m["snapshot_id"] + 1, sub="-add")
     frames = [spark.read.schema(schema).parquet(*added)] if added else []
     if delete_keys is not None:
         frames.append(delete_keys)
@@ -1113,51 +1175,35 @@ def merge_into(
         if m["files"] and frames else None
     )
     try:
-        # manifest-stats pre-prune (Iceberg's manifest evaluation): any
-        # file whose footer-stats range is disjoint from the key envelope
-        # on SOME key column cannot contain a matched key and skips the
-        # candidate scan entirely.  With churn keyed on recent conv_ids
-        # against a conv_id-clustered 100 TB table, that is the difference
-        # between scanning the churn's neighborhood and scanning the table.
-        cand = [
-            e for e in m["files"]
-            if ks is not None and _entry_in_key_envelope(e, key_cols, ks.env)
-        ]
-        cand_paths = {e["path"] for e in cand}
-        entries += [e for e in m["files"] if e["path"] not in cand_paths]
-        files = [os.path.join(root, e["path"]) for e in cand]
-        hit = set()
-        if files:
-            # tag the file BEFORE any join: input_file_name() is per-scan
-            # and cannot resolve once a second file source joins the plan
-            scan = spark.read.schema(schema).parquet(*files).withColumn(
-                "__file", F.input_file_name()
-            )
-            hit = {
-                _norm_path(r[0])
-                for r in ks.keep(scan).select("__file").distinct().collect()
-            }
-        entries += [
-            e for e in cand
-            if _norm_path(os.path.join(root, e["path"])) not in hit
-        ]
-        rewrite_abs = [f for f in files if _norm_path(f) in hit]
-        if rewrite_abs:
-            kept_rows = ks.drop(spark.read.schema(schema).parquet(*rewrite_abs))
-            entries += _file_entries(
-                _write_commit(kept_rows, table_dir, sid, sub="-rw"), table_dir
-            )
+        return _copy_on_write(
+            spark, table_dir, m, ks, None, "merge_into", "merge", properties,
+            _file_entries(added, table_dir),
+        )
     finally:
         if ks is not None:
             ks.unpersist()
-    entries += _file_entries(added, table_dir)
-    _log_keyed(
-        "merge_into", table_dir, keys=ks.size if ks is not None else 0,
-        literal=ks is None or ks.literal, candidate_files=len(cand),
-        files_pruned=len(m["files"]) - len(cand),
-        files_rewritten=len(rewrite_abs),
+
+
+def _merge_key_set(
+    spark: SparkSession,
+    table_dir: str,
+    source: DataFrame,
+    ks: _KeySet,
+    properties: dict | None = None,
+) -> int:
+    """Replace-by-key merge whose delete scope is the collected key set
+    ``ks``: one atomic snapshot that deletes every row whose key is in
+    ``ks`` and inserts ``source``, written together with the kept rows in
+    one job.  Equal to :func:`merge_into` with ``delete_keys`` = ``ks``
+    only when every non-NULL key of ``source`` is in ``ks`` — a source
+    computed from rows ``ks`` filtered, as ``plans/incremental.py``'s
+    recompute is.  :func:`merge_into` does not know its source's keys up
+    front, so it writes the source first and reads them back."""
+    m = _load_manifest(table_dir, None)
+    _check_schema(source, m, "source")
+    return _copy_on_write(
+        spark, table_dir, m, ks, source, "merge_key_set", "merge", properties
     )
-    return _commit(table_dir, "merge", m["schema"], entries, parent, properties)
 
 
 def compact_snapshot(
@@ -1182,11 +1228,9 @@ def compact_snapshot(
     original small files. At 100 TB this is the maintenance job that keeps
     scan task counts sane after many small streaming/CDC commits.
     """
-    parent = _current_id(table_dir)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshot committed under {table_dir}")
+    m = _load_manifest(table_dir, None)
+    parent = m["snapshot_id"]
     threshold = small_file_bytes or target_file_bytes
-    m = _load_manifest(table_dir, parent)
     schema = StructType.fromJson(json.loads(m["schema"]))
     root = os.path.abspath(table_dir)
     small_abs, small_rel = [], set()
@@ -1225,21 +1269,24 @@ def read_snapshot_for_keys(
     before the exact key filter runs on the survivors.
 
     One job collects up to :data:`KEY_LITERAL_MAX` distinct non-NULL key
-    tuples of ``keys`` to the driver.  A set that fits (churn) derives
+    tuples of ``keys`` to the driver — none when ``keys`` is the key
+    frame of an already collected set (:attr:`_KeySet.keys`, what
+    ``plans/incremental.py`` passes, so its one collect serves the read,
+    the states filter and the merge).  A set that fits (churn) derives
     the envelope in Python and the scan filters with a literal ``IN``
     list (a ``struct`` of the columns for a multi-column key): the plan
     has no join and no exchange, and the ``IN`` (``InSet`` above 10
     values) reaches the parquet scan's pushed filters (as a min/max range
     above 10 values).  A larger set adds a 1-row min/max aggregation for
     the envelope and the scan is a left-semi join against ``keys``'
-    distinct key frame, which is evaluated again when the result is
-    read.  The envelope check is a NECESSARY condition for a tuple match,
-    so pruning never drops a matching row; the key filter supplies
-    exactness.  On a table
-    written clustered on the key (:func:`cluster_snapshot` / a
-    ``repartitionByRange`` writer), a churn-sized key set prunes the scan
-    to the churn's neighborhood — this is what keeps
-    ``plans/incremental.py``'s recompute O(affected data) instead of
+    distinct key frame, which is evaluated again when the result is read
+    unless its owner persisted it.  The envelope check is a NECESSARY
+    condition for a tuple match, so pruning never drops a matching row;
+    the key filter supplies exactness.  On a table written clustered on
+    the key (:func:`cluster_snapshot` / a ``repartitionByRange`` writer),
+    a churn-sized key set prunes the scan to the churn's neighborhood —
+    this is what keeps ``plans/incremental.py``'s recompute O(affected
+    data) instead of
     O(table) at 100 TB."""
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
@@ -1248,12 +1295,12 @@ def read_snapshot_for_keys(
     missing = [k for k in key_cols if k not in schema.fieldNames()]
     if missing:
         raise ValueError(f"key columns not in table schema: {missing}")
-    ks = _KeySet([keys], key_cols)
-    cand = [e for e in m["files"] if _entry_in_key_envelope(e, key_cols, ks.env)]
-    _log_keyed(
-        "read_snapshot_for_keys", table_dir, keys=ks.size, literal=ks.literal,
-        candidate_files=len(cand), files_pruned=len(m["files"]) - len(cand),
-        files_rewritten=0,
+    ks = _key_set_of(keys, key_cols)
+    cand = [e for e in m["files"] if ks.may_match(e)]
+    _log_decision(
+        "read_snapshot_for_keys", table_dir, candidate_files=len(cand),
+        files_pruned=len(m["files"]) - len(cand), files_rewritten=0,
+        **ks.describe(),
     )
     if not cand:
         return spark.createDataFrame([], schema)
@@ -1288,10 +1335,8 @@ def cluster_snapshot(
     """
     if not by:
         raise ValueError("cluster columns must be non-empty")
-    parent = _current_id(table_dir)
-    if parent is None:
-        raise FileNotFoundError(f"no snapshot committed under {table_dir}")
-    m = _load_manifest(table_dir, parent)
+    m = _load_manifest(table_dir, None)
+    parent = m["snapshot_id"]
     schema = StructType.fromJson(json.loads(m["schema"]))
     missing = [k for k in by if k not in schema.fieldNames()]
     if missing:

@@ -152,6 +152,25 @@ def test_skew_split_identical(spark, dedup_df, request):
             pd.testing.assert_frame_equal(a, b)
 
 
+def test_skew_split_null_ts_past_chunk_zero(spark):
+    """A NULL ts past chunk 0 still yields the unsplit operator's one error
+    row for the whole conversation, not the other chunks' windows."""
+    from mpower_feature_analysis_spark.operators import (
+        windowed_summary_features_skew_split,
+    )
+    ts = pd.Series(pd.to_datetime(
+        1_700_000_000_000 + np.arange(100) * 1000, unit="ms"))
+    ts[40] = pd.NaT
+    t = pd.DataFrame({"conv_id": "c", "turn_idx": np.arange(100, dtype="int32"),
+                      "ts": ts})
+    tdf = spark.createDataFrame(t, "conv_id string, turn_idx int, ts timestamp")
+    want = _run(tdf, window=8, overlap=0.5)
+    assert list(want["error"]) == ["null ts or turn_idx in 1 of 100 turns"]
+    got = (windowed_summary_features_skew_split(
+        tdf, window=8, overlap=0.5, split_turns=16).orderBy(*SORT).toPandas())
+    pd.testing.assert_frame_equal(want, got)
+
+
 def test_skew_split_rejects_misaligned_chunk(spark, dedup_df):
     from mpower_feature_analysis_spark.operators import (
         windowed_summary_features_skew_split,

@@ -265,6 +265,34 @@ def test_ngram_jaccard_duplicate_doc_id(spark, path):
     assert pairs(dup) == want
 
 
+def test_ngram_jaccard_conflicting_texts_per_id(spark):
+    """An id carrying two different texts is shingled from one of them,
+    the smallest, on every n-gram entry point and whatever the input's
+    partitioning: the three paths agree with each other and with the corpus
+    holding that text alone, and no Jaccard exceeds 1."""
+    text = " ".join(f"w{j}" for j in range(17))
+    longer = text + " y0 y1 y2 y3 y4"
+    rows = [(1, longer), (1, text), (2, text),
+            (3, text.replace("w16", "x16")), (4, "an unrelated short doc")]
+    schema = "doc_id long, text string"
+    paths = _ngram_paths()
+
+    def pairs(df, path):
+        # the verify path also scores (b, a) and zero-overlap candidates
+        return sorted((r.id_a, r.id_b, r.jaccard)
+                      for r in paths[path](df).collect()
+                      if r.id_a < r.id_b and r.jaccard > 0)
+
+    chosen = spark.createDataFrame([r for r in rows if r[1] != longer], schema)
+    want = pairs(chosen, "uncapped")
+    assert want and all(0.0 <= j <= 1.0 for _, _, j in want)
+    assert (1, 2, 1.0) in want
+    for layout in (spark.createDataFrame(rows, schema).coalesce(1),
+                   spark.createDataFrame(rows[::-1], schema).repartition(3)):
+        for path in sorted(paths):
+            assert pairs(layout, path) == want, path
+
+
 def test_exploded_shingles_arrow_equals_expression(spark, docs):
     """The Arrow shingle-hash kernel keeps exactly the distinct shingles of
     the JVM expression path: per doc, its row count and its ``sz`` stamp
