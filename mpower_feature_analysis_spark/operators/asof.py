@@ -35,7 +35,7 @@ from ..utils import ts_ms
 
 def _union_marked(
     turns: DataFrame,
-    states: DataFrame,
+    states: DataFrame | None,
     on: str,
     turn_ts: str,
     state_ts: str,
@@ -48,7 +48,8 @@ def _union_marked(
     (inclusive as-of bound). Turn columns ride along as plain (nullable)
     columns rather than a packed struct so the post-join projection is a
     pure alias of the partitioning key — downstream windows on the same key
-    reuse this exchange instead of re-shuffling.
+    reuse this exchange instead of re-shuffling.  ``states=None`` gives
+    the turn rows alone in the same layout (no ``__p_*`` columns).
     """
     turn_cols = [c for c in turns.columns]
     rest = [c for c in turn_cols if c not in (on, turn_ts)]
@@ -62,6 +63,8 @@ def _union_marked(
         # payload columns: null on turn rows, value on state rows
         *[F.lit(None).cast(states.schema[c].dataType).alias(f"__p_{c}") for c in payload],
     )
+    if states is None:
+        return left, turn_cols
     right = states.select(
         F.col(on).alias("__k"),
         F.col(state_ts).alias("__ts"),
@@ -130,16 +133,29 @@ def asof_attach_from_union(
     else:
         filled = _asof_bucketed(tagged, bucket_ms)
 
-    out = filled.filter(F.col("__kind") == 1).select(
+    return turn_rows(
+        filled.filter(F.col("__kind") == 1), turn_cols, on, turn_ts,
+        [F.col(f"__eff.__p_{c}").alias(c) for c in payload],
+    )
+
+
+def turn_rows(
+    unioned: DataFrame, turn_cols: list[str], on: str = "conv_id",
+    turn_ts: str = "ts", extra: list | None = None,
+) -> DataFrame:
+    """The turn frame's columns back out of a ``_union_marked`` layout
+    (``__k``/``__ts`` renamed to ``on``/``turn_ts``, in ``turn_cols``
+    order), then ``extra``.  A pure alias of ``__k``, so an exchange or
+    clustering on ``__k`` still holds for ``on`` downstream."""
+    return unioned.select(
         *[
             F.col("__k").alias(c) if c == on
             else F.col("__ts").alias(c) if c == turn_ts
             else F.col(c)
             for c in turn_cols
         ],
-        *[F.col(f"__eff.__p_{c}").alias(c) for c in payload],
+        *(extra or []),
     )
-    return out
 
 
 def dedup_turns_in_union(
@@ -157,12 +173,14 @@ def dedup_turns_in_union(
     keys, order_by)`` run BEFORE the union: same ordering columns, same
     ``xxhash64`` tie-break over the turn frame's non-key columns in
     schema order (labels/payloads never participate — they don't exist on
-    the pre-union frame). The window partitions by (on, *other keys),
-    which a scan hash-clustered on ``on`` alone already satisfies
-    (ClusteredDistribution subset rule), so over a bucketed union layout
-    this costs a Sort but ZERO Exchange."""
-    key_set = set(keys)
-    non_key = [c for c in turn_cols if c not in key_set]
+    the pre-union frame).  Like ``dedup_last_wins``' ``partition_by``
+    form, the window partitions by ``on`` alone and keeps the first turn
+    row of each run of equal other keys (states sort first, so they never
+    open a turn's run): its only requirement is clustering on ``__k``,
+    which one shuffle, one task or a scan hash-clustered on ``on``
+    (a bucketed layout: a Sort but ZERO Exchange) already meets, and
+    every later window on ``on`` reuses it."""
+    non_key = [c for c in turn_cols if c not in set(keys)]
 
     def u(c: str):
         return "__k" if c == on else "__ts" if c == turn_ts else c
@@ -171,12 +189,17 @@ def dedup_turns_in_union(
         F.xxhash64(*[F.col(u(c)) for c in non_key]) if non_key
         else F.lit(0).cast("long")
     )
-    ordering = [F.col(u(c)).desc() for c in order_by] + [tiebreak.desc()]
-    w = W.partitionBy(*[F.col(u(c)) for c in keys]).orderBy(*ordering)
+    run_cols = [F.col("__kind"), *[F.col(u(c)) for c in keys if c != on]]
+    w = W.partitionBy("__k").orderBy(
+        *run_cols, *[F.col(u(c)).desc() for c in order_by], tiebreak.desc()
+    )
+    run = F.struct(*run_cols)
+    # NULL-safe: the partition's first row (no previous row) opens a run
+    new_run = ~F.lag(run).over(w).eqNullSafe(run)
     return (
-        unioned.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__kind") == 0) | (F.col("__rn") == 1))
-        .drop("__rn")
+        unioned.withColumn("__new", (F.col("__kind") == 0) | new_run)
+        .filter(F.col("__new"))
+        .drop("__new")
     )
 
 

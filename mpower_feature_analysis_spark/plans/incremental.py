@@ -27,27 +27,40 @@ advances by CDC:
 
 Cost model at 100 TB: changelog scan is O(changed files) — a plain scan
 with no shuffle when the range only appends (the common churn), one
-``exceptAll`` over the changed files when it also rewrites.  ONE job
-collects the changelog's distinct ``conv_id`` set to the driver (at most
-``KEY_LITERAL_MAX + 1`` tuples), and that one key set serves all three
-consumers: the scan that locates the affected conversations' turns
-(:func:`read_snapshot_for_keys`), the ``states`` filter and the merge's
-delete scope, so the changelog is read once per refresh.  For a
-churn-sized set every consumer filters with a literal ``IN`` list pushed
-into the parquet scan, after the manifest key-envelope stats pruned the
-file list: no join and no shuffle touch the tables.  A set above
-``KEY_LITERAL_MAX`` conversations is persisted for the refresh and
-matched by left-semi / left-anti joins instead (see
-:mod:`..sources.snapshots`).  Recompute is O(affected conversations'
-turns) and runs once, inside the merge's single write job, which stores
-it together with the kept rows of the rewritten feature files (O(feature
-files containing an affected conversation)).  On a conv_id-clustered
-turns table (:func:`cluster_snapshot` or a ``repartitionByRange``
-writer) the scan plans only the churn's neighborhood, so NOTHING in the
-refresh is O(table).  On 4 vCPU an 18-row churn step of a 60k-turn,
-16-file table runs 7 Spark jobs: the key collect, the hit-file scan and
-the write (the recompute's shuffle stages are jobs of their own under
-AQE).
+``exceptAll`` over the changed files when it also rewrites.  A refresh
+runs three Spark jobs:
+
+1. the key collect: the changelog's distinct ``conv_id`` set, at most
+   ``KEY_LITERAL_MAX + 1`` tuples, to the driver;
+2. the hit scan: one ``input_file_name()`` pass over the feature files
+   whose key envelope may hold an affected conversation, keeping the
+   files that do;
+3. the write: the recompute together with the kept rows of those files,
+   then one atomic commit.
+
+The first two run on a worker thread while the calling thread plans the
+recompute, which needs no key: the turns files whose ``conv_id`` min/max
+(manifest stats) meets the range of the changed files hold every turn of
+every affected conversation.  The exact key filter then goes on top of
+the recompute; every feature depends only on its own conversation's
+rows, so filtering after the windows is exact, and Catalyst pushes a
+literal ``IN`` through the per-conversation windows and the union into
+both the turns and the ``states`` scans.  Inputs that fit one task
+(``utils.fits_one_task``: the key frame and recompute inputs by
+Catalyst's size estimate, the hit and kept files by their length) run in
+one: each job is then ONE stage with no shuffle and no adaptive
+re-plan.  Above that size the plans stay parallel (one hash exchange in
+the recompute), and above ``KEY_LITERAL_MAX`` conversations the key
+frame is persisted for the refresh and matched by left-semi / left-anti
+joins instead (see :mod:`..sources.snapshots`); a semi join on top of
+the recompute would reach neither scan, so there the turns and states
+are filtered before it, and the recompute is planned again.  Recompute is
+O(affected conversations' turns) and the rewrite O(feature files
+containing an affected conversation).  On a conv_id-clustered turns
+table (:func:`cluster_snapshot` or a ``repartitionByRange`` writer) the
+manifest pruning keeps the read to the churn's neighborhood, so NOTHING
+in the refresh is O(table).  On 4 vCPU an 18-row churn step of a
+60k-turn, 16-file table runs those three single-stage jobs.
 
 Correctness contract (driver gate ``incremental_flagship``): after any
 sequence of appends, upserts, or copy-on-write deletes to the turns
@@ -61,13 +74,19 @@ just the conversations the recompute produced rows for).
 
 from __future__ import annotations
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 
-# merge_into is imported though the refresh merges with _merge_key_set:
-# perfbench's traced run wraps the snapshot names this module holds
+# read_snapshot_for_keys and merge_into are imported though the refresh
+# calls neither: perfbench's traced run wraps the snapshot names this
+# module holds
 from ..sources.snapshots import (  # noqa: F401
+    _cdc_files,
+    _hit_files,
     _KeySet,
+    _load_manifest,
     _merge_key_set,
+    _read_key_range,
     commit_snapshot,
     merge_into,
     read_snapshot,
@@ -215,40 +234,68 @@ def incremental_refresh(
             f"turns table at snapshot {cur} is OLDER than the features "
             f"table's source {last}; rebuild with full_refresh()"
         )
-    # CDC: reads only the data files that differ between the manifests.
+    # CDC: reads only the data files that differ between the manifests
+    manifests: dict = {}
+    removed, added = _cdc_files(turns_dir, last, cur, manifests)
+    cdc = row_changelog(spark, turns_dir, last, cur)
+    fm = _load_manifest(features_dir, finfo["snapshot_id"])
     # ONE job collects the affected conversations (at most
-    # KEY_LITERAL_MAX + 1 of them) and that one key set serves all three
-    # consumers: the keyed turns read, the states filter and the merge's
-    # delete scope.  Above KEY_LITERAL_MAX the key frame is persisted for
-    # the refresh and the consumers join against it.
-    ks = _KeySet(
-        [row_changelog(spark, turns_dir, last, cur)], ["conv_id"], persist=True
-    )
+    # KEY_LITERAL_MAX + 1 of them), and ONE more finds the feature files
+    # holding one; both run on a worker thread while this one builds the
+    # recompute.  Only the set's construction and the hit scan go there:
+    # the names perfbench wraps in spans stay on this thread
+    found: dict = {}
+
+    def collect() -> None:
+        try:
+            found["ks"] = ks = _KeySet([cdc], ["conv_id"], persist=True)
+            found["hits"] = _hit_files(spark, features_dir, fm, ks)
+        except BaseException as e:  # re-raised on the calling thread
+            found["error"] = e
+
+    worker = InheritableThread(target=collect)
+    worker.start()
     try:
-        # affected conversations' turns: manifest key-envelope pruning
-        # cuts the file list to the churn's neighborhood BEFORE the exact
-        # key filter runs (O(affected data) on a conv_id-clustered table,
-        # never O(table)).  ``ks.keys`` carries the set, so the read
-        # collects nothing.  as_of=cur pins the recompute to the snapshot
-        # being recorded — a concurrent turns commit cannot leak rows the
-        # changelog (last→cur) did not account for
-        turns = read_snapshot_for_keys(
-            spark, turns_dir, ks.keys, ["conv_id"], as_of=cur
-        )
-        if states is not None:
-            states = ks.keep(states)
-        # the recompute reads only conversations in ``ks``, so ``ks`` is
-        # the whole delete scope (the recompute's keys ∪ the changed
-        # ones): a conversation whose turns were fully DELETED yields no
-        # feature rows but is in ``ks`` ('remove' CDC rows), so its stale
-        # features are dropped.  One write job stores the recompute with
-        # the kept rows of the rewritten files.
+        try:
+            # the recompute is planned from manifest stats, not from the
+            # keys: the turns files whose conv_id range meets that of the
+            # changed files hold every turn of an affected conversation.
+            # as_of=cur pins it to the snapshot being recorded — a
+            # concurrent turns commit cannot leak rows the changelog
+            # (last→cur) did not account for
+            turns = _read_key_range(
+                spark, turns_dir, manifests[cur], removed + added, "conv_id"
+            )
+            feats = extract_turn_features(turns, states, config)
+        finally:
+            worker.join()
+        if "error" in found:
+            raise found["error"]
+        ks = found["ks"]
+        # the exact key filter goes on top: every feature depends only on
+        # its own conversation's rows, and Catalyst pushes the literal IN
+        # through the per-conversation windows into the turns and states
+        # scans.  A semi join on top reaches neither scan, so above
+        # KEY_LITERAL_MAX the inputs are filtered before the recompute.
+        # ``ks`` is then the whole delete scope: a conversation whose
+        # turns were fully DELETED yields no feature rows but is in ``ks``
+        # ('remove' CDC rows), so its stale features are dropped.  One
+        # write job stores the recompute with the kept rows of the hit
+        # files.
+        if ks.literal:
+            feats = ks.keep(feats)
+        else:
+            feats = extract_turn_features(
+                ks.keep(turns), None if states is None else ks.keep(states),
+                config,
+            )
         sid = _merge_key_set(
-            spark, features_dir, extract_turn_features(turns, states, config),
-            ks, properties={SOURCE_KEY: cur},
+            spark, features_dir, fm, feats, ks, found["hits"],
+            properties={SOURCE_KEY: cur},
         )
     finally:
-        ks.unpersist()
+        if "ks" in found:
+            found["ks"].unpersist()
     return {
         "refreshed": True,
         "from_snapshot": last,

@@ -30,7 +30,11 @@ Manifests record per-file row counts AND per-column min/max/null-count
 stats read from the parquet FOOTER (pyarrow metadata, no data scanned —
 the same statistics Iceberg manifests carry), the committed schema (so an
 empty snapshot still reads with the right types), and the parent snapshot
-id (the commit log).  The stats power **predicate file skipping**:
+id (the commit log).  A manifest is one compact JSON text (sorted keys,
+no indentation), which the C encoder writes in a fraction of the
+pure-Python indented form's time and a third fewer bytes; readers parse
+either form, so tables committed with indented manifests still read,
+diff and refresh.  The stats power **predicate file skipping**:
 ``read_snapshot(..., where=...)`` / :func:`plan_scan_files` drop files
 whose min/max range cannot satisfy the predicate before the scan is
 planned (zero Spark jobs), and :func:`merge_into` /
@@ -78,7 +82,10 @@ still applies and the Spark filter stays exact.  A larger set stays in
 Spark: a 1-row min/max aggregation gives the envelope and rows match by a
 left-semi / left-anti join on the key columns, whose driver cost does
 not grow with the key count (building and planning a literal list costs
-driver time per key, which is why the literal route is capped).
+driver time per key, which is why the literal route is capped).  A key
+collect or hit-file scan whose input fits one task
+(:func:`..utils.fits_one_task`) de-duplicates in that task: one stage,
+no shuffle.
 """
 
 from __future__ import annotations
@@ -101,6 +108,8 @@ from pyspark.sql.types import (
     TimestampNTZType,
     TimestampType,
 )
+
+from ..utils import fits_one_task
 
 #: decision log: one DEBUG record per keyed read or copy-on-write commit
 #: (merge, overwrite_where), built only from values the driver already
@@ -384,8 +393,12 @@ def _commit(
     import uuid
 
     tmp = path + f".tmp.{uuid.uuid4().hex}"
+    # compact separators and one dumps call: json.dump with ``indent``
+    # runs the pure-Python encoder, ~9 ms a commit on a 16-file table;
+    # readers parse either form, so older indented manifests still load
+    text = json.dumps(manifest, sort_keys=True, separators=(",", ":"))
     with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+        f.write(text)
     try:
         # optimistic-concurrency commit point (Iceberg's catalog CAS): the
         # hard link atomically claims the final name and FAILS if another
@@ -848,6 +861,35 @@ def _check_schema(df: DataFrame, m: dict, what: str) -> None:
         )
 
 
+def _hit_files(
+    spark: SparkSession, table_dir: str, m: dict, scope
+) -> tuple[list[str], list[str]]:
+    """(candidate files, files holding a row ``scope`` matches) of manifest
+    ``m``: candidates come from manifest stats (``scope.may_match``), then
+    ONE ``input_file_name()`` scan of the candidates finds the hit files.
+    Candidates that fit one task (:func:`..utils.fits_one_task`, by file
+    length) are scanned and de-duplicated in one task: one stage, no
+    shuffle."""
+    root = os.path.abspath(table_dir)
+    cand = [
+        os.path.join(root, e["path"]) for e in m["files"]
+        if scope is not None and scope.may_match(e)
+    ]
+    if not cand:
+        return cand, []
+    schema = StructType.fromJson(json.loads(m["schema"]))
+    # tag the file BEFORE any join: input_file_name() is per-scan and
+    # cannot resolve once a second file source joins the plan
+    scan = spark.read.schema(schema).parquet(*cand).withColumn(
+        "__file", F.input_file_name()
+    )
+    files = scope.keep(scan).select("__file")
+    if fits_one_task(nbytes=sum(os.path.getsize(f) for f in cand)):
+        files = files.coalesce(1)
+    hit = {_norm_path(r[0]) for r in files.distinct().collect()}
+    return cand, [f for f in cand if _norm_path(f) in hit]
+
+
 def _copy_on_write(
     spark: SparkSession,
     table_dir: str,
@@ -858,45 +900,35 @@ def _copy_on_write(
     operation: str,
     properties: dict | None = None,
     written: list[dict] | None = None,
+    hits: tuple[list[str], list[str]] | None = None,
 ) -> int:
     """The copy-on-write commit every file-scoped write shares: delete the
     rows ``scope`` matches (a :class:`_WhereScope` or :class:`_KeySet`;
     ``None`` deletes nothing), insert ``inserts``, commit on top of
     manifest ``m`` as ``operation``, logging the decision as ``op``.
 
-    Candidate files come from manifest stats (``scope.may_match``), ONE
-    ``input_file_name()`` aggregation over the candidates finds the files
-    holding a deletable row, and ONE write job stores ``inserts`` together
-    with the kept rows of those files (``inserts`` must have the table's
-    columns in order).  Every other file carries into the new snapshot by
-    reference.  ``written`` are entries of data files the caller already
-    wrote for this commit.  A concurrent commit since ``m`` raises
-    :class:`SnapshotConflictError` (see the module docstring)."""
-    schema = StructType.fromJson(json.loads(m["schema"]))
+    :func:`_hit_files` finds the files holding a deletable row (``hits``
+    when the caller already ran it on ``m`` and ``scope``), and ONE write
+    job stores ``inserts`` together with the kept rows of those files
+    (``inserts`` must have the table's columns in order); kept rows that
+    fit one task are written by one.  Every other file carries into the
+    new snapshot by reference.  ``written`` are entries of data files the
+    caller already wrote for this commit.  A concurrent commit since ``m``
+    raises :class:`SnapshotConflictError` (see the module docstring)."""
+    cand, rewrite = hits if hits is not None else _hit_files(
+        spark, table_dir, m, scope
+    )
     root = os.path.abspath(table_dir)
-    cand = [
-        os.path.join(root, e["path"]) for e in m["files"]
-        if scope is not None and scope.may_match(e)
-    ]
-    hit = set()
-    if cand:
-        # tag the file BEFORE any join: input_file_name() is per-scan and
-        # cannot resolve once a second file source joins the plan
-        scan = spark.read.schema(schema).parquet(*cand).withColumn(
-            "__file", F.input_file_name()
-        )
-        hit = {
-            _norm_path(r[0])
-            for r in scope.keep(scan).select("__file").distinct().collect()
-        }
-    rewrite = [f for f in cand if _norm_path(f) in hit]
     gone = set(rewrite)
     entries = [
         e for e in m["files"] if os.path.join(root, e["path"]) not in gone
     ]
     out = inserts
     if rewrite:
+        schema = StructType.fromJson(json.loads(m["schema"]))
         kept = scope.drop(spark.read.schema(schema).parquet(*rewrite))
+        if fits_one_task(nbytes=sum(os.path.getsize(f) for f in rewrite)):
+            kept = kept.coalesce(1)
         out = kept if out is None else out.union(kept)
     if out is not None:
         entries += _file_entries(
@@ -949,7 +981,9 @@ class _KeySet:
     key envelope and the row filters the keyed primitives apply.
 
     ONE job collects at most ``KEY_LITERAL_MAX + 1`` tuples, so driver
-    memory is bounded by that constant.  A set that fits is the literal
+    memory is bounded by that constant; key columns that fit one task
+    (:func:`..utils.fits_one_task`) are de-duplicated in one, so that job
+    is one stage with no shuffle.  A set that fits is the literal
     route: the envelope comes from the tuples in Python and rows match a
     typed literal ``IN`` list (a ``struct`` of the columns for several),
     which reaches the parquet scan's pushed filters — no join, no shuffle.
@@ -957,11 +991,8 @@ class _KeySet:
     envelope and rows match by a left-semi / left-anti join against the key
     frame, which Catalyst/AQE plans (a small frame broadcasts).  The
     envelope test is a NECESSARY condition for a match on either route.
-
-    ``keys`` is the distinct key frame, tagged with the set: a keyed read
-    handed that frame uses the set instead of collecting again
-    (:func:`_key_set_of`).  The set is also a delete scope of
-    :func:`_copy_on_write` (``may_match`` / ``keep`` / ``drop``)."""
+    The set is also a delete scope of :func:`_copy_on_write`
+    (``may_match`` / ``keep`` / ``drop``)."""
 
     def __init__(
         self, frames: list[DataFrame], key_cols: list[str],
@@ -970,11 +1001,9 @@ class _KeySet:
         kf = frames[0].select(*key_cols)
         for f in frames[1:]:
             kf = kf.unionByName(f.select(*key_cols))
-        kf = kf.dropna().distinct()
+        kf = kf.dropna()
+        kf = (kf.coalesce(1) if fits_one_task(kf) else kf).distinct()
         self.cols = list(key_cols)
-        # the distinct key frame, tagged with this set (see _key_set_of)
-        self.keys = kf
-        kf._key_set = self
         dtypes = [f.dataType for f in kf.schema.fields]
         # a TimestampType key crosses to the driver as epoch microseconds:
         # a Python datetime is local wall-clock time, which cannot tell
@@ -998,7 +1027,11 @@ class _KeySet:
             aggs = []
             for k in key_cols:
                 aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
-            self.env = self.frame.agg(*aggs).collect()[0].asDict()
+            try:
+                self.env = self.frame.agg(*aggs).collect()[0].asDict()
+            except BaseException:
+                self.unpersist()
+                raise
             self.match = None
 
     def may_match(self, entry: dict) -> bool:
@@ -1024,17 +1057,6 @@ class _KeySet:
     def unpersist(self) -> None:
         if self.frame is not None:
             self.frame.unpersist()
-
-
-def _key_set_of(keys: DataFrame, key_cols: list[str]) -> _KeySet:
-    """The key set of ``keys`` over ``key_cols``: the one it carries when
-    it is a :attr:`_KeySet.keys` frame over those columns (no job), else a
-    freshly collected one.  ``vars`` reads the tag without the column
-    lookup ``DataFrame.__getattr__`` would make."""
-    ks = vars(keys).get("_key_set")
-    if ks is not None and ks.cols == list(key_cols):
-        return ks
-    return _KeySet([keys], key_cols)
 
 
 def _key_envelope(tuples: list[tuple], key_cols: list[str]) -> dict:
@@ -1187,22 +1209,26 @@ def merge_into(
 def _merge_key_set(
     spark: SparkSession,
     table_dir: str,
+    m: dict,
     source: DataFrame,
     ks: _KeySet,
+    hits: tuple[list[str], list[str]],
     properties: dict | None = None,
 ) -> int:
     """Replace-by-key merge whose delete scope is the collected key set
-    ``ks``: one atomic snapshot that deletes every row whose key is in
-    ``ks`` and inserts ``source``, written together with the kept rows in
-    one job.  Equal to :func:`merge_into` with ``delete_keys`` = ``ks``
-    only when every non-NULL key of ``source`` is in ``ks`` — a source
-    computed from rows ``ks`` filtered, as ``plans/incremental.py``'s
-    recompute is.  :func:`merge_into` does not know its source's keys up
-    front, so it writes the source first and reads them back."""
-    m = _load_manifest(table_dir, None)
+    ``ks``: one atomic snapshot on top of manifest ``m`` that deletes every
+    row whose key is in ``ks`` and inserts ``source``, written together
+    with the kept rows in one job.  ``hits`` is :func:`_hit_files` of
+    ``m`` and ``ks``, which the caller runs while it builds ``source``.
+    Equal to :func:`merge_into` with ``delete_keys`` = ``ks`` only when
+    every non-NULL key of ``source`` is in ``ks`` — a source filtered by
+    ``ks.keep``, as ``plans/incremental.py``'s recompute is.
+    :func:`merge_into` does not know its source's keys up front, so it
+    writes the source first and reads them back."""
     _check_schema(source, m, "source")
     return _copy_on_write(
-        spark, table_dir, m, ks, source, "merge_key_set", "merge", properties
+        spark, table_dir, m, ks, source, "merge_key_set", "merge", properties,
+        hits=hits,
     )
 
 
@@ -1269,10 +1295,7 @@ def read_snapshot_for_keys(
     before the exact key filter runs on the survivors.
 
     One job collects up to :data:`KEY_LITERAL_MAX` distinct non-NULL key
-    tuples of ``keys`` to the driver — none when ``keys`` is the key
-    frame of an already collected set (:attr:`_KeySet.keys`, what
-    ``plans/incremental.py`` passes, so its one collect serves the read,
-    the states filter and the merge).  A set that fits (churn) derives
+    tuples of ``keys`` to the driver.  A set that fits (churn) derives
     the envelope in Python and the scan filters with a literal ``IN``
     list (a ``struct`` of the columns for a multi-column key): the plan
     has no join and no exchange, and the ``IN`` (``InSet`` above 10
@@ -1284,10 +1307,8 @@ def read_snapshot_for_keys(
     condition for a tuple match, so pruning never drops a matching row;
     the key filter supplies exactness.  On a table written clustered on
     the key (:func:`cluster_snapshot` / a ``repartitionByRange`` writer),
-    a churn-sized key set prunes the scan to the churn's neighborhood —
-    this is what keeps ``plans/incremental.py``'s recompute O(affected
-    data) instead of
-    O(table) at 100 TB."""
+    a churn-sized key set prunes the scan to the churn's neighborhood:
+    O(affected data) instead of O(table) at 100 TB."""
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
     m = _load_manifest(table_dir, as_of)
@@ -1295,7 +1316,7 @@ def read_snapshot_for_keys(
     missing = [k for k in key_cols if k not in schema.fieldNames()]
     if missing:
         raise ValueError(f"key columns not in table schema: {missing}")
-    ks = _key_set_of(keys, key_cols)
+    ks = _KeySet([keys], key_cols)
     cand = [e for e in m["files"] if ks.may_match(e)]
     _log_decision(
         "read_snapshot_for_keys", table_dir, candidate_files=len(cand),
@@ -1427,6 +1448,86 @@ def file_changelog(table_dir: str, from_id: int, to_id: int) -> list[dict]:
 _MAINTENANCE_OPS = frozenset({"compact", "cluster"})
 
 
+def _cdc_files(
+    table_dir: str, from_id: int, to_id: int, manifests: dict
+) -> tuple[list[dict], list[dict]]:
+    """(removed, added) manifest entries whose rows :func:`row_changelog`
+    diffs: the files changed between the two snapshots, less the churn of
+    maintenance commits in between (see there).  Pure manifest JSON;
+    ``manifests`` is the id→manifest cache of :func:`_changed_files`."""
+    removed, added = _changed_files(table_dir, from_id, to_id, manifests)
+    if to_id <= from_id:
+        return removed, added
+    rem_paths = {e["path"] for e in removed}
+    add_paths = {e["path"] for e in added}
+    for sid in range(from_id + 1, to_id + 1):
+        try:
+            if sid not in manifests:
+                manifests[sid] = _load_manifest(table_dir, sid)
+        except FileNotFoundError:
+            continue  # expired intermediate: nothing provable, keep churn
+        mm = manifests[sid]
+        if mm["operation"] not in _MAINTENANCE_OPS or mm.get("parent") is None:
+            continue
+        try:
+            rm_m, ad_m = _changed_files(
+                table_dir, mm["parent"], sid, manifests)
+        except FileNotFoundError:
+            continue
+        rp = {e["path"] for e in rm_m}
+        ap = {e["path"] for e in ad_m}
+        if rp <= rem_paths and ap <= add_paths:
+            rem_paths -= rp
+            add_paths -= ap
+    return (
+        [e for e in removed if e["path"] in rem_paths],
+        [e for e in added if e["path"] in add_paths],
+    )
+
+
+def _stats_envelope(entries: list[dict], col: str) -> dict | None:
+    """The ``col`` envelope of the rows of manifest ``entries``, from their
+    min/max stats, in the ``__lo_k``/``__hi_k`` form
+    :func:`_entry_in_key_envelope` reads (``None`` bounds: no entry holds a
+    non-NULL ``col`` value).  ``None`` when some entry's ``col`` values
+    are unbounded: no stats, or a NaN bound."""
+    lo = hi = None
+    for e in entries:
+        st = (e.get("stats") or {}).get(col)
+        if st is not None and "min" not in st and st.get("nulls") == e["rows"]:
+            continue  # all NULL
+        if (
+            st is None or "min" not in st
+            or st["min"] != st["min"] or st["max"] != st["max"]
+        ):
+            return None
+        lo = st["min"] if lo is None else min(lo, st["min"])
+        hi = st["max"] if hi is None else max(hi, st["max"])
+    return {f"__lo_{col}": lo, f"__hi_{col}": hi}
+
+
+def _read_key_range(
+    spark: SparkSession, table_dir: str, m: dict, changed: list[dict],
+    col: str,
+) -> DataFrame:
+    """Scan of manifest ``m``'s files whose ``col`` range meets the ``col``
+    range of the ``changed`` manifest entries, from manifest stats alone
+    (no job): every row of ``m`` whose ``col`` value occurs in a
+    ``changed`` file lies in the scan.  A changed file with no ``col``
+    bound leaves the scan unpruned."""
+    env = _stats_envelope(changed, col)
+    files = m["files"] if env is None else [
+        e for e in m["files"] if _entry_in_key_envelope(e, [col], env)
+    ]
+    schema = StructType.fromJson(json.loads(m["schema"]))
+    if not files:
+        return spark.createDataFrame([], schema)
+    root = os.path.abspath(table_dir)
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(root, e["path"]) for e in files]
+    )
+
+
 def row_changelog(
     spark: SparkSession, table_dir: str, from_id: int, to_id: int
 ) -> DataFrame:
@@ -1458,30 +1559,10 @@ def row_changelog(
     via append-column evolution): older files null-fill added columns, so
     the changelog carries the evolved columns instead of silently
     projecting them away."""
-    m = _load_manifest(table_dir, max(from_id, to_id))
+    manifests: dict = {}
+    removed, added = _cdc_files(table_dir, from_id, to_id, manifests)
+    m = manifests[max(from_id, to_id)]
     schema = StructType.fromJson(json.loads(m["schema"]))
-    removed, added = _changed_files(table_dir, from_id, to_id)
-    if to_id > from_id:
-        rem_paths = {e["path"] for e in removed}
-        add_paths = {e["path"] for e in added}
-        for sid in range(from_id + 1, to_id + 1):
-            try:
-                mm = _load_manifest(table_dir, sid)
-            except FileNotFoundError:
-                continue  # expired intermediate: nothing provable, keep churn
-            if mm["operation"] not in _MAINTENANCE_OPS or mm.get("parent") is None:
-                continue
-            try:
-                rm_m, ad_m = _changed_files(table_dir, mm["parent"], sid)
-            except FileNotFoundError:
-                continue
-            rp = {e["path"] for e in rm_m}
-            ap = {e["path"] for e in ad_m}
-            if rp <= rem_paths and ap <= add_paths:
-                rem_paths -= rp
-                add_paths -= ap
-        removed = [e for e in removed if e["path"] in rem_paths]
-        added = [e for e in added if e["path"] in add_paths]
     root = os.path.abspath(table_dir)
 
     def side(entries: list[dict]) -> DataFrame:

@@ -152,10 +152,10 @@ def _bootstrap_and_churn(spark, transcripts_pdf, states_df, tmp_path):
 def test_literal_refresh_job_count_and_one_data_dir(
     spark, transcripts_pdf, states_df, tmp_path
 ):
-    """A churn-sized refresh collects the affected conversations once and
-    writes the recompute with the kept rows in one job: at most 7 Spark
-    jobs in all (AQE runs each shuffle stage as a job of its own), and the
-    merge commit adds exactly one data directory."""
+    """A churn-sized refresh runs exactly 3 Spark jobs of one stage each:
+    the key collect and the hit-file scan (de-duplicated in one task) and
+    the write of the recompute (one task, no shuffle) with the kept rows.
+    The merge commit adds exactly one data directory."""
     import json
     import os
 
@@ -169,8 +169,11 @@ def test_literal_refresh_job_count_and_one_data_dir(
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 3 <= len(jobs) <= 7, sorted(jobs)
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    assert len(jobs) == 3, jobs
+    stages = {j: list(tracker.getJobInfo(j).stageIds) for j in jobs}
+    assert all(len(s) == 1 for s in stages.values()), stages
 
     def dirs(sid):
         with open(os.path.join(f_dir, "metadata", f"v{sid}.json")) as fh:
@@ -184,31 +187,86 @@ def test_literal_refresh_job_count_and_one_data_dir(
 def test_refresh_under_perfbench_call_shape(
     spark, transcripts_pdf, states_df, tmp_path, monkeypatch
 ):
-    """perfbench's traced run wraps the keyed read and merge_into as this
-    module holds them and counts every DataFrame handed to them: the
-    refresh must keep passing DataFrames there and stay exact."""
+    """perfbench's traced run wraps, as this module holds them,
+    snapshot_info, row_changelog, read_snapshot_for_keys,
+    extract_turn_features and merge_into, and opens a span on a stack
+    shared by the calling thread around each call.  The refresh must keep
+    every one of those names, call the ones it uses on the calling thread,
+    hand extract_turn_features DataFrames, and stay exact."""
+    import threading
+
     from pyspark.sql import DataFrame
 
     from mpower_feature_analysis_spark.plans import incremental
 
-    counted = []
+    calls = []
 
-    def counting(orig):
+    def recording(name, orig):
         def wrapped(*a, **kw):
-            for v in (*a, *kw.values()):
-                if isinstance(v, DataFrame):
-                    counted.append(v.count())
+            calls.append((name, threading.current_thread(), a))
             return orig(*a, **kw)
         return wrapped
 
-    for name in ("read_snapshot_for_keys", "merge_into"):
+    for name in ("snapshot_info", "row_changelog", "read_snapshot_for_keys",
+                 "extract_turn_features", "merge_into"):
         monkeypatch.setattr(incremental, name,
-                            counting(getattr(incremental, name)))
+                            recording(name, getattr(incremental, name)))
     t_dir, f_dir = _bootstrap_and_churn(
         spark, transcripts_pdf, states_df, tmp_path)
+    calls.clear()
     out = incremental_refresh(spark, t_dir, f_dir, states_df)
     assert out["refreshed"] is True
-    assert counted, "the keyed read must be handed a DataFrame"
+    assert {n for n, _, _ in calls} == {
+        "snapshot_info", "row_changelog", "extract_turn_features"}
+    assert all(t is threading.current_thread() for _, t, _ in calls)
+    (args,) = [a for n, _, a in calls if n == "extract_turn_features"]
+    assert isinstance(args[0], DataFrame) and isinstance(args[1], DataFrame)
+    _assert_equals_full(spark, t_dir, f_dir, states_df, PipelineConfig())
+
+
+def test_refresh_reraises_key_collect_error_and_commits_nothing(
+    spark, transcripts_pdf, states_df, tmp_path, monkeypatch
+):
+    """The key collect runs on a worker thread: an error there reaches the
+    caller, and neither table gets a commit."""
+    from mpower_feature_analysis_spark.plans import incremental
+    from mpower_feature_analysis_spark.sources.snapshots import snapshot_ids
+
+    t_dir, f_dir = _bootstrap_and_churn(
+        spark, transcripts_pdf, states_df, tmp_path)
+
+    def failing(*a, **kw):
+        raise RuntimeError("key collect failed")
+
+    monkeypatch.setattr(incremental, "_KeySet", failing)
+    before = snapshot_ids(f_dir), snapshot_ids(t_dir)
+    with pytest.raises(RuntimeError, match="key collect failed"):
+        incremental_refresh(spark, t_dir, f_dir, states_df)
+    assert (snapshot_ids(f_dir), snapshot_ids(t_dir)) == before
+
+
+def test_refresh_reads_indented_manifests(
+    spark, transcripts_pdf, states_df, tmp_path
+):
+    """Manifests are written compact; a table whose manifests were written
+    indented (the older form) still reads, diffs and refreshes."""
+    import glob
+    import json
+
+    from mpower_feature_analysis_spark.sources.snapshots import row_changelog
+
+    t_dir, f_dir = _bootstrap_and_churn(
+        spark, transcripts_pdf, states_df, tmp_path)
+    for path in glob.glob(f"{tmp_path}/*/metadata/v*.json"):
+        with open(path) as fh:
+            text = fh.read()
+        assert "\n" not in text
+        with open(path, "w") as fh:
+            json.dump(json.loads(text), fh, indent=1, sort_keys=True)
+    assert row_changelog(spark, t_dir, 1, 2).count() > 0
+    assert read_snapshot(spark, f_dir).count() > 0
+    out = incremental_refresh(spark, t_dir, f_dir, states_df)
+    assert (out["from_snapshot"], out["to_snapshot"]) == (1, 2)
     _assert_equals_full(spark, t_dir, f_dir, states_df, PipelineConfig())
 
 

@@ -1,5 +1,6 @@
 import numpy as np
 import pandas as pd
+import pytest
 
 from mpower_feature_analysis_spark import oracle
 from mpower_feature_analysis_spark.plans.pipeline import (
@@ -93,4 +94,52 @@ def test_fused_window_stack_equals_operator_chain(spark, transcripts_df, states_
     assert fused.columns == ref.columns
     a = fused.orderBy("conv_id", "turn_idx").collect()
     b = ref.orderBy("conv_id", "turn_idx").collect()
+    assert a == b and len(a) > 0
+
+
+@pytest.mark.parametrize("one_task", [True, False])
+@pytest.mark.parametrize("with_states", [True, False])
+def test_union_first_pipeline_equals_dedup_then_asof(
+    spark, transcripts_df, states_df, monkeypatch, one_task, with_states
+):
+    """extract_turn_features unions turns and states first and dedups
+    inside the union; it must equal the composition it replaced (dedup
+    the turns, then as-of join the states, then the window stack), row
+    for row, on the one-task and the one-shuffle route.  Extra rows add a
+    resent turn, a NULL turn_idx pair and a NULL conv_id pair."""
+    from datetime import datetime
+
+    from mpower_feature_analysis_spark import utils
+    from mpower_feature_analysis_spark.operators import (
+        asof_join,
+        dedup_last_wins,
+    )
+    from mpower_feature_analysis_spark.plans.pipeline import (
+        _window_feature_stack,
+    )
+
+    monkeypatch.setattr(utils, "ONE_TASK_BYTES", 1 << 40 if one_task else -1)
+    conv = transcripts_df.first()["conv_id"]
+    extra = spark.createDataFrame([
+        (conv, 0, "user", "resent", None, datetime(2031, 1, 1)),
+        (conv, None, "user", "a", None, datetime(2031, 1, 2)),
+        (conv, None, "tool", "b", "t", datetime(2031, 1, 3)),
+        (None, 1, "user", "c", None, datetime(2031, 1, 4)),
+        (None, 1, "user", "d", None, datetime(2031, 1, 5)),
+    ], transcripts_df.schema)
+    turns = transcripts_df.unionByName(extra)
+    states = states_df if with_states else None
+    cfg = PipelineConfig()
+
+    ref = dedup_last_wins(
+        turns, ["conv_id", "turn_idx"], ["ts"], partition_by=["conv_id"])
+    if states is not None:
+        ref = asof_join(ref, states, payload=["label"])
+    ref = _window_feature_stack(ref, cfg)
+    got = extract_turn_features(turns, states, cfg)
+
+    assert got.columns == ref.columns
+    key = ["conv_id", "turn_idx", "ts"]
+    a = got.orderBy(*key).collect()
+    b = ref.orderBy(*key).collect()
     assert a == b and len(a) > 0

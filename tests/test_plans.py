@@ -28,6 +28,15 @@ def _exchanges(plan: str) -> int:
     return len(re.findall(r"\(\d+\) Exchange", plan))
 
 
+@pytest.fixture
+def parallel(monkeypatch):
+    """Plan every input as one above the one-task size
+    (``utils.fits_one_task``), whatever its size estimate."""
+    from mpower_feature_analysis_spark import utils
+
+    monkeypatch.setattr(utils, "ONE_TASK_BYTES", -1)
+
+
 def test_filter_pushdown_reaches_scan(spark):
     df = (
         spark.read.parquet(f"{SF}/lineitem.parquet")
@@ -50,7 +59,7 @@ def test_small_dim_join_broadcasts(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_flagship_pipeline_single_pipeline_exchange(spark):
+def test_flagship_pipeline_single_pipeline_exchange(spark, parallel):
     """The per-turn feature pipeline (no states) = exactly ONE exchange:
     dedup + 8 windows + fills + sessionize all share the conv_id hash
     partitioning."""
@@ -123,11 +132,13 @@ def test_signal_features_single_events_scan(spark):
     assert _exchanges(plan) == 1
 
 
-def test_bucketed_table_eliminates_all_exchanges(spark, dedup_df, tmp_path):
+def test_bucketed_table_eliminates_all_exchanges(
+    spark, dedup_df, tmp_path, parallel
+):
     """Reading the transcripts from a planner-visible bucketed table (the
     Iceberg bucket-transform analog) satisfies the conv_id clustering from
     the scan: the ENTIRE turn-feature pipeline plans with zero Exchange
-    nodes, vs >= 1 over plain parquet."""
+    nodes, vs one over a plain frame."""
     from mpower_feature_analysis_spark.sources.io import write_bucketed_table
 
     write_bucketed_table(
@@ -136,7 +147,7 @@ def test_bucketed_table_eliminates_all_exchanges(spark, dedup_df, tmp_path):
     try:
         bt = spark.table("bt_plan_test")
         assert _exchanges(_plan(extract_turn_features(bt))) == 0
-        assert _exchanges(_plan(extract_turn_features(dedup_df))) >= 1
+        assert _exchanges(_plan(extract_turn_features(dedup_df))) == 1
     finally:
         spark.sql("DROP TABLE IF EXISTS bt_plan_test")
 
@@ -207,14 +218,15 @@ def test_skew_splits_run_on_the_carry_harness(spark):
 
 
 def test_presorted_flagship_zero_exchange_and_hash_identical(
-    spark, transcripts_df, states_df, tmp_path
+    spark, transcripts_df, states_df, tmp_path, parallel
 ):
     """Round-5 verdict item 6: the FULL flagship (dedup → as-of state
     attach → gap/rolling/count windows → ffill → sessionize) over a staged
     bucketed union table plans with ZERO Exchange nodes, and its output is
     row-identical to the plain extract_turn_features(transcripts, states)
-    route (which pays one shuffle). transcripts_df is NOT pre-deduped, so
-    the in-union dedup's winner choice is exercised too."""
+    route, which unions turns and states first and pays exactly one
+    shuffle. transcripts_df is NOT pre-deduped, so the in-union dedup's
+    winner choice is exercised too."""
     from mpower_feature_analysis_spark.plans.pipeline import (
         PipelineConfig,
         extract_turn_features,
@@ -235,7 +247,7 @@ def test_presorted_flagship_zero_exchange_and_hash_identical(
         )
         assert _exchanges(_plan(pre)) == 0
         plain = extract_turn_features(transcripts_df, states_df, cfg)
-        assert _exchanges(_plan(plain)) >= 1
+        assert _exchanges(_plan(plain)) == 1
         key = lambda r: (r["conv_id"], r["turn_idx"])
         got = sorted((r.asDict() for r in pre.collect()), key=key)
         want = sorted((r.asDict() for r in plain.collect()), key=key)
@@ -326,3 +338,29 @@ def test_keyed_read_plans_no_join_and_pushes_key_filter(spark, tmp_path):
     assert _exchanges(plan) == 0, plan
     pushed = re.search(r"PushedFilters: \[([^\n]*)\]", plan).group(1)
     assert "In(id, [3,7])" in pushed, pushed
+
+
+def test_small_recompute_plans_no_exchange_and_pushes_keys(
+    spark, transcripts_df, states_df, tmp_path
+):
+    """An input within the one-task size runs the whole turn-feature
+    pipeline as one task: no Exchange.  The refresh's exact key filter on
+    top of it (a literal IN) is pushed through the per-conversation
+    windows, the union and the coalesce into both parquet scans."""
+    from mpower_feature_analysis_spark import utils
+    from mpower_feature_analysis_spark.sources.snapshots import _KeySet
+
+    transcripts_df.write.parquet(str(tmp_path / "turns"))
+    states_df.write.parquet(str(tmp_path / "states"))
+    turns = spark.read.parquet(str(tmp_path / "turns"))
+    states = spark.read.parquet(str(tmp_path / "states"))
+    assert utils.fits_one_task(turns, states)
+    convs = sorted(r[0] for r in turns.select("conv_id").distinct().collect())
+    ks = _KeySet([spark.createDataFrame([(c,) for c in convs[:3]],
+                                        "conv_id string")], ["conv_id"])
+    plan = _plan(ks.keep(extract_turn_features(turns, states)))
+    assert _exchanges(plan) == 0, plan
+    pushed = re.findall(r"PushedFilters: \[([^\n]*)\]", plan)
+    assert len(pushed) == 2, plan
+    want = "In(conv_id, [" + ",".join(convs[:3]) + "])"
+    assert all(want in p for p in pushed), pushed

@@ -1284,3 +1284,32 @@ def _plan_text(df):
     with redirect_stdout(buf):
         df.explain()
     return buf.getvalue()
+
+
+def test_read_key_range_prunes_by_changed_file_stats(spark, tmp_path):
+    """The refresh's recompute read keeps the files whose key range meets
+    the changed files' range, from manifest stats alone; a changed file
+    whose key is all NULL bounds nothing, and one without key stats
+    leaves the read unpruned."""
+    from mpower_feature_analysis_spark.sources.snapshots import (
+        _load_manifest,
+        _read_key_range,
+    )
+
+    t = str(tmp_path / "tbl")
+    commit_snapshot(_df(spark, 0, 10), t)                 # ids 0-9
+    commit_snapshot(_df(spark, 100, 110), t, "append")    # ids 100-109
+    commit_snapshot(_df(spark, 5, 8), t, "append")        # the change
+    m = _load_manifest(t, None)
+    files = m["files"]
+    changed = [files[2]]
+
+    got = _read_key_range(spark, t, m, changed, "id")
+    assert _ids(got) == sorted(list(range(10)) + [5, 6, 7])
+
+    # all-NULL key in the changed file: nothing to recompute
+    null_key = {**changed[0], "stats": {"id": {"nulls": changed[0]["rows"]}}}
+    assert _read_key_range(spark, t, m, [null_key], "id").count() == 0
+    # no key stats: the whole snapshot
+    no_stats = {**changed[0], "stats": {}}
+    assert len(_ids(_read_key_range(spark, t, m, [no_stats], "id"))) == 23
