@@ -22,3 +22,10 @@ Everything is built on public PySpark 4.x DataFrame/SQL APIs.
 """
 
 __version__ = "0.1.0"
+
+from . import _zipstamp
+
+# Python workers import the package while unpickling their first engine
+# kernel; from then on PySpark's per-task importlib.invalidate_caches()
+# re-reads no unchanged zip archive (see _zipstamp).
+_zipstamp.install()
