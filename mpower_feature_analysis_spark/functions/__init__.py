@@ -31,7 +31,6 @@ from .similarity import (
 )
 from .multimodal import (
     extract_media_features,
-    resolve_decoder,
     resize_media,
     sample_frames,
     synth_media,
@@ -49,5 +48,4 @@ __all__ = [
     "embedding_near_dup_pairs", "auto_lsh_bits", "auto_ivf_cells",
     "ivf_assign_cells", "ivf_topk", "lsh_bucketed_topk", "lsh_signature",
     "extract_media_features", "resize_media", "sample_frames", "synth_media",
-    "resolve_decoder",
 ]

@@ -894,8 +894,8 @@ def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary payload → mapInPandas feature kernel with
-    error channel. The array<float> feature vector is exploded to one
+    """Multimodal plumbing: binary payload → per-row mapInArrow feature
+    kernel with error channel. The array<float> feature vector is exploded to one
     (media_id, dim, feat_u16) row per dimension — a canonicalizable shape —
     and the float is reported as its exact u16 source integer
     (round(f*65535) round-trips float32(u/65535) exactly for u < 2^16),

@@ -21,6 +21,9 @@ SUBSET = [
     "dedup_last_wins", "asof_state_label", "turn_gaps", "sessionize",
     "user_aggregate", "burst_membership", "pivot_role_counts",
     "lineitem_pricing", "customer_meta_agg",
+    # synthetic inputs (MEDIA_N rows), independent of the sf data
+    "media_features", "media_resize", "media_frames", "media_frames_real",
+    "media_png_real", "media_jpeg_real", "media_mp4_real",
 ]
 
 

@@ -1,3 +1,5 @@
+import pytest
+
 from mpower_feature_analysis_spark.functions.multimodal import (
     _FEAT_DIM,
     extract_media_features,
@@ -53,60 +55,6 @@ def test_sample_frames_plumbing(spark):
     assert len(vids) == 4          # one sampled frame per video row
     assert len(errs) == 12         # image/audio/hologram rows → error rows
     assert all(r.frame is None for r in errs)
-
-
-# ---------------------------------------------------------------------------
-# Optional real decoder (round-3: production-real where Pillow exists)
-# ---------------------------------------------------------------------------
-
-def _pil_available():
-    from mpower_feature_analysis_spark.functions.multimodal import pil_image_module
-    return pil_image_module() is not None
-
-
-def test_decoder_auto_runs_whichever_path_exists(spark):
-    """decoder='auto' must be green with OR without Pillow: with it, real
-    image decode produces _FEAT_DIM floats; without it, output equals the
-    stub path exactly (the oracle path is unchanged either way)."""
-    from mpower_feature_analysis_spark.functions.multimodal import (
-        extract_media_features,
-        synth_media,
-    )
-    media = synth_media(spark, n=16)
-    auto = extract_media_features(media, decoder="auto").orderBy("media_id").collect()
-    stub = extract_media_features(media, decoder="stub").orderBy("media_id").collect()
-    assert len(auto) == len(stub) == 16
-    if not _pil_available():
-        assert auto == stub  # this container: fallback is bit-identical
-    else:
-        # synth payloads are not valid image files: the REAL decoder fails
-        # them into the error channel rather than the task
-        img_rows = [r for r in auto if r.kind == "image"]
-        assert all(r.error is not None for r in img_rows)
-    # non-image kinds are stubbed in every mode
-    for a, s in zip(auto, stub):
-        if a.kind in ("audio", "video"):
-            assert a.feat == s.feat
-
-
-def test_decoder_pil_requires_pillow(spark):
-    """decoder='pil' is strict: missing Pillow FAILS THE TASK at batch
-    start (round-3 advice — one output must never mix real and stub
-    features), never a silent stub fallback or a partial error-row
-    output."""
-    import pytest
-    from mpower_feature_analysis_spark.functions.multimodal import (
-        extract_media_features,
-        resize_media,
-        synth_media,
-    )
-    media = synth_media(spark, n=8)
-    if _pil_available():
-        pytest.skip("Pillow installed: strictness covered by the auto test")
-    with pytest.raises(Exception, match="Pillow missing on executor"):
-        extract_media_features(media, decoder="pil").collect()
-    with pytest.raises(ImportError):
-        resize_media(media, decoder="pil").collect()
 
 
 def _make_ppm(gray, maxval=255, rgb=False, comment=False):
@@ -173,37 +121,20 @@ def test_real_image_decode_stdlib(spark):
     assert bytes(res[0].payload) == want_rs.tobytes()
 
 
-def test_real_resize_when_pillow_present(spark):
-    """With Pillow installed, decoder='auto' resize goes through
-    PIL.Image.resize; without it, 'auto' resolves to 'stdlib' and the
-    PNM-aware strided path produces the same 8x8 grayscale buffer shape —
-    green in BOTH containers, no skip."""
-    from mpower_feature_analysis_spark.functions.multimodal import (
-        resize_media,
-        synth_media,
-    )
-    media = synth_media(spark, n=8)
-    out = resize_media(media, out_w=8, out_h=8, decoder="auto").collect()
-    ok = [r for r in out if r.error is None]
-    assert ok and all(len(bytes(r.payload)) == 64 for r in ok)
-
-
-def test_resolve_decoder_driver_side():
-    """'auto' resolves ONCE on the driver to a concrete effective mode
-    ('pil' with Pillow, 'stdlib' without — never a per-executor probe);
-    'wav' stays accepted as the pre-round-5 alias for 'stdlib'; bad modes
-    raise at plan build."""
+def test_resolve_decoder_driver_side(spark):
+    """The decoder mode is checked once on the driver, at plan build: only
+    'stub' and 'stdlib' exist, and any other name raises ValueError before
+    a job runs."""
     import pytest
     from mpower_feature_analysis_spark.functions.multimodal import (
-        resolve_decoder,
+        resize_media,
+        sample_frames,
     )
-    assert resolve_decoder("stub") == "stub"
-    assert resolve_decoder("wav") == "stdlib"
-    assert resolve_decoder("stdlib") == "stdlib"
-    assert resolve_decoder("pil") == "pil"
-    assert resolve_decoder("auto") == ("pil" if _pil_available() else "stdlib")
-    with pytest.raises(ValueError, match="decoder must be"):
-        resolve_decoder("ffmpeg")
+    media = synth_media(spark, n=4)
+    for op in (extract_media_features, resize_media, sample_frames):
+        for bad in ("pil", "auto", "wav", "ffmpeg"):
+            with pytest.raises(ValueError, match="decoder must be"):
+                op(media, decoder=bad)
 
 
 def _make_wav(samples, framerate=8000, sampwidth=2, nchannels=1):
@@ -244,7 +175,7 @@ def test_wav_decode_real_features(spark):
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     got = {r.media_id: r for r in
-           extract_media_features(media, decoder="wav").collect()}
+           extract_media_features(media, decoder="stdlib").collect()}
     assert got[0].error is None and got[1].error is None
     # numpy oracle: quantized int16 samples, mono, 16-segment RMS
     q = (np.asarray(samples) * 32767).astype("<i2").astype("float64") / 32768.0
@@ -254,11 +185,6 @@ def test_wav_decode_real_features(spark):
     stub = {r.media_id: r for r in
             extract_media_features(media, decoder="stub").collect()}
     assert got[1].feat == stub[1].feat
-    # wav decode happens under 'auto' too (this container resolves to 'wav'
-    # without Pillow; with Pillow, effective 'pil' still decodes RIFF audio)
-    auto = {r.media_id: r for r in
-            extract_media_features(media, decoder="auto").collect()}
-    np.testing.assert_allclose(auto[0].feat, want, rtol=1e-6)
 
 
 def test_wav_decode_multichannel_and_widths(spark):
@@ -278,7 +204,7 @@ def test_wav_decode_multichannel_and_widths(spark):
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     got = {r.media_id: r for r in
-           extract_media_features(media, decoder="wav").collect()}
+           extract_media_features(media, decoder="stdlib").collect()}
     assert all(got[i].error is None for i in range(3))
     # stereo cancellation: mono mix is (almost) silent
     assert max(got[0].feat) < 1e-3
@@ -693,3 +619,134 @@ def test_mp4_multichunk_co64_fixture():
     assert _mp4_parse(b"RIFF" + b"\x00" * 64) is None
     with pytest.raises(ValueError):
         _mp4_parse(mp4[: len(ftyp) + len(mdat) - 3] + mp4[len(ftyp) + len(mdat):])
+
+
+# ---------------------------------------------------------------------------
+# The Arrow row harness: error channel, plan-build checks, plain-loop parity
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("decoder", ["stub", "stdlib"])
+def test_null_payload_is_a_feature_error_row(spark, decoder):
+    """A NULL payload is a bad record like any other: one error row with
+    NULL n_bytes and feat, never a task failure."""
+    from mpower_feature_analysis_spark.functions.multimodal import MEDIA_SCHEMA
+    rows = [(0, "image", None, 8, 8, 0, 0),
+            (1, "audio", bytearray(b"abc"), 0, 0, 8000, 10)]
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    got = {r.media_id: r for r in
+           extract_media_features(media, decoder=decoder).collect()}
+    assert got[0].n_bytes is None and got[0].feat is None
+    assert got[0].error.startswith("TypeError: ")
+    assert got[1].error is None and got[1].n_bytes == 3
+
+
+@pytest.mark.parametrize("op,kwargs", [
+    ("sample_frames", {"every_k": 0}),
+    ("sample_frames", {"every_k": -2}),
+    ("sample_frames", {"frame_w": 0}),
+    ("sample_frames", {"frame_h": -1}),
+    ("resize_media", {"out_w": 0}),
+    ("resize_media", {"out_h": -3}),
+])
+def test_bad_sizes_raise_at_plan_build(spark, op, kwargs):
+    """A size below 1 would silently drop rows (negative ``every_k``),
+    error every row (``every_k=0``) or label an empty payload with width 0;
+    it is refused on the driver before a job runs."""
+    from mpower_feature_analysis_spark.functions import multimodal
+    media = synth_media(spark, n=4)
+    (name, value), = kwargs.items()
+    with pytest.raises(ValueError, match=f"{name} must be >= 1"):
+        getattr(multimodal, op)(media, **kwargs)
+
+
+def _mixed_corpus(spark):
+    """Stub payloads, every real container format, and the edge records
+    the error channel has to absorb, in one partition of > 32 rows."""
+    import numpy as np
+    from pyspark.sql import functions as F
+    from mpower_feature_analysis_spark.functions.multimodal import (
+        MEDIA_SCHEMA,
+        build_avi,
+        build_png,
+        synth_avi_media,
+        synth_jpeg_media,
+        synth_mp4_media,
+        synth_png_media,
+    )
+    png = build_png(np.arange(64, dtype=np.uint8).reshape(8, 8))
+    avi = build_avi([bytes(range(256))] * 2, 16, 16)
+    edge = spark.createDataFrame([
+        (900, "image", None, 8, 8, 0, 0),                    # NULL payload
+        (901, "video", None, 16, 16, 0, 100),
+        (902, None, bytearray(png), 8, 8, 0, 0),             # NULL kind
+        (903, "image", bytearray(png), None, 8, 0, 0),       # NULL width
+        (904, "image", bytearray(), 8, 8, 0, 0),             # empty payload
+        (905, "video", bytearray(), 16, 16, 0, 0),
+        (906, "image", bytearray(png[:30]), 8, 8, 0, 0),     # truncated PNG
+        (907, "video", bytearray(avi[:100]), 16, 16, 0, 0),  # truncated AVI
+    ], MEDIA_SCHEMA)
+    parts = [synth_media(spark, n=48)]
+    for off, gen in ((100, synth_png_media), (200, synth_jpeg_media),
+                     (300, synth_avi_media), (400, synth_mp4_media)):
+        parts.append(gen(spark, n=3).withColumn(
+            "media_id", F.col("media_id") + off))
+    corpus = parts[0]
+    for p in parts[1:] + [edge]:
+        corpus = corpus.unionByName(p)
+    return corpus.coalesce(1)
+
+
+@pytest.fixture(scope="module")
+def mixed_corpus(spark):
+    """The corpus cached once (each of its unioned local inputs costs a
+    Python task per scan), with its rows as driver-side dicts."""
+    corpus = _mixed_corpus(spark).cache()
+    yield corpus, [r.asDict() for r in corpus.collect()]
+    corpus.unpersist()
+
+
+def _norm(row) -> tuple:
+    return tuple(bytes(v) if isinstance(v, bytearray)
+                 else tuple(v) if isinstance(v, list) else v for v in row)
+
+
+@pytest.mark.parametrize("decoder", ["stub", "stdlib"])
+def test_harness_equals_plain_row_loop(mixed_corpus, batches_of_32, decoder):
+    """Each operator's Spark output, across 32-row Arrow batches, equals its
+    row function run in a plain driver-side loop, error rows included."""
+    from pyspark.sql.types import StructType
+    from mpower_feature_analysis_spark.functions.multimodal import (
+        FEATURE_SCHEMA,
+        FRAME_SCHEMA,
+        RESIZED_SCHEMA,
+        _feature_rows,
+        _frame_rows,
+        _resize_rows,
+        resize_media,
+        sample_frames,
+    )
+    corpus, inputs = mixed_corpus
+    assert len(inputs) > 2 * 32
+    cases = [
+        (extract_media_features(corpus, decoder=decoder), FEATURE_SCHEMA,
+         _feature_rows(decoder)),
+        (resize_media(corpus, out_w=4, out_h=4, decoder=decoder),
+         RESIZED_SCHEMA, _resize_rows(4, 4, decoder)),
+        (sample_frames(corpus, every_k=2, frame_w=16, frame_h=16,
+                       decoder=decoder),
+         FRAME_SCHEMA, _frame_rows(2, 16, 16, decoder)),
+    ]
+    for out, schema, (rows, on_error) in cases:
+        fields = StructType.fromDDL(schema).fieldNames()
+        want = []
+        for r in inputs:
+            try:
+                got_rows = rows(r)
+            except Exception as e:
+                got_rows = [on_error(r, f"{type(e).__name__}: {e}")]
+            want += [_norm(d.get(f) for f in fields) for d in got_rows]
+        got = [_norm(r) for r in out.collect()]
+        assert sorted(got, key=repr) == sorted(want, key=repr), schema
+        errors = [t[-1] for t in got if t[-1] is not None]
+        assert errors and all(": " in e for e in errors)
+
